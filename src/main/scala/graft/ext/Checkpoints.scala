@@ -18,8 +18,9 @@ private[graft] object Checkpoints {
     * the calling thread — its thread-local job group/description
     * behave exactly as in the sequential form — and a failure on
     * either side propagates unchanged (Await rethrows the future's
-    * exception). Only for side-effect-free pairs whose relative
-    * order carries no contract. */
+    * exception). Only for order-independent pairs: each side may pin
+    * a checkpoint or run other side effects, but neither may depend
+    * on the other having run first. */
   def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration

@@ -422,14 +422,17 @@ object Dedup {
     * the pointer-jumping shortcut that halves the remaining distance
     * to the component minimum, so rounds are O(log diameter), not
     * O(diameter) (a 20-node path converges in ~5 rounds, spec-pinned
-    * below). Every round is two distributed joins + one
-    * min-aggregate — no driver-side graph. Labels are monotonically
-    * non-increasing, so the label sum strictly decreases until
-    * fixpoint; convergence is detected by that single scalar (one
-    * cheap action per round, no old-vs-new join). Each round's
-    * labels are eagerly localCheckpoint'ed: the round references the
-    * previous labels THREE times, so without truncation the logical
-    * plan grows 3^rounds and analysis itself OOMs — checkpointing is
+    * below). Every round is ONE distributed join (edges ∪ pointer
+    * edges against the current labels) + one min/max aggregate — no
+    * driver-side graph. The identity branch of that aggregate carries
+    * each id's current rep in a `cur` column, so the round's changed
+    * count is a plain `rep =!= cur` filter over the round's own
+    * checkpoint: per-id reps are monotonically non-increasing, and
+    * zero changes is exactly the fixpoint (one action per round, no
+    * old-vs-new join). Each round's labels are localCheckpoint'ed and
+    * materialized by that count: the round references the previous
+    * labels more than once, so without truncation the logical plan
+    * grows geometrically and analysis itself OOMs — checkpointing is
     * load-bearing here, not an optimization (on a multi-node cluster
     * swap in reliable `checkpoint` if executor loss matters).
     *
@@ -444,7 +447,10 @@ object Dedup {
     * checkpoint from the loop is unpersisted before returning, so
     * repeated invocations cannot accumulate cached frames. With
     * `scratchDir = None` the returned frame IS the last eager
-    * localCheckpoint (do not unpersist it while still consuming). */
+    * localCheckpoint (do not unpersist it while still consuming) —
+    * except at `maxRounds == 0`, where no round runs and the result
+    * is the lazy identity labeling (id, rep = id) over the pairs'
+    * own lineage. */
   def clusters(pairs: DataFrame, d1: String = "d1", d2: String = "d2",
                maxRounds: Int = 20,
                scratchDir: Option[String] = None): DataFrame =

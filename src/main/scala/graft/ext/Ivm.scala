@@ -27,11 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Ivm {
 
-  /** See [[Checkpoints.inParallel]] — re-exported where the
-    * maintenance verbs and their gates already look for it. */
-  private[graft] def inParallel[A, B](fa: => A, fb: => B): (A, B) =
-    Checkpoints.inParallel(fa, fb)
-
   /** Full recompute of the maintainable aggregate — the bootstrap
     * that materializes a view's initial state, and the twin every
     * maintenance result must equal. Output: `keys`, `cnt`, one
@@ -351,7 +346,7 @@ object Ivm {
     // folding each feed to a signed partial validates the ±1 contract
     // in the same pass and pins the result for its two consumers; the
     // two feeds are independent, so their pin jobs overlap (opt r18)
-    val (aD, bD) = inParallel(
+    val (aD, bD) = Checkpoints.inParallel(
       signedPartialOf(aChanges, aKeys, aSums, opCol),
       signedPartialOf(bChanges, bKeys, bSums, opCol))
     maintainJoinAggDelta(view, aState, bState, aD, bD,
@@ -402,7 +397,8 @@ object Ivm {
         case _: org.apache.spark.sql.execution.LogicalRDD => df
         case _ => df.localCheckpoint(true)
       }
-    val (aD, bD) = inParallel(pinnedOnce(aDelta), pinnedOnce(bDelta))
+    val (aD, bD) =
+      Checkpoints.inParallel(pinnedOnce(aDelta), pinnedOnce(bDelta))
     // side states first: their maintenance catches phantom deletes
     // (negative side counts) before the view merge runs. The two
     // sides' merges are independent of each other, so their pin+probe
@@ -410,7 +406,7 @@ object Ivm {
     // merge below starts, which is the ordering the contract needs
     requireMergeCompatible(aState, aD, aSums, "a-side delta")
     requireMergeCompatible(bState, bD, bSums, "b-side delta")
-    val (aNew, bNew) = inParallel(
+    val (aNew, bNew) = Checkpoints.inParallel(
       mergeStates(aState, aD, aKeys, aSums),
       mergeStates(bState, bD, bKeys, bSums))
     // one delta-join term per side, pre-aggregated straight to the

@@ -555,8 +555,8 @@ object Layout {
   }
 
   /** The shared manifest-PATCH tail of every in-place mutation verb
-    * ([[deleteWhere]], [[upsertByKeys]], [[optimizeSelective]],
-    * [[optimizePartitioned]]): kept rows = stored manifest minus
+    * ([[deleteWhere]], [[upsertByKeys]], both OPTIMIZE verbs via
+    * [[rewriteSelected]]): kept rows = stored manifest minus
     * `removed` (file-count-sized broadcast anti-join, never an
     * IN-literal explosion on big manifests), widened through the
     * pre-nulls-format migration, the delta rows (already eagerly
@@ -619,19 +619,6 @@ object Layout {
     Checkpoints.unpersist(updated)
     delta.foreach(Checkpoints.unpersist)
   }
-
-  /** Loud flat-layout guard shared by the flat OPTIMIZE verbs —
-    * `.`-prefixed dirs are writer debris (crashed .spark-staging-*),
-    * not partitions, the same exemption as the compaction walk. */
-  private def requireFlatLayout(fs: org.apache.hadoop.fs.FileSystem,
-                                hDir: org.apache.hadoop.fs.Path,
-                                verb: String): Unit =
-    require(!fs.listStatus(hDir).exists { st =>
-        val n = st.getPath.getName
-        st.isDirectory && !n.startsWith("_") && !n.startsWith(".")
-      },
-      s"$verb expects a flat clustered layout; $hDir has partition " +
-        "subdirectories — optimize each partition directory instead")
 
   private def historyDir(dir: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$dir/_graft_history")
@@ -1894,8 +1881,9 @@ object Layout {
     (String, Long, Long), java.lang.Boolean]()
 
   /** Whether the layout root has hive `k=v` partition subdirectories —
-    * the reader-side dispatch the `graft` DataSourceV2 source needs
-    * (a partitioned tree's snapshot read must anchor a basePath). */
+    * the shape dispatch the `graft` DataSourceV2 source needs (a
+    * partitioned tree's snapshot read must anchor a basePath) and the
+    * OPTIMIZE verbs' selection branches on. */
   private[graft] def isHivePartitioned(
       spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
     val hDir = new org.apache.hadoop.fs.Path(dir)
@@ -2517,7 +2505,7 @@ object Layout {
     * is a layout corruption to fail loudly on, never to route writes
     * by. Used by every verb that ROUTES rows ([[appendWithManifest]],
     * [[upsertByKey]], [[deleteWhere]]) or subtracts partition columns
-    * from a leaf schema ([[optimizePartitioned]]). */
+    * from a leaf's rewrite ([[optimize]], [[optimizeSelective]]). */
   private def hivePartColsChecked(
       fs: org.apache.hadoop.fs.FileSystem,
       hPath: org.apache.hadoop.fs.Path,
@@ -5481,117 +5469,220 @@ object Layout {
     * the max point-lookup depth across the stored keys at call time —
     * the signal that fired (or declined) the rewrite. `filesKept`
     * counts files left VERBATIM (name, bytes, and manifest row all
-    * untouched): 0 for the full-rewrite verbs, the selection
-    * complement for [[optimizeSelective]], everything for a declined
-    * no-op. */
+    * untouched): 0 for a flat full rewrite, the selection complement
+    * otherwise (unfired leaves, unselected files), everything for a
+    * declined no-op. */
   final case class OptimizeStats(reclustered: Boolean, filesBefore: Int,
                                  filesAfter: Int, worstDepthBefore: Long,
                                  filesKept: Int = 0)
 
+  /** What both OPTIMIZE verbs read before deciding anything: the live
+    * manifest and its stored keys, the in-file clustering keys (stored
+    * keys that are not path-encoded — a partition column is constant
+    * inside its leaf), the partition columns (empty on a flat layout),
+    * the live file listing, and the vectorized files' stores. */
+  private final case class OptimizeScope(
+      manifest: DataFrame, keys: Seq[String], fileKeys: Seq[String],
+      partCols: Seq[String], before: Set[String],
+      dvMap: Map[String, String])
+
+  private def optimizeScope(spark: org.apache.spark.sql.SparkSession,
+                            dir: String, expectedGen: Option[Long],
+                            verb: String): OptimizeScope = {
+    requireEncodingStablePath(dir)
+    val hDir = new org.apache.hadoop.fs.Path(dir)
+    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireExpectedGen(fs, dir, expectedGen, verb)
+    val manifest = loadManifest(spark, dir)
+    val keys = manifestKeysOf(manifest.schema)
+    val dirFrame = spark.read.parquet(dir)
+    val partCols =
+      if (isHivePartitioned(spark, dir))
+        hivePartColsChecked(fs, hDir, dirFrame.schema)
+      else Nil
+    val before = dirFrame.inputFiles.toSet
+    OptimizeScope(manifest, keys, keys.filterNot(partCols.contains),
+      partCols, before, dvMapOf(manifest, before))
+  }
+
+  /** The leaf directory of a manifest / listing file URI — the root
+    * of a flat layout, the `k=v` leaf of a partitioned one. */
+  private def leafOf(file: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(new java.net.URI(file)).getParent
+
+  /** The ONE rewrite core under both OPTIMIZE verbs: the verbs only
+    * SELECT (`files`, empty = declined); every layout shape rewrites
+    * the same way. The selection groups by leaf directory — one group
+    * on a flat layout (the root), one per touched leaf on a
+    * hive-partitioned tree — and each group rewrites into
+    * `outputsFor(its files)` clustered outputs:
+    *   1. read the group's files under the stored schema with their
+    *      deletion vectors applied ([[readFilesOf]]), so the output is
+    *      vector-free — the rewrite IS the vector purge — and any
+    *      columns an evolution added are materialized (null where a
+    *      row predates them); partition columns drop, the leaf path
+    *      re-derives them;
+    *   2. [[clusteredRewriteTo]] into a `_`-prefixed scratch dir inside
+    *      the leaf, over the in-file keys;
+    *   3. after every group is written, re-check the OCC generation
+    *      (the move-in makes the rewrite visible — see deleteWhere),
+    *      move every group in, take ONE delta-stats pass over just the
+    *      new files (read with `basePath` so `k=v` stat keys keep real
+    *      values; bloom keys carry over), and only then retire (tracked)
+    *      or delete the old files;
+    *   4. PATCH the manifest once: unselected files keep their rows
+    *      verbatim (their stats and blooms cannot drift), the delta
+    *      rows append, and the retirement receipt lets an OCC loser
+    *      roll back ([[patchManifest]]).
+    * The manifest is never rebuilt from the data, so a layout carrying
+    * `_graft_dv` stores optimizes like any other.
+    *
+    * Crash windows: between the move-in and the old-file delete,
+    * coverage-guarded reads flag the (duplicate) new files loudly and
+    * [[quarantineUncovered]] recovers — quarantining the new copies
+    * loses nothing, the old files still hold every row; between the
+    * delete and the manifest replace, recovery is the post-delete one
+    * documented on [[deleteWhere]].
+    *
+    * The schema sidecar retires only when every live file was
+    * rewritten (a kept file may predate an added column, and retiring
+    * the sidecar would revert its reads to footer sampling) and the
+    * layout is untracked: retained generations still reference
+    * RETIRED pre-evolution files that resolve under it. Deletion-vector
+    * stores are reaped on untracked layouts only, for the same
+    * reason. */
+  private def rewriteSelected(spark: org.apache.spark.sql.SparkSession,
+                              dir: String, scope: OptimizeScope,
+                              files: Seq[String],
+                              outputsFor: Seq[String] => Int,
+                              worst: Long, verifyCoverage: Boolean,
+                              expectedGen: Option[Long],
+                              verb: String): OptimizeStats = {
+    val before = scope.before
+    if (files.isEmpty)
+      return OptimizeStats(reclustered = false, before.size, before.size,
+        worst, filesKept = before.size)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mSchema = scope.manifest.schema
+    val stored = storedSchemaOf(spark, dir)
+    if (verifyCoverage)
+      // the rewrite re-writes the selected files' rows, so rows the
+      // manifest never blessed (a crashed delete's duplicate
+      // survivors, a crashed out-of-band append) would be made
+      // permanent in the new layout; checked over the whole dir so
+      // debris in KEPT files fails loudly too instead of surfacing
+      // only on the next mutation
+      requireManifestCovers(spark,
+        stored.fold(spark.read)(s => spark.read.schema(s)).parquet(dir),
+        scope.manifest.select("file").collect().map(_.getString(0)).toSet,
+        dir, "the rewrite would silently legitimize their rows into " +
+          "the new layout")
+    val allLong = scope.fileKeys.forall(k =>
+      mSchema(s"min_$k").dataType == org.apache.spark.sql.types.LongType)
+    val groups = files.sorted.groupBy(leafOf).toSeq.sortBy(_._1.toString)
+    val tmps = groups.map { case (leaf, leafFiles) =>
+      val src = readFilesOf(spark, dir, leafFiles, stored, dv = scope.dvMap)
+      val tmp = new org.apache.hadoop.fs.Path(leaf, "_graft_optimize_tmp")
+      clusteredRewriteTo(
+        if (scope.partCols.isEmpty) src else src.drop(scope.partCols: _*),
+        scope.fileKeys, allLong, tmp.toString, outputsFor(leafFiles))
+      leaf -> tmp
+    }
+    requireExpectedGen(fs, dir, expectedGen, verb)
+    for ((leaf, tmp) <- tmps) {
+      moveTreeInto(fs, tmp, leaf, verb)
+      fs.delete(tmp, true)
+    }
+    // re-listed through spark.read so the delta rows carry the
+    // canonical URI spelling every other manifest row uses
+    val newFiles = spark.read.parquet(dir).inputFiles.toSeq.filterNot(before)
+    val delta = manifestOf(
+        spark.read.option("basePath", dir).parquet(newFiles: _*),
+        scope.keys, bloomKeysOf(mSchema))
+      .localCheckpoint(true)
+    val receipt = retireOrDeleteAll(fs, dir, files, verb)
+    patchManifest(spark, dir, scope.manifest, scope.keys, files,
+      Some(delta), verb, expectedGen, receipt)
+    if (!generationsEnabled(fs, dir)) {
+      if (before.subsetOf(files.toSet)) retireSchemaSidecars(fs, dir)
+      if (scope.dvMap.nonEmpty) reapUnreferencedDvStores(spark, fs, dir)
+    }
+    OptimizeStats(reclustered = true, before.size,
+      spark.read.parquet(dir).inputFiles.length, worst,
+      filesKept = before.size - files.size)
+  }
+
   /** The in-place OPTIMIZE verb — [[needsRecluster]]'s trigger and
     * the clustered rewrite in one call, the Delta `OPTIMIZE ZORDER BY`
-    * shape for a live manifest-carrying directory. Measures the worst
-    * point-lookup depth across ALL stored manifest keys (one
-    * manifest-sized sweep per key, string keys via the boundary-domain
-    * profile); below `maxDepth` it is a metadata-only no-op unless
-    * `force`d. When it fires, the whole directory rewrites into
-    * `files` clustered outputs: Z-ordered over the stored keys when
-    * there are 2+ and all carry long stats (multi-dimensional boxes —
-    * the layout the pruned reads want), else lexicographic
-    * range-clustering on the keys in manifest order (exactly right
-    * for one key; tight on the leading key otherwise). The manifest
-    * rebuilds over the output with the SAME keys and bloom keys, so
-    * neither the skipping stats nor a bloom index silently degrade.
+    * shape for a live manifest-carrying directory. Fired groups
+    * rewrite WHOLE into `files` clustered outputs each: Z-ordered over
+    * the in-file stored keys when there are 2+ and all carry long
+    * stats (multi-dimensional boxes — the layout the pruned reads
+    * want), else lexicographic range-clustering on the keys in
+    * manifest order, else (every stored key a partition column) plain
+    * compaction. The rewrite, manifest patch and crash windows are
+    * [[rewriteSelected]]'s; below the trigger the call is a
+    * metadata-only no-op unless `force`d, and `force` rewrites every
+    * file.
     *
-    * In-place discipline (deleteWhere's, same windows): the clustered
-    * copy commits under an `_`-prefixed scratch dir and MOVES in
-    * before any old file dies; between the move and the old-file
-    * delete, coverage-guarded reads flag the (duplicate) new files
-    * loudly and [[quarantineUncovered]] recovers (quarantining the
-    * new copy loses nothing — the old files still hold every row);
-    * after the old-file delete, rebuild with [[buildFileManifest]].
-    * An evolved layout ([[appendWithManifest]] `mergeSchema`) is read
-    * under its sidecar schema, so the rewrite MATERIALIZES added
-    * columns (null where a row predates them) and the sidecar retires
-    * with the old files — optimize, like compaction, finishes the
-    * evolution. Flat directories only: hive-partitioned layouts
-    * optimize per partition directory, like [[compactPartitioned]]'s
-    * walk. */
+    * Flat layout: the worst point-lookup depth across ALL stored keys
+    * (one manifest-sized sweep per key, string keys via the
+    * boundary-domain profile) reaching `maxDepth`, or any deletion
+    * vector present, rewrites the whole directory — the vector purge:
+    * the read-side anti-join tax is exactly what the rewrite clears.
+    *
+    * Hive-partitioned layout, LEAF-selective: each `k=v` leaf carries
+    * its own signals ([[worstDepthPerLeaf]], one job for all leaves —
+    * the TRUE cost of a partition-pruned lookup, since files in other
+    * leaves never stack on it). A leaf rewrites when any fires: its
+    * depth over the IN-FILE keys reaches `maxDepth` (clustering — a
+    * partition-column key is excluded because its per-leaf "depth" is
+    * just the file count, which would re-classify every rewritten leaf
+    * deep forever once `files >= maxDepth`); it holds more than
+    * `files` files (fragmentation — the only signal a layout whose
+    * stored keys are all partition columns has); or it carries
+    * deletion vectors (the per-leaf purge). A day's churn into one
+    * partition rewrites one leaf, not the table; every other leaf
+    * keeps its files and manifest rows verbatim. The reported
+    * `worstDepthBefore` is the per-leaf worst over ALL stored keys. */
   def optimize(spark: org.apache.spark.sql.SparkSession, dir: String,
                files: Int, maxDepth: Long = 4L,
                force: Boolean = false,
                verifyCoverage: Boolean = true,
                expectedGen: Option[Long] = None): OptimizeStats = {
     require(files >= 1, "optimize needs files >= 1")
-    requireEncodingStablePath(dir)
-    val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireFlatLayout(fs, hDir, "optimize")
-    requireExpectedGen(fs, dir, expectedGen, "optimize")
-    val manifest = loadManifest(spark, dir)
-    val mSchema = manifest.schema
-    val keys = manifestKeysOf(mSchema)
-    val worst = keys.map(worstDepthOf(manifest, _)).max
-    val before = spark.read.parquet(dir).inputFiles.toSet
-    // the full rewrite is also the deletion-vector PURGE: vectors
-    // present count as a trigger (their read-side anti-join tax is
-    // exactly what the rewrite clears), and the source reads with
-    // them applied so the clustered output is vector-free
-    val dvMap = dvMapOf(manifest, before)
-    if (!force && worst < maxDepth && dvMap.isEmpty)
-      return OptimizeStats(reclustered = false, before.size, before.size,
-        worst, filesKept = before.size)
-    val stored = storedSchemaOf(spark, dir)
-    val rawFrame = stored.fold(spark.read)(s => spark.read.schema(s))
-      .parquet(dir)
-    if (verifyCoverage)
-      // sharpest consequence of all the consumers': the rewrite reads
-      // EVERY file, so rows the manifest never blessed (a crashed
-      // delete's duplicate survivors, a crashed out-of-band append)
-      // would be absorbed into the new layout and its rebuilt
-      // manifest — made permanent, not just misread once
-      requireManifestCovers(spark, rawFrame,
-        manifest.select("file").collect().map(_.getString(0)).toSet, dir,
-        "the rewrite would silently legitimize their rows into the new layout")
-    val src =
-      if (dvMap.isEmpty) rawFrame
-      else readFilesOf(spark, dir, before.toSeq.sorted, stored, dv = dvMap)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/_graft_optimize_tmp")
-    val allLong = keys.forall(k =>
-      mSchema(s"min_$k").dataType == org.apache.spark.sql.types.LongType)
-    clusteredRewriteTo(src, keys, allLong, tmp.toString, files)
-    // OCC re-check before the destructive tail begins (the move-in
-    // makes the rewrite visible) — see deleteWhere
-    requireExpectedGen(fs, dir, expectedGen, "optimize")
-    moveTreeInto(fs, tmp, hDir, "optimize")
-    fs.delete(tmp, true)
-    // destroy (or retire) the old files only after the clustered
-    // copy is live
-    retireOrDeleteAll(fs, dir, before, "optimize")
-    // stats over the optimized output — same keys, same bloom keys;
-    // manifest replaced via the temp-dir + rename discipline
-    val rebuilt = buildFileManifest(spark, dir, keys, bloomKeysOf(mSchema))
-      .localCheckpoint(true)
-    replaceManifest(spark, dir, rebuilt, "optimize", expectedGen)
-    Checkpoints.unpersist(rebuilt)
-    // the clustered copy materialized any evolved columns, so the
-    // schema sidecar retires (output is schema-homogeneous); a crash
-    // before this delete leaves a sidecar naming columns every file
-    // now has — a harmless no-op for readers. NOT on a
-    // generation-tracked layout: retained archived generations still
-    // reference the RETIRED pre-evolution files, and readSnapshot
-    // resolves them under the current sidecar — deleting it would
-    // revert those snapshot reads to nondeterministic footer
-    // sampling (the sidecar over the homogeneous live files is a
-    // no-op, so keeping it costs nothing)
-    if (!generationsEnabled(fs, dir)) {
-      retireSchemaSidecars(fs, dir)
-      // the rewrite materialized every vector away; nothing can
-      // reference the stores on an untracked layout
-      if (dvMap.nonEmpty) reapUnreferencedDvStores(spark, fs, dir)
-    }
-    OptimizeStats(reclustered = true, before.size,
-      spark.read.parquet(dir).inputFiles.length, worst)
+    val scope = optimizeScope(spark, dir, expectedGen, "optimize")
+    val manifest = scope.manifest
+    val (worst, fired) =
+      if (scope.partCols.isEmpty) {
+        val w = scope.keys.map(worstDepthOf(manifest, _)).max
+        (w, if (force || w >= maxDepth || scope.dvMap.nonEmpty)
+              scope.before.toSeq else Nil)
+      } else {
+        // leaf identity is compared by fs path (the manifest's URI
+        // spelling and the listing's can differ on authority form)
+        def leafKey(uri: String) = leafOf(uri).toUri.getPath
+        def perLeaf(ks: Seq[String]): Map[String, Long] =
+          if (ks.isEmpty) Map.empty
+          else ks.map(worstDepthPerLeaf(manifest, _))
+            .reduce(_.unionAll(_))
+            .groupBy("leaf").agg(max("worst").as("worst")).collect()
+            .map(r => new org.apache.hadoop.fs.Path(
+              new java.net.URI(r.getString(0))).toUri.getPath -> r.getLong(1))
+            .toMap
+        val filesByLeaf = manifest.select("file").collect()
+          .groupBy(r => leafKey(r.getString(0))).map(e => e._1 -> e._2.length)
+        val firedLeaves =
+          perLeaf(scope.fileKeys).filter(_._2 >= maxDepth).keySet ++
+            filesByLeaf.filter(_._2 > files).keySet ++
+            scope.dvMap.keySet.map(leafKey)
+        val perLeafAll = perLeaf(scope.keys)
+        (if (perLeafAll.isEmpty) 0L else perLeafAll.values.max,
+          scope.before.toSeq.filter(f => force || firedLeaves(leafKey(f))))
+      }
+    rewriteSelected(spark, dir, scope, fired, _ => files, worst,
+      verifyCoverage, expectedGen, "optimize")
   }
 
   /** The file names whose `[min, max]` interval on `key` covers any
@@ -5625,15 +5716,20 @@ object Layout {
   }
 
   /** SELECTIVE in-place OPTIMIZE — the Delta/Iceberg bin-packed
-    * rewrite granularity [[optimize]] lacks: when the depth trigger
-    * fires, rewrite ONLY the files the profile names — those whose
-    * key interval covers a boundary at depth ≥ `maxDepth` on ANY
-    * stored key, plus the small-file tail (`n_rows < minFileRows`,
-    * opt-in) — bin-packed into `ceil(rows / targetRows)` clustered
-    * outputs. Every other file keeps its exact name, bytes, and
-    * manifest row VERBATIM ([[OptimizeStats.filesKept]] counts them).
-    * At 100 TB this is the difference between a full-table I/O event
-    * per trigger and work proportional to the degradation: appends
+    * rewrite granularity [[optimize]] lacks: rewrite ONLY the files
+    * the depth profile names — those whose key interval covers a
+    * boundary at depth ≥ `maxDepth` on ANY in-file stored key — plus
+    * the small-file tail (`n_rows < minFileRows`, opt-in) plus the
+    * vectorized files whose read tax crossed `minDvRatio`
+    * ([[heavyDvFiles]]: at the default 0 every vectorized file, so
+    * the rewrite — vector applied — is the purge; higher ratios let
+    * hotspots self-heal without churning lightly-vectorized files).
+    * Each leaf's selection bin-packs into
+    * `ceil(its selected rows / targetRows)` clustered outputs. Every
+    * other file keeps its exact name, bytes, and manifest row
+    * VERBATIM ([[OptimizeStats.filesKept]] counts them). At 100 TB
+    * this is the difference between a full-table I/O event per
+    * trigger and work proportional to the degradation: appends
     * degrade depth locally (a day's unclustered ingest overlaps one
     * key band), and this verb pays only for that band.
     *
@@ -5642,19 +5738,27 @@ object Layout {
     * precisely the files whose intervals cover it), so the rewritten
     * outputs — range/Z-clustered among themselves — flatten the
     * stack; untouched files sat below the trigger everywhere and
-    * cannot deepen (their stats are unchanged). The rewrite reads
-    * ONLY the selected files, under the evolved-schema sidecar when
-    * one exists; unlike the full verbs the sidecar is KEPT — the
-    * untouched files may still predate an added column, so retiring
-    * it would revert their reads to footer sampling.
+    * cannot deepen (their stats are unchanged). The rewrite,
+    * manifest patch and crash windows are [[rewriteSelected]]'s.
     *
-    * In-place discipline and crash windows are [[optimize]]'s
-    * (scratch-commit, move-in, delete-old, manifest temp+rename
-    * last); `force` skips the depth trigger but the rewrite set still
-    * derives from the profile — with nothing deep and no small files
-    * the call is a no-op (use [[optimize]] with `force` for an
-    * unconditional full rewrite). Flat layouts only, like
-    * [[optimize]]; a partitioned layout optimizes per leaf. */
+    * Flat layout: the depth profile runs over the whole directory,
+    * and nothing is selected unless the worst depth reaches
+    * `maxDepth` or a heavy vector exists; `force` skips that trigger,
+    * but the rewrite set still derives from the profile — with
+    * nothing deep, no small files and no vectors the call is a no-op
+    * (use [[optimize]] with `force` for an unconditional full
+    * rewrite).
+    *
+    * Hive-partitioned layout: the profile runs per leaf
+    * ([[deepFilesPerLeaf]], one leaf-partitioned sweep per in-file key
+    * for the whole tree) — a file is deep when it covers a boundary
+    * whose depth WITHIN ITS OWN LEAF reaches `maxDepth`, so a hot
+    * leaf's cold files stay verbatim, and a year-sized leaf holding
+    * one day of degraded ingest pays one day's I/O, not a year's.
+    * There is no separate trigger (the per-leaf selection is one);
+    * pure fragmentation (too many well-clustered files) is
+    * [[optimize]]'s signal, not this verb's. The reported
+    * `worstDepthBefore` is the per-leaf worst over the in-file keys. */
   def optimizeSelective(spark: org.apache.spark.sql.SparkSession,
                         dir: String, targetRows: Long,
                         maxDepth: Long = 4L, minFileRows: Long = 0L,
@@ -5663,419 +5767,47 @@ object Layout {
                         expectedGen: Option[Long] = None,
                         minDvRatio: Double = 0.0): OptimizeStats = {
     require(targetRows >= 1, "optimizeSelective needs targetRows >= 1")
-    requireEncodingStablePath(dir)
-    val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireFlatLayout(fs, hDir, "optimizeSelective")
-    requireExpectedGen(fs, dir, expectedGen, "optimizeSelective")
-    val manifest = loadManifest(spark, dir)
-    val mSchema = manifest.schema
-    val keys = manifestKeysOf(mSchema)
-    val worst = keys.map(worstDepthOf(manifest, _)).max
-    val before = spark.read.parquet(dir).inputFiles.toSet
-    // vectorized files whose read tax crossed minDvRatio select (and
-    // count as a trigger): rewriting them — vector applied — is the
-    // PURGE that clears the read-side anti-join tax, at file-subset
-    // granularity; lightly-vectorized files keep their cheap
-    // anti-join until the ratio trips, so hotspots self-heal without
-    // churning the whole vectorized tail
-    val dvMap = dvMapOf(manifest, before)
-    val heavyDv = heavyDvFiles(manifest, dvMap, minDvRatio,
+    val scope = optimizeScope(spark, dir, expectedGen, "optimizeSelective")
+    val manifest = scope.manifest
+    val heavyDv = heavyDvFiles(manifest, scope.dvMap, minDvRatio,
       "optimizeSelective")
-    if (!force && worst < maxDepth && heavyDv.isEmpty)
-      return OptimizeStats(reclustered = false, before.size, before.size,
-        worst, filesKept = before.size)
-    // the rewrite set: union of every key's deep-boundary files plus
-    // the small-file tail plus the heavy-vectorized tail —
-    // manifest-sized driver work, like every other verb's planning
-    val deep = keys.flatMap(deepFilesOf(manifest, _, maxDepth)).toSet
-    val small =
-      if (minFileRows <= 0L) Set.empty[String]
-      else manifest.filter(col("n_rows") < minFileRows)
-        .select("file").collect().map(_.getString(0)).toSet
-    val selected = (deep ++ small ++ heavyDv).toSeq.sorted
-    if (selected.isEmpty)
-      return OptimizeStats(reclustered = false, before.size, before.size,
-        worst, filesKept = before.size)
-    val stored = storedSchemaOf(spark, dir)
-    if (verifyCoverage)
-      // the selected files are read and their rows re-written, so
-      // unblessed rows hiding in them would be legitimized — same
-      // consequence as the full verb, checked over the whole dir so
-      // debris in KEPT files fails loudly too instead of surfacing
-      // only on the next mutation
-      requireManifestCovers(spark,
-        stored.fold(spark.read)(s => spark.read.schema(s)).parquet(dir),
-        manifest.select("file").collect().map(_.getString(0)).toSet, dir,
-        "the rewrite would silently legitimize their rows into the new layout")
-    import spark.implicits._
-    val selectedDf = selected.toDF("file")
-    val selRows = manifest
-      .join(broadcast(selectedDf), Seq("file"), "left_semi")
-      .agg(coalesce(sum("n_rows"), lit(0L))).collect()(0).getLong(0)
-    val nOut = math.max(1L, (selRows + targetRows - 1L) / targetRows).toInt
-    val src = readFilesOf(spark, dir, selected.toIndexedSeq, stored,
-      dv = dvMap)
-    val allLong = keys.forall(k =>
-      mSchema(s"min_$k").dataType == org.apache.spark.sql.types.LongType)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/_graft_optimize_tmp")
-    clusteredRewriteTo(src, keys, allLong, tmp.toString, nOut)
-    moveTreeInto(fs, tmp, hDir, "optimizeSelective")
-    fs.delete(tmp, true)
-    // delta stats over the new files BEFORE the old selected files
-    // die (the upsert discipline: re-listed through spark.read so
-    // manifest rows carry the canonical URI spelling)
-    val newFiles = spark.read.parquet(dir).inputFiles.toSeq
-      .filterNot(before)
-    val delta = manifestOf(
-        spark.read.option("basePath", dir).parquet(newFiles: _*),
-        keys, bloomKeysOf(mSchema))
-      .localCheckpoint(true)
-    // OCC re-check before the destructive tail — see deleteWhere
-    requireExpectedGen(fs, dir, expectedGen, "optimizeSelective")
-    val receipt = retireOrDeleteAll(fs, dir, selected, "optimizeSelective")
-    // kept rows verbatim, delta rows appended — the manifest is
-    // PATCHED, never rebuilt, so kept files' stats (and blooms)
-    // cannot drift
-    patchManifest(spark, dir, manifest, keys, selected, Some(delta),
-      "optimizeSelective", expectedGen, receipt)
-    // the selected (vectorized) files were rewritten vector-applied;
-    // nothing can reference their stores on an untracked layout
-    if (!generationsEnabled(fs, dir) && dvMap.nonEmpty)
-      reapUnreferencedDvStores(spark, fs, dir)
-    OptimizeStats(reclustered = true, before.size,
-      spark.read.parquet(dir).inputFiles.length, worst,
-      filesKept = before.size - selected.size)
-  }
-
-  /** [[optimize]] over a hive-partitioned layout, LEAF-selective:
-    * each `k=v` leaf carries its own depth signal — the per-leaf
-    * worst point-lookup depth over the stored keys
-    * ([[worstDepthPerLeaf]], one job for all leaves), which is the
-    * TRUE cost of a partition-pruned lookup (files in other leaves
-    * never stack on it; the old root-manifest global sweep counted
-    * cross-leaf overlap a pruned read never pays). A leaf rewrites
-    * when either CONVERGENT signal fires: its depth over the IN-FILE
-    * keys reaches `maxDepth` (clustering — the rewrite genuinely
-    * resets it; partition-column keys are excluded because their
-    * per-leaf "depth" is just the file count, which would
-    * re-classify every rewritten leaf deep forever once
-    * `filesPerPartition >= maxDepth`), or it holds more than
-    * `filesPerPartition` files (fragmentation/compaction — the only
-    * signal a layout whose stored keys are all partition columns
-    * has). A day's churn into one partition rewrites one leaf, not
-    * the table — each independently into `filesPerPartition`
-    * clustered outputs (no global shuffle, the same per-partition
-    * independence as [[compactPartitioned]]; on a cluster the
-    * per-leaf rewrites parallelize trivially).
-    * `force` rewrites every leaf. Within a leaf the clustering runs
-    * on the stored keys that live in the FILES (a stored key that is
-    * a partition column is constant inside the leaf — nothing to
-    * cluster); if every stored key is a partition column the leaf
-    * just compacts. An evolved layout's leaves read under the
-    * sidecar schema minus the path-encoded columns, so a rewrite
-    * materializes added columns; the sidecar retires only when NO
-    * leaf was skipped (a kept leaf may still predate the column).
-    *
-    * The manifest is PATCHED once after all selected leaves swap:
-    * kept leaves' rows verbatim, one delta-stats pass over just the
-    * new files (read with `basePath` so `k=v` stat keys keep real
-    * values; bloom keys carry over). The crash windows are the
-    * per-leaf scratch-commit / move-in / delete-old ones plus one
-    * wider one: between the first leaf's swap and the final manifest
-    * replace, coverage-guarded reads flag the new files loudly and a
-    * pruned read touching a swapped leaf fails on its deleted old
-    * files — recovery is a [[buildFileManifest]] rebuild, exactly the
-    * post-delete recovery documented on [[deleteWhere]]. */
-  def optimizePartitioned(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, filesPerPartition: Int,
-                          maxDepth: Long = 4L,
-                          force: Boolean = false,
-                          verifyCoverage: Boolean = true,
-                          expectedGen: Option[Long] = None): OptimizeStats = {
-    require(filesPerPartition >= 1, "optimizePartitioned needs files >= 1")
-    requireEncodingStablePath(dir)
-    val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireExpectedGen(fs, dir, expectedGen, "optimizePartitioned")
-    requireNoDvLive(spark, fs, dir, "optimizePartitioned")
-    val dirFrame = spark.read.parquet(dir)
-    val partCols = hivePartColsChecked(fs, hDir, dirFrame.schema)
-    require(partCols.nonEmpty,
-      s"optimizePartitioned expects a hive-partitioned layout; " +
-        s"$dir has no k=v subdirectories — use optimize")
-    val manifest = loadManifest(spark, dir)
-    val mSchema = manifest.schema
-    val keys = manifestKeysOf(mSchema)
-    // in-file clustering keys: stored keys that are NOT path-encoded
-    val fileKeys = keys.filterNot(partCols.contains)
-    // leaf identity is compared by fs path (the manifest's URI
-    // spelling and listStatus's can differ on authority form)
-    def perLeaf(ks: Seq[String]): Map[String, Long] =
-      if (ks.isEmpty) Map.empty
-      else ks.map(worstDepthPerLeaf(manifest, _))
-        .reduce(_.unionAll(_))
-        .groupBy("leaf").agg(max("worst").as("worst")).collect()
-        .map(r => new org.apache.hadoop.fs.Path(
-          new java.net.URI(r.getString(0))).toUri.getPath -> r.getLong(1))
-        .toMap
-    // two CONVERGENT per-leaf signals decide the rewrite set. (1)
-    // Clustering: depth over the IN-FILE keys reaches maxDepth — a
-    // rewrite range/Z-clusters the leaf and genuinely resets it. A
-    // partition-column key must NOT feed this signal: its per-file
-    // stats are constant within the leaf, so its "depth" is just the
-    // leaf's file count, and with filesPerPartition >= maxDepth the
-    // verb would re-classify every rewritten leaf deep forever — an
-    // unbounded full-tree rewrite loop. (2) Fragmentation: more
-    // files than filesPerPartition — the compaction signal (and the
-    // only one a layout whose stored keys are all partition columns
-    // has); converges by construction since the rewrite emits
-    // exactly filesPerPartition outputs.
-    val depthByLeaf = perLeaf(fileKeys)
-    val filesByLeaf: Map[String, Long] = manifest
-      .withColumn("__leaf", regexp_replace(col("file"), "/[^/]+$", ""))
-      .groupBy("__leaf").agg(count(lit(1)).as("n")).collect()
-      .map(r => new org.apache.hadoop.fs.Path(
-        new java.net.URI(r.getString(0))).toUri.getPath -> r.getLong(1))
-      .toMap
-    val deepLeaves = depthByLeaf.filter(_._2 >= maxDepth).keySet ++
-      filesByLeaf.filter(_._2 > filesPerPartition).keySet
-    // reported signal: per-leaf worst over ALL stored keys — the
-    // documented "max point-lookup depth across the stored keys"
-    val perLeafAll = perLeaf(keys)
-    val worst = if (perLeafAll.isEmpty) 0L else perLeafAll.values.max
-    val before = dirFrame.inputFiles.toSet
-    if (!force && deepLeaves.isEmpty)
-      return OptimizeStats(reclustered = false, before.size, before.size,
-        worst, filesKept = before.size)
-    if (verifyCoverage)
-      // same reasoning as optimize's: the per-leaf rewrites read every
-      // selected file, so unblessed rows would be made permanent
-      requireManifestCovers(spark, dirFrame,
-        manifest.select("file").collect().map(_.getString(0)).toSet, dir,
-        "the rewrite would silently legitimize their rows into the new layout")
-    val allLong = fileKeys.forall(k =>
-      mSchema(s"min_$k").dataType == org.apache.spark.sql.types.LongType)
-    val leafSchema = storedSchemaOf(spark, dir).map { s =>
-      org.apache.spark.sql.types.StructType(
-        s.filterNot(f => partCols.contains(f.name)))
-    }
-    val removed = scala.collection.mutable.ArrayBuffer[String]()
-    val receipts = scala.collection.mutable.ArrayBuffer[RetireReceipt]()
-    var skippedLeaves = 0
-    def isAux(n: String) = n.startsWith("_") || n.startsWith(".")
-    def rewriteLeaf(leaf: org.apache.hadoop.fs.Path): Unit = {
-      if (!force && !deepLeaves.contains(leaf.toUri.getPath)) {
-        skippedLeaves += 1
-        return
-      }
-      // fs-level emptiness check BEFORE any spark.read: a leaf a
-      // prior deleteWhere emptied has no footer to infer a schema
-      // from, and crashing here would strand already-swapped leaves
-      // ahead of the one-shot manifest patch
-      if (!fs.listStatus(leaf).exists(st =>
-          st.isFile && !isAux(st.getPath.getName))) return
-      val src = leafSchema.fold(spark.read)(s => spark.read.schema(s))
-        .parquet(leaf.toString)
-      val oldFiles = src.inputFiles
-      if (oldFiles.isEmpty) return
-      val tmp = new org.apache.hadoop.fs.Path(leaf, "_graft_optimize_tmp")
-      // same one-agg Z-order/range/compact decision as the flat verb
-      // ([[clusteredRewriteTo]]); a leaf whose stored keys are all
-      // partition columns has no in-file key and just compacts
-      clusteredRewriteTo(src, fileKeys, allLong, tmp.toString,
-        filesPerPartition)
-      moveTreeInto(fs, tmp, leaf, "optimizePartitioned")
-      fs.delete(tmp, true)
-      // destroy (or retire, on a generation-tracked tree) the leaf's
-      // old files only after its clustered copy is live; retirement
-      // is labeled against the ROOT — all leaves of this pass share
-      // one label, because the manifest commits once at the end
-      retireOrDeleteAll(fs, dir, oldFiles, "optimizePartitioned")
-        .foreach(r => receipts += r)
-      removed ++= oldFiles
-    }
-    def walk(cur: org.apache.hadoop.fs.Path): Unit = {
-      val entries = fs.listStatus(cur)
-      val subdirs = entries.filter(st =>
-        st.isDirectory && !isAux(st.getPath.getName))
-      if (subdirs.nonEmpty) {
-        require(!entries.exists(st => st.isFile && !isAux(st.getPath.getName)),
-          s"$cur mixes data files with partition subdirectories — not a hive layout")
-        subdirs.foreach(d => walk(d.getPath))
-      } else rewriteLeaf(cur)
-    }
-    // OCC re-check before the first leaf swaps (the walk is the
-    // destructive tail) — see deleteWhere
-    requireExpectedGen(fs, dir, expectedGen, "optimizePartitioned")
-    walk(hDir)
-    if (removed.isEmpty)
-      // every selected leaf turned out empty — nothing moved, the
-      // manifest is still exact
-      return OptimizeStats(reclustered = false, before.size, before.size,
-        worst, filesKept = before.size)
-    // ONE stats PATCH over the swapped leaves: kept leaves' manifest
-    // rows verbatim (their stats and blooms cannot drift), one delta
-    // pass over just the new files — basePath restores k=v stat keys
-    val newFiles = spark.read.parquet(dir).inputFiles.toSeq
-      .filterNot(before)
-    val delta = manifestOf(
-        spark.read.option("basePath", dir).parquet(newFiles: _*),
-        keys, bloomKeysOf(mSchema))
-      .localCheckpoint(true)
-    patchManifest(spark, dir, manifest, keys, removed.toSeq, Some(delta),
-      "optimizePartitioned", expectedGen,
-      receipts.reduceOption((a, b) => RetireReceipt(a.gen, a.moved ++ b.moved)))
-    // the sidecar retires only when every leaf rewrote: a skipped
-    // leaf may still hold files that predate an added column, and
-    // retiring it would revert their reads to footer sampling. NOT
-    // on a generation-tracked tree — retained snapshots still
-    // reference RETIRED pre-evolution files that resolve under it
-    // (same rule as the flat optimize)
-    if (skippedLeaves == 0 && !generationsEnabled(fs, dir))
-      retireSchemaSidecars(fs, dir)
-    OptimizeStats(reclustered = true, before.size,
-      spark.read.parquet(dir).inputFiles.length, worst,
-      filesKept = before.size - removed.size)
-  }
-
-  /** FILE-SUBSET OPTIMIZE inside partition leaves —
-    * [[optimizeSelective]]'s granularity composed into
-    * [[optimizePartitioned]]'s tree: where the leaf verb rewrites a
-    * fired leaf WHOLE, this one rewrites only the files the per-leaf
-    * depth profile names (interval covers a boundary at depth ≥
-    * `maxDepth` WITHIN ITS OWN LEAF — [[deepFilesPerLeaf]], one
-    * leaf-partitioned sweep per in-file key for the whole tree) plus
-    * the small-file tail (`n_rows < minFileRows`, opt-in), bin-packed
-    * per leaf into `ceil(leaf's selected rows / targetRows)` clustered
-    * outputs. Every unselected file — including the COLD files of a
-    * hot leaf — keeps its exact name, bytes, and manifest row
-    * VERBATIM. At 100 TB this is the missing granularity between
-    * "rewrite the table" and "rewrite the leaf": a year-sized leaf
-    * holding one day of degraded ingest pays one day's I/O, not a
-    * year's.
-    *
-    * Selection is conservative-correct per leaf (every file stacked
-    * at a deep boundary is selected, so the leaf-local rewrite
-    * flattens the stack; unselected files sat below the trigger and
-    * their stats cannot drift). Rewrites read ONLY the selected
-    * files, under the evolved-schema sidecar minus the path-encoded
-    * columns; the sidecar is KEPT (kept files may predate an added
-    * column). The manifest is PATCHED once after all leaves swap;
-    * crash windows are [[optimizePartitioned]]'s. A leaf with no deep
-    * boundary and no small files is untouched — pure fragmentation
-    * (too many well-clustered files) is [[optimizePartitioned]]'s
-    * signal, not this verb's. */
-  def optimizePartitionedSelective(spark: org.apache.spark.sql.SparkSession,
-                                   dir: String, targetRows: Long,
-                                   maxDepth: Long = 4L,
-                                   minFileRows: Long = 0L,
-                                   verifyCoverage: Boolean = true,
-                                   expectedGen: Option[Long] = None,
-                                   minDvRatio: Double = 0.0)
-      : OptimizeStats = {
-    require(targetRows >= 1,
-      "optimizePartitionedSelective needs targetRows >= 1")
-    requireEncodingStablePath(dir)
-    val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireExpectedGen(fs, dir, expectedGen, "optimizePartitionedSelective")
-    val dirFrame = spark.read.parquet(dir)
-    val partCols = hivePartColsChecked(fs, hDir, dirFrame.schema)
-    require(partCols.nonEmpty,
-      s"optimizePartitionedSelective expects a hive-partitioned " +
-        s"layout; $dir has no k=v subdirectories — use optimizeSelective")
-    val manifest = loadManifest(spark, dir)
-    val mSchema = manifest.schema
-    val keys = manifestKeysOf(mSchema)
-    val fileKeys = keys.filterNot(partCols.contains)
-    val before = dirFrame.inputFiles.toSet
-    // reported signal: per-leaf worst over the in-file keys — the
-    // same number the leaf verb fires on (partition-column keys
-    // excluded for the same file-count-degeneracy reason)
+    val flat = scope.partCols.isEmpty
     val worst =
-      if (fileKeys.isEmpty) 0L
+      if (flat) scope.keys.map(worstDepthOf(manifest, _)).max
+      else if (scope.fileKeys.isEmpty) 0L
       else {
-        val w = fileKeys.map(worstDepthPerLeaf(manifest, _))
+        val w = scope.fileKeys.map(worstDepthPerLeaf(manifest, _))
           .reduce(_.unionAll(_)).agg(max("worst")).collect()(0)
         if (w.isNullAt(0)) 0L else w.getLong(0)
       }
-    val deep = fileKeys.flatMap(deepFilesPerLeaf(manifest, _, maxDepth))
-      .toSet
-    val small =
-      if (minFileRows <= 0L) Set.empty[String]
-      else manifest.filter(col("n_rows") < minFileRows)
-        .select("file").collect().map(_.getString(0)).toSet
-    // vectorized files past minDvRatio select: their leaf-local
-    // rewrite (vector applied) is the PURGE, at the same file-subset
-    // granularity — a hot leaf's GDPR vectors clear without touching
-    // its cold files, lightly-vectorized ones, or any other leaf
-    val dvMap = dvMapOf(manifest, before)
-    val selected = deep ++ small ++
-      heavyDvFiles(manifest, dvMap, minDvRatio,
-        "optimizePartitionedSelective")
-    if (selected.isEmpty)
-      return OptimizeStats(reclustered = false, before.size, before.size,
-        worst, filesKept = before.size)
-    val stored = storedSchemaOf(spark, dir)
-    if (verifyCoverage)
-      requireManifestCovers(spark, dirFrame,
-        manifest.select("file").collect().map(_.getString(0)).toSet, dir,
-        "the rewrite would silently legitimize their rows into the new layout")
+    val selected =
+      if (flat && !force && worst < maxDepth && heavyDv.isEmpty) Nil
+      else {
+        // the rewrite set: union of every key's deep-boundary files
+        // plus the small-file tail plus the heavy-vectorized tail —
+        // manifest-sized driver work, like every other verb's planning
+        val deep =
+          if (flat) scope.keys.flatMap(deepFilesOf(manifest, _, maxDepth))
+          else scope.fileKeys.flatMap(deepFilesPerLeaf(manifest, _, maxDepth))
+        val small =
+          if (minFileRows <= 0L) Nil
+          else manifest.filter(col("n_rows") < minFileRows)
+            .select("file").collect().map(_.getString(0)).toSeq
+        (deep.toSet ++ small ++ heavyDv).toSeq
+      }
     import spark.implicits._
-    val rowsByFile = manifest
-      .join(broadcast(selected.toSeq.toDF("file")), Seq("file"), "left_semi")
-      .select("file", "n_rows").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val leafSchema = stored.map { s =>
-      org.apache.spark.sql.types.StructType(
-        s.filterNot(f => partCols.contains(f.name)))
+    val rowsByFile =
+      if (selected.isEmpty) Map.empty[String, Long]
+      else manifest
+        .join(broadcast(selected.toDF("file")), Seq("file"), "left_semi")
+        .select("file", "n_rows").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    def outputsFor(files: Seq[String]): Int = {
+      val rows = files.map(rowsByFile).sum
+      math.max(1L, (rows + targetRows - 1L) / targetRows).toInt
     }
-    val allLong = fileKeys.forall(k =>
-      mSchema(s"min_$k").dataType == org.apache.spark.sql.types.LongType)
-    val receipts = scala.collection.mutable.ArrayBuffer[RetireReceipt]()
-    val byLeaf = selected.toSeq.sorted.groupBy(f =>
-      new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent)
-    // OCC re-check before the first leaf swaps — see deleteWhere
-    requireExpectedGen(fs, dir, expectedGen, "optimizePartitionedSelective")
-    for ((leaf, files) <- byLeaf.toSeq.sortBy(_._1.toString)) {
-      val selRows = files.map(rowsByFile).sum
-      val nOut = math.max(1L, (selRows + targetRows - 1L) / targetRows).toInt
-      val src0 = leafSchema.fold(spark.read)(s => spark.read.schema(s))
-        .parquet(files: _*)
-      // this leaf's vectors anti-join away so the clustered output is
-      // vector-free (paths in the stores are absolute, so the
-      // leaf-anchored read matches them unchanged)
-      val leafDv = files.flatMap(f => dvMap.get(f)).distinct
-      val src =
-        if (leafDv.isEmpty) src0
-        else antiJoinDv(spark, stampDvCols(src0), leafDv, Map.empty)
-      val tmp = new org.apache.hadoop.fs.Path(leaf, "_graft_optimize_tmp")
-      clusteredRewriteTo(src, fileKeys, allLong, tmp.toString, nOut)
-      moveTreeInto(fs, tmp, leaf, "optimizePartitionedSelective")
-      fs.delete(tmp, true)
-      // retire (or delete) only this leaf's selected files, now fully
-      // superseded by their clustered copy; all leaves share one
-      // label because the manifest commits once at the end
-      retireOrDeleteAll(fs, dir, files, "optimizePartitionedSelective")
-        .foreach(receipts += _)
-    }
-    val newFiles = spark.read.parquet(dir).inputFiles.toSeq
-      .filterNot(before)
-    val delta = manifestOf(
-        spark.read.option("basePath", dir).parquet(newFiles: _*),
-        keys, bloomKeysOf(mSchema))
-      .localCheckpoint(true)
-    patchManifest(spark, dir, manifest, keys, selected.toSeq.sorted,
-      Some(delta), "optimizePartitionedSelective", expectedGen,
-      receipts.reduceOption((a, b) => RetireReceipt(a.gen, a.moved ++ b.moved)))
-    // the selected (vectorized) files were rewritten vector-applied;
-    // nothing can reference their stores on an untracked layout
-    if (!generationsEnabled(fs, dir) && dvMap.nonEmpty)
-      reapUnreferencedDvStores(spark, fs, dir)
-    OptimizeStats(reclustered = true, before.size,
-      spark.read.parquet(dir).inputFiles.length, worst,
-      filesKept = before.size - selected.size)
+    rewriteSelected(spark, dir, scope, selected, outputsFor, worst,
+      verifyCoverage, expectedGen, "optimizeSelective")
   }
 
   /** Write `df` as a managed parquet table hash-bucketed (and sorted

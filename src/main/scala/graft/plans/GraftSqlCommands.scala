@@ -62,11 +62,10 @@ import graft.ext.Layout
   * resolution — see [[GraftTimeTravel]].
   *
   * Every statement is a THIN shell over the existing verb (no second
-  * implementation of any semantics): OPTIMIZE dispatches to
-  * [[Layout.optimizeSelective]] on a flat layout and
-  * [[Layout.optimizePartitionedSelective]] on a hive-partitioned
-  * tree — the file-subset forms, since "pay for the degradation, not
-  * the table" is the only default that survives 100 TB; VACUUM's
+  * implementation of any semantics): OPTIMIZE runs
+  * [[Layout.optimizeSelective]] on either layout shape — the
+  * file-subset form, since "pay for the degradation, not the table"
+  * is the only default that survives 100 TB; VACUUM's
   * FORCE maps to the snapshot-pin override and inherits its loud
   * refusal otherwise. Statements not starting with the GRAFT keyword
   * delegate verbatim to Spark's own parser — the extension never
@@ -281,12 +280,8 @@ object GraftSqlCommands {
             "files_after" -> IntegerType, "worst_depth_before" -> LongType,
             "files_kept" -> IntegerType),
           s => {
-            val st =
-              if (Layout.isHivePartitioned(s, dir))
-                Layout.optimizePartitionedSelective(s, dir, target.toLong,
-                  minDvRatio = ratio)
-              else Layout.optimizeSelective(s, dir, target.toLong,
-                minDvRatio = ratio)
+            val st = Layout.optimizeSelective(s, dir, target.toLong,
+              minDvRatio = ratio)
             Seq(Row(st.reclustered, st.filesBefore, st.filesAfter,
               st.worstDepthBefore, st.filesKept))
           }))

@@ -1157,7 +1157,7 @@ object RelationalQueries {
         // the two bootstraps are independent full-table aggregates:
         // pin them from two driver threads so the jobs overlap
         // (opt r18, guide §2.6) — same frames, same results
-        val (a0, b0) = graft.ext.Ivm.inParallel(
+        val (a0, b0) = graft.ext.Checkpoints.inParallel(
           graft.ext.Ivm.aggregateOf(
             o.filter(col("o_orderkey") % 2 === 0), aCols, Nil)
             .localCheckpoint(true),

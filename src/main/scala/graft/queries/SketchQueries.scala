@@ -1881,17 +1881,17 @@ object SketchQueries {
       bench = true),
 
     // FILE-SUBSET OPTIMIZE inside a partition leaf —
-    // [[Layout.optimizePartitionedSelective]], the granularity between
-    // "rewrite the table" and "rewrite the leaf": a lang-partitioned
-    // tree takes four narrow appends stacked over one doc_id band of
-    // ONE hot lang leaf, and the rewrite bin-packs just that leaf's
-    // stacked files — the hot leaf's COLD files and every other leaf
-    // keep their exact names and manifest rows verbatim
-    // (fixture-asserted). The gate's pruned read spans rewritten AND
-    // kept regions across all leaves, so the hash match against
-    // DuckDB's replay of the same churn proves the leaf-local partial
-    // rewrite lost nothing and the patched manifest still prunes
-    // exactly.
+    // [[Layout.optimizeSelective]] on a partitioned tree, the
+    // granularity between "rewrite the table" and "rewrite the leaf":
+    // a lang-partitioned tree takes four narrow appends stacked over
+    // one doc_id band of ONE hot lang leaf, and the rewrite bin-packs
+    // just that leaf's stacked files — the hot leaf's COLD files and
+    // every other leaf keep their exact names and manifest rows
+    // verbatim (fixture-asserted). The gate's pruned read spans
+    // rewritten AND kept regions across all leaves, so the hash match
+    // against DuckDB's replay of the same churn proves the leaf-local
+    // partial rewrite lost nothing and the patched manifest still
+    // prunes exactly.
     QueryDef("q_layout_optimize_leaf",
       (s, d) => {
         val dir = prunedFixture.computeIfAbsent(s"$d#docs_optleaf", _ => {
@@ -1915,7 +1915,7 @@ object SketchQueries {
           for (_ <- 1 to 4)
             Layout.appendWithManifest(churn, p, Seq("doc_id"))
           val before = s.read.parquet(p).inputFiles.toSet
-          val st = Layout.optimizePartitionedSelective(s, p,
+          val st = Layout.optimizeSelective(s, p,
             targetRows = 8192L, maxDepth = 4L)
           require(st.reclustered && st.filesKept > 0 &&
               st.filesBefore > st.filesKept, s"degenerate fixture: $st")
@@ -1923,7 +1923,7 @@ object SketchQueries {
           require(kept.size == st.filesKept,
             s"kept files did not keep their exact names: $st vs ${kept.size}")
           // the hot leaf itself must retain a verbatim file — the
-          // inside-the-leaf granularity optimizePartitioned lacks
+          // inside-the-leaf granularity whole-leaf optimize lacks
           require(kept.exists(_.contains(s"lang=$hot")),
             "no cold file survived inside the hot leaf")
           p

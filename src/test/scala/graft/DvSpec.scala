@@ -150,29 +150,50 @@ class DvSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("optimizeSelective PURGES vectors: rewrite applies them, snapshots still see them") {
-    withTempDir("graft_dv_purge_") { dir =>
+    // the same purge contract through the file-subset verb and the
+    // whole-directory one, generation-tracked and untracked: the
+    // rewrite patches the manifest, never rebuilds it, so the
+    // `_graft_dv` stores cannot block it
+    val purges: Seq[(String, Boolean, String => Layout.OptimizeStats)] = Seq(
+      ("optimizeSelective", true,
+        d => Layout.optimizeSelective(spark, d, targetRows = 200L)),
+      ("optimize", true, d => Layout.optimize(spark, d, files = 2)),
+      ("optimize", false, d => Layout.optimize(spark, d, files = 2)))
+    for ((verb, tracked, purge) <- purges) withTempDir("graft_dv_purge_") { dir =>
+      val what = s"$verb (tracked = $tracked)"
       mkLayout(dir)
-      Layout.enableGenerations(spark, dir)
+      if (tracked) Layout.enableGenerations(spark, dir)
       Layout.deleteWhereDv(spark, dir, Seq(Layout.KeyBox("k", 100L, 149L)))
       val want = expect(1000, k => k < 100 || k > 149)
       // vectors count as the trigger even with healthy depth
-      val st = Layout.optimizeSelective(spark, dir, targetRows = 200L)
-      assert(st.reclustered, "vector presence must trigger the purge")
+      val st = purge(dir)
+      assert(st.reclustered, s"$what: vector presence must trigger the purge")
       val m = Layout.loadManifest(spark, dir)
       assert(m.filter(col("dv_path").isNotNull).count() == 0L,
-        "purge must clear every vector pointer")
-      assert(got(Layout.readLayout(spark, dir)) == want)
-      // the vectorized generation still reads exactly — its file is
-      // RETIRED now, so the store's recorded path is remapped onto
-      // the retirement label (the hard path)
-      assert(got(Layout.readSnapshot(spark, dir, 1L)) == want)
-      assert(got(Layout.readSnapshot(spark, dir, 0L)) ==
-        expect(1000, _ => true))
-      // CDF across the purge nets to zero row change
-      val net = Layout.changesBetween(spark, dir, 1L, 2L)
-        .groupBy("k", "g", "v").agg(sum("op").as("n"))
-        .filter(col("n") =!= 0)
-      assert(net.count() == 0L, "a purge is data-identical")
+        s"$what: purge must clear every vector pointer")
+      assert(names(dir).subsetOf(m.select("file").as[String].collect().toSet),
+        s"$what: the manifest must cover every live file")
+      assert(got(Layout.readLayout(spark, dir)) == want, what)
+      if (tracked) {
+        // the vectorized generation still reads exactly — its file is
+        // RETIRED now, so the store's recorded path is remapped onto
+        // the retirement label (the hard path)
+        assert(got(Layout.readSnapshot(spark, dir, 1L)) == want, what)
+        assert(got(Layout.readSnapshot(spark, dir, 0L)) ==
+          expect(1000, _ => true), what)
+        // CDF across the purge nets to zero row change
+        val net = Layout.changesBetween(spark, dir, 1L, 2L)
+          .groupBy("k", "g", "v").agg(sum("op").as("n"))
+          .filter(col("n") =!= 0)
+        assert(net.count() == 0L, s"$what: a purge is data-identical")
+      } else {
+        // nothing can reference the stores on an untracked layout
+        val fs = new org.apache.hadoop.fs.Path(dir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val r = new org.apache.hadoop.fs.Path(s"$dir/_graft_dv")
+        assert(!fs.exists(r) || !fs.listStatus(r).exists(_.isDirectory),
+          s"$what: the purge must reap the unreferenced stores")
+      }
     }
   }
 
@@ -334,7 +355,7 @@ class DvSpec extends AnyFunSuite with SharedSpark {
         .filter(col("dv_path").isNotNull).select("file")
         .as[String].collect().toSet
       val untouched = before -- dvFiles
-      val st2 = Layout.optimizePartitionedSelective(spark, dir,
+      val st2 = Layout.optimizeSelective(spark, dir,
         targetRows = 100000L)
       assert(st2.reclustered, "vector presence must trigger the purge")
       assert(untouched.subsetOf(names(dir)),
@@ -345,6 +366,29 @@ class DvSpec extends AnyFunSuite with SharedSpark {
       // the vectorized generation still time-travels (retired files
       // + path remap)
       assert(Layout.readSnapshot(spark, dir, 1L).count() == 340L)
+      // whole-leaf PURGE: a single-key vector lands in one leaf
+      // (k = 201 → p = 1); that leaf fires on its vector alone
+      // (`files` above every leaf's count, depth healthy) and rewrites
+      // whole, every other leaf keeps its exact files
+      Layout.deleteWhereDv(spark, dir, Seq(Layout.KeyBox("k", 201L, 201L)))
+      val beforeLeaf = names(dir)
+      val st3 = Layout.optimize(spark, dir, files = 8)
+      assert(st3.reclustered, "a leaf's vector must fire its rewrite")
+      assert(beforeLeaf.filterNot(_.contains("/p=1/")).subsetOf(names(dir)),
+        "vector-free leaves must keep their exact names")
+      assert(!beforeLeaf.filter(_.contains("/p=1/")).exists(names(dir)),
+        "the vectorized leaf must rewrite whole")
+      val m3 = Layout.loadManifest(spark, dir)
+      assert(m3.filter(col("dv_path").isNotNull).count() == 0L)
+      assert(names(dir).subsetOf(m3.select("file").as[String].collect().toSet),
+        "the manifest must cover every live file")
+      val live = Layout.readLayout(spark, dir)
+      assert(live.count() == 339L && live.filter(col("k") === 201L).count() == 0L)
+      assert(live.filter(col("p") === "1").count() ==
+        (0L until 400L).count(k => (k < 100 || k > 159) && k % 4 == 1 && k != 201))
+      // both vectorized generations still time-travel
+      assert(Layout.readSnapshot(spark, dir, 1L).count() == 340L)
+      assert(Layout.readSnapshot(spark, dir, 3L).count() == 339L)
     }
   }
 

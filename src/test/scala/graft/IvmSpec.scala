@@ -1,6 +1,6 @@
 package graft
 
-import graft.ext.Ivm
+import graft.ext.{Checkpoints, Ivm}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,16 +33,16 @@ class IvmSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("inParallel returns both results and propagates either side's failure unchanged") {
-    assert(Ivm.inParallel(1 + 1, "x" * 2) === ((2, "xx")))
+    assert(Checkpoints.inParallel(1 + 1, "x" * 2) === ((2, "xx")))
     // the b side runs in a Future: its exception must surface as-is,
     // not wrapped — the loud-contract messages (phantom deletes, ±1
     // refusals) are part of the maintenance verbs' API
     val eb = intercept[IllegalArgumentException] {
-      Ivm.inParallel({ Thread.sleep(20); 1 }, require(false, "boom-b"))
+      Checkpoints.inParallel({ Thread.sleep(20); 1 }, require(false, "boom-b"))
     }
     assert(eb.getMessage.contains("boom-b"))
     val ea = intercept[IllegalArgumentException] {
-      Ivm.inParallel(require(false, "boom-a"), 42)
+      Checkpoints.inParallel(require(false, "boom-a"), 42)
     }
     assert(ea.getMessage.contains("boom-a"))
   }

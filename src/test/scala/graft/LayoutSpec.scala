@@ -1471,8 +1471,8 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
           d, Seq("doc_id", "lang"))
       val before = Layout.readLayout(spark, d)
         .agg(count(lit(1)), sum("doc_id"), sum("n_chars")).head()
-      val st = Layout.optimizePartitioned(spark, d,
-        filesPerPartition = 1, maxDepth = 3L)
+      val st = Layout.optimize(spark, d,
+        files = 1, maxDepth = 3L)
       assert(st.reclustered && st.worstDepthBefore >= 3L, st.toString)
       val nLangs = docs.select("lang").distinct().count()
       assert(st.filesAfter === nLangs, st.toString)
@@ -1491,7 +1491,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       // re-invocation declines as a metadata-only no-op (the global
       // cross-leaf doc_id overlap that remains is partition-intrinsic
       // — a partition-pruned lookup never pays it)
-      val st2b = Layout.optimizePartitioned(spark, d, 1, maxDepth = 3L)
+      val st2b = Layout.optimize(spark, d, 1, maxDepth = 3L)
       assert(!st2b.reclustered && st2b.filesKept === st2b.filesBefore,
         st2b.toString)
       val mf = Layout.loadManifest(spark, d)
@@ -1505,14 +1505,6 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       assert(Layout.scanPruned(spark, d,
           Seq(Layout.TypedKeyBox("lang", lang0, lang0))).count() ===
         after.filter(col("lang") === lang0).count())
-      // a FLAT layout is loudly redirected to the flat verb
-      val flat = s"$dir/flat"
-      (0L until 10L).map(k => (k, k)).toDF("k", "v")
-        .repartition(1).write.parquet(flat)
-      val e = intercept[IllegalArgumentException] {
-        Layout.optimizePartitioned(spark, flat, 1)
-      }
-      assert(e.getMessage.contains("use optimize"))
       // an EMPTIED leaf (a delete can leave a bare k=v dir behind) is
       // skipped, never crashed on — a mid-walk abort would strand
       // already-swapped leaves ahead of the manifest rebuild
@@ -1521,7 +1513,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
         val n = st0.getPath.getName
         st0.isFile && !n.startsWith("_") && !n.startsWith(".")
       }.foreach(st0 => fs.delete(st0.getPath, false))
-      val st3 = Layout.optimizePartitioned(spark, d, 1, force = true)
+      val st3 = Layout.optimize(spark, d, 1, force = true)
       assert(st3.reclustered, st3.toString)
       assert(spark.read.parquet(d).filter(col("lang") === lang0)
         .count() === 0L)
@@ -1538,7 +1530,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
           d2, Seq("doc_id", "lang"))
       val before2 = spark.read.parquet(d2).inputFiles.toSet
       val total2 = spark.read.parquet(d2).count()
-      val stSel = Layout.optimizePartitioned(spark, d2, 1, maxDepth = 4L)
+      val stSel = Layout.optimize(spark, d2, 1, maxDepth = 4L)
       assert(stSel.reclustered, stSel.toString)
       val nCold = docs.select("lang").distinct().count().toInt - 1
       assert(stSel.filesKept === nCold, stSel.toString)
@@ -1562,10 +1554,10 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       // key's per-leaf "depth" is just the file count and is excluded
       // from the clustering signal, else every call would full-tree
       // rewrite forever
-      val stConv = Layout.optimizePartitioned(spark, d2, 4,
+      val stConv = Layout.optimize(spark, d2, 4,
         maxDepth = 4L, force = true)
       assert(stConv.reclustered, stConv.toString)
-      val stConv2 = Layout.optimizePartitioned(spark, d2, 4, maxDepth = 4L)
+      val stConv2 = Layout.optimize(spark, d2, 4, maxDepth = 4L)
       assert(!stConv2.reclustered,
         "rewrite output re-classified deep — unbounded rewrite loop")
     }
@@ -1593,7 +1585,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
         .agg(count(lit(1)).as("n"), sum("v").as("sv"), sum("k").as("sk"))
         .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
       val expect = canon()
-      val st = Layout.optimizePartitionedSelective(spark, d,
+      val st = Layout.optimizeSelective(spark, d,
         targetRows = 1000L, maxDepth = 4L)
       assert(st.reclustered && st.filesKept > 0)
       val after = spark.read.parquet(d).inputFiles.toSet
@@ -1613,27 +1605,17 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
           .count() ===
         spark.read.parquet(d).filter(col("k").between(40L, 250L)).count())
       // the rewrite genuinely reset the depth: a second call declines
-      val st2 = Layout.optimizePartitionedSelective(spark, d,
+      val st2 = Layout.optimizeSelective(spark, d,
         targetRows = 1000L, maxDepth = 4L)
       assert(!st2.reclustered && st2.filesKept === after.size)
       // small-file tail is selectable independently of depth
       Layout.appendWithManifest(
         Seq((500L, "b", 1L)).toDF("k", "g", "v").repartition(1),
         d, Seq("k"))
-      val st3 = Layout.optimizePartitionedSelective(spark, d,
+      val st3 = Layout.optimizeSelective(spark, d,
         targetRows = 1000L, maxDepth = 4L, minFileRows = 5L)
       assert(st3.reclustered && st3.filesBefore - st3.filesKept >= 1)
       assert(canon().map(_._2).sum === expect.map(_._2).sum + 1)
-      // flat layouts are refused by name
-      val flat = s"$dir/flat"
-      (0L to 9L).map(k => (k, k)).toDF("k", "v").repartition(1)
-        .write.parquet(flat)
-      Layout.buildFileManifest(spark, flat, Seq("k"))
-        .write.mode("overwrite").parquet(s"$flat/_graft_manifest")
-      val notPart = intercept[IllegalArgumentException] {
-        Layout.optimizePartitionedSelective(spark, flat, 1000L)
-      }
-      assert(notPart.getMessage.contains("optimizeSelective"))
     }
   }
 
@@ -1659,7 +1641,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
         .agg(count(lit(1)).as("n"), sum("v").as("sv"))
         .as[(String, String, Long, Long)].collect().sorted.toSeq
       val expect = canon()
-      val st = Layout.optimizePartitionedSelective(spark, d,
+      val st = Layout.optimizeSelective(spark, d,
         targetRows = 1000L, maxDepth = 4L)
       assert(st.reclustered && st.filesKept > 0, st.toString)
       val kept = spark.read.parquet(d).inputFiles.toSet.intersect(before)
@@ -1677,7 +1659,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
         spark.read.parquet(d)
           .filter(col("lang").between("de", "fr")).count())
       // depth genuinely reset
-      assert(!Layout.optimizePartitionedSelective(spark, d,
+      assert(!Layout.optimizeSelective(spark, d,
         targetRows = 1000L, maxDepth = 4L).reclustered)
     }
   }
@@ -2695,7 +2677,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       // leaf-selective OPTIMIZE on the TRACKED tree retires, never
       // deletes: generation 2 stays fully readable afterwards
       val before = spark.read.parquet(d).inputFiles.toSet
-      val st = Layout.optimizePartitioned(spark, d, filesPerPartition = 1,
+      val st = Layout.optimize(spark, d, files = 1,
         force = true)
       assert(st.reclustered, st.toString)
       assert(Layout.readSnapshot(spark, d, 2L).count() === 75L)
