@@ -683,15 +683,6 @@ object Layout {
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest")),
       s"$dir carries no manifest — build one before enabling generations")
     fs.mkdirs(historyDir(dir))
-    // the layout's IDENTITY TOKEN (this file's mtime) — what the
-    // JVM-global per-(dir, gen) caches fold into their keys, so a
-    // layout deleted and rebuilt at the SAME path (generations
-    // restart at 0) can never be answered from the old table's
-    // cached row counts / schemas / file lists. Created once per
-    // enable; a recreate re-creates it with a fresh mtime, making
-    // every stale entry unreachable. Idempotent like the floor
-    // record below.
-    if (!fs.exists(identityPath(dir))) fs.create(identityPath(dir)).close()
     // stamp the generation that is live RIGHT NOW (the moment
     // timestamp tracking begins) so [[generationAsOf]] has a floor
     // record; idempotent — a re-enable must not restamp history
@@ -699,25 +690,6 @@ object Layout {
     if (!fs.exists(commitInfoPath(dir, g)))
       writeCommitInfo(fs, dir, g, "enableGenerations")
     ()
-  }
-
-  private def identityPath(dir: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(historyDir(dir), "_identity")
-
-  /** The layout-identity token the per-(dir, gen) caches key on: the
-    * enable-time `_identity` marker's mtime. Generation NUMBERS are
-    * only unique within one table lifetime — delete the directory,
-    * rebuild it, re-enable, and gen 0 names different data — so a
-    * bare (dir, gen) cache key would silently serve the OLD table's
-    * counts/schemas/file lists to the new one. Layouts tracked by
-    * earlier versions (no marker) token as 0: consistent, and any
-    * in-place recreate goes through [[enableGenerations]], which now
-    * writes the marker and thereby retires every 0-keyed entry. */
-  private def layoutIdentity(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: String): Long = {
-    val p = identityPath(dir)
-    try if (fs.exists(p)) fs.getFileStatus(p).getModificationTime else 0L
-    catch { case _: java.io.IOException => 0L }
   }
 
   /** Per-generation commit record
@@ -1014,39 +986,38 @@ object Layout {
     requireEncodingStablePath(dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rows = snapshotDvRows(spark, fs, dir, gen)
-    val resolved = resolveSnapshotFiles(fs, dir, gen,
-      rows.map(_._1).toArray)
-    readResolvedDv(spark, dir, rows.zip(resolved).map {
-      case ((f, dv), res) => (f, res, dv)
-    })
+    val snap = snapshotOf(spark, fs, dir, gen)
+    readSnapshotRows(spark, fs, dir, gen, snap, snapshotDvRows(spark, snap))
   }
 
-  /** The generation manifest's (file, dv_path) rows — MEMOIZED per
-    * (dir, identity, gen): the content is immutable once tracked
-    * (every mutation archives the outgoing manifest and bumps the
-    * counter), and the uncached read is a driver-side Spark job the
-    * V2 reader's analysis/optimizer rewrites would otherwise re-run
-    * on every (re-)analysis of every query over the snapshot — the
-    * planner tax Delta's SnapshotManagement cache exists to avoid.
-    * Only the manifest ROWS memoize; live-or-retired resolution runs
-    * fresh each call (see [[prunedSnapshotFileAnchors]]). */
+  /** The (file, dv_path) rows of a snapshot's manifest, minus those
+    * `skip` proves disjoint — a Filter/Project over the snapshot's
+    * frame, collected without a job when its rows are held (see
+    * [[ManifestSnapshot]]). */
   private def snapshotDvRows(spark: org.apache.spark.sql.SparkSession,
-                             fs: org.apache.hadoop.fs.FileSystem,
-                             dir: String, gen: Long)
+                             snap: ManifestSnapshot,
+                             skip: Option[Column] = None)
       : IndexedSeq[(String, Option[String])] = {
-    if (snapshotDvRowsCache.size > 1024) snapshotDvRowsCache.clear()
-    snapshotDvRowsCache.computeIfAbsent(
-      (dir, layoutIdentity(fs, dir), gen), _ => {
-        val m = snapshotManifestOf(spark, fs, dir, gen)
-        m.select(col("file"), dvPathExprOf(m.schema).as("dv_path"))
-          .collect()
-          .map(r => (r.getString(0), Option(r.getString(1)))).toIndexedSeq
-      })
+    val m = snap.frame(spark)
+    skip.fold(m)(k => m.filter(!k))
+      .select(col("file"), dvPathExprOf(snap.schema).as("dv_path"))
+      .collect()
+      .map(r => (r.getString(0), Option(r.getString(1)))).toIndexedSeq
   }
 
-  private val snapshotDvRowsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), IndexedSeq[(String, Option[String])]]()
+  /** Read a generation's (file, dv_path) rows: each file resolved
+    * live-or-retired at CALL time, under [[dataSchemaOf]]'s schema,
+    * vectors applied. */
+  private def readSnapshotRows(spark: org.apache.spark.sql.SparkSession,
+                               fs: org.apache.hadoop.fs.FileSystem,
+                               dir: String, gen: Long,
+                               snap: ManifestSnapshot,
+                               rows: IndexedSeq[(String, Option[String])])
+      : DataFrame = {
+    val resolved = resolveSnapshotFiles(fs, dir, gen, rows.map(_._1).toArray)
+    readResolvedDv(spark, dir, dataSchemaOf(spark, dir, snap, resolved),
+      rows.zip(resolved).map { case ((f, dv), res) => (f, res, dv) })
+  }
 
   /** [[readSnapshot]] with [[scanPruned]]'s skipping applied against
     * the GENERATION's manifest — time-traveled pruned reads: the
@@ -1060,55 +1031,77 @@ object Layout {
     requireEncodingStablePath(dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the SURVIVOR rows memoize per (dir, identity, gen, boxes) —
-    // same contract as [[prunedSnapshotFileAnchors]]: the skip
-    // evaluation is a driver-side Spark job over an immutable
-    // manifest, and the V2 reader's DV rewrite re-runs this per
-    // analysis; resolution stays per-call
-    if (prunedDvRowsCache.size > 1024) prunedDvRowsCache.clear()
-    val (rows, residualBoxes) = prunedDvRowsCache.computeIfAbsent(
-      (dir, layoutIdentity(fs, dir), gen, boxes.toList), _ => {
-        val manifest = snapshotManifestOf(spark, fs, dir, gen)
-        val mSchema = manifest.schema
-        val skip = boxes.map(skipExprOf(mSchema, _)).reduce(_ || _)
-        (manifest.filter(!skip)
-          .select(col("file"), dvPathExprOf(mSchema).as("dv_path"))
-          .collect()
-          .map(r => (r.getString(0), Option(r.getString(1)))).toIndexedSeq,
-          boxes.map(residualExprOf(mSchema, _)).toIndexedSeq)
-      })
-    val residual = residualBoxes.reduce(_ && _)
-    val resolved = resolveSnapshotFiles(fs, dir, gen,
-      rows.map(_._1).toArray)
-    readResolvedDv(spark, dir, rows.zip(resolved).map {
-      case ((f, dv), res) => (f, res, dv)
-    }).where(residual)
+    val snap = snapshotOf(spark, fs, dir, gen)
+    val mSchema = snap.schema
+    val rows = snapshotDvRows(spark, snap,
+      Some(boxes.map(skipExprOf(mSchema, _)).reduce(_ || _)))
+    readSnapshotRows(spark, fs, dir, gen, snap, rows)
+      .where(boxes.map(residualExprOf(mSchema, _)).reduce(_ && _))
   }
 
-  private val prunedDvRowsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, List[PruneBox]),
-    (IndexedSeq[(String, Option[String])], IndexedSeq[Column])]()
+  /** The live manifest's snapshot — what [[loadManifest]] serves. */
+  private def liveSnapshot(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): ManifestSnapshot =
+    ManifestSnapshot.load(spark,
+      new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest"))
 
-  /** The generation's manifest: live for `gen == current`, else the
-    * archived copy — loudly naming a vacuumed generation. */
-  private def snapshotManifestOf(spark: org.apache.spark.sql.SparkSession,
-                                 fs: org.apache.hadoop.fs.FileSystem,
-                                 dir: String, gen: Long): DataFrame = {
+  /** The generation's manifest snapshot: live for `gen == current`,
+    * else the archived copy — loudly naming a vacuumed generation. */
+  private def snapshotOf(spark: org.apache.spark.sql.SparkSession,
+                         fs: org.apache.hadoop.fs.FileSystem,
+                         dir: String, gen: Long): ManifestSnapshot = {
     require(generationsEnabled(fs, dir),
       s"$dir is not generation-tracked — call enableGenerations first")
     val cur = currentGeneration(spark, dir)
     require(gen >= 0L && gen <= cur,
       s"unknown generation $gen at $dir (live is $cur)")
-    if (gen == cur) loadManifest(spark, dir)
+    if (gen == cur) liveSnapshot(spark, dir)
     else {
       val p = new org.apache.hadoop.fs.Path(historyDir(dir), s"gen=$gen")
       require(fs.exists(p),
         s"generation $gen of $dir has been vacuumed (live is $cur, " +
           s"oldest retained is ${archivedGens(fs, dir).minOption
             .getOrElse(cur)})")
-      spark.read.parquet(p.toString)
+      ManifestSnapshot.load(spark, p)
     }
   }
+
+  /** The data schema every file-listed read of `snap`'s files passes,
+    * so no read infers one: the evolved-schema sidecar when present
+    * (read fresh, since it changes without a manifest commit), else
+    * [[footerSchemaOf]]. None only when there is neither a sidecar
+    * nor a file to sample. */
+  private def dataSchemaOf(spark: org.apache.spark.sql.SparkSession,
+                           dir: String, snap: ManifestSnapshot,
+                           files: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] =
+    storedSchemaOf(spark, dir).orElse(footerSchemaOf(spark, snap, files))
+
+  /** The footer schema of the first of `files` (data files of `snap`'s
+    * version), read ONCE per snapshot. A hive layout's files hold no
+    * k=v column, so every read under this schema types those columns
+    * from its own paths, as an inferring read would. */
+  private def footerSchemaOf(spark: org.apache.spark.sql.SparkSession,
+                             snap: ManifestSnapshot, files: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] =
+    files.headOption.map(f => snap.dataSchema(
+      ManifestSnapshot.footerSchema(spark, new org.apache.hadoop.fs.Path(f))))
+
+  /** The LIVE layout's data schema for the manifest verbs' file-listed
+    * reads and coverage guards: the sidecar, else the footer schema of
+    * the live snapshot's first file ([[footerSchemaOf]]). A directory
+    * with neither a sidecar nor a manifest naming a file falls back to
+    * Spark's inference over the directory. */
+  private def liveSchemaOf(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): org.apache.spark.sql.types.StructType =
+    storedSchemaOf(spark, dir).getOrElse {
+      val mDir = new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest")
+      val fs = mDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Some(mDir).filter(fs.exists).map(ManifestSnapshot.load(spark, _))
+        .flatMap(sn => footerSchemaOf(spark, sn,
+          sn.frame(spark).select("file").head(1).map(_.getString(0)).toSeq))
+        .getOrElse(spark.read.parquet(dir).schema)
+    }
 
   /** Resolve a generation's manifest file names against live storage
     * first and the retirement area second — at CALL time, which is
@@ -1162,13 +1155,13 @@ object Layout {
     }
   }
 
-  /** Read a resolved snapshot file list under the canonical schema
-    * (current sidecar when the layout has evolved); empty lists keep
-    * the schema without opening a row group. A fully-emptied
-    * unevolved layout (no live data file, no sidecar) has no schema
-    * ANYWHERE to shape an empty frame with — that degenerate read
-    * fails with its own story instead of Spark's generic
-    * unable-to-infer-schema error.
+  /** Read a resolved snapshot file list under `schema` (from
+    * [[dataSchemaOf]]: the current sidecar when the layout has
+    * evolved); empty lists keep the schema without opening a row
+    * group. A fully-emptied unevolved layout (no live data file, no
+    * sidecar) has no schema ANYWHERE to shape an empty frame with —
+    * that degenerate read fails with its own story instead of Spark's
+    * generic unable-to-infer-schema error.
     *
     * Hive-partitioned layouts need a basePath to re-derive partition
     * columns from the k=v chain — and live vs retired files anchor at
@@ -1179,9 +1172,9 @@ object Layout {
     * layout the basePath is inert and the groups collapse to one. */
   private def readResolved(spark: org.apache.spark.sql.SparkSession,
                            dir: String,
+                           schema: Option[org.apache.spark.sql.types.StructType],
                            resolved: Seq[String]): DataFrame = {
-    val stored = storedSchemaOf(spark, dir)
-    def reader = stored.fold(spark.read)(s => spark.read.schema(s))
+    def reader = schema.fold(spark.read)(s => spark.read.schema(s))
     if (resolved.nonEmpty) {
       val groups = resolved.groupBy(snapshotAnchorOf(dir, _))
       groups.toSeq.sortBy(_._1)
@@ -1190,7 +1183,7 @@ object Layout {
         }
         .reduce(_ unionByName _)
     }
-    else stored match {
+    else schema match {
       case Some(s) => spark.read.schema(s).parquet(dir).where(lit(false))
       case None =>
         try spark.read.parquet(dir).where(lit(false))
@@ -1215,12 +1208,12 @@ object Layout {
     * path moved). */
   private def readResolvedDv(spark: org.apache.spark.sql.SparkSession,
                              dir: String,
+                             schema: Option[org.apache.spark.sql.types.StructType],
                              items: Seq[(String, String, Option[String])])
       : DataFrame = {
     if (items.forall(_._3.isEmpty))
-      return readResolved(spark, dir, items.map(_._2))
-    val stored = storedSchemaOf(spark, dir)
-    def reader = stored.fold(spark.read)(s => spark.read.schema(s))
+      return readResolved(spark, dir, schema, items.map(_._2))
+    def reader = schema.fold(spark.read)(s => spark.read.schema(s))
     def readGroups(xs: Seq[(String, String, Option[String])],
                    stamp: Boolean): Option[DataFrame] =
       xs.groupBy(i => snapshotAnchorOf(dir, i._2)).toSeq.sortBy(_._1)
@@ -1279,14 +1272,10 @@ object Layout {
         "(swap the arguments and negate ops for the inverse feed)")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def rowsOf(gen: Long): Map[String, Option[String]] = {
-      val m = snapshotManifestOf(spark, fs, dir, gen)
-      m.select(col("file"), dvPathExprOf(m.schema).as("dv_path"))
-        .collect()
-        .map(r => r.getString(0) -> Option(r.getString(1))).toMap
-    }
-    val fromRows = rowsOf(genFrom)
-    val toRows = rowsOf(genTo)
+    val fromSnap = snapshotOf(spark, fs, dir, genFrom)
+    val toSnap = snapshotOf(spark, fs, dir, genTo)
+    val fromRows = snapshotDvRows(spark, fromSnap).toMap
+    val toRows = snapshotDvRows(spark, toSnap).toMap
     // deterministic file order on both sides — the feed's physical
     // row order is not part of its contract, but plans should not
     // churn run-to-run on a Set's iteration order
@@ -1300,23 +1289,25 @@ object Layout {
     // vector moved are opened, and only their delta rows ride
     val dvChanged = (fromRows.keySet & toRows.keySet).toArray.sorted
       .filter(f => fromRows(f) != toRows(f))
-    def readSide(gen: Long, files: Array[String],
+    def readSide(gen: Long, snap: ManifestSnapshot, files: Array[String],
                  rows: Map[String, Option[String]]): DataFrame = {
       val resolved = resolveSnapshotFiles(fs, dir, gen, files)
-      readResolvedDv(spark, dir, files.toIndexedSeq.zip(resolved).map {
-        case (f, res) => (f, res, rows(f))
-      })
+      readResolvedDv(spark, dir, dataSchemaOf(spark, dir, snap, resolved),
+        files.toIndexedSeq.zip(resolved).map {
+          case (f, res) => (f, res, rows(f))
+        })
     }
-    val minus = readSide(genFrom, removed, fromRows)
+    val minus = readSide(genFrom, fromSnap, removed, fromRows)
     require(!minus.columns.contains(opCol),
       s"the layout already carries a column named $opCol — pass a " +
         "different opCol for the feed's sign column")
-    val plus = readSide(genTo, added, toRows)
+    val plus = readSide(genTo, toSnap, added, toRows)
     val base = minus.withColumn(opCol, lit(-1))
       .unionByName(plus.withColumn(opCol, lit(1)))
     if (dvChanged.isEmpty) base
     else base.unionByName(
-      dvDeltaFeed(spark, fs, dir, genTo, dvChanged, fromRows, toRows, opCol))
+      dvDeltaFeed(spark, fs, dir, genTo, toSnap, dvChanged, fromRows, toRows,
+        opCol))
   }
 
   /** The signed rows of files whose DELETION VECTOR changed between
@@ -1330,6 +1321,7 @@ object Layout {
   private def dvDeltaFeed(spark: org.apache.spark.sql.SparkSession,
                           fs: org.apache.hadoop.fs.FileSystem,
                           dir: String, genTo: Long,
+                          toSnap: ManifestSnapshot,
                           changed: Array[String],
                           fromRows: Map[String, Option[String]],
                           toRows: Map[String, Option[String]],
@@ -1344,8 +1336,7 @@ object Layout {
     def positions(paths: Seq[String]): DataFrame =
       if (paths.isEmpty)
         Seq.empty[(String, Long)].toDF("file", "idx")
-      else spark.read.parquet(paths.distinct: _*)
-        .select(col("file"), col("idx"))
+      else readDvStores(spark, paths)
         .join(broadcast(changedMeta), Seq("file"), "left_semi")
     val fromPos = positions(changed.toIndexedSeq.flatMap(fromRows(_)))
     val toPos = positions(changed.toIndexedSeq.flatMap(toRows(_)))
@@ -1355,8 +1346,8 @@ object Layout {
       if (remap.isEmpty) delta
       else delta.withColumn("file",
         coalesce(element_at(typedLit(remap), col("file")), col("file")))
-    val stored = storedSchemaOf(spark, dir)
-    def reader = stored.fold(spark.read)(s => spark.read.schema(s))
+    val schema = dataSchemaOf(spark, dir, toSnap, resolved)
+    def reader = schema.fold(spark.read)(s => spark.read.schema(s))
     val data = changed.toIndexedSeq.zip(resolved)
       .groupBy { case (_, res) => snapshotAnchorOf(dir, res) }
       .toSeq.sortBy(_._1)
@@ -1738,43 +1729,58 @@ object Layout {
     * reader ([[graft.sources.GraftSource]]): each manifest file
     * resolved live-or-retired at CALL time, paired with the basePath
     * anchor [[readResolved]] would group it under (the layout dir for
-    * live files, the retirement label for retired ones). */
+    * live files, the retirement label for retired ones). The file
+    * names come from the generation's cached [[ManifestSnapshot]]. */
   private[graft] def snapshotFileAnchors(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, gen: Long): Seq[(String, String)] = {
     requireEncodingStablePath(dir)
+    anchoredSnapshotFiles(spark, dir, gen, None)
+  }
+
+  /** Generation `gen`'s file names (minus those `boxes` prove
+    * disjoint), resolved live-or-retired fresh on every call — a
+    * concurrent verb may retire a file at any time, and a cached
+    * resolution would dangle — and paired with their anchors. */
+  private def anchoredSnapshotFiles(spark: org.apache.spark.sql.SparkSession,
+                                    dir: String, gen: Long,
+                                    boxes: Option[Seq[PruneBox]])
+      : Seq[(String, String)] = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = snapshotManifestOf(spark, fs, dir, gen)
-      .select("file").collect().map(_.getString(0))
-    resolveSnapshotFiles(fs, dir, gen, files)
+    val snap = snapshotOf(spark, fs, dir, gen)
+    val files = snapshotDvRows(spark, snap,
+      boxes.map(_.map(skipExprOf(snap.schema, _)).reduce(_ || _))).map(_._1)
+    resolveSnapshotFiles(fs, dir, gen, files.toArray)
       .map(f => snapshotAnchorOf(dir, f) -> f)
+  }
+
+  /** The data schema a `graft` relation over generation `gen` declares
+    * — [[dataSchemaOf]] sampled at `files`, the relation's resolved
+    * files — so the V2 file table never infers one. */
+  private[graft] def snapshotDataSchema(
+      spark: org.apache.spark.sql.SparkSession, dir: String, gen: Long,
+      files: Seq[String]): Option[org.apache.spark.sql.types.StructType] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    dataSchemaOf(spark, dir, snapshotOf(spark, fs, dir, gen), files)
   }
 
   /** The stat schema of generation `gen`'s manifest — what the V2
     * reader's pruning rule ([[graft.plans.GraftManifestPrune]])
     * consults to translate pushed filter conjuncts into prune boxes
-    * (which keys carry stats, at what type). Memoized per (dir, gen):
-    * a tracked generation's manifest is immutable, and the rule runs
-    * on every (re-)optimization of a plan. Only meaningful on
-    * generation-tracked layouts — untracked manifests mutate in
-    * place, so the rule never prunes them. */
+    * (which keys carry stats, at what type), read off the cached
+    * [[ManifestSnapshot]]. Only meaningful on generation-tracked
+    * layouts — untracked manifests mutate in place, so the rule never
+    * prunes them. */
   private[graft] def snapshotManifestSchema(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, gen: Long): Option[org.apache.spark.sql.types.StructType] = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!generationsEnabled(fs, dir)) None
-    else {
-      if (manifestSchemaCache.size > 4096) manifestSchemaCache.clear()
-      Some(manifestSchemaCache.computeIfAbsent(
-        (dir, layoutIdentity(fs, dir), gen),
-        _ => snapshotManifestOf(spark, fs, dir, gen).schema))
-    }
+    else Some(snapshotOf(spark, fs, dir, gen).schema)
   }
-
-  private val manifestSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
   /** [[snapshotFileAnchors]] with the files provably OUTSIDE `boxes`
     * dropped — the V2 reader's data-skipping resolution
@@ -1782,73 +1788,36 @@ object Layout {
     * list for this one and leaves the query's own Filter as the
     * residual, so pruned ≡ full scan holds by the same construction
     * as [[scanPruned]]). ONE skip semantics: the boxes evaluate
-    * through [[skipExprOf]], exactly the Scala path. The SURVIVOR
-    * NAMES memoize per (dir, gen, boxes) — the generation's manifest
-    * is immutable and the skip evaluation is a Spark job the
-    * optimizer would otherwise re-run on every explain/AQE replan —
-    * but the live-or-retired path RESOLUTION runs fresh each call
-    * (two bulk listings): a concurrent verb may retire a survivor at
-    * any time, and a cached resolution would dangle. */
+    * through [[skipExprOf]], exactly the Scala path, over the
+    * generation's [[ManifestSnapshot]] frame; the live-or-retired path
+    * RESOLUTION runs fresh each call (two bulk listings). */
   private[graft] def prunedSnapshotFileAnchors(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, gen: Long,
-      boxes: Seq[PruneBox]): Seq[(String, String)] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (prunedFilesCache.size > 1024) prunedFilesCache.clear()
-    val files = prunedFilesCache.computeIfAbsent(
-      (dir, layoutIdentity(fs, dir), gen, boxes.toList),
-      _ => {
-        val manifest = snapshotManifestOf(spark, fs, dir, gen)
-        val skip = boxes.map(skipExprOf(manifest.schema, _)).reduce(_ || _)
-        manifest.filter(!skip).select("file").collect().map(_.getString(0))
-          .toIndexedSeq
-      })
-    resolveSnapshotFiles(fs, dir, gen, files.toArray)
-      .map(f => snapshotAnchorOf(dir, f) -> f)
-  }
-
-  private val prunedFilesCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, List[PruneBox]), IndexedSeq[String]]()
+      boxes: Seq[PruneBox]): Seq[(String, String)] =
+    anchoredSnapshotFiles(spark, dir, gen, Some(boxes))
 
   /** The generation's LIVE row count summed from its manifest alone
     * (physical rows minus any deletion vector) — what
     * [[graft.plans.GraftCountFromManifest]] answers a bare
-    * `SELECT count(*)` over the V2 reader with: one manifest-sized
-    * read, zero data-file opens. Exact because the reader's file list
-    * IS this manifest's and per-file `n_rows` is that file's scan
-    * count. */
+    * `SELECT count(*)` over the V2 reader with: a sum over the
+    * snapshot's per-file counts, zero data-file opens (and no job when
+    * the snapshot's rows are held). Exact
+    * because the reader's file list IS this manifest's and per-file
+    * `n_rows` is that file's scan count. Untracked layouts count
+    * their live manifest. */
   private[graft] def snapshotLiveRowCount(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, gen: Long): Long = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a generation NUMBER's manifest content is immutable once
-    // tracked (every replace archives the outgoing manifest and
-    // bumps the counter), so the count memoizes per (dir, gen) —
-    // the optimizer rule re-runs on every explain()/re-optimization
-    // of the same plan, and each uncached call is a driver-side
-    // Spark job. Untracked layouts (live manifest mutable in place)
-    // never cache.
-    if (!generationsEnabled(fs, dir)) {
-      val m = loadManifest(spark, dir)
-      m.agg(coalesce(sum(col("n_rows") - dvRowsExprOf(m.schema)), lit(0L)))
-        .collect()(0).getLong(0)
-    } else {
-      // bound the cache BEFORE the compute: a mapping function must
-      // not modify the map it is computing into
-      if (liveRowCountCache.size > 4096) liveRowCountCache.clear()
-      liveRowCountCache.computeIfAbsent(
-        (dir, layoutIdentity(fs, dir), gen), _ => {
-          val m = snapshotManifestOf(spark, fs, dir, gen)
-          m.agg(coalesce(sum(col("n_rows") - dvRowsExprOf(m.schema)), lit(0L)))
-            .collect()(0).getLong(0)
-        })
-    }
+    val snap =
+      if (generationsEnabled(fs, dir)) snapshotOf(spark, fs, dir, gen)
+      else liveSnapshot(spark, dir)
+    snap.frame(spark)
+      .select(col("n_rows") - dvRowsExprOf(snap.schema)).collect()
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) }.sum
   }
-
-  private val liveRowCountCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), java.lang.Long]()
 
   /** Whether generation `gen`'s manifest references any deletion
     * vector — the V2 reader's probe: a raw file relation cannot
@@ -1857,28 +1826,10 @@ object Layout {
                                    dir: String, gen: Long): Boolean = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def probe(): Boolean =
-      if (!fs.exists(dvRoot(dir))) false
-      else {
-        val m =
-          if (generationsEnabled(fs, dir)) snapshotManifestOf(spark, fs, dir, gen)
-          else loadManifest(spark, dir)
-        hasDvCols(m.schema) &&
-          m.filter(col("dv_path").isNotNull).head(1).nonEmpty
-      }
-    // memoized per (dir, identity, gen) for TRACKED layouts only
-    // (the probe is a manifest-sized Spark job the V2 reader pays
-    // per load() otherwise); untracked manifests mutate in place
-    if (!generationsEnabled(fs, dir)) probe()
-    else {
-      if (hasDvCache.size > 4096) hasDvCache.clear()
-      hasDvCache.computeIfAbsent((dir, layoutIdentity(fs, dir), gen),
-        _ => probe())
-    }
+    fs.exists(dvRoot(dir)) && snapshotDvRows(spark,
+      if (generationsEnabled(fs, dir)) snapshotOf(spark, fs, dir, gen)
+      else liveSnapshot(spark, dir)).exists(_._2.isDefined)
   }
-
-  private val hasDvCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), java.lang.Boolean]()
 
   /** Whether the layout root has hive `k=v` partition subdirectories —
     * the shape dispatch the `graft` DataSourceV2 source needs (a
@@ -1979,11 +1930,10 @@ object Layout {
       s"$dir is not generation-tracked — nothing to restore")
     requireExpectedGen(fs, dir, expectedGen, "restore")
     val cur = liveGenOf(fs, dir)
-    val target = snapshotManifestOf(spark, fs, dir, gen)
-    val targetRows = target.select(col("file"),
-        dvPathExprOf(target.schema).as("dv_path")).as[(String, Option[String])]
-      .collect()
-    val targetFiles = targetRows.map(_._1)
+    val snap = snapshotOf(spark, fs, dir, gen)
+    val target = snap.frame(spark)
+    val targetRows = snapshotDvRows(spark, snap)
+    val targetFiles = targetRows.map(_._1).toArray
     val targetDv = targetRows.collect { case (f, Some(p)) => f -> p }.toMap
     // every store the target generation references must still exist
     // (vacuum-protected while the generation is retained, but loud
@@ -2089,11 +2039,10 @@ object Layout {
     val destFs = destP.getFileSystem(conf)
     require(!destFs.exists(destP),
       s"clone destination $destDir already exists — refusing to mix")
-    val target = snapshotManifestOf(spark, fs, srcDir, gen)
-    val targetRows = target.select(col("file"),
-        dvPathExprOf(target.schema).as("dv_path")).as[(String, Option[String])]
-      .collect()
-    val targetFiles = targetRows.map(_._1)
+    val snap = snapshotOf(spark, fs, srcDir, gen)
+    val target = snap.frame(spark)
+    val targetRows = snapshotDvRows(spark, snap)
+    val targetFiles = targetRows.map(_._1).toArray
     val targetDv = targetRows.collect { case (f, Some(p)) => f -> p }.toMap
     for (p <- targetDv.values.toSeq.distinct)
       require(fs.exists(new org.apache.hadoop.fs.Path(new java.net.URI(p))),
@@ -2931,7 +2880,7 @@ object Layout {
       else {
         val files = manifest.select("file").collect().map(_.getString(0))
         readFilesOf(spark, dir, files.toIndexedSeq,
-          storedSchemaOf(spark, dir), dv = rows.toMap)
+          liveSchemaOf(spark, dir), dv = rows.toMap)
       }
     }
   }
@@ -2939,11 +2888,12 @@ object Layout {
   /** File-listed data read under the layout's canonical schema —
     * the survivor-read shape every pruning/rewrite verb uses:
     * basePath anchors partition discovery at the directory, and the
-    * sidecar schema (when present) keeps added columns resolvable
-    * even when every listed file predates them. */
+    * known `schema` ([[liveSchemaOf]]) means no read infers one; when
+    * it is the sidecar's, added columns stay resolvable even when
+    * every listed file predates them. */
   private def readFilesOf(spark: org.apache.spark.sql.SparkSession,
                           dir: String, files: Seq[String],
-                          stored: Option[org.apache.spark.sql.types.StructType],
+                          schema: org.apache.spark.sql.types.StructType,
                           dv: Map[String, String] = Map.empty,
                           srcCol: Option[String] = None)
       : DataFrame = {
@@ -2954,7 +2904,7 @@ object Layout {
     // scan's own stage
     def rd(sub: Seq[String]): DataFrame = {
       val r = spark.read.option("basePath", dir)
-      val df = stored.fold(r)(s => r.schema(s)).parquet(sub: _*)
+      val df = r.schema(schema).parquet(sub: _*)
       srcCol.fold(df)(c => df.withColumn(c, col("_metadata.file_path")))
     }
     val dvFiles = files.filter(dv.contains)
@@ -3384,10 +3334,13 @@ object Layout {
     }
 
   /** Load the stored skipping manifest of a
-    * [[writeZOrderedWithManifest]] directory. */
+    * [[writeZOrderedWithManifest]] directory: the frame of its cached
+    * [[ManifestSnapshot]]. When the snapshot holds its rows on the
+    * driver (manifests up to 8 MiB), a filter or projection over it
+    * collects without a job. */
   def loadManifest(spark: org.apache.spark.sql.SparkSession,
                    path: String): DataFrame =
-    spark.read.parquet(s"$path/_graft_manifest")
+    liveSnapshot(spark, path).frame(spark)
 
   /** The stored manifest's key columns — the planning input surfaces
     * that must FOLLOW the layout's existing keys (the SQL writer
@@ -3399,7 +3352,10 @@ object Layout {
 
   /** [[scanPruned]] against the manifest STORED with the data — the
     * cold-reader path: a fresh session prunes files using only the
-    * manifest-sized stats read, never touching skipped data files. */
+    * manifest-sized stats read, never touching skipped data files.
+    * The manifest comes from the live [[ManifestSnapshot]], so a
+    * repeat read of one table version whose manifest rows are held
+    * reads no manifest at all. */
   def scanPruned(spark: org.apache.spark.sql.SparkSession, dir: String,
                  boxes: Seq[PruneBox]): DataFrame = {
     // guard FIRST: the loud path rejection must precede the manifest
@@ -3623,21 +3579,24 @@ object Layout {
     // read must resolve added columns even when every SURVIVOR
     // predates them — otherwise the result schema would change with
     // the predicate
-    val stored = storedSchemaOf(spark, dir)
-    lazy val dirFrame = stored.fold(spark.read)(s => spark.read.schema(s))
-      .parquet(dir)
+    val schema = liveSchemaOf(spark, dir)
+    lazy val dirFrame = spark.read.schema(schema).parquet(dir)
+    // ONE manifest pass serves the coverage guard's known set and the
+    // survivors (a collect over the snapshot frame); a null skip
+    // verdict drops the file, as a filter on it would
+    lazy val verdicts = manifest
+      .select(col("file"), dvPathExprOf(mSchema).as("dv_path"),
+        coalesce(skip, lit(true)).as("skip"))
+      .collect()
     if (verifyCoverage)
       // raw-string comparison is correct: input_file_name() and
       // inputFiles return the same (encoded) spelling on Spark 4.x.
       // The known-set argument stays an inline expression: by-name,
       // it is only forced AFTER the guard's path checks
       requireManifestCovers(spark, dirFrame,
-        manifest.select("file").collect().map(_.getString(0)).toSet, dir,
+        verdicts.map(_.getString(0)).toSet, dir,
         "pruning would silently drop rows")
-    val survivorRows = manifest
-      .filter(!skip) // per-box null coalescing lives in skipExprOf
-      .select(col("file"), dvPathExprOf(mSchema).as("dv_path"))
-      .collect()
+    val survivorRows = verdicts.filterNot(_.getBoolean(2))
     val survivors = survivorRows.map(_.getString(0))
     if (survivors.isEmpty)
       // no file can contain a match; keep the schema (and exactness)
@@ -3654,7 +3613,7 @@ object Layout {
       // On a flat directory the option is a no-op. Deletion vectors
       // (when any survivor carries one) anti-join away inside
       // readFilesOf — DV-free survivors keep the plain plan.
-      readFilesOf(spark, dir, survivors.toIndexedSeq, stored,
+      readFilesOf(spark, dir, survivors.toIndexedSeq, schema,
           dv = survivorRows.collect {
             case r if !r.isNullAt(1) => r.getString(0) -> r.getString(1)
           }.toMap)
@@ -3806,6 +3765,12 @@ object Layout {
     }
   }
 
+  /** The `(file, idx)` rows of DV stores, read under the fixed store
+    * schema so no read infers one. */
+  private def readDvStores(spark: org.apache.spark.sql.SparkSession,
+                           paths: Seq[String]): DataFrame =
+    spark.read.schema("file STRING, idx BIGINT").parquet(paths.distinct: _*)
+
   /** Stamp the parquet metadata identity columns the DV anti-join
     * keys on. The frame must come straight off a parquet file-source
     * read (the `_metadata` struct exists nowhere else). */
@@ -3833,8 +3798,7 @@ object Layout {
                          data: DataFrame, dvPaths: Seq[String],
                          remap: Map[String, String],
                          totalDvRows: Long = 0L): DataFrame = {
-    val raw = spark.read.parquet(dvPaths.distinct: _*)
-      .select(col("file"), col("idx"))
+    val raw = readDvStores(spark, dvPaths)
     val mapped =
       if (remap.isEmpty) raw
       else raw.withColumn("file",
@@ -3911,8 +3875,7 @@ object Layout {
     val wanted = remap.keys.toSeq.toDF("file")
     val store = new org.apache.hadoop.fs.Path(destRoot,
       s"dv-$label-${java.util.UUID.randomUUID().toString.take(8)}")
-    spark.read.parquet(triples.map(_._2).distinct: _*)
-      .select(col("file"), col("idx"))
+    readDvStores(spark, triples.map(_._2))
       .join(broadcast(wanted), Seq("file"), "left_semi")
       .withColumn("file",
         coalesce(element_at(typedLit(remap), col("file")), col("file")))
@@ -3995,10 +3958,10 @@ object Layout {
     val candidates = verdicts
       .filter(r => !r.getBoolean(4) && !r.getBoolean(5))
       .map(r => (r.getString(0), Option(r.getString(2)), r.getLong(3)))
-    val stored = storedSchemaOf(spark, dir)
+    lazy val schema = liveSchemaOf(spark, dir)
     if (verifyCoverage)
       requireManifestCovers(spark,
-        stored.fold(spark.read)(s => spark.read.schema(s)).parquet(dir),
+        spark.read.schema(schema).parquet(dir),
         verdicts.map(_.getString(0)).toSet, dir,
         "their matching rows would survive the delete")
     if (dropFiles.isEmpty && candidates.isEmpty)
@@ -4017,14 +3980,13 @@ object Layout {
       val oldDvRows = candidates.map(c => metaFormOf(c._1) -> c._3).toMap
       val src = {
         val r = spark.read.option("basePath", dir)
-        stampDvCols(stored.fold(r)(s => r.schema(s))
+        stampDvCols(r.schema(schema)
           .parquet(candFiles: _*))
       }
       val live =
         if (candDv.isEmpty) src
         else {
-          val dv = spark.read.parquet(candDv.values.toSeq.distinct: _*)
-            .select(col("file"), col("idx"))
+          val dv = readDvStores(spark, candDv.values.toSeq)
           // hint only when the manifest PROVED the existing vectors
           // small; else the stores' size stats + AQE decide
           val side =
@@ -4055,8 +4017,7 @@ object Layout {
           val existingOfTouched = {
             val paths = touched.keys.flatMap(candDv.get).toSeq.distinct
             if (paths.isEmpty) None
-            else Some(spark.read.parquet(paths: _*)
-              .select(col("file"), col("idx"))
+            else Some(readDvStores(spark, paths)
               .join(broadcast(touchedMeta), Seq("file"), "left_semi"))
           }
           val merged = existingOfTouched.fold(newPos)(newPos.unionByName(_))
@@ -4297,8 +4258,8 @@ object Layout {
     val rewriteDv = verdicts
       .filter(r => !r.getBoolean(2) && !r.getBoolean(3) && !r.isNullAt(4))
       .map(r => r.getString(0) -> r.getString(4)).toMap
-    val stored = storedSchemaOf(spark, dir)
-    lazy val dirFrame = stored.fold(spark.read)(s => spark.read.schema(s))
+    lazy val schema = liveSchemaOf(spark, dir)
+    lazy val dirFrame = spark.read.schema(schema)
       .parquet(dir)
     if (verifyCoverage)
       // same guard as scanPruned's, sharper consequence: a non-empty
@@ -4357,7 +4318,7 @@ object Layout {
       // rewrite materializes the vector away (its output files are
       // DV-free and the old manifest rows, vector pointers included,
       // are removed below)
-      val src = readFilesOf(spark, dir, srcFiles, stored, dv = rewriteDv,
+      val src = readFilesOf(spark, dir, srcFiles, schema, dv = rewriteDv,
         srcCol = Some("__graft_src"))
       // src reads with basePath, so Spark's partition discovery
       // materializes the real k=v path columns in its schema — the
@@ -4502,8 +4463,8 @@ object Layout {
     val touchedDv = verdicts
       .filter(r => !r.getBoolean(1) && !r.isNullAt(2))
       .map(r => r.getString(0) -> r.getString(2)).toMap
-    val stored = storedSchemaOf(spark, dir)
-    lazy val dirFrame = stored.fold(spark.read)(s => spark.read.schema(s))
+    lazy val schema = liveSchemaOf(spark, dir)
+    lazy val dirFrame = spark.read.schema(schema)
       .parquet(dir)
     if (verifyCoverage)
       requireManifestCovers(spark, dirFrame,
@@ -4513,7 +4474,7 @@ object Layout {
       return UpdateStats(0, verdicts.length, 0L)
     val pred = boxes.map(residualExprOf(mSchema, _)).reduce(_ && _)
     val hit = coalesce(pred, lit(false))
-    val src = readFilesOf(spark, dir, touched.toIndexedSeq, stored,
+    val src = readFilesOf(spark, dir, touched.toIndexedSeq, schema,
       dv = touchedDv, srcCol = Some("__graft_src"))
     val dataSchema = org.apache.spark.sql.types.StructType(
       src.schema.filterNot(_.name == "__graft_src"))
@@ -4759,8 +4720,8 @@ object Layout {
     // listing + footer resolution); the sidecar schema (when the
     // layout has evolved) is the authoritative column set the
     // updates must carry in full — whole rows are inserted verbatim
-    val stored = storedSchemaOf(spark, dir)
-    val current = stored.fold(spark.read)(s => spark.read.schema(s))
+    val schema = liveSchemaOf(spark, dir)
+    val current = spark.read.schema(schema)
       .parquet(dir)
     val before = current.inputFiles.toSet
     val partCols = hivePartColsChecked(fs, hDir, current.schema)
@@ -4850,7 +4811,7 @@ object Layout {
       if (touched.nonEmpty) {
         val tmp = new org.apache.hadoop.fs.Path(s"$dir/_graft_upsert_tmp")
         val srcFiles = touched.map(_._1).toIndexedSeq
-        val src = readFilesOf(spark, dir, srcFiles, stored,
+        val src = readFilesOf(spark, dir, srcFiles, schema,
           dv = touchedDv, srcCol = Some("__graft_src"))
         val survivors = src
           .join(upd.select(keys.map(col): _*), keys, "left_anti")
@@ -5011,10 +4972,7 @@ object Layout {
     // RAW directory read: the uncovered-file listing must come from
     // the directory, which readLayout's manifest-routed path (on a
     // vectorized layout) deliberately does not
-    val dirFrame = {
-      val stored = storedSchemaOf(spark, dir)
-      stored.fold(spark.read)(s => spark.read.schema(s)).parquet(dir)
-    }
+    val dirFrame = spark.read.schema(liveSchemaOf(spark, dir)).parquet(dir)
     val listed = dirFrame.inputFiles
     listed.foreach(requireEncodingStablePath)
     val uncovered = listed.filterNot(known)
@@ -5101,10 +5059,8 @@ object Layout {
     // the RAW directory read, not readLayout: the coverage guard
     // compares the directory LISTING against the manifest, which a
     // manifest-routed read would make vacuous on a vectorized layout
-    lazy val dirFrame = {
-      val stored = storedSchemaOf(spark, dir)
-      stored.fold(spark.read)(s => spark.read.schema(s)).parquet(dir)
-    }
+    lazy val dirFrame =
+      spark.read.schema(liveSchemaOf(spark, dir)).parquet(dir)
     if (verifyCoverage)
       requireManifestCovers(spark, dirFrame,
         verdicts.map(_.getString(0)).toSet, dir,
@@ -5120,7 +5076,7 @@ object Layout {
     else {
       val residual = boxes.map(residualExprOf(mSchema, _)).reduce(_ && _)
       metaSum + readFilesOf(spark, dir, scanRows.map(_._1).toIndexedSeq,
-          storedSchemaOf(spark, dir),
+          liveSchemaOf(spark, dir),
           dv = scanRows.collect { case (f, Some(p)) => f -> p }.toMap)
         .where(residual).count()
     }
@@ -5148,13 +5104,11 @@ object Layout {
     require(manifest.schema.fieldNames.contains(s"min_$key"),
       s"manifest has no stats for key $key (stored keys: " +
         manifestKeysOf(manifest.schema).mkString(", ") + ")")
-    if (verifyCoverage) {
-      val stored = storedSchemaOf(spark, dir)
+    if (verifyCoverage)
       requireManifestCovers(spark,
-        stored.fold(spark.read)(s => spark.read.schema(s)).parquet(dir),
+        spark.read.schema(liveSchemaOf(spark, dir)).parquet(dir),
         manifest.select("file").collect().map(_.getString(0)).toSet, dir,
         "the composed min/max would silently ignore their rows")
-    }
     val mSchema = manifest.schema
     val dvRows =
       if (!hasDvCols(mSchema)) Array.empty[org.apache.spark.sql.Row]
@@ -5173,7 +5127,7 @@ object Layout {
       val statT = mSchema(s"min_$key").dataType
       val scanned = readFilesOf(spark, dir,
           dvRows.map(_.getString(0)).toIndexedSeq,
-          storedSchemaOf(spark, dir),
+          liveSchemaOf(spark, dir),
           dv = dvRows.map(r => r.getString(0) -> r.getString(1)).toMap)
         .agg(min(col(key)).cast(statT).as(s"min_$key"),
           max(col(key)).cast(statT).as(s"max_$key"))
@@ -5565,7 +5519,7 @@ object Layout {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mSchema = scope.manifest.schema
-    val stored = storedSchemaOf(spark, dir)
+    lazy val schema = liveSchemaOf(spark, dir)
     if (verifyCoverage)
       // the rewrite re-writes the selected files' rows, so rows the
       // manifest never blessed (a crashed delete's duplicate
@@ -5574,7 +5528,7 @@ object Layout {
       // debris in KEPT files fails loudly too instead of surfacing
       // only on the next mutation
       requireManifestCovers(spark,
-        stored.fold(spark.read)(s => spark.read.schema(s)).parquet(dir),
+        spark.read.schema(schema).parquet(dir),
         scope.manifest.select("file").collect().map(_.getString(0)).toSet,
         dir, "the rewrite would silently legitimize their rows into " +
           "the new layout")
@@ -5582,7 +5536,7 @@ object Layout {
       mSchema(s"min_$k").dataType == org.apache.spark.sql.types.LongType)
     val groups = files.sorted.groupBy(leafOf).toSeq.sortBy(_._1.toString)
     val tmps = groups.map { case (leaf, leafFiles) =>
-      val src = readFilesOf(spark, dir, leafFiles, stored, dv = scope.dvMap)
+      val src = readFilesOf(spark, dir, leafFiles, schema, dv = scope.dvMap)
       val tmp = new org.apache.hadoop.fs.Path(leaf, "_graft_optimize_tmp")
       clusteredRewriteTo(
         if (scope.partCols.isEmpty) src else src.drop(scope.partCols: _*),

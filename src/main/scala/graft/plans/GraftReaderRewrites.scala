@@ -75,9 +75,11 @@ private[plans] object GraftReaderMarker {
   * child is the snapshot frame's OPTIMIZED plan (no alias/analysis
   * residue reaches physical planning), and the driver-side inputs it
   * needs — the generation's (file, dv_path) rows, with or without
-  * skipping — are memoized per immutable (dir, identity, generation)
-  * inside the Layout verbs, so re-analysis (explain, AQE, repeated
-  * queries) costs plan construction, not a manifest Spark job.
+  * skipping — come off the generation's cached manifest snapshot
+  * ([[graft.ext.ManifestSnapshot]], keyed by the manifest's part-file
+  * listing) and the data reads carry its known schema, so
+  * re-analysis (explain, AQE, repeated queries) costs plan
+  * construction and listings, never a manifest or schema job.
   *
   * Output fidelity: the replacement is wrapped in a Project aliasing
   * each snapshot column back to the relation's own attribute

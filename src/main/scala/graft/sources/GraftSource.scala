@@ -169,7 +169,10 @@ class GraftSource extends TableProvider with DataSourceRegister
         "Layout.readSnapshot / Layout.scanPruned, or materialize the " +
         "vectors (optimize / optimizeSelective) first")
     val pairs = graft.ext.Layout.snapshotFileAnchors(spark, dir, gen)
-    val stored = graft.ext.Layout.storedSchemaOf(spark, dir)
+    // a known schema (sidecar, else inferred once per manifest
+    // snapshot) so the file table never runs its own inference job
+    val stored = graft.ext.Layout.snapshotDataSchema(spark, dir, gen,
+      pairs.map(_._2))
     require(pairs.nonEmpty || stored.nonEmpty,
       s"generation $gen of $dir holds no files and the layout has no " +
         "schema sidecar to shape an empty relation with — " +

@@ -45,6 +45,12 @@ object GraftColumnBridge {
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `schema` with every field, element and value nullable — what a
+    * file-source read reports for any data schema (`asNullable` is
+    * `private[spark]`). */
+  def nullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Register a custom expression as a SQL function in the session's
     * function registry (the `sessionState` accessor is package
     * private; `SparkSessionExtensions.injectFunction` is the

@@ -613,4 +613,65 @@ class DvSpec extends AnyFunSuite with SharedSpark {
       }
     }
   }
+
+  /** (tasks, input bytes) of every job `f` launches, in start order. */
+  private def jobsOf(f: => Unit): Seq[(Int, Long)] = {
+    import org.apache.spark.scheduler._
+    val stageJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
+    val jobs = scala.collection.concurrent.TrieMap.empty[Int, (Int, Long)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs(e.jobId) = (0, 0L)
+        e.stageIds.foreach(stageJob(_) = e.jobId)
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        stageJob.get(e.stageId).foreach { j =>
+          val bytes = Option(e.taskMetrics).fold(0L)(_.inputMetrics.bytesRead)
+          jobs(j) = (jobs(j)._1 + 1, jobs(j)._2 + bytes)
+        }
+    }
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try f finally {
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.toSeq.sortBy(_._1).map(_._2)
+  }
+
+  test("a repeat read of one generation reads no manifest and infers no schema") {
+    withTempDir("graft_dv_jobs_") { dir =>
+      mkLayout(dir)
+      Layout.enableGenerations(spark, dir)
+      Layout.deleteWhereDv(spark, dir, Seq(Layout.KeyBox("k", 100L, 149L)))
+      val box = Seq(Layout.KeyBox("k", 50L, 400L))
+      val want = expect(1000, k => k < 100 || k > 149)
+        .filter(t => t._1 >= 50 && t._1 <= 400)
+      def graftRead = spark.read.format("graft").load(dir)
+        .filter(col("k").between(50L, 400L))
+      // Spark's parquet schema inference is a one-task job that reads
+      // no input (footers only): no read may launch one, cold or warm
+      def inferenceFree(jobs: Seq[(Int, Long)]): Boolean =
+        !jobs.exists { case (tasks, bytes) => tasks == 1 && bytes == 0L }
+      // cold: the first read of the generation loads its manifest once
+      val cold = jobsOf(assert(got(Layout.scanPruned(spark, dir, box)) == want))
+      assert(inferenceFree(cold), s"cold scanPruned jobs: $cold")
+      val coldGraft = jobsOf(assert(got(graftRead) == want))
+      assert(inferenceFree(coldGraft), s"cold format(graft) jobs: $coldGraft")
+      // warm: building either read launches NO job (manifest, schema
+      // and skip verdicts all come off the cached snapshot); running
+      // it launches at most the DV-position broadcast and the data
+      // scan, and both read input
+      for ((name, read) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+          "scanPruned" -> (() => Layout.scanPruned(spark, dir, box)),
+          "format(graft)" -> (() => graftRead))) {
+        var df: org.apache.spark.sql.DataFrame = null
+        val build = jobsOf { df = read() }
+        assert(build.isEmpty, s"building a warm $name launched jobs: $build")
+        val run = jobsOf(assert(got(df) == want))
+        assert(run.size <= 2 && run.forall(_._2 > 0L),
+          s"a warm $name ran jobs beyond the DV broadcast and the data scan: $run")
+      }
+    }
+  }
 }

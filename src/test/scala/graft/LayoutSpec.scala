@@ -3215,4 +3215,118 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
+
+  test("manifest snapshots follow every rewrite of a manifest") {
+    withTempDir("graft_snap_stale_") { root =>
+      def mk(d: String, n: Long): Unit = {
+        spark.range(n).select(col("id").as("k"), (col("id") * 3).as("v"))
+          .repartitionByRange(4, col("k")).sortWithinPartitions("k")
+          .write.mode("overwrite").parquet(d)
+        Layout.buildFileManifest(spark, d, Seq("k"))
+          .write.mode("overwrite").parquet(s"$d/_graft_manifest")
+      }
+      def rows(n: Long) = spark.range(n).select(col("id").as("k"),
+        (col("id") * 3).as("v"))
+      def keys(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+        df.select("k").as[Long].collect().sorted.toSeq
+      val all = Seq(Layout.KeyBox("k", 0L, Long.MaxValue))
+      // tracked: a commit between two reads is visible to the second
+      val t = s"$root/tracked"
+      mk(t, 100L)
+      Layout.enableGenerations(spark, t)
+      assert(keys(Layout.scanPruned(spark, t, all)) == (0L until 100L))
+      assert(keys(spark.read.format("graft").load(t)) == (0L until 100L))
+      Layout.appendWithManifest(rows(110L).where(col("k") >= 100L), t, Seq("k"))
+      assert(keys(Layout.scanPruned(spark, t, all)) == (0L until 110L))
+      assert(keys(spark.read.format("graft").load(t)) == (0L until 110L))
+      assert(keys(Layout.readSnapshot(spark, t, 0L)) == (0L until 100L))
+      // untracked: an in-place deleteWhere patches the manifest with
+      // no generation to bump, and the next scanPruned sees it
+      val u = s"$root/untracked"
+      mk(u, 100L)
+      assert(keys(Layout.scanPruned(spark, u, all)) == (0L until 100L))
+      Layout.deleteWhere(spark, u, Seq(Layout.KeyBox("k", 10L, 19L)))
+      val kept = (0L until 100L).filter(k => k < 10L || k > 19L)
+      assert(keys(Layout.scanPruned(spark, u, all)) == kept)
+      // a manifest overwritten by hand is picked up
+      Layout.buildFileManifest(spark, u, Seq("k", "v"))
+        .write.mode("overwrite").parquet(s"$u/_graft_manifest")
+      assert(Layout.storedKeys(spark, u).toSet == Set("k", "v"))
+      assert(keys(Layout.scanPruned(spark, u,
+        Seq(Layout.KeyBox("v", 0L, 30L)))) == (0L to 9L))
+      // deleted and rebuilt at the same path: generation 0 names new
+      // rows, and every read serves them
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(t))
+      mk(t, 50L)
+      Layout.enableGenerations(spark, t)
+      assert(keys(Layout.scanPruned(spark, t, all)) == (0L until 50L))
+      assert(keys(spark.read.format("graft").load(t)) == (0L until 50L))
+      assert(keys(Layout.readSnapshot(spark, t, 0L)) == (0L until 50L))
+      assert(spark.read.format("graft").load(t).count() == 50L)
+      // a vacuumed generation still fails loudly, naming the vacuum
+      Layout.appendWithManifest(rows(60L).where(col("k") >= 50L), t, Seq("k"))
+      Layout.vacuumGenerations(spark, t, retainLast = 1)
+      val e = intercept[IllegalArgumentException](
+        Layout.readSnapshot(spark, t, 0L))
+      assert(e.getMessage.contains("generation 0 of") &&
+        e.getMessage.contains("has been vacuumed"), e.getMessage)
+    }
+  }
+
+  test("the manifest snapshot cache holds at most its byte bound") {
+    import graft.ext.ManifestSnapshot
+    withTempDir("graft_snap_cache_") { root =>
+      // four tables of 8 files each, bloom-indexed on b: every
+      // manifest row carries an 8 KiB bitset
+      val dirs = (0 until 4).map { i =>
+        val d = s"$root/t$i"
+        spark.range(0L, 80L, 1L, 8)
+          .select(col("id").as("k"), (col("id") % 7L).as("b"))
+          .write.parquet(d)
+        Layout.buildFileManifest(spark, d, Seq("k", "b"), bloomKeys = Seq("b"))
+          .write.mode("overwrite").parquet(s"$d/_graft_manifest")
+        new org.apache.hadoop.fs.Path(s"$d/_graft_manifest")
+      }
+      val snaps = dirs.map(ManifestSnapshot.load(spark, _))
+      assert(snaps.forall(_.isHeld))
+      assert(snaps.forall(_.bytes > 8L * 8192L), snaps.map(_.bytes))
+      // room for any two snapshots, never three
+      val bound = snaps.map(_.bytes).sorted.takeRight(2).sum
+      assert(snaps.map(_.bytes).sorted.take(3).sum > bound)
+      val cache = new ManifestSnapshot.Cache(bound)
+      snaps.zipWithIndex.foreach { case (s, i) =>
+        assert(cache.getOrLoad(s"t$i")(s) eq s)
+        assert(cache.heldBytes <= bound, s"held ${cache.heldBytes} of $bound bytes")
+      }
+      // the eldest two were evicted
+      assert(cache.size == 2 && cache.heldBytes == snaps(2).bytes + snaps(3).bytes)
+      assert(cache.getOrLoad("t3")(fail("t3 was evicted")) eq snaps(3))
+      assert(cache.getOrLoad("t2")(fail("t2 was evicted")) eq snaps(2))
+      var loads = 0
+      cache.getOrLoad("t0") { loads += 1; snaps(0) }
+      assert(loads == 1 && cache.size == 2 && cache.heldBytes <= bound)
+      // t3 was used least recently, so t0's return evicted it
+      cache.getOrLoad("t3") { loads += 1; snaps(3) }
+      assert(loads == 2 && cache.size == 2 && cache.heldBytes <= bound)
+      // a snapshot larger than the whole bound is served, never cached
+      val tiny = new ManifestSnapshot.Cache(snaps(0).bytes - 1L)
+      assert(tiny.getOrLoad("t0")(snaps(0)) eq snaps(0))
+      assert(tiny.size == 0 && tiny.heldBytes == 0L)
+      // a manifest over a cache's per-version bound is never collected:
+      // the cache keeps its part-file list, and its frame reads the
+      // same rows on the executors
+      val small = new ManifestSnapshot.Cache(4L * snaps(0).bytes)
+      val unheld = ManifestSnapshot.load(spark, dirs(0), small)
+      assert(!unheld.isHeld && unheld.bytes < small.maxHeldBytes)
+      assert(small.size == 1 && small.heldBytes == unheld.bytes)
+      assert(ManifestSnapshot.load(spark, dirs(0), small) eq unheld)
+      def probe(s: ManifestSnapshot): Set[Seq[Any]] = s.frame(spark)
+        .filter(col("max_k") >= 40L)
+        .select(col("file"), col("n_rows"), col("bloom_b").cast("string"))
+        .collect().map(_.toSeq).toSet
+      assert(probe(unheld).size == 4 && probe(unheld) == probe(snaps(0)))
+      // the JVM-wide cache stays inside its documented bound
+      assert(ManifestSnapshot.cachedBytes <= ManifestSnapshot.MaxCachedBytes)
+    }
+  }
 }
