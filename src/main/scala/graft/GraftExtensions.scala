@@ -56,7 +56,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // iteration (injection order), so a bare COUNT(*) over a DV
     // generation is manifest-answered before the substitution; and
     // after Spark's own predicate pushdown, so an adjacent Filter's
-    // conjuncts route the substitution through readSnapshotPruned —
+    // conjuncts become readSnapshot's prune boxes —
     // merge-on-read tables keep data skipping through plain SQL
     e.injectOptimizerRule(session =>
       graft.plans.GraftDvReadRewrite(session))

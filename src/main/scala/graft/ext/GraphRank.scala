@@ -35,7 +35,7 @@ object GraphRank {
     * is unaffected for the quality-weighting use case. Duplicate
     * edges are collapsed (simple-graph semantics). The node count is
     * the one driver-side scalar (a single long, a plan literal —
-    * same bounded contract as [[Layout.writeZOrdered]]'s min/max).
+    * same bounded contract as [[Layout.write]]'s curve bounds).
     *
     * Returns `(node, rank)`, rank in fixed-point `scale` units.
     */

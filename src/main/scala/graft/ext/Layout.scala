@@ -53,65 +53,61 @@ object Layout {
   def normalize16(c: Column, lo: Long, hi: Long): Column =
     normalizeBits(c, lo, hi, 16)
 
-  /** Write `df` clustered by the Morton code of two key columns:
-    * min-max normalize both keys to 16 bits (one tiny agg; the 4
-    * bounds are plan literals, like broadcast centroids), interleave,
-    * range-partition on z (so files tile the z-curve contiguously),
-    * sort within partitions, write parquet. `files` bounds the output
-    * file count — at 100 TB pick it so files land near the 1 GiB
-    * sweet spot. Readers filtering on either key dimension skip
-    * non-overlapping files via ordinary parquet min-max pruning; no
-    * reader-side changes needed. */
-  def writeZOrdered(df: DataFrame, x: Column, y: Column,
-                    path: String, files: Int): Unit =
-    bounds2(df, x, y) match {
-      // empty input (or all-null keys): min/max are null — there is
-      // nothing to cluster, but the write contract (an overwritten
-      // parquet dir with df's schema) must still hold
-      case None => df.write.mode("overwrite").parquet(path)
-      case Some((xLo, xHi, yLo, yHi)) =>
-        writeClusteredBy(df,
-          zorder2(normalize16(x, xLo, xHi), normalize16(y, yLo, yHi)),
-          path, files)
-    }
+  /** The order [[write]] clusters rows in: `ZOrder`, the k-ary Morton
+    * interleave of 2..8 keys ([[zorderN]], pure built-ins that
+    * re-derive in any SQL engine); `Hilbert`, the order-16 Hilbert
+    * index of exactly 2 keys ([[hilbert2]], jump-free, so tighter
+    * worst-case per-file boxes); or `Range`, lexicographic range
+    * clustering on 1+ keys with no bounds agg. */
+  sealed trait Curve
 
-  /** Hilbert-curve sibling of [[writeZOrdered]]: same normalize →
-    * encode → range-partition → sorted write shape, with the
-    * jump-free [[hilbert2]] index in place of the Morton interleave —
-    * tighter worst-case per-file bounding boxes at the cost of a
-    * custom (still codegen'd) expression instead of pure built-ins. */
-  def writeHilbert(df: DataFrame, x: Column, y: Column,
-                   path: String, files: Int): Unit =
-    bounds2(df, x, y) match {
-      case None => df.write.mode("overwrite").parquet(path)
-      case Some((xLo, xHi, yLo, yHi)) =>
-        writeClusteredBy(df,
-          hilbert2(normalize16(x, xLo, xHi), normalize16(y, yLo, yHi)),
-          path, files)
-    }
+  object Curve {
+    case object ZOrder extends Curve
+    case object Hilbert extends Curve
+    case object Range extends Curve
+  }
 
-  /** [[writeHilbert]] + the stored skipping manifest, mirroring
-    * [[writeZOrderedWithManifest]] — [[scanPruned]] is curve-agnostic
-    * (it reads only the per-file stats), so Hilbert layouts plug into
-    * the same read path, append patching, and OPTIMIZE trigger. */
-  def writeHilbertWithManifest(df: DataFrame, x: Column, y: Column,
-                               path: String, files: Int,
-                               keyCols: Seq[String]): Unit =
-    withStoredManifest(df.sparkSession, path, keyCols) {
-      writeHilbert(df, x, y, path, files)
+  /** The one clustered writer: overwrite `path` with `df` clustered
+    * along `curve` over `keys` into at most `files` files (at 100 TB,
+    * pick `files` so files land near 1 GiB), every argument checked
+    * before anything is written. ZOrder and Hilbert run the curve
+    * step ([[curveCodeOf]]), range-partition on the code so files tile
+    * the curve contiguously, and sort within partitions; an empty
+    * frame or an all-null key has no bounds, so the write falls back
+    * to a plain one (the same overwritten dir with `df`'s schema).
+    * Range partitions and sorts on the keys themselves. Readers
+    * filtering on any key skip files through parquet min-max pruning.
+    *
+    * A non-empty `manifestKeys` also stores the per-file skipping
+    * manifest ([[buildFileManifest]]) at `<path>/_graft_manifest`,
+    * which every parquet reader ignores as a data file (the
+    * `_SUCCESS` / `_delta_log` convention) while [[scanPruned]] picks
+    * the stats up in any later session with a manifest-sized read,
+    * for every curve. Its file names are absolute URIs: moving the
+    * directory invalidates it (rebuild with [[buildFileManifest]]). */
+  def write(df: DataFrame, path: String, keys: Seq[Column], files: Int,
+            curve: Curve = Curve.ZOrder,
+            manifestKeys: Seq[String] = Nil): Unit = {
+    curve match {
+      case Curve.ZOrder => require(keys.length >= 2 && keys.length <= 8,
+        s"write: ZOrder interleaves 2..8 keys, got ${keys.length}")
+      case Curve.Hilbert => require(keys.length == 2,
+        s"write: Hilbert takes exactly 2 keys, got ${keys.length}")
+      case Curve.Range => require(keys.nonEmpty,
+        "write: Range clustering needs at least one key")
     }
-
-  /** The shared manifest-carrying write tail: validate the path,
-    * run the clustered write, build and store the stats — one place,
-    * so the manifest contract cannot fork between the Z-order, k-ary,
-    * and Hilbert writers. */
-  private def withStoredManifest(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, keyCols: Seq[String])
-                                (doWrite: => Unit): Unit = {
-    requireEncodingStablePath(path)
-    doWrite
-    buildFileManifest(spark, path, keyCols)
-      .write.mode("overwrite").parquet(s"$path/_graft_manifest")
+    require(files >= 1, s"write: files must be at least 1, got $files")
+    if (manifestKeys.nonEmpty) requireEncodingStablePath(path)
+    curve match {
+      case Curve.Range => writeRangeClustered(df, keys, path, files)
+      case c => curveCodeOf(df, keys, c) match {
+        case Some(code) => writeClusteredBy(df, code, path, files)
+        case None => df.write.mode("overwrite").parquet(path)
+      }
+    }
+    if (manifestKeys.nonEmpty)
+      buildFileManifest(df.sparkSession, path, manifestKeys)
+        .write.mode("overwrite").parquet(s"$path/_graft_manifest")
   }
 
   /** Order-16 Hilbert curve index of two (pre-normalized, low 16
@@ -123,15 +119,26 @@ object Layout {
         org.apache.spark.sql.GraftColumnBridge.expression(x),
         org.apache.spark.sql.GraftColumnBridge.expression(y)))
 
-  /** The 4-scalar min/max bounds collect shared by both 2-D
-    * clustered writers; None when any bound is null (nothing to
-    * cluster). */
-  private def bounds2(df: DataFrame, x: Column,
-                      y: Column): Option[(Long, Long, Long, Long)] = {
-    val r = df.agg(min(x).cast("long"), max(x).cast("long"),
-        min(y).cast("long"), max(y).cast("long")).collect()(0)
-    if (r.anyNull) None
-    else Some((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+  /** The curve step under every clustered write ([[write]] and the
+    * OPTIMIZE rewrite): ONE bounds agg over `keys`, [[normalizeBits]]
+    * onto the curve's bit domain, then [[zorderN]] (ZOrder) or
+    * [[hilbert2]] (Hilbert). A two-key ZOrder code is bit-identical
+    * to [[zorder2]]'s. None when any bound is null: an empty frame or
+    * an all-null key leaves nothing to cluster. */
+  private def curveCodeOf(df: DataFrame, keys: Seq[Column],
+                          curve: Curve): Option[Column] = {
+    val bounds = keys.flatMap(c =>
+      Seq(min(c).cast("long"), max(c).cast("long")))
+    val row = df.agg(bounds.head, bounds.tail: _*).collect()(0)
+    if (row.anyNull) None
+    else {
+      val bits = zorderBits(keys.length)
+      val norm = keys.zipWithIndex.map { case (c, i) =>
+        normalizeBits(c, row.getLong(2 * i), row.getLong(2 * i + 1), bits)
+      }
+      Some(if (curve == Curve.Hilbert) hilbert2(norm(0), norm(1))
+        else zorderN(norm))
+    }
   }
 
   /** The shared tail of every clustered writer: attach the layout
@@ -143,6 +150,14 @@ object Layout {
       .repartitionByRange(files, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
+      .write.mode("overwrite").parquet(path)
+
+  /** Range-partition `df` on `keys` and sort within partitions:
+    * each file holds a disjoint key range with tight min/max stats. */
+  private def writeRangeClustered(df: DataFrame, keys: Seq[Column],
+                                  path: String, files: Int): Unit =
+    df.repartitionByRange(files, keys: _*)
+      .sortWithinPartitions(keys: _*)
       .write.mode("overwrite").parquet(path)
 
   /** k-ary Morton code: bit-interleave `keys.length` non-negative
@@ -198,40 +213,6 @@ object Layout {
       val s = math.max(0, (64 - java.lang.Long.numberOfLeadingZeros(d)) - (63 - bits))
       call_function("div",
         shiftright(c - lit(lo), s) * lit(m), lit(d >> s))
-    }
-
-  /** [[writeZOrdered]] for k ≥ 2 key columns: min-max normalize each
-    * key onto the interleave domain (one tiny bounds agg → plan
-    * literals), k-ary Morton-cluster, range-partition into `files`,
-    * write parquet. Degenerate inputs (empty frame or a fully-null
-    * key) fall back to a plain write — nothing to cluster, same
-    * contract as the 2-D path. */
-  def writeZOrderedN(df: DataFrame, keys: Seq[Column],
-                     path: String, files: Int): Unit = {
-    val k = keys.length
-    require(k >= 2 && k <= 8, s"writeZOrderedN takes 2..8 keys, got $k")
-    val bits = zorderBits(k)
-    val boundExprs = keys.flatMap(c =>
-      Seq(min(c).cast("long"), max(c).cast("long")))
-    val boundsRow = df.agg(boundExprs.head, boundExprs.tail: _*).collect()(0)
-    if (boundsRow.anyNull) {
-      df.write.mode("overwrite").parquet(path)
-      return
-    }
-    val b = boundsRow.toSeq.map(_.asInstanceOf[Long])
-    val norm = keys.zipWithIndex.map { case (c, i) =>
-      normalizeBits(c, b(2 * i), b(2 * i + 1), bits)
-    }
-    writeClusteredBy(df, zorderN(norm), path, files)
-  }
-
-  /** [[writeZOrderedWithManifest]] for k key columns: the k-ary
-    * clustered write plus the stored per-file skipping stats. */
-  def writeZOrderedNWithManifest(df: DataFrame, keys: Seq[Column],
-                                 path: String, files: Int,
-                                 keyCols: Seq[String]): Unit =
-    withStoredManifest(df.sparkSession, path, keyCols) {
-      writeZOrderedN(df, keys, path, files)
     }
 
   /** An inclusive value interval `[lo, hi]` on a manifest key column
@@ -336,7 +317,7 @@ object Layout {
     * `input_file_name()` (map-side partial min/max, then a
     * file-count-sized shuffle: a 100 TB table at ~1 GiB/file is
     * ~100k manifest rows). Build it once when the data is (re)written
-    * — e.g. right after [[writeZOrdered]] — and let every subsequent
+    * — e.g. by [[write]] with `manifestKeys` — and let every subsequent
     * read prune against it via [[scanPruned]]. */
   def buildFileManifest(spark: org.apache.spark.sql.SparkSession, dir: String,
                         keyCols: Seq[String],
@@ -980,14 +961,30 @@ object Layout {
     * (vacuumed, or out-of-band deletion). Schema-evolved layouts
     * resolve under the CURRENT sidecar — files predating an added
     * column surface null for it, so a pre-evolution snapshot shows
-    * the column as all-null rather than changing shape per call. */
+    * the column as all-null rather than changing shape per call.
+    *
+    * Non-empty `boxes` apply [[scanPruned]]'s skipping against the
+    * GENERATION's manifest — time-traveled pruned reads: the archived
+    * stats prune exactly as they did when that manifest was live,
+    * survivors resolve live-or-retired, and the residual re-filter
+    * keeps pruned ≡ full-snapshot-scan by construction. To read as of
+    * a timestamp, pass [[generationAsOf]]'s generation as `gen`. */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession,
-                   dir: String, gen: Long): DataFrame = {
+                   dir: String, gen: Long,
+                   boxes: Seq[PruneBox] = Nil): DataFrame = {
     requireEncodingStablePath(dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snap = snapshotOf(spark, fs, dir, gen)
-    readSnapshotRows(spark, fs, dir, gen, snap, snapshotDvRows(spark, snap))
+    val mSchema = snap.schema
+    val rows = snapshotDvRows(spark, snap,
+      boxes.map(skipExprOf(mSchema, _)).reduceOption(_ || _))
+    val resolved = resolveSnapshotFiles(fs, dir, gen, rows.map(_._1).toArray)
+    val read = readResolvedDv(spark, dir,
+      dataSchemaOf(spark, dir, snap, resolved),
+      rows.zip(resolved).map { case ((f, dv), res) => (f, res, dv) })
+    boxes.map(residualExprOf(mSchema, _)).reduceOption(_ && _)
+      .fold(read)(r => read.where(r))
   }
 
   /** The (file, dv_path) rows of a snapshot's manifest, minus those
@@ -1003,40 +1000,6 @@ object Layout {
       .select(col("file"), dvPathExprOf(snap.schema).as("dv_path"))
       .collect()
       .map(r => (r.getString(0), Option(r.getString(1)))).toIndexedSeq
-  }
-
-  /** Read a generation's (file, dv_path) rows: each file resolved
-    * live-or-retired at CALL time, under [[dataSchemaOf]]'s schema,
-    * vectors applied. */
-  private def readSnapshotRows(spark: org.apache.spark.sql.SparkSession,
-                               fs: org.apache.hadoop.fs.FileSystem,
-                               dir: String, gen: Long,
-                               snap: ManifestSnapshot,
-                               rows: IndexedSeq[(String, Option[String])])
-      : DataFrame = {
-    val resolved = resolveSnapshotFiles(fs, dir, gen, rows.map(_._1).toArray)
-    readResolvedDv(spark, dir, dataSchemaOf(spark, dir, snap, resolved),
-      rows.zip(resolved).map { case ((f, dv), res) => (f, res, dv) })
-  }
-
-  /** [[readSnapshot]] with [[scanPruned]]'s skipping applied against
-    * the GENERATION's manifest — time-traveled pruned reads: the
-    * archived stats prune exactly as they did when that manifest was
-    * live, survivors resolve live-or-retired, and the residual
-    * re-filter keeps pruned ≡ full-snapshot-scan by construction. */
-  def readSnapshotPruned(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, gen: Long,
-                         boxes: Seq[PruneBox]): DataFrame = {
-    require(boxes.nonEmpty, "readSnapshotPruned needs at least one key box")
-    requireEncodingStablePath(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = snapshotOf(spark, fs, dir, gen)
-    val mSchema = snap.schema
-    val rows = snapshotDvRows(spark, snap,
-      Some(boxes.map(skipExprOf(mSchema, _)).reduce(_ || _)))
-    readSnapshotRows(spark, fs, dir, gen, snap, rows)
-      .where(boxes.map(residualExprOf(mSchema, _)).reduce(_ && _))
   }
 
   /** The live manifest's snapshot — what [[loadManifest]] serves. */
@@ -1102,6 +1065,16 @@ object Layout {
           sn.frame(spark).select("file").head(1).map(_.getString(0)).toSeq))
         .getOrElse(spark.read.parquet(dir).schema)
     }
+
+  /** Every data file under `dir` in Spark's own URI spelling — the
+    * spelling manifest rows carry — listed under a known schema
+    * (`schema`, else [[liveSchemaOf]]'s) so the listing runs no
+    * schema-inference job. The commit verbs re-list through this to
+    * name the files they just wrote. */
+  private def liveFilesOf(spark: org.apache.spark.sql.SparkSession, dir: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): Seq[String] =
+    spark.read.schema(schema.getOrElse(liveSchemaOf(spark, dir)))
+      .parquet(dir).inputFiles.toSeq
 
   /** Resolve a generation's manifest file names against live storage
     * first and the retirement area second — at CALL time, which is
@@ -1173,17 +1146,8 @@ object Layout {
   private def readResolved(spark: org.apache.spark.sql.SparkSession,
                            dir: String,
                            schema: Option[org.apache.spark.sql.types.StructType],
-                           resolved: Seq[String]): DataFrame = {
-    def reader = schema.fold(spark.read)(s => spark.read.schema(s))
-    if (resolved.nonEmpty) {
-      val groups = resolved.groupBy(snapshotAnchorOf(dir, _))
-      groups.toSeq.sortBy(_._1)
-        .map { case (basePath, files) =>
-          reader.option("basePath", basePath).parquet(files: _*)
-        }
-        .reduce(_ unionByName _)
-    }
-    else schema match {
+                           resolved: Seq[String]): DataFrame =
+    readAnchored(spark, dir, schema, resolved).getOrElse(schema match {
       case Some(s) => spark.read.schema(s).parquet(dir).where(lit(false))
       case None =>
         try spark.read.parquet(dir).where(lit(false))
@@ -1194,7 +1158,23 @@ object Layout {
                 "directory has no data file or schema sidecar to shape " +
                 s"an empty frame with (${e.getMessage})")
         }
-    }
+    })
+
+  /** [[readResolved]]'s per-anchor reads of `resolved` files, unioned
+    * by name — None when there is no file. `stamp` adds the parquet
+    * metadata identity a deletion-vector anti-join matches on. */
+  private def readAnchored(spark: org.apache.spark.sql.SparkSession,
+                           dir: String,
+                           schema: Option[org.apache.spark.sql.types.StructType],
+                           resolved: Seq[String],
+                           stamp: Boolean = false): Option[DataFrame] = {
+    def reader = schema.fold(spark.read)(s => spark.read.schema(s))
+    resolved.groupBy(snapshotAnchorOf(dir, _)).toSeq.sortBy(_._1)
+      .map { case (basePath, files) =>
+        val df = reader.option("basePath", basePath).parquet(files: _*)
+        if (stamp) stampDvCols(df) else df
+      }
+      .reduceOption(_ unionByName _)
   }
 
   /** [[readResolved]] with DELETION VECTORS applied: `items` pairs
@@ -1211,26 +1191,18 @@ object Layout {
                              schema: Option[org.apache.spark.sql.types.StructType],
                              items: Seq[(String, String, Option[String])])
       : DataFrame = {
-    if (items.forall(_._3.isEmpty))
-      return readResolved(spark, dir, schema, items.map(_._2))
-    def reader = schema.fold(spark.read)(s => spark.read.schema(s))
-    def readGroups(xs: Seq[(String, String, Option[String])],
-                   stamp: Boolean): Option[DataFrame] =
-      xs.groupBy(i => snapshotAnchorOf(dir, i._2)).toSeq.sortBy(_._1)
-        .map { case (basePath, group) =>
-          val df = reader.option("basePath", basePath)
-            .parquet(group.map(_._2): _*)
-          if (stamp) stampDvCols(df) else df
-        }
-        .reduceOption(_ unionByName _)
     val (dvItems, plainItems) = items.partition(_._3.isDefined)
+    if (dvItems.isEmpty)
+      return readResolved(spark, dir, schema, items.map(_._2))
     val remap = dvItems.collect {
       case (orig, resolved, _) if metaFormOf(orig) != metaFormOf(resolved) =>
         metaFormOf(orig) -> metaFormOf(resolved)
     }.toMap
-    val cleaned = antiJoinDv(spark, readGroups(dvItems, stamp = true).get,
+    val cleaned = antiJoinDv(spark,
+      readAnchored(spark, dir, schema, dvItems.map(_._2), stamp = true).get,
       dvItems.flatMap(_._3).distinct, remap)
-    readGroups(plainItems, stamp = false).fold(cleaned)(_ unionByName cleaned)
+    readAnchored(spark, dir, schema, plainItems.map(_._2))
+      .fold(cleaned)(_ unionByName cleaned)
   }
 
   /** CHANGE DATA FEED between two generations of a generation-tracked
@@ -1554,6 +1526,30 @@ object Layout {
     churn.join(info, Seq("gen"), "left").orderBy("gen")
   }
 
+  /** (live generation, oldest retained generation, commit records) of
+    * a tracked `dir`, for the timestamp resolvers: every retained
+    * generation must carry a record, else resolution would guess —
+    * refused loudly, naming the generations, `why` they may lack one,
+    * and the `fallback`. */
+  private def retainedCommits(spark: org.apache.spark.sql.SparkSession,
+                              dir: String, untracked: String, why: String,
+                              fallback: String)
+      : (Long, Long, Map[Long, (Long, String)]) = {
+    requireEncodingStablePath(dir)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(generationsEnabled(fs, dir),
+      s"$dir is not generation-tracked — $untracked")
+    val cur = liveGenOf(fs, dir)
+    val oldest = archivedGens(fs, dir).minOption.getOrElse(cur)
+    val info = commitInfoOf(fs, dir)
+    val missing = (oldest to cur).filterNot(info.contains)
+    require(missing.isEmpty,
+      s"generation(s) ${missing.mkString(", ")} at $dir carry no commit " +
+        s"record$why — timestamp resolution would guess; $fallback")
+    (cur, oldest, info)
+  }
+
   /** The newest generation whose recorded commit time is ≤
     * `tsMillis` — Delta's `TIMESTAMP AS OF` resolution over the
     * retained history. Every retained generation must carry a commit
@@ -1565,20 +1561,10 @@ object Layout {
     * work, like every other planning read. */
   def generationAsOf(spark: org.apache.spark.sql.SparkSession,
                      dir: String, tsMillis: Long): Long = {
-    requireEncodingStablePath(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(generationsEnabled(fs, dir),
-      s"$dir is not generation-tracked — nothing to resolve as-of")
-    val cur = liveGenOf(fs, dir)
-    val oldest = archivedGens(fs, dir).minOption.getOrElse(cur)
-    val info = commitInfoOf(fs, dir)
-    val missing = (oldest to cur).filterNot(info.contains)
-    require(missing.isEmpty,
-      s"generation(s) ${missing.mkString(", ")} at $dir carry no commit " +
-        "record (committed before enableGenerations stamped one, or a " +
-        "commit crashed mid-record) — timestamp resolution would guess; " +
-        "read them by number via readSnapshot instead")
+    val (cur, oldest, info) = retainedCommits(spark, dir,
+      "nothing to resolve as-of",
+      " (committed before enableGenerations stamped one, or a commit " +
+        "crashed mid-record)", "read them by number via readSnapshot instead")
     val eligible = (oldest to cur).filter(g => info(g)._1 <= tsMillis)
     require(eligible.nonEmpty,
       s"no retained generation at $dir committed at or before $tsMillis " +
@@ -1603,20 +1589,9 @@ object Layout {
   private[graft] def cdcStartGeneration(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, tsMillis: Long): Long = {
-    requireEncodingStablePath(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(generationsEnabled(fs, dir),
-      s"$dir is not generation-tracked — no commit history to resolve " +
-        "startingTimestamp against")
-    val cur = liveGenOf(fs, dir)
-    val oldest = archivedGens(fs, dir).minOption.getOrElse(cur)
-    val info = commitInfoOf(fs, dir)
-    val missing = (oldest to cur).filterNot(info.contains)
-    require(missing.isEmpty,
-      s"generation(s) ${missing.mkString(", ")} at $dir carry no commit " +
-        "record — timestamp resolution would guess; pass " +
-        "startingVersion instead")
+    val (cur, oldest, info) = retainedCommits(spark, dir,
+      "no commit history to resolve startingTimestamp against", "",
+      "pass startingVersion instead")
     (oldest to cur).find(g => info(g)._1 >= tsMillis) match {
       case None => cur
       case Some(g) =>
@@ -1629,20 +1604,6 @@ object Layout {
         g - 1L
     }
   }
-
-  /** [[readSnapshot]] resolved by TIMESTAMP instead of generation
-    * number: rows as of the newest commit at or before `tsMillis`. */
-  def readSnapshotAsOf(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, tsMillis: Long): DataFrame =
-    readSnapshot(spark, dir, generationAsOf(spark, dir, tsMillis))
-
-  /** [[readSnapshotPruned]] resolved by TIMESTAMP — time-traveled
-    * manifest skipping at an instant. */
-  def readSnapshotPrunedAsOf(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, tsMillis: Long,
-                             boxes: Seq[PruneBox]): DataFrame =
-    readSnapshotPruned(spark, dir, generationAsOf(spark, dir, tsMillis),
-      boxes)
 
   /** Hadoop Configuration is not Serializable; this envelope carries
     * it to executors for the distributed file copies (restore/clone)
@@ -1727,30 +1688,28 @@ object Layout {
   /** The resolved (anchor, file) pairs of generation `gen` — the
     * [[readSnapshot]] resolution exposed for the `graft` DataSourceV2
     * reader ([[graft.sources.GraftSource]]): each manifest file
-    * resolved live-or-retired at CALL time, paired with the basePath
-    * anchor [[readResolved]] would group it under (the layout dir for
-    * live files, the retirement label for retired ones). The file
-    * names come from the generation's cached [[ManifestSnapshot]]. */
+    * resolved live-or-retired fresh on every call (a concurrent verb
+    * may retire a file at any time, and a cached resolution would
+    * dangle), paired with the basePath anchor [[readResolved]] would
+    * group it under (the layout dir for live files, the retirement
+    * label for retired ones). The file names come from the
+    * generation's cached [[ManifestSnapshot]].
+    *
+    * Non-empty `boxes` drop the files provably outside them — the V2
+    * reader's data skipping ([[graft.plans.GraftManifestPrune]] swaps
+    * the relation's file list for this one and leaves the query's own
+    * Filter as the residual, so pruned ≡ full scan holds by the same
+    * construction as [[scanPruned]]), through [[skipExprOf]], the one
+    * skip semantics. */
   private[graft] def snapshotFileAnchors(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String, gen: Long): Seq[(String, String)] = {
+      spark: org.apache.spark.sql.SparkSession, dir: String, gen: Long,
+      boxes: Seq[PruneBox] = Nil): Seq[(String, String)] = {
     requireEncodingStablePath(dir)
-    anchoredSnapshotFiles(spark, dir, gen, None)
-  }
-
-  /** Generation `gen`'s file names (minus those `boxes` prove
-    * disjoint), resolved live-or-retired fresh on every call — a
-    * concurrent verb may retire a file at any time, and a cached
-    * resolution would dangle — and paired with their anchors. */
-  private def anchoredSnapshotFiles(spark: org.apache.spark.sql.SparkSession,
-                                    dir: String, gen: Long,
-                                    boxes: Option[Seq[PruneBox]])
-      : Seq[(String, String)] = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snap = snapshotOf(spark, fs, dir, gen)
     val files = snapshotDvRows(spark, snap,
-      boxes.map(_.map(skipExprOf(snap.schema, _)).reduce(_ || _))).map(_._1)
+      boxes.map(skipExprOf(snap.schema, _)).reduceOption(_ || _)).map(_._1)
     resolveSnapshotFiles(fs, dir, gen, files.toArray)
       .map(f => snapshotAnchorOf(dir, f) -> f)
   }
@@ -1781,21 +1740,6 @@ object Layout {
     if (!generationsEnabled(fs, dir)) None
     else Some(snapshotOf(spark, fs, dir, gen).schema)
   }
-
-  /** [[snapshotFileAnchors]] with the files provably OUTSIDE `boxes`
-    * dropped — the V2 reader's data-skipping resolution
-    * ([[graft.plans.GraftManifestPrune]] swaps the relation's file
-    * list for this one and leaves the query's own Filter as the
-    * residual, so pruned ≡ full scan holds by the same construction
-    * as [[scanPruned]]). ONE skip semantics: the boxes evaluate
-    * through [[skipExprOf]], exactly the Scala path, over the
-    * generation's [[ManifestSnapshot]] frame; the live-or-retired path
-    * RESOLUTION runs fresh each call (two bulk listings). */
-  private[graft] def prunedSnapshotFileAnchors(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String, gen: Long,
-      boxes: Seq[PruneBox]): Seq[(String, String)] =
-    anchoredSnapshotFiles(spark, dir, gen, Some(boxes))
 
   /** The generation's LIVE row count summed from its manifest alone
     * (physical rows minus any deletion vector) — what
@@ -1952,7 +1896,7 @@ object Layout {
     val liveBefore: Set[String] =
       if (dataFilesUnder(fs, new org.apache.hadoop.fs.Path(dir)).isEmpty)
         Set.empty
-      else spark.read.parquet(dir).inputFiles.toSet
+      else liveFilesOf(spark, dir).toSet
     // classification falls out of resolution: a file that resolved to
     // a retirement path needs a copy-back; anything else is live
     val (copyBack, kept) = targetFiles.zip(resolved).partition {
@@ -1975,7 +1919,7 @@ object Layout {
     // canonicalization of each new file ([[canonicalByRel]])
     val newCanonical =
       if (withRel.isEmpty) Seq.empty[String]
-      else spark.read.parquet(dir).inputFiles.toSeq.filterNot(liveBefore)
+      else liveFilesOf(spark, dir).filterNot(liveBefore)
     val mapping = withRel.map(m => (m._1, canonicalByRel(newCanonical, m._3)))
     // retire what the restore supersedes — everything live that gen
     // does not reference (the copies just written are not in
@@ -2066,7 +2010,8 @@ object Layout {
     if (withRel.isEmpty) destFs.mkdirs(destP)
     val destCanonical =
       if (withRel.isEmpty) Seq.empty[String]
-      else spark.read.parquet(destDir).inputFiles.toSeq
+      else liveFilesOf(spark, destDir,
+        dataSchemaOf(spark, srcDir, snap, resolved))
     val mapping = withRel.map(m => (m._1, canonicalByRel(destCanonical, m._3)))
     val cloned0 = remapManifestFiles(spark, target, mapping)
     // vectorized files' positions travel with the clone: ONE new
@@ -2929,7 +2874,7 @@ object Layout {
     * Z-clustered, so their [min,max] rectangles may be wide — they
     * simply never qualify for skipping, which is the conservative,
     * correct direction; when the [[q_layout_depth clustering-depth]]
-    * trigger fires, a [[writeZOrderedWithManifest]] rewrite
+    * trigger fires, a [[write]] or [[optimize]] rewrite
     * re-tightens the layout. The updated manifest is eagerly
     * materialized before overwriting its own source directory.
     *
@@ -2990,11 +2935,7 @@ object Layout {
     // ONE pre-append relation serves both the schema check and the
     // before-files snapshot — at 100k-file scale each
     // spark.read.parquet(path) is a full listing + footer resolution
-    val sidecar = storedSchemaOf(spark, path)
-    val current = sidecar match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None => spark.read.parquet(path)
-    }
+    val current = spark.read.schema(liveSchemaOf(spark, path)).parquet(path)
     val before = current.inputFiles.toSet
     // partition-aware append: on a hive-partitioned layout the new
     // rows must route into their k=v subdirectories — a plain append
@@ -3030,14 +2971,14 @@ object Layout {
     val w = df.write.mode("append")
     if (partCols.isEmpty) w.parquet(path)
     else w.partitionBy(partCols: _*).parquet(path)
-    val newFiles = spark.read.parquet(path).inputFiles.toSeq
+    val newFiles = liveFilesOf(spark, path, Some(current.schema))
       .filterNot(before)
     if (newFiles.isEmpty) return
     // basePath: delta stats for a partition-column key must see the
     // k=v path columns (a no-op on flat directories); bloom keys come
     // from the STORED format so the union below cannot mismatch
     val delta = manifestOf(
-      spark.read.option("basePath", path).parquet(newFiles: _*), keyCols,
+      readFilesOf(spark, path, newFiles, current.schema), keyCols,
       bloomKeysOf(existing.schema))
     // pre-nulls-format migration ([[widenWithNullCounts]]) and the
     // DV-format one ([[alignDvCols]] — appended files never carry a
@@ -3313,28 +3254,16 @@ object Layout {
     writeStreamLedger(fs, dir, queryId, batchId)
   }
 
-  /** [[writeZOrdered]] + durable skipping stats in one step: after
-    * the clustered write, the per-file manifest for `keyCols` is
-    * computed ([[buildFileManifest]] — the one extra pass is the
-    * write-time cost Delta/Iceberg pay for their stats too) and
-    * stored as parquet UNDER the data directory at
-    * `<path>/_graft_manifest`. The underscore prefix makes every
-    * parquet reader ignore it as a data file (the `_SUCCESS` /
-    * `_delta_log` convention), so `spark.read.parquet(path)` of the
-    * data is unchanged while [[scanPruned]] can pick the stats up in
-    * any LATER session with a manifest-sized read — no re-scan of
-    * the data to re-derive them. File names inside the manifest are
-    * absolute URIs: moving the directory invalidates it (rebuild
-    * with [[buildFileManifest]]). */
+  /** Two-key Z-ordered [[write]] with a stored manifest — kept as a
+    * forward because the perfbench harness, which is versioned with
+    * the benchmark rather than the library, still calls it. */
   def writeZOrderedWithManifest(df: DataFrame, x: Column, y: Column,
                                 path: String, files: Int,
                                 keyCols: Seq[String]): Unit =
-    withStoredManifest(df.sparkSession, path, keyCols) {
-      writeZOrdered(df, x, y, path, files)
-    }
+    write(df, path, Seq(x, y), files, manifestKeys = keyCols)
 
   /** Load the stored skipping manifest of a
-    * [[writeZOrderedWithManifest]] directory: the frame of its cached
+    * [[write]] directory: the frame of its cached
     * [[ManifestSnapshot]]. When the snapshot holds its rows on the
     * driver (manifests up to 8 MiB), a filter or projection over it
     * collects without a job. */
@@ -3349,20 +3278,6 @@ object Layout {
   def storedKeys(spark: org.apache.spark.sql.SparkSession,
                  dir: String): Seq[String] =
     manifestKeysOf(loadManifest(spark, dir).schema)
-
-  /** [[scanPruned]] against the manifest STORED with the data — the
-    * cold-reader path: a fresh session prunes files using only the
-    * manifest-sized stats read, never touching skipped data files.
-    * The manifest comes from the live [[ManifestSnapshot]], so a
-    * repeat read of one table version whose manifest rows are held
-    * reads no manifest at all. */
-  def scanPruned(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 boxes: Seq[PruneBox]): DataFrame = {
-    // guard FIRST: the loud path rejection must precede the manifest
-    // read (whose own missing-dir error would otherwise mask it)
-    requireEncodingStablePath(dir)
-    scanPruned(spark, dir, loadManifest(spark, dir), boxes)
-  }
 
   /** Decode a box's bounds against the TYPE the manifest stored for
     * its key: long stats take [[KeyBox]]'s long bounds verbatim;
@@ -3540,10 +3455,14 @@ object Layout {
 
   /** The consumer of the skipping manifest: read `dir` with files
     * whose stats PROVABLY miss the box predicate dropped BEFORE
-    * `spark.read` ever opens them. For each box, a file is skippable
-    * when `max < lo OR min > hi`; null stats mean every key value in
-    * the file is null (min/max ignore nulls), and a null key can
-    * never satisfy a value interval, so null-stats files skip too.
+    * `spark.read` ever opens them. The manifest is the one STORED
+    * with the data, served by the live [[ManifestSnapshot]]: a fresh
+    * session prunes from a manifest-sized read, and a repeat read of
+    * a version whose manifest rows are held reads none. For each box,
+    * a file is skippable when `max < lo OR min > hi`; null stats mean
+    * every key value in the file is null (min/max ignore nulls), and a
+    * null key can never satisfy a value interval, so null-stats files
+    * skip too.
     * Pruning is conservative the other way — surviving files are
     * re-filtered with the exact residual predicate, so the result
     * EQUALS the full-scan filter by construction.
@@ -3568,13 +3487,16 @@ object Layout {
     * counts a pipeline that maintains the manifest exclusively
     * through the two writers here may disable it. */
   def scanPruned(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 manifest: DataFrame, boxes: Seq[PruneBox],
+                 boxes: Seq[PruneBox],
                  verifyCoverage: Boolean = true): DataFrame = {
+    // guard FIRST: the loud path rejection must precede the manifest
+    // read (whose own missing-dir error would otherwise mask it)
+    requireEncodingStablePath(dir)
     require(boxes.nonEmpty, "scanPruned needs at least one key box")
+    val manifest = loadManifest(spark, dir)
     val mSchema = manifest.schema
     val skip = boxes.map(skipExprOf(mSchema, _)).reduce(_ || _)
     val residual = boxes.map(residualExprOf(mSchema, _)).reduce(_ && _)
-    requireEncodingStablePath(dir)
     // canonical-schema discipline: on an evolved layout the pruned
     // read must resolve added columns even when every SURVIVOR
     // predates them — otherwise the result schema would change with
@@ -4335,10 +4257,7 @@ object Layout {
       else w.partitionBy(partCols.toIndexedSeq: _*).parquet(tmp.toString)
       moveTreeInto(fs, tmp, hDir, label)
       fs.delete(tmp, true)
-      // re-list through spark.read (not the raw fs listing) so the
-      // new manifest rows carry the exact URI spelling every other
-      // manifest entry uses — the appendWithManifest discipline
-      newFiles = spark.read.parquet(dir).inputFiles.toSeq.filterNot(before)
+      newFiles = liveFilesOf(spark, dir, Some(schema)).filterNot(before)
     }
     // the INSERT half (replaceWhere): durable under the same
     // tmp-then-move discipline as the rewrite, BEFORE anything old
@@ -4354,7 +4273,7 @@ object Layout {
       moveTreeInto(fs, tmp, hDir, label)
       fs.delete(tmp, true)
       val newSet = newFiles.toSet
-      insFiles = spark.read.parquet(dir).inputFiles.toSeq
+      insFiles = liveFilesOf(spark, dir, Some(schema))
         .filterNot(before).filterNot(newSet)
     }
     // two deltas over DISJOINT file sets (no duplicated footer I/O),
@@ -4364,8 +4283,7 @@ object Layout {
     // the stored format
     def deltaOf(files: Seq[String]): Option[DataFrame] =
       if (files.isEmpty) None
-      else Some(manifestOf(
-          spark.read.option("basePath", dir).parquet(files: _*),
+      else Some(manifestOf(readFilesOf(spark, dir, files, schema),
           keyCols, bloomKeysOf(mSchema))
         .localCheckpoint(true))
     // coalesce: an all-empty rewrite leaves only zero-row part
@@ -4540,9 +4458,8 @@ object Layout {
     else w.partitionBy(partCols.toIndexedSeq: _*).parquet(tmp.toString)
     moveTreeInto(fs, tmp, hDir, "updateWhere")
     fs.delete(tmp, true)
-    val newFiles = spark.read.parquet(dir).inputFiles.toSeq.filterNot(before)
-    val delta = manifestOf(
-        spark.read.option("basePath", dir).parquet(newFiles: _*),
+    val newFiles = liveFilesOf(spark, dir, Some(schema)).filterNot(before)
+    val delta = manifestOf(readFilesOf(spark, dir, newFiles, schema),
         keyCols, bloomKeysOf(mSchema))
       .localCheckpoint(true)
     // OCC re-check before the destructive tail — see deleteWhere
@@ -4833,16 +4750,14 @@ object Layout {
         else wI.partitionBy(partCols.toIndexedSeq: _*).parquet(dir)
       }
       // delta stats over everything new (survivor rewrites + inserts)
-      // in one pass; re-listed through spark.read so the manifest
-      // rows carry the canonical URI spelling. A delete whose touched
-      // files were FULLY matched leaves no new file — a None delta
-      // (nothing survived the rewrite), never an unreadable empty scan
-      val newFiles = spark.read.parquet(dir).inputFiles.toSeq
+      // in one pass. A delete whose touched files were FULLY matched
+      // leaves no new file — a None delta (nothing survived the
+      // rewrite), never an unreadable empty scan
+      val newFiles = liveFilesOf(spark, dir, Some(schema))
         .filterNot(before)
       val delta =
         if (newFiles.isEmpty) None
-        else Some(manifestOf(
-            spark.read.option("basePath", dir).parquet(newFiles: _*),
+        else Some(manifestOf(readFilesOf(spark, dir, newFiles, schema),
             keyCols, bloomKeysOf(mSchema))
           .localCheckpoint(true))
       val newRows = delta.fold(0L)(_.agg(coalesce(sum("n_rows"), lit(0L)))
@@ -4895,8 +4810,7 @@ object Layout {
                  dim: DataFrame, factKey: String, dimKey: String,
                  verifyCoverage: Boolean = true): DataFrame = {
     requireEncodingStablePath(factDir)
-    val manifest = loadManifest(spark, factDir)
-    val statT = manifest.schema(s"min_$factKey").dataType
+    val statT = loadManifest(spark, factDir).schema(s"min_$factKey").dataType
     // frame-qualified key references throughout: fact and dim keys
     // SHARE a name in the normal star-schema shape (orders.custkey ⋈
     // customer.custkey), and an unqualified col(key) === col(key)
@@ -4944,7 +4858,7 @@ object Layout {
         else Some(TypedKeyBox(factKey, b.get(0).toString, b.get(1).toString))
       }
     box.fold(empty()) { bx =>
-      val fact = scanPruned(spark, factDir, manifest, Seq(bx), verifyCoverage)
+      val fact = scanPruned(spark, factDir, Seq(bx), verifyCoverage)
       fact.join(broadcast(dim), fact(factKey) === dim(dimKey))
     }
   }
@@ -5238,7 +5152,7 @@ object Layout {
     * depth reaches `maxDepth` — Delta OPTIMIZE / Iceberg rewrite
     * decide off exactly this signal. Appends degrade depth one
     * unclustered file at a time ([[appendWithManifest]]); when the
-    * trigger fires, rewrite with [[writeZOrderedWithManifest]] to
+    * trigger fires, rewrite with [[write]] to
     * re-tighten the layout (LayoutSpec drives that full lifecycle).
     * One manifest-sized job, one scalar to the driver. String-keyed
     * manifests (a lang-clustered layout) dispatch to the
@@ -5262,35 +5176,24 @@ object Layout {
     if (worst.isNullAt(0)) 0L else worst.getLong(0)
   }
 
-  /** The shared clustered-rewrite tail of both OPTIMIZE verbs: ONE
-    * bounds agg decides the path and feeds the curve — Z-order when
-    * 2..8 keys all carry long stats and real bounds (an all-null key
-    * has none), lexicographic range-clustering otherwise, plain
-    * round-robin when there is no in-file key at all (a partitioned
-    * leaf whose stored keys are all path-encoded just compacts). */
+  /** The shared clustered-rewrite tail of both OPTIMIZE verbs, over
+    * [[write]]'s curve step ([[curveCodeOf]]): ONE bounds agg decides
+    * the path and feeds the curve — Z-order when 2..8 keys all carry
+    * long stats and real bounds (an all-null key has none),
+    * lexicographic range-clustering otherwise, plain round-robin when
+    * there is no in-file key at all (a partitioned leaf whose stored
+    * keys are all path-encoded just compacts). */
   private def clusteredRewriteTo(src: DataFrame, keys: Seq[String],
                                  allLong: Boolean, tmp: String,
                                  files: Int): Unit = {
-    val boundsRow =
+    val cols = keys.map(col)
+    val code =
       if (keys.length < 2 || keys.length > 8 || !allLong) None
-      else {
-        val exprs = keys.flatMap(k =>
-          Seq(min(col(k)).cast("long"), max(col(k)).cast("long")))
-        Some(src.agg(exprs.head, exprs.tail: _*).collect()(0))
-          .filterNot(_.anyNull)
-      }
-    boundsRow match {
-      case Some(row) =>
-        val b = row.toSeq.map(_.asInstanceOf[Long])
-        val bits = zorderBits(keys.length)
-        val norm = keys.zipWithIndex.map { case (k, i) =>
-          normalizeBits(col(k), b(2 * i), b(2 * i + 1), bits)
-        }
-        writeClusteredBy(src, zorderN(norm), tmp, files)
+      else curveCodeOf(src, cols, Curve.ZOrder)
+    code match {
+      case Some(c) => writeClusteredBy(src, c, tmp, files)
       case None if keys.nonEmpty =>
-        src.repartitionByRange(files, keys.map(col): _*)
-          .sortWithinPartitions(keys.map(col): _*)
-          .write.mode("overwrite").parquet(tmp)
+        writeRangeClustered(src, cols, tmp, files)
       case None =>
         src.repartition(files).write.mode("overwrite").parquet(tmp)
     }
@@ -5449,7 +5352,7 @@ object Layout {
     requireExpectedGen(fs, dir, expectedGen, verb)
     val manifest = loadManifest(spark, dir)
     val keys = manifestKeysOf(manifest.schema)
-    val dirFrame = spark.read.parquet(dir)
+    val dirFrame = spark.read.schema(liveSchemaOf(spark, dir)).parquet(dir)
     val partCols =
       if (isHivePartitioned(spark, dir))
         hivePartColsChecked(fs, hDir, dirFrame.schema)
@@ -5548,11 +5451,8 @@ object Layout {
       moveTreeInto(fs, tmp, leaf, verb)
       fs.delete(tmp, true)
     }
-    // re-listed through spark.read so the delta rows carry the
-    // canonical URI spelling every other manifest row uses
-    val newFiles = spark.read.parquet(dir).inputFiles.toSeq.filterNot(before)
-    val delta = manifestOf(
-        spark.read.option("basePath", dir).parquet(newFiles: _*),
+    val newFiles = liveFilesOf(spark, dir, Some(schema)).filterNot(before)
+    val delta = manifestOf(readFilesOf(spark, dir, newFiles, schema),
         scope.keys, bloomKeysOf(mSchema))
       .localCheckpoint(true)
     val receipt = retireOrDeleteAll(fs, dir, files, verb)
@@ -5563,7 +5463,7 @@ object Layout {
       if (scope.dvMap.nonEmpty) reapUnreferencedDvStores(spark, fs, dir)
     }
     OptimizeStats(reclustered = true, before.size,
-      spark.read.parquet(dir).inputFiles.length, worst,
+      liveFilesOf(spark, dir, Some(schema)).length, worst,
       filesKept = before.size - files.size)
   }
 

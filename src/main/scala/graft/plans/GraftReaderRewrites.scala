@@ -65,8 +65,8 @@ private[plans] object GraftReaderMarker {
   * own predicate pushdown has run within the same iteration), so a
   * Filter sitting on the relation is VISIBLE here — and its pushable
   * conjuncts translate through the same [[GraftPruneBoxes.boxesOf]]
-  * vocabulary [[GraftManifestPrune]] uses, substituting
-  * [[graft.ext.Layout.readSnapshotPruned]] instead: a merge-on-read
+  * vocabulary [[GraftManifestPrune]] uses, and are passed to
+  * `readSnapshot` as its prune boxes: a merge-on-read
   * table KEEPS manifest data skipping through plain SQL (at 100 TB,
   * `WHERE key BETWEEN …` on a table with one DV'd file still opens
   * three files, not the manifest's worth). The query's own Filter
@@ -116,11 +116,8 @@ case class GraftDvReadRewrite(session: SparkSession)
         val boxes = Layout.snapshotManifestSchema(session, m.dir, m.gen)
           .map(ms => boxesOf(cond, ms))
           .getOrElse(Nil)
-        val snap =
-          if (boxes.nonEmpty)
-            Layout.readSnapshotPruned(session, m.dir, m.gen, boxes)
-          else Layout.readSnapshot(session, m.dir, m.gen)
-        Filter(cond, substitute(r, m, snap))
+        Filter(cond,
+          substitute(r, m, Layout.readSnapshot(session, m.dir, m.gen, boxes)))
       case r: DataSourceV2Relation
           if GraftReaderMarker.of(r).exists(_.substituted) =>
         val m = GraftReaderMarker.of(r).get
@@ -158,7 +155,7 @@ case class GraftDvReadRewrite(session: SparkSession)
   * translates its pushable conjuncts into the SAME prune boxes the
   * Scala path uses, drops every file the generation manifest's
   * min/max/bloom stats PROVE disjoint
-  * ([[graft.ext.Layout.prunedSnapshotFileAnchors]] — one skip
+  * ([[graft.ext.Layout.snapshotFileAnchors]] with boxes — one skip
   * semantics, shared with [[graft.ext.Layout.scanPruned]]), and
   * swaps the relation's table for one over the survivors. The
   * query's own Filter STAYS as the residual, so pruned ≡ full scan
@@ -207,8 +204,7 @@ case class GraftManifestPrune(session: SparkSession)
   private def prune(f: Filter, cond: Expression, r: DataSourceV2Relation,
                     m: GraftReaderMarker.Marker,
                     boxes: Seq[Layout.PruneBox]): LogicalPlan = {
-    val pairs = Layout.prunedSnapshotFileAnchors(session, m.dir, m.gen,
-      boxes)
+    val pairs = Layout.snapshotFileAnchors(session, m.dir, m.gen, boxes)
     // a partitioned relation re-derives its partition columns from
     // ONE basePath; a survivor retired since table creation anchors
     // elsewhere — skip pruning rather than mis-derive (the unpruned

@@ -19,7 +19,7 @@ object SketchQueries {
 
   /** Per-JVM cache of the Z-ordered lineitem copy's PATH, keyed by
     * source dir. The clustered write + durable manifest
-    * ([[Layout.writeZOrderedWithManifest]]) happen ONCE — their
+    * ([[Layout.write]] with `manifestKeys`) happen ONCE — their
     * real-world cadence is write/OPTIMIZE time, not per query — so
     * bench reps of q_layout_pruned_read time the READ path the
     * manifest exists to serve (which re-reads the STORED manifest
@@ -31,7 +31,7 @@ object SketchQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** (l_partkey, l_suppkey) min/max as 16-bit normalization bounds —
-    * the same 4-value bounded collect writeZOrdered performs (plan
+    * the same 4-value bounded collect Layout.write performs (plan
     * literals, like broadcast centroids). A dimension whose stats
     * collapse to null (empty table or all-null keys) degenerates to
     * (0, 0) → constant-0 normalization, PER DIMENSION — mirrored by
@@ -53,9 +53,9 @@ object SketchQueries {
   private def zorderedLineitem(s: SparkSession, d: String): String =
     prunedFixture.computeIfAbsent(d, _ => {
       val zdir = graft.Scratch.tempDir("graft_zli_") + "/lineitem"
-      Layout.writeZOrderedWithManifest(t(s, d, "lineitem"),
-        col("l_partkey"), col("l_suppkey"), zdir, files = 16,
-        keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(t(s, d, "lineitem"), zdir,
+        Seq(col("l_partkey"), col("l_suppkey")), files = 16,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       zdir
     })
 
@@ -151,9 +151,9 @@ object SketchQueries {
   private def hilbertLineitem(s: SparkSession, d: String): String =
     prunedFixture.computeIfAbsent(s"$d#li_hilbert", _ => {
       val dir = graft.Scratch.tempDir("graft_hli_") + "/lineitem"
-      Layout.writeHilbertWithManifest(t(s, d, "lineitem"),
-        col("l_partkey"), col("l_suppkey"), dir, files = 16,
-        keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(t(s, d, "lineitem"), dir,
+        Seq(col("l_partkey"), col("l_suppkey")), files = 16,
+        Layout.Curve.Hilbert, manifestKeys = Seq("l_partkey", "l_suppkey"))
       dir
     })
 
@@ -163,12 +163,12 @@ object SketchQueries {
   private def zordered3Lineitem(s: SparkSession, d: String): String =
     prunedFixture.computeIfAbsent(s"$d#li_z3", _ => {
       val dir = graft.Scratch.tempDir("graft_z3li_") + "/lineitem"
-      Layout.writeZOrderedNWithManifest(
+      Layout.write(
         t(s, d, "lineitem").select("l_orderkey", "l_partkey", "l_suppkey",
           "l_returnflag", "l_extendedprice"),
-        Seq(col("l_partkey"), col("l_suppkey"), col("l_orderkey")),
-        dir, files = 32,
-        keyCols = Seq("l_partkey", "l_suppkey", "l_orderkey"))
+        dir, Seq(col("l_partkey"), col("l_suppkey"), col("l_orderkey")),
+        files = 32,
+        manifestKeys = Seq("l_partkey", "l_suppkey", "l_orderkey"))
       dir
     })
 
@@ -848,7 +848,7 @@ object SketchQueries {
     // Data-skipping manifest over the Z-ordered layout — the payoff
     // step that makes Z-ordering matter at 100 TB. Both keys are
     // min-max normalized onto the 16-bit interleave domain (same
-    // arithmetic as [[Layout.writeZOrdered]]), rows are assigned to
+    // arithmetic as [[Layout.write]]'s ZOrder curve), rows are assigned to
     // "files" by contiguous Z-range (top 4 bits of the 32-bit Morton
     // code → 16 files), then ONE aggregation pass
     // collects the Delta/Iceberg-style per-file column min/max stats,
@@ -2005,7 +2005,7 @@ object SketchQueries {
     // turns the manifest into a numbered snapshot store: a deleteWhere
     // commits generation 1 (retiring the dropped band's files instead
     // of deleting them), and the gate reads generation 0 PRUNED
-    // ([[Layout.readSnapshotPruned]]): the archived manifest's stats
+    // ([[Layout.readSnapshot]] with prune boxes): the archived manifest's stats
     // prune exactly as they did when live, survivors resolve from the
     // retirement area, and the result must equal the PRE-delete
     // filter — which is what the oracle computes over the unmutated
@@ -2032,7 +2032,7 @@ object SketchQueries {
             "the live read did not shrink — snapshot proves nothing")
           p
         })
-        Layout.readSnapshotPruned(s, dir, 0L,
+        Layout.readSnapshot(s, dir, 0L,
             Seq(Layout.KeyBox("doc_id", 50L, 400L)))
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
@@ -2501,7 +2501,7 @@ object SketchQueries {
             "the live read did not shrink — snapshot proves nothing")
           p
         })
-        Layout.readSnapshotPruned(s, dir, 0L,
+        Layout.readSnapshot(s, dir, 0L,
             Seq(Layout.KeyBox("doc_id", 50L, 400L)))
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
@@ -2656,7 +2656,7 @@ object SketchQueries {
 
     // Data skipping on a MERGE-ON-READ table — the r16 gap closed: a
     // WHERE over a DV-bearing generation routes the optimizer
-    // substitution through [[Layout.readSnapshotPruned]] (conjuncts →
+    // substitution through [[Layout.readSnapshot]]'s prune boxes (conjuncts →
     // the same prune boxes, survivors only), so the moment a table
     // takes one vectorized delete its SQL reads KEEP opening 2-3
     // files, not the manifest's worth. The fixture asserts the
@@ -3047,16 +3047,16 @@ object SketchQueries {
              |  CAST(sum(doc_id) AS BIGINT) AS id_sum
              |FROM live GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // TIMESTAMP AS OF — [[Layout.readSnapshotAsOf]] resolves a
+    // TIMESTAMP AS OF — [[Layout.generationAsOf]] resolves a
     // wall-clock instant to the newest commit at or before it (the
     // per-generation commit records written at each manifest
-    // replace) and serves that snapshot: the fixture commits two
-    // deletes under OPTIMISTIC CONCURRENCY (each names the
-    // generation it read; a stale expectation would refuse with
-    // ConcurrentModificationException) and pins an instant BETWEEN
-    // them, so the gate must see exactly the first delete applied
-    // and not the second — the oracle recomputes that intermediate
-    // state from the unmutated table.
+    // replace), and [[Layout.readSnapshot]] serves that snapshot:
+    // the fixture commits two deletes under OPTIMISTIC CONCURRENCY
+    // (each names the generation it read; a stale expectation would
+    // refuse with ConcurrentModificationException) and pins an
+    // instant BETWEEN them, so the gate must see exactly the first
+    // delete applied and not the second — the oracle recomputes that
+    // intermediate state from the unmutated table.
     QueryDef("q_layout_asof",
       (s, d) => {
         val spec = prunedFixture.computeIfAbsent(s"$d#docs_asof", _ => {
@@ -3082,7 +3082,7 @@ object SketchQueries {
           s"$p|$tsMid"
         })
         val Array(dir, ts) = spec.split('|')
-        Layout.readSnapshotAsOf(s, dir, ts.toLong)
+        Layout.readSnapshot(s, dir, Layout.generationAsOf(s, dir, ts.toLong))
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("total_chars"),

@@ -96,19 +96,4 @@ object DocumentSource {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
-
-  /** Range-clustered parquet writer: `repartitionByRange` gives each
-    * output file a disjoint range of `clusterCols`, and the
-    * within-partition sort tightens parquet row-group min/max stats —
-    * so point/range filters on those columns skip whole files and row
-    * groups at scan time. The cheap, rewrite-friendly cousin of
-    * Z-ordering for single-dimension hot predicates (dates, keys). */
-  def writeClustered(df: DataFrame, path: String, clusterCols: Seq[String],
-                     numFiles: Int): Unit = {
-    import org.apache.spark.sql.functions.col
-    val cols = clusterCols.map(col)
-    df.repartitionByRange(numFiles, cols: _*)
-      .sortWithinPartitions(cols: _*)
-      .write.mode("overwrite").parquet(path)
-  }
 }

@@ -395,8 +395,8 @@ class GraftSource extends TableProvider with DataSourceRegister
   * cast-align what the verb refuses. Unmappable modes refuse loudly:
   * `overwrite` has no verb (no OVERWRITE capability → analysis
   * error naming the table), `errorifexists`/`ignore` cannot create a
-  * layout (a manifest needs KEYS — GRAFT CREATE / Layout.create
-  * carry them), and a TIME-TRAVELED table (versionAsOf /
+  * layout (a manifest needs KEYS — GRAFT CREATE and Layout.write's
+  * `manifestKeys` carry them), and a TIME-TRAVELED table (versionAsOf /
   * timestampAsOf) is a snapshot, not a write target. */
 private[graft] class GraftTable(
     private[graft] val parquet: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable,

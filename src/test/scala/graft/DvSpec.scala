@@ -133,7 +133,7 @@ class DvSpec extends AnyFunSuite with SharedSpark {
       assert(got(Layout.readSnapshot(spark, dir, 2L)) ==
         expect(1000, k => k < 100 || k > 179))
       // pruned time travel through the vectorized band
-      assert(got(Layout.readSnapshotPruned(spark, dir, 1L,
+      assert(got(Layout.readSnapshot(spark, dir, 1L,
         Seq(Layout.KeyBox("k", 120L, 200L)))) ==
         expect(1000, k => k >= 150 && k <= 200))
       // the feed between two DV generations is exactly the newly
@@ -672,6 +672,26 @@ class DvSpec extends AnyFunSuite with SharedSpark {
         assert(run.size <= 2 && run.forall(_._2 > 0L),
           s"a warm $name ran jobs beyond the DV broadcast and the data scan: $run")
       }
+    }
+  }
+
+  test("append and optimizeSelective list their new files without inferring a schema") {
+    withTempDir("graft_dv_commit_jobs_") { dir =>
+      mkLayout(dir)
+      Layout.enableGenerations(spark, dir)
+      // four unclustered files, each spanning every key: the append
+      // stacks the layout past optimizeSelective's depth trigger
+      val batch = spark.range(0, 1000, 10).select(col("id").as("k"),
+        (col("id") % 7).as("g"), (col("id") * 2).as("v")).repartition(4)
+      // exact job counts: each listing or stats read of the commit's
+      // new files that inferred a schema would add a one-task job
+      val append = jobsOf(Layout.appendWithManifest(batch, dir, Seq("k")))
+      assert(append.size == 6, s"append jobs: $append")
+      val optimize = jobsOf(assert(
+        Layout.optimizeSelective(spark, dir, targetRows = 200L).reclustered))
+      assert(optimize.size == 19, s"optimizeSelective jobs: $optimize")
+      assert(got(Layout.readLayout(spark, dir)) ==
+        (expect(1000, _ => true) ++ expect(1000, _ % 10 == 0)).sorted)
     }
   }
 }

@@ -40,10 +40,41 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
   test("zorder2 matches a bit-by-bit Morton reference") {
     val pairs = Seq((0L, 0L), (1L, 0L), (0L, 1L), (65535L, 65535L),
       (12345L, 54321L), (40000L, 70000L)) // >16-bit inputs: low bits only
-    val got = pairs.toDF("x", "y")
-      .select(Layout.zorder2(col("x"), col("y"))).as[Long].collect()
     val want = pairs.map { case (x, y) => mortonRef(x & 0xFFFF, y & 0xFFFF) }
-    assert(got.toSeq == want, s"got ${got.toSeq} want $want")
+    // the k-ary interleave at k = 2 is the code every two-key ZOrder
+    // write clusters on, so it must equal zorder2 bit for bit
+    for ((name, code) <- Seq(
+        "zorder2" -> Layout.zorder2(col("x"), col("y")),
+        "zorderN" -> Layout.zorderN(Seq(col("x"), col("y"))))) {
+      val got = pairs.toDF("x", "y").select(code).as[Long].collect()
+      assert(got.toSeq == want, s"$name: got ${got.toSeq} want $want")
+    }
+  }
+
+  test("write refuses a bad key count or file count before the path exists") {
+    withTempDir("graft_write_refuse_") { dir =>
+      val df = spark.range(10).select(col("id").as("x"), col("id").as("y"))
+      val out = s"$dir/t"
+      val refused = Seq[(String, () => Unit)](
+        "Hilbert over 1 key" -> (() =>
+          Layout.write(df, out, Seq(col("x")), 2, Layout.Curve.Hilbert)),
+        "Hilbert over 3 keys" -> (() =>
+          Layout.write(df, out, Seq(col("x"), col("y"), col("x") + 1), 2,
+            Layout.Curve.Hilbert)),
+        "ZOrder over 1 key" -> (() =>
+          Layout.write(df, out, Seq(col("x")), 2)),
+        "ZOrder over 9 keys" -> (() =>
+          Layout.write(df, out, Seq.fill(9)(col("x")), 2)),
+        "files = 0" -> (() =>
+          Layout.write(df, out, Seq(col("x"), col("y")), 0)),
+        "files = -1 with a manifest" -> (() =>
+          Layout.write(df, out, Seq(col("x"), col("y")), -1,
+            manifestKeys = Seq("x", "y"))))
+      for ((what, call) <- refused) {
+        intercept[IllegalArgumentException](call())
+        assert(!new java.io.File(out).exists, s"$what: wrote $out, then refused")
+      }
+    }
   }
 
   test("writeZOrdered: per-file ranges are compact in BOTH dimensions") {
@@ -51,7 +82,8 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       .select("l_partkey", "l_suppkey")
     val dir = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
     try {
-      Layout.writeZOrdered(li, col("l_partkey"), col("l_suppkey"), dir, files = 16)
+      Layout.write(li, dir,
+        Seq(col("l_partkey"), col("l_suppkey")), files = 16)
       val back = spark.read.parquet(dir)
       assert(back.count() == li.count())
       // per-file bounding boxes: with a z-layout each of the 16 files
@@ -98,16 +130,16 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     withTempDir("graft_pruned_") { dir =>
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice")
-      Layout.writeZOrdered(li, col("l_partkey"), col("l_suppkey"),
-        s"$dir/li", files = 16)
-      val mf = Layout.buildFileManifest(spark, s"$dir/li",
-        Seq("l_partkey", "l_suppkey"))
+      Layout.write(li, s"$dir/li",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 16,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
+      val mf = Layout.loadManifest(spark, s"$dir/li")
       // one manifest row per data file, each with both key intervals
       val files = spark.read.parquet(s"$dir/li").inputFiles
       assert(mf.count() === files.length.toLong)
       val boxes = Seq(Layout.KeyBox("l_partkey", 20L, 60L),
         Layout.KeyBox("l_suppkey", 2L, 5L))
-      val pruned = Layout.scanPruned(spark, s"$dir/li", mf, boxes)
+      val pruned = Layout.scanPruned(spark, s"$dir/li", boxes)
       // the point of the manifest: the pruned plan opens strictly
       // fewer files than the full scan (z-locality guarantees some
       // file's rectangle misses this narrow box)
@@ -162,8 +194,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
         .select("l_orderkey", "l_partkey", "l_suppkey")
       val (histBase, tail) = (li.filter(col("l_orderkey") % 10 =!= 0),
         li.filter(col("l_orderkey") % 10 === 0))
-      Layout.writeZOrderedWithManifest(histBase, col("l_partkey"), col("l_suppkey"),
-        s"$dir/li", files = 8, keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(histBase, s"$dir/li",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 8,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       val filesBefore = spark.read.parquet(s"$dir/li").inputFiles.length
       Layout.appendWithManifest(tail.repartition(2), s"$dir/li",
         Seq("l_partkey", "l_suppkey"))
@@ -193,8 +226,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_suppkey")
       val keyCols = Seq("l_partkey", "l_suppkey")
-      Layout.writeZOrderedWithManifest(li, col("l_partkey"), col("l_suppkey"),
-        s"$dir/li", files = 8, keyCols = keyCols)
+      Layout.write(li, s"$dir/li",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 8,
+        manifestKeys = keyCols)
       def depth() = Layout.clusteringDepth(
         Layout.loadManifest(spark, s"$dir/li"), "l_partkey")
         .agg(max("depth")).head().getLong(0)
@@ -213,8 +247,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       // OPTIMIZE: rewrite everything z-clustered; depth returns to a
       // clustered profile and the trigger clears
       val all = spark.read.parquet(s"$dir/li").localCheckpoint(true)
-      Layout.writeZOrderedWithManifest(all, col("l_partkey"), col("l_suppkey"),
-        s"$dir/li2", files = 8, keyCols = keyCols)
+      Layout.write(all, s"$dir/li2",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 8,
+        manifestKeys = keyCols)
       val after = Layout.clusteringDepth(
         Layout.loadManifest(spark, s"$dir/li2"), "l_partkey")
         .agg(max("depth")).head().getLong(0)
@@ -232,8 +267,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       val grid = (0 until 65536)
         .map(i => (i.toLong, (i % 256).toLong, (i / 256).toLong))
         .toDF("id", "x", "y")
-      Layout.writeZOrderedWithManifest(grid, col("x"), col("y"),
-        s"$dir/g", files = 64, keyCols = Seq("x", "y"))
+      Layout.write(grid, s"$dir/g",
+        Seq(col("x"), col("y")), files = 64,
+        manifestKeys = Seq("x", "y"))
       val total = spark.read.parquet(s"$dir/g").inputFiles.length
       // a 32x32 box = 1/64 of the area; a perfect 8x8 z-tiling reads
       // 1-4 files, a single-column sort ~8, a random layout all 64 —
@@ -250,8 +286,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     withTempDir("graft_pruned_oob_") { dir =>
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_partkey", "l_suppkey")
-      Layout.writeZOrderedWithManifest(li, col("l_partkey"), col("l_suppkey"),
-        s"$dir/li", files = 4, keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(li, s"$dir/li",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 4,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       val boxes = Seq(Layout.KeyBox("l_partkey", 20L, 60L))
       // a failed appendWithManifest (bad key) must validate BEFORE
       // writing: otherwise the dir gains files the manifest misses
@@ -283,17 +320,18 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       // empty-input write leaves a zero-row part file with no stats
       // row; the coverage check must tolerate it (zero rows cannot
       // be dropped) and the pruned read must return empty, not throw
-      Layout.writeZOrderedWithManifest(li.filter(lit(false)),
-        col("l_partkey"), col("l_suppkey"), s"$dir/empty", files = 4,
-        keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(li.filter(lit(false)), s"$dir/empty",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 4,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       val pruned = Layout.scanPruned(spark, s"$dir/empty",
         Seq(Layout.KeyBox("l_partkey", 0L, 100L)))
       assert(pruned.count() === 0L)
       // a path that URI-encodes would corrupt file-name tracking —
       // rejected at the entrance, before anything is written
       intercept[IllegalArgumentException] {
-        Layout.writeZOrderedWithManifest(li, col("l_partkey"), col("l_suppkey"),
-          s"$dir/has space/li", files = 4, keyCols = Seq("l_partkey"))
+        Layout.write(li, s"$dir/has space/li",
+          Seq(col("l_partkey"), col("l_suppkey")), files = 4,
+          manifestKeys = Seq("l_partkey"))
       }
       // duplicate key columns would build an ambiguous manifest
       intercept[IllegalArgumentException] {
@@ -318,12 +356,11 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     withTempDir("graft_pruned_none_") { dir =>
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_partkey", "l_suppkey")
-      Layout.writeZOrdered(li, col("l_partkey"), col("l_suppkey"),
-        s"$dir/li", files = 4)
-      val mf = Layout.buildFileManifest(spark, s"$dir/li",
-        Seq("l_partkey", "l_suppkey"))
+      Layout.write(li, s"$dir/li",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 4,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       // box entirely outside the key domain: every file skips
-      val pruned = Layout.scanPruned(spark, s"$dir/li", mf,
+      val pruned = Layout.scanPruned(spark, s"$dir/li",
         Seq(Layout.KeyBox("l_partkey", 1000000L, 2000000L)))
       assert(pruned.count() === 0L)
       assert(pruned.columns.toSeq === Seq("l_partkey", "l_suppkey"))
@@ -434,10 +471,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     withTempDir("graft_z3_") { dir =>
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_suppkey")
-      Layout.writeZOrderedNWithManifest(li,
+      Layout.write(li, s"$dir/li",
         Seq(col("l_partkey"), col("l_suppkey"), col("l_orderkey")),
-        s"$dir/li", files = 32,
-        keyCols = Seq("l_partkey", "l_suppkey", "l_orderkey"))
+        files = 32, manifestKeys = Seq("l_partkey", "l_suppkey", "l_orderkey"))
       val all = spark.read.parquet(s"$dir/li")
       assert(all.count() === li.count())
       // the 2-D layout's blind spot: filter ONLY on the third key
@@ -472,8 +508,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     withTempDir("graft_compact_mf_") { dir =>
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_suppkey")
-      Layout.writeZOrderedWithManifest(li, col("l_partkey"), col("l_suppkey"),
-        s"$dir/in", files = 16, keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(li, s"$dir/in",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 16,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       val (nIn, nOut) = Layout.compact(spark, s"$dir/in", s"$dir/out",
         targetBytes = Long.MaxValue)
       assert(nIn === 16 && nOut === 1)
@@ -578,8 +615,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     withTempDir("graft_append_schema_") { dir =>
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_suppkey")
-      Layout.writeZOrderedWithManifest(li, col("l_partkey"), col("l_suppkey"),
-        s"$dir/li", files = 4, keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(li, s"$dir/li",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 4,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       val before = spark.read.parquet(s"$dir/li").count()
       // retyped NON-key column: stats would still build, but plain
       // reads of the mixed directory would go schema-inconsistent —
@@ -666,8 +704,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     withTempDir("graft_hilbert_") { dir =>
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_suppkey")
-      Layout.writeHilbertWithManifest(li, col("l_partkey"), col("l_suppkey"),
-        s"$dir/li", files = 16, keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(li, s"$dir/li",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 16,
+        Layout.Curve.Hilbert, manifestKeys = Seq("l_partkey", "l_suppkey"))
       val back = spark.read.parquet(s"$dir/li")
       assert(back.count() === li.count())
       // per-file bounding boxes compact in BOTH dimensions — the same
@@ -1723,8 +1762,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       val d = s"$dir/t"
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_suppkey")
-      Layout.writeZOrderedWithManifest(li, col("l_partkey"), col("l_suppkey"),
-        s"$dir/t", files = 4, keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(li, s"$dir/t",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 4,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       val covered = li.count()
       // simulate crash debris / an out-of-band append: land 7 rows
       // the manifest knows nothing about
@@ -1760,8 +1800,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     withTempDir("graft_joinpruned_") { dir =>
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_suppkey")
-      Layout.writeZOrderedWithManifest(li, col("l_partkey"), col("l_suppkey"),
-        s"$dir/li", files = 16, keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(li, s"$dir/li",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 16,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       val back = spark.read.parquet(s"$dir/li")
       val dim = (20L to 60L).toDF("p")
       val joined = Layout.joinPruned(spark, s"$dir/li", dim, "l_partkey", "p")
@@ -1857,9 +1898,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       // time-traveled PRUNED read: the gen-1 manifest's stats prune,
       // survivors resolve from retirement, and the deleted band is
       // still fully readable at its own generation
-      assert(Layout.readSnapshotPruned(spark, d, 1L,
+      assert(Layout.readSnapshot(spark, d, 1L,
         Seq(Layout.KeyBox("k", 0L, 59L))).count() === 60L)
-      assert(Layout.readSnapshotPruned(spark, d, 1L,
+      assert(Layout.readSnapshot(spark, d, 1L,
         Seq(Layout.KeyBox("k", 200L, 300L))).count() === 0L)
       // vacuum to the last 2 generations: gens 0 and 1 drop (their
       // manifests and the label-1 retired file), gen 2 keeps reading
@@ -1874,7 +1915,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       assert(Layout.readSnapshot(spark, d, 3L).count() === 60L)
       assert(spark.read.parquet(d).count() === 60L)
       // retained pruned snapshot still serves after the vacuum
-      assert(Layout.readSnapshotPruned(spark, d, 2L,
+      assert(Layout.readSnapshot(spark, d, 2L,
         Seq(Layout.KeyBox("k", 50L, 69L))).count() === 20L)
       // contracts: unknown generation
       val unknown = intercept[IllegalArgumentException] {
@@ -1951,8 +1992,10 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       assert(Layout.generationAsOf(spark, d, ts1) === 1L)
       assert(Layout.generationAsOf(spark, d,
         System.currentTimeMillis()) === 2L)
-      assert(Layout.readSnapshotAsOf(spark, d, ts0).count() === 100L)
-      assert(Layout.readSnapshotAsOf(spark, d, ts1).count() === 75L)
+      assert(Layout.readSnapshot(spark, d,
+        Layout.generationAsOf(spark, d, ts0)).count() === 100L)
+      assert(Layout.readSnapshot(spark, d,
+        Layout.generationAsOf(spark, d, ts1)).count() === 75L)
       // history rows carry the committing verb and a commit time
       val hist = Layout.describeHistory(spark, d)
         .select("gen", "operation", "ts")
@@ -1996,7 +2039,8 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       }
       assert(vacuumed.getMessage.contains("oldest retained"))
       assert(Layout.generationAsOf(spark, d, tsLive) === 3L)
-      assert(Layout.readSnapshotAsOf(spark, d, tsLive).count() === 65L)
+      assert(Layout.readSnapshot(spark, d,
+        Layout.generationAsOf(spark, d, tsLive)).count() === 65L)
       assert(Layout.readSnapshot(spark, d, 2L).count() === 75L)
       // a recordless generation degrades loudly, never resolves past
       val fsys = new org.apache.hadoop.fs.Path(d)
@@ -2642,7 +2686,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       assert(snap0.groupBy("lang").count().as[(String, Long)]
         .collect().sortBy(_._1).toSeq === Seq(("en", 50L), ("fr", 50L)))
       // time-traveled PRUNED read over the deleted band
-      assert(Layout.readSnapshotPruned(spark, d, 0L,
+      assert(Layout.readSnapshot(spark, d, 0L,
         Seq(Layout.KeyBox("doc_id", 0L, 24L))).count() === 25L)
       // CDF across both commits maintains a lang-grouped view to the
       // gen-2 recompute — partition columns ARE the group keys here,
@@ -2933,10 +2977,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       // batch 0 seeds the clustered layout + manifest; the stream
       // then appends micro-batches through the SAME delta-only patch
       // path a 100 TB ingest would use (no re-scan of existing data)
-      Layout.writeZOrderedWithManifest(
-        li.filter(col("l_orderkey") % 4 === 0),
-        col("l_partkey"), col("l_suppkey"), d, files = 4,
-        keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(li.filter(col("l_orderkey") % 4 === 0), d,
+        Seq(col("l_partkey"), col("l_suppkey")), files = 4,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val in = MemoryStream[(Long, Long, Long)]
@@ -3131,10 +3174,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_suppkey")
       // 1. clustered write + stored stats over the first half
-      Layout.writeZOrderedWithManifest(
-        li.filter(col("l_orderkey") % 2 === 0),
-        col("l_partkey"), col("l_suppkey"), s"$dir/t", files = 8,
-        keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(li.filter(col("l_orderkey") % 2 === 0), s"$dir/t",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 8,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       // 2. day-2 append of the second half (delta-only stats patch)
       Layout.appendWithManifest(li.filter(col("l_orderkey") % 2 === 1),
         s"$dir/t", Seq("l_partkey", "l_suppkey"))
@@ -3143,9 +3185,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       //    off the stored stats and the rewrite re-tightens
       val mf1 = Layout.loadManifest(spark, s"$dir/t")
       assert(Layout.needsRecluster(mf1, "l_partkey", maxDepth = 3L))
-      Layout.writeZOrderedWithManifest(spark.read.parquet(s"$dir/t"),
-        col("l_partkey"), col("l_suppkey"), s"$dir/t2", files = 8,
-        keyCols = Seq("l_partkey", "l_suppkey"))
+      Layout.write(spark.read.parquet(s"$dir/t"), s"$dir/t2",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 8,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
       // 4. manifest-proved delete on the reclustered layout
       val st = Layout.deleteWhere(spark, s"$dir/t2",
         Seq(Layout.KeyBox("l_partkey", 1L, 40L)))
@@ -3207,7 +3249,8 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     try {
       // min/max bounds are null on zero rows — must not NPE; the
       // write contract (overwritten dir, same schema) still holds
-      Layout.writeZOrdered(empty, col("l_partkey"), col("l_suppkey"), dir, files = 4)
+      Layout.write(empty, dir,
+        Seq(col("l_partkey"), col("l_suppkey")), files = 4)
       val back = spark.read.parquet(dir)
       assert(back.count() == 0)
       assert(back.columns.toSeq == Seq("l_partkey", "l_suppkey"))

@@ -252,7 +252,7 @@ class PlanSnapshotSpec extends AnyFunSuite with SharedSpark {
         }.sum
       def rd = spark.read.format("graft").load(d)
       assert(dataFiles(rd) === 8, "unfiltered DV read resolves all 8 files")
-      // a key WHERE routes the substitution through readSnapshotPruned:
+      // a key WHERE becomes readSnapshot's prune boxes:
       // only the overlapping file(s) open — the r16 full-scan gap
       val banded = rd.where(col("k").between(120L, 180L))
       assert(dataFiles(banded) <= 2 && dataFiles(banded) >= 1,

@@ -50,7 +50,8 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft-clust").toFile.getAbsolutePath + "/li"
     val li = graft.sources.Tables(spark, sf0001).table("lineitem")
-    graft.sources.DocumentSource.writeClustered(li, dir, Seq("l_shipdate"), numFiles = 4)
+    graft.ext.Layout.write(li, dir, Seq(col("l_shipdate")), files = 4,
+      graft.ext.Layout.Curve.Range)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.length === 4)
     val ranges = files.map { f =>

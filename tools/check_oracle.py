@@ -1,14 +1,22 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's DuckDB-oracle correctness gate.
 
-Usage: python3 tools/check_oracle.py [verify_out_dir] [sf_dir]
+Usage: python3 tools/check_oracle.py VERIFY_OUT SF_DIR [--against PARENT_OUT]
 
 Reads each <name>/ parquet result written by graft.Verify plus
 oracle_sql.json, runs each oracle in DuckDB with every testdata table
 registered as a view, canonicalizes both sides (columns sorted by
 name, rows sorted by all columns), and reports match/mismatch.
+
+--against PARENT_OUT also compares every result with the same-named
+result of another Verify run (typically the parent commit's) through
+the same canon/compare, including the rows-only queries the oracle
+cannot check, and lists each name whose result differs or exists on
+one side only. A refactor that must not change results should show
+none. Exit status is non-zero when either check finds a difference.
 Dev tool only — not part of the library.
 """
+import argparse
 import json
 import math
 import sys
@@ -41,11 +49,11 @@ def values_equal(a, b):
     return a == b
 
 
-def compare(name, spark_df, oracle_df):
+def compare(name, spark_df, oracle_df, sides=("spark", "oracle")):
     if sorted(spark_df.columns) != sorted(oracle_df.columns):
-        return f"COLUMN MISMATCH spark={sorted(spark_df.columns)} oracle={sorted(oracle_df.columns)}"
+        return f"COLUMN MISMATCH {sides[0]}={sorted(spark_df.columns)} {sides[1]}={sorted(oracle_df.columns)}"
     if len(spark_df) != len(oracle_df):
-        return f"ROWCOUNT MISMATCH spark={len(spark_df)} oracle={len(oracle_df)}"
+        return f"ROWCOUNT MISMATCH {sides[0]}={len(spark_df)} {sides[1]}={len(oracle_df)}"
     a, b = canon(spark_df), canon(oracle_df)
     for col in a.columns:
         av, bv = a[col].tolist(), b[col].tolist()
@@ -53,29 +61,68 @@ def compare(name, spark_df, oracle_df):
             sx = x.isoformat() if hasattr(x, "isoformat") else x
             sy = y.isoformat() if hasattr(y, "isoformat") else y
             if not values_equal(sx, sy):
-                return f"VALUE MISMATCH col={col} row={i}: spark={x!r} oracle={y!r}"
+                return f"VALUE MISMATCH col={col} row={i}: {sides[0]}={x!r} {sides[1]}={y!r}"
     return None
 
 
-def main():
-    out_dir = Path(sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_out")
-    sf_dir = Path(sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    oracle_sql = json.loads((out_dir / "oracle_sql.json").read_text())
+def read_results(con, out_dir):
+    """name -> DataFrame of each Verify result, or an error string."""
     errors_path = out_dir / "_errors.json"
     verify_errors = json.loads(errors_path.read_text()) if errors_path.exists() else {}
-
     results = {}
     for name in sorted(p.name for p in out_dir.iterdir() if p.is_dir()):
         if name in verify_errors:
             results[name] = f"SPARK QUERY FAILED: {verify_errors[name]}"
             continue
         try:
-            spark_df = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
+            results[name] = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
         except Exception as e:
             results[name] = f"SPARK READ FAILED: {e}"
+    return results
+
+
+def diff_against(con, out_dir, parent_dir):
+    """Names whose result differs from the parent run's, with why."""
+    ours, theirs = read_results(con, out_dir), read_results(con, parent_dir)
+
+    def status(r):
+        return r if isinstance(r, str) else "ok"
+
+    diffs = {}
+    for name in sorted(set(ours) | set(theirs)):
+        if name not in theirs:
+            diffs[name] = "only in this run"
+        elif name not in ours:
+            diffs[name] = "only in the parent run"
+        else:
+            a, b = ours[name], theirs[name]
+            if isinstance(a, str) or isinstance(b, str):
+                err = None if status(a) == status(b) else \
+                    f"this run: {status(a)}; parent: {status(b)}"
+            else:
+                err = compare(name, a, b, sides=("this", "parent"))
+            if err:
+                diffs[name] = err
+    return diffs, len(set(ours) | set(theirs))
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("out_dir", help="the graft.Verify output dir")
+    ap.add_argument("sf_dir", help="the testdata dir Verify read")
+    ap.add_argument("--against", metavar="PARENT_OUT",
+                    help="another Verify output dir to compare every result with")
+    args = ap.parse_args()
+    out_dir, sf_dir = Path(args.out_dir), Path(args.sf_dir)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    oracle_sql = json.loads((out_dir / "oracle_sql.json").read_text())
+
+    results = {}
+    for name, spark_df in read_results(con, out_dir).items():
+        if isinstance(spark_df, str):
+            results[name] = spark_df
             continue
         if name not in oracle_sql:
             results[name] = f"rows-only ({len(spark_df)} rows)"
@@ -99,6 +146,12 @@ def main():
         n_bad += bad
         print(f"{'FAIL' if bad else 'ok  '} {name:<{width}} {status}")
     print(f"\n{len(results) - n_bad}/{len(results)} passing")
+    if args.against:
+        diffs, total = diff_against(con, out_dir, Path(args.against))
+        for name, why in diffs.items():
+            print(f"DIFF {name:<{width}} {why}")
+        print(f"\n{total - len(diffs)}/{total} identical to {args.against}")
+        n_bad += len(diffs)
     sys.exit(1 if n_bad else 0)
 
 
