@@ -18,21 +18,33 @@ private[graft] object Checkpoints {
     * the calling thread — its thread-local job group/description
     * behave exactly as in the sequential form — and a failure on
     * either side propagates unchanged (Await rethrows the future's
-    * exception). Only for order-independent pairs: each side may pin
-    * a checkpoint or run other side effects, but neither may depend
-    * on the other having run first. */
+    * exception). When `fa` fails, the call still waits for `fb` before
+    * rethrowing, so no job of the pair outlives the call; `fb`'s own
+    * failure, if any, rides along as a suppressed exception. Only for
+    * order-independent pairs: each side may pin a checkpoint or run
+    * other side effects, but neither may depend on the other having
+    * run first. */
   def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fut = Future(fb)
-    val a = fa
+    val a = try fa catch {
+      case t: Throwable =>
+        Await.ready(fut, Duration.Inf).value
+          .flatMap(_.failed.toOption).foreach(t.addSuppressed)
+        throw t
+    }
     (a, Await.result(fut, Duration.Inf))
   }
   /** RDD-level unpersist for a localCheckpoint'ed frame; no-op for
     * any other plan shape. Narrow wrappers over the checkpoint (a
     * projection like `.drop`/`.select`, an alias) are stripped so a
-    * caller holding the projected handle still releases the blocks. */
+    * caller holding the projected handle still releases the blocks.
+    * The blocks drop through the SparkContext
+    * ([[org.apache.spark.GraftRddBridge]]): `RDD.unpersist` would warn,
+    * on every call, that a local checkpoint cannot be recomputed —
+    * which every caller here already knows. */
   def unpersist(df: DataFrame): Unit = {
     def strip(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
         : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = p match {
@@ -43,7 +55,8 @@ private[graft] object Checkpoints {
       case other => other
     }
     strip(df.queryExecution.logical) match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.spark.GraftRddBridge.releaseBlocks(l.rdd.sparkContext, l.rdd.id)
       case _ =>
     }
   }

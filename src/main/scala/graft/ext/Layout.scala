@@ -618,13 +618,13 @@ object Layout {
     * flat and hive-partitioned layouts alike. */
   private def dataFilesUnder(fs: org.apache.hadoop.fs.FileSystem,
                              root: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.Path] = {
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     def isAux(n: String) = n.startsWith("_") || n.startsWith(".")
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq.flatMap { st =>
       if (isAux(st.getPath.getName)) Nil
       else if (st.isDirectory) dataFilesUnder(fs, st.getPath)
-      else Seq(st.getPath)
+      else Seq(st)
     }
   }
 
@@ -1102,14 +1102,15 @@ object Layout {
     }
     val live: Set[String] =
       dataFilesUnder(fs, new org.apache.hadoop.fs.Path(dir))
-        .map(relTo(rootQ, _)).toSet
+        .map(st => relTo(rootQ, st.getPath)).toSet
     val retired: Map[String, Seq[org.apache.hadoop.fs.Path]] = {
       val r = retiredDir(dir)
       if (!fs.exists(r)) Map.empty
       else fs.listStatus(r).toSeq.filter(_.isDirectory)
         .flatMap { g =>
           val gQ = fs.makeQualified(g.getPath).toString
-          dataFilesUnder(fs, g.getPath).map(p => (relTo(gQ, p), p))
+          dataFilesUnder(fs, g.getPath)
+            .map(st => (relTo(gQ, st.getPath), st.getPath))
         }
         .groupBy(_._1).map { case (rel, hits) => rel -> hits.map(_._2) }
     }
@@ -2084,7 +2085,7 @@ object Layout {
       if (tracked) Some(archivedGens(fs, dir).minOption
         .getOrElse(gen.get))
       else None
-    val depth = keys.map(k => worstDepthOf(manifest, k)).max
+    val depth = worstDepthOf(manifest, keys)
     // operational-health tail: outstanding deletion-vector tax,
     // registered constraints, stream ledgers, and vacuum pins — one
     // row answers "what is the operational state of this table"
@@ -3753,31 +3754,6 @@ object Layout {
       .select("file").collect().map(_.getString(0)).toSet
   }
 
-  /** Loud refusal for a verb that reads or copies raw layout files
-    * without applying deletion vectors — a silent pass-through would
-    * RESURRECT deleted rows. Checks the manifest the verb will act
-    * on (the live one, or a snapshot's). */
-  private def requireNoDvRows(manifest: DataFrame, verb: String,
-                              what: String): Unit =
-    if (hasDvCols(manifest.schema)) {
-      val n = manifest.filter(col("dv_path").isNotNull).count()
-      require(n == 0L,
-        s"$verb does not apply deletion vectors and $what carries " +
-          s"$n vectorized file(s) — a raw pass would resurrect their " +
-          "deleted rows; materialize the vectors first " +
-          "(optimize / optimizeSelective) and retry")
-    }
-
-  /** [[requireNoDvRows]] off the live manifest, with a cheap
-    * `_graft_dv`-existence fast path for the overwhelmingly common
-    * vector-free layout (and for plain directories that never had a
-    * manifest at all). */
-  private def requireNoDvLive(spark: org.apache.spark.sql.SparkSession,
-                              fs: org.apache.hadoop.fs.FileSystem,
-                              dir: String, verb: String): Unit =
-    if (fs.exists(dvRoot(dir)))
-      requireNoDvRows(loadManifest(spark, dir), verb, dir)
-
   /** Copy the deletion-vector positions of `triples` — (source file
     * URI, its DV store, destination file URI) — into ONE new store
     * under `destRoot`, remapping each recorded path onto its
@@ -5054,10 +5030,10 @@ object Layout {
     }
   }
 
-  /** The monotone stat→long mapping of [[clusteringDepth]]'s integer
-    * sweep domain (epoch days / micros for date / timestamp stats) —
-    * shared with [[optimizeSelective]]'s deep-boundary overlap test
-    * so the two cannot disagree on what a profile `pos` means. */
+  /** The monotone stat→long mapping of [[depthSweep]]'s integer
+    * domain (epoch days / micros for date / timestamp stats), shared
+    * with its deep-file overlap test ([[deepFilesOf]]) so the two
+    * cannot disagree on what a profile `pos` means. */
   private def statToLongOf(dt: org.apache.spark.sql.types.DataType,
                            key: String): Column => Column = {
     import org.apache.spark.sql.types._
@@ -5074,121 +5050,157 @@ object Layout {
     }
   }
 
-  /** Clustering-depth profile over a skipping manifest: for each
-    * boundary of the per-file `[min_<key>, max_<key>+1)` intervals,
-    * the running interval count = how many files a point lookup on
-    * that key value must read (the q_layout_depth metric, computed
-    * here from the REAL stored manifest instead of a simulated one).
-    * The sweep runs entirely on the stats frame — file-count-sized,
-    * never the data — hence the deliberate unpartitioned window.
-    * Files with null stats (all-null key) carry no interval: a null
-    * key never serves a point lookup. Date / timestamp stats sweep in
-    * their natural integer domain (epoch days / micros — `pos` is
-    * reported in that encoding); string stats have no successor
-    * function and are rejected loudly — use
-    * [[clusteringDepthBoundaries]], the successor-free sweep over the
-    * observed value domain. Returns `(pos, net, depth)`.
-    *
-    * The stat→long sweep-domain mapping lives in [[statToLongOf]],
-    * shared with [[optimizeSelective]]'s deep-boundary overlap test
-    * so the two cannot disagree on what a profile `pos` means. */
-  def clusteringDepth(manifest: DataFrame, key: String): DataFrame = {
+  /** The ONE clustering-depth sweep under every profile, trigger and
+    * deep-file selection: for each boundary of the per-file key
+    * intervals, the running interval count = how many files a point
+    * lookup on that key value must read. It runs on the stats frame
+    * (file-count-sized, never the data), with its windows partitioned
+    * by `leaf`: a constant for a whole-manifest profile, each file's
+    * parent directory for the OPTIMIZE verbs (a partition-pruned
+    * lookup reads one leaf, so files in other leaves never stack on
+    * it; a flat layout is one leaf). Files with null stats (all-null
+    * key) carry no interval: a null key never serves a point lookup.
+    *   - Long / date / timestamp stats sweep their integer domain
+    *     ([[statToLongOf]]), each file covering `[min, max + 1)`.
+    *   - String stats have no successor function, so they sweep the
+    *     OBSERVED boundary domain: every distinct min/max value gets a
+    *     dense rank within its leaf, and each file covers
+    *     `[rank(min), rank(max) + 1)`, where the `+1` always exists. A
+    *     zero-delta seed gives every observed value a row (a value
+    *     seen only as some file's max has no event of its own), and
+    *     the bookkeeping row past the greatest max is dropped. The
+    *     maximum over observed values IS the global maximum: a point
+    *     strictly between two adjacent boundaries is covered only by
+    *     files that also cover the boundary below it.
+    * Returns `(__leaf, at, net, depth)`, where `at` is the integer
+    * position or the boundary string itself. */
+  private def depthSweep(manifest: DataFrame, key: String,
+                         leaf: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toLong = statToLongOf(manifest.schema(s"min_$key").dataType, key)
-    val bounds = manifest
-      .filter(col(s"min_$key").isNotNull)
-      .select(toLong(col(s"min_$key")).as("pos"), lit(1L).as("delta"))
-      .unionAll(manifest.filter(col(s"max_$key").isNotNull)
-        .select((toLong(col(s"max_$key")) + 1L).as("pos"), lit(-1L).as("delta")))
-    bounds.groupBy("pos").agg(sum("delta").as("net"))
-      .withColumn("depth", sum("net").over(
-        Window.orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)))
+    val m = manifest.withColumn("__leaf", leaf)
+    def ends(stat: String): DataFrame =
+      m.filter(col(s"${stat}_$key").isNotNull)
+        .select(col("__leaf"), col(s"${stat}_$key").as("at"))
+    val inLeaf = Window.partitionBy("__leaf")
+    def sweep(events: DataFrame): DataFrame =
+      events.groupBy("__leaf", "pos").agg(sum("delta").as("net"))
+        .withColumn("depth", sum("net").over(
+          inLeaf.orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)))
+    m.schema(s"min_$key").dataType match {
+      case org.apache.spark.sql.types.StringType =>
+        val ranked = ends("min").unionAll(ends("max")).distinct()
+          .withColumn("pos", dense_rank().over(inLeaf.orderBy("at")).cast("long"))
+        def edge(stat: String, shift: Long, delta: Long): DataFrame =
+          ends(stat).join(ranked, Seq("__leaf", "at")).select(col("__leaf"),
+            (col("pos") + shift).as("pos"), lit(delta).as("delta"))
+        sweep(edge("min", 0L, 1L).unionAll(edge("max", 1L, -1L))
+            .unionAll(ranked.select(col("__leaf"), col("pos"), lit(0L).as("delta"))))
+          .join(ranked, Seq("__leaf", "pos"))
+          .select(col("__leaf"), col("at"), col("net"), col("depth"))
+      case dt =>
+        val toLong = statToLongOf(dt, key)
+        sweep(ends("min").select(col("__leaf"), toLong(col("at")).as("pos"),
+            lit(1L).as("delta"))
+          .unionAll(ends("max").select(col("__leaf"),
+            (toLong(col("at")) + 1L).as("pos"), lit(-1L).as("delta"))))
+          .select(col("__leaf"), col("pos").as("at"), col("net"), col("depth"))
+    }
   }
 
-  /** [[clusteringDepth]] for keys with NO integer successor — string
-    * stats, where `max + 1` has no meaning. The sweep instead runs
-    * over the OBSERVED boundary domain: every distinct `min`/`max`
-    * value across the manifest gets a dense rank, and each file's
-    * interval opens at `rank(min)` and closes AFTER `rank(max)` —
-    * the `+1` that needed a successor now lives in rank space, where
-    * one always exists. Depth at every observed value is exact, and
-    * the maximum over observed values IS the global maximum: a point
-    * strictly between two adjacent boundaries is covered only by
-    * files whose intervals also cover the boundary below it, so its
-    * depth can never exceed that boundary's. Same file-count-sized
-    * cost profile as the integer sweep (the deliberately
-    * unpartitioned windows run on the stats frame, never the data).
-    * Returns `(value, net, depth)` — `value` is the boundary string
-    * itself, so a reader can name the hot key range directly. */
-  def clusteringDepthBoundaries(manifest: DataFrame, key: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ranked = manifest.select(col(s"min_$key").as("value"))
-      .unionAll(manifest.select(col(s"max_$key")))
-      .filter(col("value").isNotNull).distinct()
-      .withColumn("pos", dense_rank().over(Window.orderBy("value")))
-    val valid = manifest.filter(col(s"min_$key").isNotNull)
-    val bounds = valid
-      .join(ranked, valid(s"min_$key") === ranked("value"))
-      .select(col("pos"), lit(1L).as("delta"))
-      .unionAll(valid
-        .join(ranked, valid(s"max_$key") === ranked("value"))
-        .select((col("pos") + 1).as("pos"), lit(-1L).as("delta")))
-      // zero-delta seed for EVERY observed rank: a value appearing
-      // only as some file's max has no delta of its own at its rank
-      // (the close lands one past it) but still needs a depth row
-      .unionAll(ranked.select(col("pos"), lit(0L).as("delta")))
-    bounds.groupBy("pos").agg(sum("delta").as("net"))
-      .withColumn("depth", sum("net").over(
-        Window.orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)))
-      // INNER join back to the observed boundaries: the greatest
-      // max's close lands at rank(max)+1, a rank no value owns — its
-      // row (depth 0 past everything) is bookkeeping, not a boundary,
-      // and must not surface as a phantom null `value`
-      .join(ranked, Seq("pos"))
-      .select(col("value"), col("net"), col("depth"))
+  /** Clustering-depth profile over a skipping manifest — the
+    * q_layout_depth metric computed from the REAL stored manifest:
+    * [[depthSweep]]'s integer-domain rows for the whole manifest. Date
+    * / timestamp `pos` is reported in its epoch-days / micros
+    * encoding; string stats have no successor function and are
+    * rejected loudly — use [[clusteringDepthBoundaries]]. Returns
+    * `(pos, net, depth)`. */
+  def clusteringDepth(manifest: DataFrame, key: String): DataFrame = {
+    statToLongOf(manifest.schema(s"min_$key").dataType, key)
+    depthSweep(manifest, key, lit(""))
+      .select(col("at").as("pos"), col("net"), col("depth"))
   }
+
+  /** [[clusteringDepth]] for string stats, where `max + 1` has no
+    * meaning: [[depthSweep]]'s observed-boundary rows for the whole
+    * manifest, exact at every observed value. Returns `(value, net,
+    * depth)` — `value` is the boundary string itself, so a reader can
+    * name the hot key range directly. Other stat types return their
+    * integer-domain rows. */
+  def clusteringDepthBoundaries(manifest: DataFrame, key: String): DataFrame =
+    depthSweep(manifest, key, lit(""))
+      .select(col("at").as("value"), col("net"), col("depth"))
 
   /** The OPTIMIZE trigger: true when some key value's point-lookup
     * depth reaches `maxDepth` — Delta OPTIMIZE / Iceberg rewrite
     * decide off exactly this signal. Appends degrade depth one
     * unclustered file at a time ([[appendWithManifest]]); when the
-    * trigger fires, rewrite with [[write]] to
+    * trigger fires, rewrite with [[write]] or [[optimize]] to
     * re-tighten the layout (LayoutSpec drives that full lifecycle).
-    * One manifest-sized job, one scalar to the driver. String-keyed
-    * manifests (a lang-clustered layout) dispatch to the
-    * boundary-domain sweep — the successor-free profile — so they
-    * get the same trigger instead of the former loud rejection. */
+    * One manifest-sized job, one scalar to the driver; string keys
+    * sweep their observed-boundary domain. */
   def needsRecluster(manifest: DataFrame, key: String,
                      maxDepth: Long): Boolean =
-    worstDepthOf(manifest, key) >= maxDepth
+    worstDepthOf(manifest, Seq(key)) >= maxDepth
 
-  /** The worst point-lookup depth of one key over a manifest — the
-    * scalar behind [[needsRecluster]] and both OPTIMIZE verbs' fire
-    * decision, dispatching string stats to the boundary-domain sweep.
-    * ONE implementation so the trigger semantics cannot fork. */
-  private def worstDepthOf(manifest: DataFrame, key: String): Long = {
-    val profile =
-      if (manifest.schema(s"min_$key").dataType ==
-          org.apache.spark.sql.types.StringType)
-        clusteringDepthBoundaries(manifest, key)
-      else clusteringDepth(manifest, key)
-    val worst = profile.agg(max(col("depth"))).collect()(0)
-    if (worst.isNullAt(0)) 0L else worst.getLong(0)
-  }
+  /** The worst point-lookup depth over `keys` of a whole manifest
+    * (0 when no file carries an interval). */
+  private def worstDepthOf(manifest: DataFrame, keys: Seq[String]): Long =
+    leafDepthsOf(manifest, keys, lit("")).map(_._3).foldLeft(0L)(math.max)
 
-  /** The shared clustered-rewrite tail of both OPTIMIZE verbs, over
-    * [[write]]'s curve step ([[curveCodeOf]]): ONE bounds agg decides
-    * the path and feeds the curve — Z-order when 2..8 keys all carry
-    * long stats and real bounds (an all-null key has none),
-    * lexicographic range-clustering otherwise, plain round-robin when
-    * there is no in-file key at all (a partitioned leaf whose stored
-    * keys are all path-encoded just compacts). */
+  /** A manifest file's parent directory, the OPTIMIZE verbs' sweep
+    * leaf: the root of a flat layout, the `k=v` leaf of a partitioned
+    * one, in the manifest's own URI spelling. */
+  private def fileLeaf: Column = regexp_replace(col("file"), "/[^/]+$", "")
+
+  /** `(leaf, key, worst depth)` for every leaf and key: all keys'
+    * [[depthSweep]]s unioned into ONE job. */
+  private[graft] def leafDepthsOf(manifest: DataFrame, keys: Seq[String],
+                                  leaf: Column): Seq[(String, String, Long)] =
+    if (keys.isEmpty) Nil
+    else keys.map(k => depthSweep(manifest, k, leaf)
+        .groupBy("__leaf").agg(max("depth").as("worst"))
+        .select(col("__leaf"), lit(k), col("worst")))
+      .reduce(_.unionAll(_)).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+
+  /** The files whose `[min, max]` interval on some key covers a
+    * boundary whose depth WITHIN ITS OWN LEAF reaches `maxDepth` — the
+    * offending subset [[optimizeSelective]] rewrites. Overlap is tested
+    * in the sweep's domain (integer positions, or boundary strings) as
+    * one file-count × deep-boundary join on the stats frame, never the
+    * data, with all keys unioned into ONE job. Null-stat files are
+    * never deep. Returns the manifest's own `file` spellings. */
+  private[graft] def deepFilesOf(manifest: DataFrame, keys: Seq[String],
+                                 leaf: Column, maxDepth: Long): Seq[String] =
+    if (keys.isEmpty) Nil
+    else keys.map { k =>
+      val statT = manifest.schema(s"min_$k").dataType
+      val toAt: Column => Column =
+        if (statT == org.apache.spark.sql.types.StringType) identity
+        else statToLongOf(statT, k)
+      val deep = depthSweep(manifest, k, leaf).filter(col("depth") >= maxDepth)
+        .select(col("__leaf").as("__dleaf"), col("at").as("__dat"))
+      manifest.withColumn("__leaf", leaf)
+        .join(deep, col("__leaf") === col("__dleaf") &&
+          toAt(col(s"min_$k")) <= col("__dat") &&
+          col("__dat") <= toAt(col(s"max_$k")))
+        .select("file")
+    }.reduce(_.unionAll(_)).distinct().collect().map(_.getString(0)).toSeq
+
+  /** The shared clustered-rewrite tail of both OPTIMIZE verbs and
+    * [[compact]], over [[write]]'s curve step ([[curveCodeOf]]): ONE
+    * bounds agg decides the path and feeds the curve — Z-order when
+    * 2..8 keys are all integral (long stats) with real bounds (an
+    * all-null key has none), lexicographic range-clustering otherwise,
+    * plain round-robin when there is no in-file key at all (a
+    * partitioned leaf whose stored keys are all path-encoded, or an
+    * input without a manifest, just compacts). */
   private def clusteredRewriteTo(src: DataFrame, keys: Seq[String],
-                                 allLong: Boolean, tmp: String,
-                                 files: Int): Unit = {
+                                 tmp: String, files: Int): Unit = {
     val cols = keys.map(col)
     val code =
-      if (keys.length < 2 || keys.length > 8 || !allLong) None
+      if (keys.length < 2 || keys.length > 8 ||
+          !keys.forall(k => isIntegral(src.schema(k).dataType))) None
       else curveCodeOf(src, cols, Curve.ZOrder)
     code match {
       case Some(c) => writeClusteredBy(src, c, tmp, files)
@@ -5197,129 +5209,6 @@ object Layout {
       case None =>
         src.repartition(files).write.mode("overwrite").parquet(tmp)
     }
-  }
-
-  /** Per-LEAF worst point-lookup depth of one key — the partitioned
-    * analog of [[worstDepthOf]], and the TRUE cost signal for a
-    * partition-pruned lookup (which reads one leaf: files in other
-    * leaves never stack on it). One job for ALL leaves: the sweeps
-    * run partitioned by the file's parent directory, long/date/
-    * timestamp stats in the integer domain ([[statToLongOf]]) and
-    * string stats in the per-leaf observed-boundary domain (dense
-    * rank within the leaf). Returns `(leaf, worst)` with `leaf` the
-    * parent-directory prefix of the manifest's own file URIs. */
-  private def worstDepthPerLeaf(manifest: DataFrame,
-                                key: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = manifest.withColumn("__leaf",
-      regexp_replace(col("file"), "/[^/]+$", ""))
-    val statT = m.schema(s"min_$key").dataType
-    val bounds =
-      if (statT == org.apache.spark.sql.types.StringType) {
-        val ranked = m.select(col("__leaf"), col(s"min_$key").as("value"))
-          .unionAll(m.select(col("__leaf"), col(s"max_$key").as("value")))
-          .filter(col("value").isNotNull).distinct()
-          .withColumn("pos", dense_rank().over(
-            Window.partitionBy("__leaf").orderBy("value")).cast("long"))
-        val opens = m.select(col("__leaf"), col(s"min_$key").as("value"))
-          .filter(col("value").isNotNull)
-          .join(ranked, Seq("__leaf", "value"))
-          .select(col("__leaf"), col("pos"), lit(1L).as("delta"))
-        val closes = m.select(col("__leaf"), col(s"max_$key").as("value"))
-          .filter(col("value").isNotNull)
-          .join(ranked, Seq("__leaf", "value"))
-          .select(col("__leaf"), (col("pos") + 1L).as("pos"),
-            lit(-1L).as("delta"))
-        opens.unionAll(closes)
-      } else {
-        val toLong = statToLongOf(statT, key)
-        m.filter(col(s"min_$key").isNotNull)
-          .select(col("__leaf"), toLong(col(s"min_$key")).as("pos"),
-            lit(1L).as("delta"))
-          .unionAll(m.filter(col(s"max_$key").isNotNull)
-            .select(col("__leaf"), (toLong(col(s"max_$key")) + 1L).as("pos"),
-              lit(-1L).as("delta")))
-      }
-    bounds.groupBy("__leaf", "pos").agg(sum("delta").as("net"))
-      .withColumn("depth", sum("net").over(
-        Window.partitionBy("__leaf").orderBy("pos")
-          .rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("__leaf").as("leaf")).agg(max("depth").as("worst"))
-  }
-
-  /** Per-LEAF deep-file selection — [[deepFilesOf]] partitioned by the
-    * file's parent directory, in ONE job for all leaves (the same
-    * leaf-partitioned sweep discipline as [[worstDepthPerLeaf]]; a
-    * per-leaf driver loop would run thousands of tiny jobs on a
-    * thousand-leaf tree). A file is selected when its `[min, max]`
-    * interval on `key` covers a boundary whose depth WITHIN ITS OWN
-    * LEAF reaches `maxDepth` — the true pruned-lookup cost, since
-    * files in other leaves never stack on it. Returns the manifest's
-    * own `file` spellings. */
-  private def deepFilesPerLeaf(manifest: DataFrame, key: String,
-                               maxDepth: Long): Seq[String] = {
-    import org.apache.spark.sql.expressions.Window
-    val m = manifest.withColumn("__leaf",
-      regexp_replace(col("file"), "/[^/]+$", ""))
-    val statT = m.schema(s"min_$key").dataType
-    val hits =
-      if (statT == org.apache.spark.sql.types.StringType) {
-        val ranked = m.select(col("__leaf"), col(s"min_$key").as("value"))
-          .unionAll(m.select(col("__leaf"), col(s"max_$key").as("value")))
-          .filter(col("value").isNotNull).distinct()
-          .withColumn("pos", dense_rank().over(
-            Window.partitionBy("__leaf").orderBy("value")).cast("long"))
-        val bounds = m.select(col("__leaf"), col(s"min_$key").as("value"))
-          .filter(col("value").isNotNull)
-          .join(ranked, Seq("__leaf", "value"))
-          .select(col("__leaf"), col("pos"), lit(1L).as("delta"))
-          .unionAll(m.select(col("__leaf"), col(s"max_$key").as("value"))
-            .filter(col("value").isNotNull)
-            .join(ranked, Seq("__leaf", "value"))
-            .select(col("__leaf"), (col("pos") + 1L).as("pos"),
-              lit(-1L).as("delta")))
-        // a boundary with no event row of its own (a value appearing
-        // only as some file's max) inherits the depth of the previous
-        // event boundary, whose deep hit selects the same covering
-        // files — conservative-correct without seed rows
-        // eager pin: deep-boundary rows are file-count-sized, and the
-        // checkpoint breaks the self-join lineage with `m` (both sides
-        // descend from the manifest — shared attribute ids would make
-        // the interval condition ambiguous)
-        val deep = bounds.groupBy("__leaf", "pos").agg(sum("delta").as("net"))
-          .withColumn("depth", sum("net").over(
-            Window.partitionBy("__leaf").orderBy("pos")
-              .rowsBetween(Window.unboundedPreceding, 0)))
-          .filter(col("depth") >= maxDepth)
-          .join(ranked, Seq("__leaf", "pos"))
-          .select(col("__leaf").as("__dleaf"), col("value").as("__dvalue"))
-          .localCheckpoint(true)
-        m.join(deep,
-          m("__leaf") === deep("__dleaf") &&
-            m(s"min_$key") <= deep("__dvalue") &&
-            deep("__dvalue") <= m(s"max_$key"))
-      } else {
-        val toLong = statToLongOf(statT, key)
-        val deep = m.filter(col(s"min_$key").isNotNull)
-          .select(col("__leaf"), toLong(col(s"min_$key")).as("pos"),
-            lit(1L).as("delta"))
-          .unionAll(m.filter(col(s"max_$key").isNotNull)
-            .select(col("__leaf"), (toLong(col(s"max_$key")) + 1L).as("pos"),
-              lit(-1L).as("delta")))
-          .groupBy("__leaf", "pos").agg(sum("delta").as("net"))
-          .withColumn("depth", sum("net").over(
-            Window.partitionBy("__leaf").orderBy("pos")
-              .rowsBetween(Window.unboundedPreceding, 0)))
-          .filter(col("depth") >= maxDepth)
-          .select(col("__leaf").as("__dleaf"), col("pos").as("__dpos"))
-          // eager pin — same lineage-break rationale as the string arm
-          .localCheckpoint(true)
-        m.join(deep,
-          m("__leaf") === deep("__dleaf") &&
-            toLong(m(s"min_$key")) <= deep("__dpos") &&
-            deep("__dpos") <= toLong(m(s"max_$key")))
-      }
-    hits.select(m("file")).distinct().collect().map(_.getString(0)).toSeq
   }
 
   /** Per-call outcome of the OPTIMIZE verbs. `worstDepthBefore` is
@@ -5367,27 +5256,48 @@ object Layout {
   private def leafOf(file: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(new java.net.URI(file)).getParent
 
+  /** The per-leaf rewrite under [[rewriteSelected]] and [[compact]]:
+    * `files` group by leaf directory — one group on a flat layout (the
+    * root), one per touched leaf on a hive-partitioned tree — and each
+    * group
+    *   1. reads under `schema` with its deletion vectors applied
+    *      ([[readFilesOf]]), so the output is vector-free — the rewrite
+    *      IS the vector purge — and any columns an evolution added are
+    *      materialized (null where a row predates them); partition
+    *      columns drop, the leaf path re-derives them;
+    *   2. [[clusteredRewriteTo]]s over the in-file keys into
+    *      `target(leaf)` with `outputsFor(its files)` outputs.
+    * Returns each leaf with its target. */
+  private def rewriteLeaves(spark: org.apache.spark.sql.SparkSession,
+                            dir: String, files: Seq[String],
+                            schema: org.apache.spark.sql.types.StructType,
+                            partCols: Seq[String], fileKeys: Seq[String],
+                            dv: Map[String, String],
+                            outputsFor: Seq[String] => Int,
+                            target: org.apache.hadoop.fs.Path =>
+                              org.apache.hadoop.fs.Path)
+      : Seq[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)] =
+    files.sorted.groupBy(leafOf).toSeq.sortBy(_._1.toString).map {
+      case (leaf, group) =>
+        val out = target(leaf)
+        clusteredRewriteTo(
+          readFilesOf(spark, dir, group, schema, dv = dv).drop(partCols: _*),
+          fileKeys, out.toString, outputsFor(group))
+        leaf -> out
+    }
+
   /** The ONE rewrite core under both OPTIMIZE verbs: the verbs only
     * SELECT (`files`, empty = declined); every layout shape rewrites
-    * the same way. The selection groups by leaf directory — one group
-    * on a flat layout (the root), one per touched leaf on a
-    * hive-partitioned tree — and each group rewrites into
-    * `outputsFor(its files)` clustered outputs:
-    *   1. read the group's files under the stored schema with their
-    *      deletion vectors applied ([[readFilesOf]]), so the output is
-    *      vector-free — the rewrite IS the vector purge — and any
-    *      columns an evolution added are materialized (null where a
-    *      row predates them); partition columns drop, the leaf path
-    *      re-derives them;
-    *   2. [[clusteredRewriteTo]] into a `_`-prefixed scratch dir inside
-    *      the leaf, over the in-file keys;
-    *   3. after every group is written, re-check the OCC generation
+    * the same way:
+    *   1. [[rewriteLeaves]] into a `_`-prefixed scratch dir inside each
+    *      touched leaf;
+    *   2. after every leaf is written, re-check the OCC generation
     *      (the move-in makes the rewrite visible — see deleteWhere),
-    *      move every group in, take ONE delta-stats pass over just the
+    *      move every leaf in, take ONE delta-stats pass over just the
     *      new files (read with `basePath` so `k=v` stat keys keep real
     *      values; bloom keys carry over), and only then retire (tracked)
     *      or delete the old files;
-    *   4. PATCH the manifest once: unselected files keep their rows
+    *   3. PATCH the manifest once: unselected files keep their rows
     *      verbatim (their stats and blooms cannot drift), the delta
     *      rows append, and the retirement receipt lets an OCC loser
     *      roll back ([[patchManifest]]).
@@ -5435,17 +5345,9 @@ object Layout {
         scope.manifest.select("file").collect().map(_.getString(0)).toSet,
         dir, "the rewrite would silently legitimize their rows into " +
           "the new layout")
-    val allLong = scope.fileKeys.forall(k =>
-      mSchema(s"min_$k").dataType == org.apache.spark.sql.types.LongType)
-    val groups = files.sorted.groupBy(leafOf).toSeq.sortBy(_._1.toString)
-    val tmps = groups.map { case (leaf, leafFiles) =>
-      val src = readFilesOf(spark, dir, leafFiles, schema, dv = scope.dvMap)
-      val tmp = new org.apache.hadoop.fs.Path(leaf, "_graft_optimize_tmp")
-      clusteredRewriteTo(
-        if (scope.partCols.isEmpty) src else src.drop(scope.partCols: _*),
-        scope.fileKeys, allLong, tmp.toString, outputsFor(leafFiles))
-      leaf -> tmp
-    }
+    val tmps = rewriteLeaves(spark, dir, files, schema, scope.partCols,
+      scope.fileKeys, scope.dvMap, outputsFor,
+      new org.apache.hadoop.fs.Path(_, "_graft_optimize_tmp"))
     requireExpectedGen(fs, dir, expectedGen, verb)
     for ((leaf, tmp) <- tmps) {
       moveTreeInto(fs, tmp, leaf, verb)
@@ -5480,16 +5382,18 @@ object Layout {
     * metadata-only no-op unless `force`d, and `force` rewrites every
     * file.
     *
-    * Flat layout: the worst point-lookup depth across ALL stored keys
-    * (one manifest-sized sweep per key, string keys via the
-    * boundary-domain profile) reaching `maxDepth`, or any deletion
-    * vector present, rewrites the whole directory — the vector purge:
-    * the read-side anti-join tax is exactly what the rewrite clears.
+    * The depth signal is [[leafDepthsOf]]: every stored key's sweep
+    * per leaf directory, one job for all keys and leaves — the TRUE
+    * cost of a partition-pruned lookup, since files in other leaves
+    * never stack on it (a flat layout is one leaf).
+    *
+    * Flat layout: the worst depth across ALL stored keys reaching
+    * `maxDepth`, or any deletion vector present, rewrites the whole
+    * directory — the vector purge: the read-side anti-join tax is
+    * exactly what the rewrite clears.
     *
     * Hive-partitioned layout, LEAF-selective: each `k=v` leaf carries
-    * its own signals ([[worstDepthPerLeaf]], one job for all leaves —
-    * the TRUE cost of a partition-pruned lookup, since files in other
-    * leaves never stack on it). A leaf rewrites when any fires: its
+    * its own signals. A leaf rewrites when any fires: its
     * depth over the IN-FILE keys reaches `maxDepth` (clustering — a
     * partition-column key is excluded because its per-leaf "depth" is
     * just the file count, which would re-classify every rewritten leaf
@@ -5508,65 +5412,30 @@ object Layout {
     require(files >= 1, "optimize needs files >= 1")
     val scope = optimizeScope(spark, dir, expectedGen, "optimize")
     val manifest = scope.manifest
-    val (worst, fired) =
+    val depths = leafDepthsOf(manifest, scope.keys, fileLeaf)
+    val worst = depths.map(_._3).foldLeft(0L)(math.max)
+    // leaf identity is compared by fs path (the manifest's URI
+    // spelling and the listing's can differ on authority form)
+    def pathOf(uri: String) =
+      new org.apache.hadoop.fs.Path(new java.net.URI(uri)).toUri.getPath
+    def leafKey(uri: String) = leafOf(uri).toUri.getPath
+    val fired =
       if (scope.partCols.isEmpty) {
-        val w = scope.keys.map(worstDepthOf(manifest, _)).max
-        (w, if (force || w >= maxDepth || scope.dvMap.nonEmpty)
-              scope.before.toSeq else Nil)
+        if (force || worst >= maxDepth || scope.dvMap.nonEmpty)
+          scope.before.toSeq else Nil
       } else {
-        // leaf identity is compared by fs path (the manifest's URI
-        // spelling and the listing's can differ on authority form)
-        def leafKey(uri: String) = leafOf(uri).toUri.getPath
-        def perLeaf(ks: Seq[String]): Map[String, Long] =
-          if (ks.isEmpty) Map.empty
-          else ks.map(worstDepthPerLeaf(manifest, _))
-            .reduce(_.unionAll(_))
-            .groupBy("leaf").agg(max("worst").as("worst")).collect()
-            .map(r => new org.apache.hadoop.fs.Path(
-              new java.net.URI(r.getString(0))).toUri.getPath -> r.getLong(1))
-            .toMap
         val filesByLeaf = manifest.select("file").collect()
           .groupBy(r => leafKey(r.getString(0))).map(e => e._1 -> e._2.length)
-        val firedLeaves =
-          perLeaf(scope.fileKeys).filter(_._2 >= maxDepth).keySet ++
-            filesByLeaf.filter(_._2 > files).keySet ++
-            scope.dvMap.keySet.map(leafKey)
-        val perLeafAll = perLeaf(scope.keys)
-        (if (perLeafAll.isEmpty) 0L else perLeafAll.values.max,
-          scope.before.toSeq.filter(f => force || firedLeaves(leafKey(f))))
+        val firedLeaves = depths.collect {
+            case (leaf, k, w) if w >= maxDepth && scope.fileKeys.contains(k) =>
+              pathOf(leaf)
+          }.toSet ++
+          filesByLeaf.filter(_._2 > files).keySet ++
+          scope.dvMap.keySet.map(leafKey)
+        scope.before.toSeq.filter(f => force || firedLeaves(leafKey(f)))
       }
     rewriteSelected(spark, dir, scope, fired, _ => files, worst,
       verifyCoverage, expectedGen, "optimize")
-  }
-
-  /** The file names whose `[min, max]` interval on `key` covers any
-    * boundary whose point-lookup depth reaches `maxDepth` — the
-    * offending subset the depth profile names, which is exactly what
-    * [[optimizeSelective]] rewrites. Long / date / timestamp stats
-    * test overlap in the profile's integer sweep domain (the shared
-    * [[statToLongOf]] mapping); string stats in the boundary-value
-    * domain. Both run as one file-count × deep-boundary-count join on
-    * the stats frame — never the data. Null-stat files carry no
-    * interval and are never deep. */
-  private def deepFilesOf(manifest: DataFrame, key: String,
-                          maxDepth: Long): Seq[String] = {
-    val statT = manifest.schema(s"min_$key").dataType
-    val hits =
-      if (statT == org.apache.spark.sql.types.StringType) {
-        val deep = clusteringDepthBoundaries(manifest, key)
-          .filter(col("depth") >= maxDepth).select(col("value"))
-        manifest.join(deep,
-          col(s"min_$key") <= col("value") &&
-            col("value") <= col(s"max_$key"))
-      } else {
-        val toLong = statToLongOf(statT, key)
-        val deep = clusteringDepth(manifest, key)
-          .filter(col("depth") >= maxDepth).select(col("pos"))
-        manifest.join(deep,
-          toLong(col(s"min_$key")) <= col("pos") &&
-            col("pos") <= toLong(col(s"max_$key")))
-      }
-    hits.select("file").distinct().collect().map(_.getString(0)).toSeq
   }
 
   /** SELECTIVE in-place OPTIMIZE — the Delta/Iceberg bin-packed
@@ -5595,19 +5464,18 @@ object Layout {
     * cannot deepen (their stats are unchanged). The rewrite,
     * manifest patch and crash windows are [[rewriteSelected]]'s.
     *
-    * Flat layout: the depth profile runs over the whole directory,
-    * and nothing is selected unless the worst depth reaches
+    * The depth profile is [[deepFilesOf]] per leaf directory, one job
+    * for all in-file keys and leaves — a file is deep when it covers a
+    * boundary whose depth WITHIN ITS OWN LEAF reaches `maxDepth`.
+    *
+    * Flat layout (one leaf): nothing is selected unless the worst depth reaches
     * `maxDepth` or a heavy vector exists; `force` skips that trigger,
     * but the rewrite set still derives from the profile — with
     * nothing deep, no small files and no vectors the call is a no-op
     * (use [[optimize]] with `force` for an unconditional full
     * rewrite).
     *
-    * Hive-partitioned layout: the profile runs per leaf
-    * ([[deepFilesPerLeaf]], one leaf-partitioned sweep per in-file key
-    * for the whole tree) — a file is deep when it covers a boundary
-    * whose depth WITHIN ITS OWN LEAF reaches `maxDepth`, so a hot
-    * leaf's cold files stay verbatim, and a year-sized leaf holding
+    * Hive-partitioned layout: a hot leaf's cold files stay verbatim, and a year-sized leaf holding
     * one day of degraded ingest pays one day's I/O, not a year's.
     * There is no separate trigger (the per-leaf selection is one);
     * pure fragmentation (too many well-clustered files) is
@@ -5625,24 +5493,16 @@ object Layout {
     val manifest = scope.manifest
     val heavyDv = heavyDvFiles(manifest, scope.dvMap, minDvRatio,
       "optimizeSelective")
-    val flat = scope.partCols.isEmpty
-    val worst =
-      if (flat) scope.keys.map(worstDepthOf(manifest, _)).max
-      else if (scope.fileKeys.isEmpty) 0L
-      else {
-        val w = scope.fileKeys.map(worstDepthPerLeaf(manifest, _))
-          .reduce(_.unionAll(_)).agg(max("worst")).collect()(0)
-        if (w.isNullAt(0)) 0L else w.getLong(0)
-      }
+    val worst = leafDepthsOf(manifest, scope.fileKeys, fileLeaf)
+      .map(_._3).foldLeft(0L)(math.max)
     val selected =
-      if (flat && !force && worst < maxDepth && heavyDv.isEmpty) Nil
+      if (scope.partCols.isEmpty && !force && worst < maxDepth &&
+          heavyDv.isEmpty) Nil
       else {
         // the rewrite set: union of every key's deep-boundary files
         // plus the small-file tail plus the heavy-vectorized tail —
         // manifest-sized driver work, like every other verb's planning
-        val deep =
-          if (flat) scope.keys.flatMap(deepFilesOf(manifest, _, maxDepth))
-          else scope.fileKeys.flatMap(deepFilesPerLeaf(manifest, _, maxDepth))
+        val deep = deepFilesOf(manifest, scope.fileKeys, fileLeaf, maxDepth)
         val small =
           if (minFileRows <= 0L) Nil
           else manifest.filter(col("n_rows") < minFileRows)
@@ -5690,97 +5550,98 @@ object Layout {
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }
 
-  /** Small-file compaction: rewrite a parquet directory into files
-    * near `targetBytes` each. Streaming sinks, per-partition
-    * incremental appends, and over-parallel writers all leave
-    * directories of kilobyte files, and at 100 TB the resulting
+  /** Small-file compaction: rewrite a layout into files near
+    * `targetBytes` each, under `outPath` — compaction never reads and
+    * overwrites the same live directory. Streaming sinks,
+    * per-partition incremental appends, and over-parallel writers all
+    * leave directories of kilobyte files, and at 100 TB the resulting
     * footer/open overheads and starved scan parallelism dominate
-    * query time — periodic compaction back to ~1 GiB files is
-    * routine lakehouse maintenance. File count is derived from the
-    * ACTUAL on-disk byte size (Hadoop listing — bounded driver work:
-    * one number per input file), the rewrite is one
-    * `repartition(n)` round-robin exchange with no skew by
-    * construction, and the output lands in `outPath` — compaction
-    * must never read and overwrite the same live directory.
-    * Returns (inputFiles, outputFiles).
+    * query time — periodic compaction back to ~1 GiB files is routine
+    * lakehouse maintenance.
     *
-    * A schema-EVOLVED input (see [[appendWithManifest]]
-    * `mergeSchema`) compacts under its sidecar schema — without it, a
-    * plain read would resolve columns from a sampled footer and could
-    * silently DROP an added column from the compacted output. The
-    * rewrite materializes the added columns (null where a row
-    * predates them), so the output is schema-homogeneous and needs no
-    * sidecar — compaction finishes the evolution, the way Delta's
-    * OPTIMIZE upgrades files. `fileSchema` is the partitioned walk's
-    * override ([[compactPartitioned]] passes each leaf the root
-    * sidecar minus the path-encoded columns). */
+    * One verb for flat and hive-partitioned layouts, with or without a
+    * manifest: each leaf directory (the root of a flat layout, each
+    * `k=v` leaf of a partitioned one, preserved under `outPath` so a
+    * partition-discovering read of the output sees the same partition
+    * columns) rewrites through the OPTIMIZE rewrite's own per-leaf
+    * steps ([[rewriteLeaves]]) into `ceil(leaf bytes / targetBytes)`
+    * files, sized from the ACTUAL on-disk bytes (Hadoop listing — one
+    * number per input file). The rows are read under the stored schema
+    * with their deletion vectors applied, so compaction PURGES vectors,
+    * and a schema-EVOLVED input's added columns are materialized (null
+    * where a row predates them): the output is schema-homogeneous and
+    * needs no sidecar — compaction finishes the evolution, the way
+    * Delta's OPTIMIZE upgrades files.
+    *
+    * A manifest-carrying input compacts only its manifest's live
+    * files, after the coverage guard fails loudly on any non-empty
+    * file the manifest does not cover (copying it would bless
+    * out-of-band rows); the rewrite clusters on the in-file stored
+    * keys, and the output gets a manifest from one stats pass over its
+    * files, with the input's keys and blooms. An input without a
+    * manifest lists every data file and compacts round-robin. A
+    * directory mixing data files with partition subdirectories is not
+    * a hive layout and fails loudly. Returns (inputFiles,
+    * outputFiles). */
   def compact(spark: org.apache.spark.sql.SparkSession, inPath: String,
-              outPath: String, targetBytes: Long = 1L << 30,
-              fileSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : (Int, Int) = {
-    val hPath = new org.apache.hadoop.fs.Path(inPath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireDisjointDirs(spark.sparkContext.hadoopConfiguration, inPath, outPath, "compact")
-    // flat directories only: a hive-partitioned dataset should be
-    // compacted per partition directory (its data sits in subdirs
-    // this listing deliberately skips); `_`/`.` entries are commit
-    // markers and checksum side-files, not data
-    def dataFiles(dirFs: org.apache.hadoop.fs.FileSystem,
-                  p: org.apache.hadoop.fs.Path) =
-      dirFs.listStatus(p).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    val all = fs.listStatus(hPath)
-    // enforce the flat-directory contract rather than silently funnel
-    // a partition-discovered multi-TB dataset through repartition(1):
-    // subdirs mean hive partitions (compact each one), zero data
-    // files mean there is nothing to size the output by
-    require(!all.exists(st => st.isDirectory && !st.getPath.getName.startsWith("_")),
-      s"compact expects a flat parquet directory; $inPath has partition subdirectories — compact each partition directory instead")
-    val parts = dataFiles(fs, hPath)
-    require(parts.nonEmpty, s"compact: no data files in $inPath")
-    requireNoDvLive(spark, fs, inPath, "compact")
-    val totalBytes = parts.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val schema = fileSchema.orElse(storedSchemaOf(spark, inPath))
-    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(inPath)
-      .repartition(nOut)
-      .write.mode("overwrite").parquet(outPath)
-    // manifest-aware: a compacted manifest-carrying dir (e.g. a
-    // Z-ordered write) must not silently lose its skipping stats —
-    // the old manifest names the INPUT's files, so it cannot move
-    // over; rebuild it against the output (one stats pass over the
-    // freshly compacted data, same keys the input tracked)
-    rebuildManifestIfPresent(spark, fs, inPath, outPath)
+              outPath: String, targetBytes: Long = 1L << 30): (Int, Int) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    requireDisjointDirs(conf, inPath, outPath, "compact")
+    val hIn = new org.apache.hadoop.fs.Path(inPath)
+    val fs = hIn.getFileSystem(conf)
+    val listed = dataFilesUnder(fs, hIn)
+    require(listed.nonEmpty, s"compact: no data files in $inPath")
+    def pathOf(p: org.apache.hadoop.fs.Path) = fs.makeQualified(p).toUri.getPath
+    val dirs = listed.map(st => pathOf(st.getPath.getParent)).distinct
+    require(!dirs.exists(d => dirs.exists(_.startsWith(d + "/"))),
+      s"$inPath mixes data files with partition subdirectories — not a hive layout")
+    val manifest =
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$inPath/_graft_manifest")))
+        Some(loadManifest(spark, inPath))
+      else None
+    val schema = liveSchemaOf(spark, inPath)
+    val dirFrame = spark.read.schema(schema).parquet(inPath)
+    val files = manifest.fold(listed.map(_.getPath.toString)) { m =>
+      requireEncodingStablePath(outPath)
+      val known = m.select("file").collect().map(_.getString(0)).toSeq
+      requireManifestCovers(spark, dirFrame, known.toSet, inPath,
+        "compact reads only the manifest's files and would silently drop " +
+          "their rows")
+      known
+    }
+    val partCols =
+      if (isHivePartitioned(spark, inPath))
+        hivePartColsChecked(fs, hIn, dirFrame.schema)
+      else Nil
+    val keys = manifest.fold(Seq.empty[String])(m => manifestKeysOf(m.schema))
+    val bytes = listed.map(st => pathOf(st.getPath) -> st.getLen).toMap
+    val root = pathOf(hIn)
+    rewriteLeaves(spark, inPath, files, schema, partCols,
+      keys.filterNot(partCols.contains),
+      manifest.fold(Map.empty[String, String])(dvMapOf(_, files)),
+      group => {
+        val leafBytes = group.map(f =>
+          bytes(pathOf(new org.apache.hadoop.fs.Path(new java.net.URI(f))))).sum
+        math.max(1, math.ceil(leafBytes.toDouble / targetBytes).toInt)
+      },
+      leaf => new org.apache.hadoop.fs.Path(outPath + pathOf(leaf).stripPrefix(root)))
     // the output may live on a DIFFERENT filesystem than the input
     // (the disjointness guard deliberately allows cross-FS pairs) —
     // list it with its own
     val hOut = new org.apache.hadoop.fs.Path(outPath)
-    val outFs = hOut.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (parts.length, dataFiles(outFs, hOut).length)
-  }
-
-  /** Both sides of the compaction maintenance APIs rebuild a stored
-    * skipping manifest the same way; shared so the key extraction and
-    * the rebuild target cannot fork between them. */
-  private def rebuildManifestIfPresent(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      inPath: String, outPath: String): Unit =
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$inPath/_graft_manifest"))) {
-      val mSchema = loadManifest(spark, inPath).schema
-      val keys = manifestKeysOf(mSchema)
-      // bloom keys carry over too: compaction must not silently
-      // demote a bloom-indexed layout to range-only skipping
-      buildFileManifest(spark, outPath, keys, bloomKeysOf(mSchema))
+    val outFiles = dataFilesUnder(hOut.getFileSystem(conf), hOut)
+      .map(_.getPath.toString)
+    for (m <- manifest)
+      manifestOf(readFilesOf(spark, outPath, outFiles, schema), keys,
+          bloomKeysOf(m.schema))
         .write.mode("overwrite").parquet(s"$outPath/_graft_manifest")
-    }
+    (listed.length, outFiles.length)
+  }
 
   /** Compaction must never read and rewrite the same live directory,
     * and the output must not land INSIDE the input tree either (the
-    * partitioned walk would re-discover freshly written output as a
-    * partition and re-compact it) — nor the input inside the output
+    * input's listing would pick up freshly written output as a
+    * partition and compact it again) — nor the input inside the output
     * (overwrite semantics could clobber live data). Qualified-URI
     * prefix comparison, so relative spellings and trailing slashes
     * cannot dodge the guard. */
@@ -5831,67 +5692,5 @@ object Layout {
     require(!(sameFs && nested),
       s"$what requires disjoint input and output directories; " +
         s"got $inPath and $outPath")
-  }
-
-  /** [[compact]] over a hive-partitioned dataset: walk the partition
-    * subdirectory tree and compact each LEAF directory into the
-    * mirrored location under `outPath`, preserving the `k=v` path
-    * segments — so a partition-discovering read of the output sees
-    * the same partition columns and rows as the input. Per-leaf
-    * sizing keeps the one-exchange-per-partition shape (no global
-    * shuffle; each partition compacts independently — on a cluster
-    * these rewrites parallelize trivially). Empty partition dirs are
-    * skipped; a dir mixing data files WITH subdirectories is not a
-    * hive layout and fails loudly. Returns total (inputFiles,
-    * outputFiles) across all leaves. */
-  def compactPartitioned(spark: org.apache.spark.sql.SparkSession,
-                         inPath: String, outPath: String,
-                         targetBytes: Long = 1L << 30): (Int, Int) = {
-    val hIn = new org.apache.hadoop.fs.Path(inPath)
-    val fs = hIn.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireDisjointDirs(spark.sparkContext.hadoopConfiguration, inPath, outPath, "compactPartitioned")
-    requireNoDvLive(spark, fs, inPath, "compactPartitioned")
-    // an evolved layout's sidecar lives at the ROOT; each leaf's
-    // files carry the schema MINUS the path-encoded columns, so that
-    // is the per-leaf override (compact would otherwise plain-read
-    // the leaf and could drop an added column — see compact's doc)
-    val leafSchema = storedSchemaOf(spark, inPath).map { s =>
-      val partKeys = hivePartColsChecked(fs, hIn, s).toSet
-      org.apache.spark.sql.types.StructType(
-        s.filterNot(f => partKeys.contains(f.name)))
-    }
-    def isAux(n: String) = n.startsWith("_") || n.startsWith(".")
-    def walk(cur: org.apache.hadoop.fs.Path, rel: List[String],
-             entries: Array[org.apache.hadoop.fs.FileStatus]): (Int, Int) = {
-      val subdirs = entries.filter(st => st.isDirectory && !isAux(st.getPath.getName))
-      val files = entries.filter(st => st.isFile && !isAux(st.getPath.getName))
-      if (subdirs.nonEmpty) {
-        require(files.isEmpty,
-          s"$cur mixes data files with partition subdirectories — not a hive layout")
-        subdirs.map(d => walk(d.getPath, rel :+ d.getPath.getName,
-            fs.listStatus(d.getPath)))
-          .foldLeft((0, 0)) { case ((i1, o1), (i2, o2)) => (i1 + i2, o1 + o2) }
-      } else if (files.isEmpty) (0, 0) // empty partition dir: nothing to do
-      else compact(spark, cur.toString, (outPath :: rel).mkString("/"),
-        targetBytes, if (rel.isEmpty) None else leafSchema)
-    }
-    // ONE root listing serves both the walk and the flat-case test
-    // (an extra listStatus is a whole LIST round-trip on object
-    // stores, and a second listing could disagree with the first
-    // under concurrent writes)
-    val rootEntries = fs.listStatus(hIn)
-    val hadSubdirs = rootEntries
-      .exists(st => st.isDirectory && !isAux(st.getPath.getName))
-    val (nIn, nOut) = walk(hIn, Nil, rootEntries)
-    require(nIn > 0, s"compactPartitioned: no data files under $inPath")
-    // a root-level skipping manifest survives compaction the same way
-    // compact's does: rebuilt over the output tree (stats over the
-    // compacted files, partition-discovered read so partition-column
-    // keys keep working). Skipped when the walk degenerated to the
-    // flat case — there the single compact() call already rebuilt it,
-    // and a second pass would scan the compacted data again for the
-    // identical result.
-    if (hadSubdirs) rebuildManifestIfPresent(spark, fs, inPath, outPath)
-    (nIn, nOut)
   }
 }

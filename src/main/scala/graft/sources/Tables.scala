@@ -34,11 +34,21 @@ object Tables {
   * (`TESTDATA.md`): one parquet file per table under a scale-factor
   * directory. Column pruning and filter pushdown reach the parquet
   * scan because we hand Catalyst the raw relation and express all
-  * selection declaratively downstream.
+  * selection declaratively downstream. A single-file table reads
+  * under its footer schema, read on the driver, so building its frame
+  * launches no schema-inference job; a table stored as a directory
+  * keeps Spark's own inference.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   def table(name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val df =
+      if (scala.util.Try(fs.getFileStatus(hPath).isFile).getOrElse(false))
+        spark.read.schema(graft.ext.ManifestSnapshot.footerSchema(spark, hPath))
+          .parquet(path)
+      else spark.read.parquet(path)
     if (name == "events") Tables.normalizeEventTs(df) else df
   }
 

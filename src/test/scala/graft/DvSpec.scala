@@ -563,7 +563,7 @@ class DvSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("guards: rebuild and compact refuse on vectorized layouts; the V2 reader applies them") {
+  test("guards: rebuild refuses and compact purges on vectorized layouts; the V2 reader applies them") {
     withTempDir("graft_dv_guard_") { dir =>
       mkLayout(s"$dir/t")
       Layout.enableGenerations(spark, s"$dir/t")
@@ -573,10 +573,13 @@ class DvSpec extends AnyFunSuite with SharedSpark {
         Layout.buildFileManifest(spark, s"$dir/t", Seq("k"))
       }
       assert(e1.getMessage.contains("deletion-vector"))
-      val e2 = intercept[IllegalArgumentException] {
-        Layout.compact(spark, s"$dir/t", s"$dir/out")
-      }
-      assert(e2.getMessage.contains("deletion vectors"))
+      // compaction applies the vectors instead of refusing: the output
+      // holds exactly the live rows, and its manifest has no vector
+      Layout.compact(spark, s"$dir/t", s"$dir/out")
+      assert(got(spark.read.parquet(s"$dir/out")) ==
+        expect(1000, k => k < 100 || k > 149))
+      assert(!Layout.loadManifest(spark, s"$dir/out").columns
+        .contains("dv_path"))
       // this session carries the graft extensions (GraftSession
       // .tuned), so the V2 reader APPLIES the vectors — live,
       // filtered, and time-traveled reads all exact
@@ -612,6 +615,45 @@ class DvSpec extends AnyFunSuite with SharedSpark {
         prevActive.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
       }
     }
+  }
+
+  test("compact purges vectors on tracked and untracked layouts, flat and hive") {
+    for (tracked <- Seq(false, true); hive <- Seq(false, true))
+      withTempDir("graft_dv_compact_") { dir =>
+        val d = s"$dir/t"
+        if (!hive) mkLayout(d)
+        else {
+          spark.range(1000).select(col("id").as("k"),
+              (col("id") % 7).as("g"), (col("id") * 2).as("v"))
+            .repartitionByRange(4, col("k")).sortWithinPartitions("k")
+            .write.mode("overwrite").partitionBy("g").parquet(d)
+          Layout.buildFileManifest(spark, d, Seq("k"))
+            .write.mode("overwrite").parquet(s"$d/_graft_manifest")
+        }
+        if (tracked) Layout.enableGenerations(spark, d)
+        Layout.deleteWhereDv(spark, d, Seq(Layout.KeyBox("k", 100L, 149L)))
+        assert(Layout.loadManifest(spark, d)
+          .filter(col("dv_path").isNotNull).count() > 0L,
+          s"tracked=$tracked hive=$hive: the delete vectorized nothing")
+        val (nIn, nOut) = Layout.compact(spark, d, s"$dir/out")
+        assert(nIn == names(d).size && nOut >= 1)
+        // a plain read of the output applies no vector: the rows are
+        // the live rows, and the output manifest carries none
+        val want = expect(1000, k => k < 100 || k > 149)
+        assert(got(spark.read.parquet(s"$dir/out")) == want,
+          s"tracked=$tracked hive=$hive")
+        val mf = Layout.loadManifest(spark, s"$dir/out")
+        assert(!mf.columns.contains("dv_path"))
+        assert(mf.agg(sum("n_rows")).as[Long].head() == 950L)
+        assert(got(Layout.scanPruned(spark, s"$dir/out",
+          Seq(Layout.KeyBox("k", 0L, 400L)))) == want.filter(_._1 <= 400))
+        if (hive) {
+          def leaves(p: String) = new java.io.File(p).listFiles()
+            .filter(f => f.isDirectory && f.getName.startsWith("g="))
+            .map(_.getName).toSet
+          assert(leaves(s"$dir/out") == leaves(d))
+        }
+      }
   }
 
   /** (tasks, input bytes) of every job `f` launches, in start order. */

@@ -514,10 +514,11 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       val (nIn, nOut) = Layout.compact(spark, s"$dir/in", s"$dir/out",
         targetBytes = Long.MaxValue)
       assert(nIn === 16 && nOut === 1)
-      // the output carries a REBUILT manifest (the input's names its
+      // the output carries its OWN manifest (the input's names its
       // own files, so it cannot move over) and pruned reads off it
-      // stay exact — the compacted layout no longer clusters, so the
-      // single wide file always survives; exactness is the contract
+      // stay exact — compaction clusters on the stored keys, but one
+      // output file spans every key, so it always survives; exactness
+      // is the contract
       val boxes = Seq(Layout.KeyBox("l_partkey", 20L, 60L))
       val pruned = Layout.scanPruned(spark, s"$dir/out", boxes)
       assert(pruned.count() ===
@@ -528,6 +529,33 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
         Set("file", "n_rows", "min_l_partkey", "max_l_partkey",
           "nulls_l_partkey", "min_l_suppkey", "max_l_suppkey",
           "nulls_l_suppkey"))
+    }
+  }
+
+  test("compact refuses a non-empty data file its manifest does not cover, and a mixed tree") {
+    withTempDir("graft_compact_uncovered_") { dir =>
+      val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
+        .select("l_orderkey", "l_partkey", "l_suppkey")
+      Layout.write(li, s"$dir/in",
+        Seq(col("l_partkey"), col("l_suppkey")), files = 4,
+        manifestKeys = Seq("l_partkey", "l_suppkey"))
+      // an out-of-band append the manifest never blessed: compaction
+      // reads the manifest's files only, so copying the debris and
+      // dropping it silently are both wrong — it must fail loudly
+      li.limit(5).write.mode("append").parquet(s"$dir/in")
+      val e = intercept[IllegalArgumentException] {
+        Layout.compact(spark, s"$dir/in", s"$dir/out")
+      }
+      assert(e.getMessage.contains("does not cover"), e.getMessage)
+      assert(!new java.io.File(s"$dir/out").exists(),
+        "the refusal must come before any output is written")
+      // data files next to a k=v subdirectory are not a layout
+      li.limit(5).write.parquet(s"$dir/mixed")
+      li.limit(5).write.parquet(s"$dir/mixed/l_linenumber=1")
+      val mixed = intercept[IllegalArgumentException] {
+        Layout.compact(spark, s"$dir/mixed", s"$dir/out")
+      }
+      assert(mixed.getMessage.contains("not a hive layout"), mixed.getMessage)
     }
   }
 
@@ -570,7 +598,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
         .mode("overwrite").parquet(s"$dir/in")
       val leaves = spark.read.parquet(s"$dir/in")
         .select("l_returnflag", "l_linestatus").distinct().count()
-      val (nIn, nOut) = Layout.compactPartitioned(spark, s"$dir/in", s"$dir/out",
+      val (nIn, nOut) = Layout.compact(spark, s"$dir/in", s"$dir/out",
         targetBytes = Long.MaxValue)
       assert(nOut === leaves.toInt,
         s"expected one compacted file per leaf ($leaves), got $nOut")
@@ -589,20 +617,20 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       // freshly written output as a partition and re-compact it) or
       // an input nested in the output
       intercept[IllegalArgumentException] {
-        Layout.compactPartitioned(spark, s"$dir/in", s"$dir/in")
+        Layout.compact(spark, s"$dir/in", s"$dir/in")
       }
       intercept[IllegalArgumentException] {
-        Layout.compactPartitioned(spark, s"$dir/in", s"$dir/in/l_returnflag=R/out")
+        Layout.compact(spark, s"$dir/in", s"$dir/in/l_returnflag=R/out")
       }
       intercept[IllegalArgumentException] {
-        Layout.compactPartitioned(spark, s"$dir/in", dir)
+        Layout.compact(spark, s"$dir/in", dir)
       }
       // a root-level manifest rides through: rebuild it over the
       // input, compact again to a fresh output, and the output's
       // rebuilt stats still serve an exact pruned read
       Layout.buildFileManifest(spark, s"$dir/in", Seq("l_partkey"))
         .write.mode("overwrite").parquet(s"$dir/in/_graft_manifest")
-      Layout.compactPartitioned(spark, s"$dir/in", s"$dir/out2",
+      Layout.compact(spark, s"$dir/in", s"$dir/out2",
         targetBytes = Long.MaxValue)
       val pruned = Layout.scanPruned(spark, s"$dir/out2",
         Seq(Layout.KeyBox("l_partkey", 20L, 60L)))
@@ -1213,7 +1241,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
         col("lang").isNull).count() === 0L)
       // partitioned compaction keeps the evolved column and values
       val out = s"$dir/c"
-      Layout.compactPartitioned(spark, d, out)
+      Layout.compact(spark, d, out)
       val c = spark.read.parquet(out)
       assert(c.columns.toSet === Set("doc_id", "lang", "n_chars", "score"))
       assert(c.count() === all.count())

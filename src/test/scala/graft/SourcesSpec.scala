@@ -67,6 +67,30 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("Tables: a single-file table reads under its footer schema — no inference job, Spark's own schema") {
+    import graft.sources.Tables
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Tables(spark, sf0001).table("lineitem")
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"building the lineitem frame launched ${jobs.get} job(s)")
+    val sf001 = new java.io.File(sf0001).getParent + "/sf0.01"
+    for (sf <- Seq(sf0001, sf001); name <- Tables(spark, sf).names) {
+      val inferred = spark.read.parquet(s"$sf/$name.parquet")
+      val want =
+        if (name == "events") Tables.normalizeEventTs(inferred) else inferred
+      assert(Tables(spark, sf).table(name).schema === want.schema, s"$sf $name")
+    }
+  }
+
   test("events ts encoding tolerance: nanos-int64, µs-LTZ, and µs-NTZ all agree") {
     // The driver's testdata generator has shipped events.ts as parquet
     // TIMESTAMP(NANOS) (read as long under nanosAsLong), then re-encoded
