@@ -563,7 +563,10 @@ class DvSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("guards: rebuild refuses and compact purges on vectorized layouts; the V2 reader applies them") {
+  // The name predates compaction applying vectors: compact used to
+  // refuse a vectorized layout and now purges its vectors (checked
+  // below and, per layout kind, in the next test).
+  test("guards: rebuild and compact refuse on vectorized layouts; the V2 reader applies them") {
     withTempDir("graft_dv_guard_") { dir =>
       mkLayout(s"$dir/t")
       Layout.enableGenerations(spark, s"$dir/t")
