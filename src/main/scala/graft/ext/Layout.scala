@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -476,16 +477,16 @@ object Layout {
       else acc.withColumn(s"nulls_$k", lit(null).cast("long"))
     }
 
-  /** Replace a stored manifest via temp-dir + rename, never a direct
-    * overwrite of its own source: overwrite deletes before it writes,
-    * so a crash mid-write would leave NO manifest (and the caller's
-    * update plan may still read the very files being replaced —
-    * callers eagerly materialize `updated` via localCheckpoint
-    * first). Crash windows degrade loudly: before the rename the old
-    * manifest survives (stale, but the coverage guard flags uncovered
-    * files on the next read); a crash inside the delete+rename pair
-    * leaves a missing manifest every scanPruned fails on. The
-    * `_`-prefixed temp dir is invisible to data reads if orphaned. */
+  /** [[commit]]'s manifest replace: temp-dir + rename, never a direct
+    * overwrite of its own source — overwrite deletes before it writes,
+    * so a crash mid-write would leave NO manifest (and the update plan
+    * may still read the very files being replaced — [[commit]] pins
+    * such an `updated` via localCheckpoint first). Crash windows
+    * degrade loudly: before the rename the old manifest survives
+    * (stale, but the coverage guard flags uncovered files on the next
+    * read); a crash inside the delete+rename pair leaves a missing
+    * manifest every scanPruned fails on. The `_`-prefixed temp dir is
+    * invisible to data reads if orphaned. */
   private def replaceManifest(spark: org.apache.spark.sql.SparkSession,
                               path: String, updated: DataFrame,
                               operation: String,
@@ -510,7 +511,12 @@ object Layout {
       // verb's rewrite work is caught here, before the archive; the
       // archive's own exists-check below is the last-resort CAS for
       // writers racing inside this final window
-      requireExpectedGen(fs, path, expectedGen, operation)
+      try requireExpectedGen(fs, path, expectedGen, operation)
+      catch {
+        case cme: java.util.ConcurrentModificationException =>
+          fs.delete(tmpPath, true)
+          throw cme
+      }
       val dest = new org.apache.hadoop.fs.Path(historyDir(path), s"gen=$g")
       require(!fs.exists(dest),
         s"generation archive $dest already exists — concurrent writers?")
@@ -535,70 +541,184 @@ object Layout {
     committedGen.foreach(writeCommitInfo(fs, path, _, operation))
   }
 
-  /** The shared manifest-PATCH tail of every in-place mutation verb
-    * ([[deleteWhere]], [[upsertByKeys]], both OPTIMIZE verbs via
-    * [[rewriteSelected]]): kept rows = stored manifest minus
-    * `removed` (file-count-sized broadcast anti-join, never an
-    * IN-literal explosion on big manifests), widened through the
-    * pre-nulls-format migration, the delta rows (already eagerly
-    * pinned by the caller) appended, then the temp-dir + rename
-    * replace. ONE implementation so the patch discipline cannot fork
-    * between verbs. */
-  private def patchManifest(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, manifest: DataFrame,
-                            keyCols: Seq[String], removed: Seq[String],
-                            delta: Option[DataFrame],
-                            operation: String,
-                            expectedGen: Option[Long] = None,
-                            retired: Option[RetireReceipt] = None): Unit = {
-    import spark.implicits._
-    val removedDf = removed.toDF("file")
-    val kept = manifest.join(broadcast(removedDf), Seq("file"), "left_anti")
-    val keptMigrated = widenWithNullCounts(kept, keyCols)
-    val updated = delta.fold(keptMigrated) { d =>
-      // DV-format migration: a DV-bearing layout's delta rows (fresh
-      // rewrite outputs) lack the dv columns — widen both sides so
-      // the union cannot fail; any OTHER column mismatch stays loud
-      val (k2, d2) = alignDvCols(keptMigrated, d)
-      k2.unionByName(d2)
-    }.localCheckpoint(true)
-    // a concurrent writer can slip between the verb's pre-destructive
-    // OCC check and replaceManifest's commit-point check. By then the
-    // verb has RETIRED files the winner's live manifest still
-    // references — a plain "retry" would hit FileNotFound, not heal.
-    // The verb passed its retirement receipt, so the loser can UNDO:
-    // move every retired file back under its live name, drop the
-    // rewrite's new files (the delta manifest names them), and only
-    // then surface a retryable error
-    try replaceManifest(spark, dir, updated, operation, expectedGen)
-    catch {
-      case cme: java.util.ConcurrentModificationException
-          if retired.exists(_.moved.nonEmpty) =>
-        val r = retired.get
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val stuck = r.moved.filterNot { case (src, dest) =>
+  /** What every mutation verb reads before deciding anything, each
+    * piece on first use: the live manifest and its stored keys, the
+    * layout's data schema, the raw directory frame (coverage guard,
+    * listings), the live files at call time, and the partition columns
+    * (empty on a flat layout). [[scopeOf]] checks the caller's OCC
+    * generation at entry. */
+  private final class Scope(spark: org.apache.spark.sql.SparkSession,
+                            val dir: String) {
+    val hDir = new Path(dir)
+    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    lazy val manifest: DataFrame = loadManifest(spark, dir)
+    lazy val mSchema = manifest.schema
+    lazy val keys: Seq[String] = manifestKeysOf(mSchema)
+    lazy val schema = liveSchemaOf(spark, dir)
+    lazy val dirFrame: DataFrame = spark.read.schema(schema).parquet(dir)
+    lazy val before: Set[String] = dirFrame.inputFiles.toSet
+    lazy val partCols: Seq[String] =
+      hivePartColsChecked(fs, hDir, dirFrame.schema)
+    /** The in-file clustering keys: a partition column is constant
+      * inside its leaf. */
+    def fileKeys: Seq[String] = keys.filterNot(partCols.contains)
+
+    /** The coverage guard every verb that reads or rewrites the live
+      * files runs first: a non-empty file the manifest misses would
+      * otherwise escape the verb — `consequence` says how. */
+    def requireCovered(known: => Set[String], consequence: String): Unit =
+      requireManifestCovers(spark, dirFrame, known, dir, consequence)
+  }
+
+  private def scopeOf(spark: org.apache.spark.sql.SparkSession, dir: String,
+                      expectedGen: Option[Long], verb: String): Scope = {
+    requireEncodingStablePath(dir)
+    val scope = new Scope(spark, dir)
+    requireExpectedGen(scope.fs, dir, expectedGen, verb)
+    scope
+  }
+
+  /** One staged output of a mutation: `write` fills the `_graft_*_tmp`
+    * staging dir `tmp`, whose tree [[commit]] moves into `into`. */
+  private final case class Stage(tmp: Path, into: Path, write: () => Unit)
+
+  /** Each stage's new files, in the listing's spelling, and their rows. */
+  private final case class Committed(files: Seq[Seq[String]], rows: Seq[Long])
+
+  /** THE commit step of every Layout mutation — append, restore, the
+    * DML verbs and the OPTIMIZE rewrite. The verbs only select (what to
+    * remove, what to write); every one commits in this order:
+    *   1. each stage writes under its `_`-prefixed staging dir,
+    *      invisible to data reads;
+    *   2. the OCC generation is re-checked ([[requireExpectedGen]]);
+    *   3. the staged trees move into the live directory;
+    *   4. ONE delta-stats pass over the new files, collected to the
+    *      driver;
+    *   5. the `removed` files retire (tracked layouts) or are deleted;
+    *   6. the manifest is replaced once ([[replaceManifest]]): the live
+    *      manifest minus `removed` plus the delta rows, with the rows of
+    *      files kept live but `repointed` swapped in ([[patchManifest]]),
+    *      or what `replaceWith(each stage's new files)` builds instead
+    *      (no stats pass then);
+    *   7. on an untracked layout, when a manifest row the commit drops
+    *      or replaces carried a deletion vector (`dv`: file → store),
+    *      the stores nothing references any more are reaped — tracked
+    *      layouts keep them for snapshot reads until vacuum.
+    * A commit that moves in no file and removes none commits nothing.
+    *
+    * A lost commit — a rival generation seen at step 2 or at the
+    * commit point inside step 6 — rolls back: every retired file moves
+    * back under its live name, every moved-in file is dropped, and a
+    * retryable `ConcurrentModificationException` surfaces
+    * ([[withGenerationRetry]] re-reads and re-runs). The staging dirs
+    * go on every exit path.
+    *
+    * Crash windows (a process that dies mid-commit rolls nothing
+    * back), each loud, never silent: before step 3 the layout is
+    * unchanged — re-run verbatim; between the move-in and the
+    * retirement, coverage-guarded reads flag the uncovered new files
+    * and [[quarantineUncovered]] moves them aside (a rewrite's
+    * survivors are re-derivable from the still-present old files, an
+    * append's rows are re-appendable); between the retirement and the
+    * manifest replace, a pruned read naming a removed file fails on
+    * the missing path — rebuild the manifest over the directory with
+    * [[buildFileManifest]] (or, tracked, move the retired files back
+    * from `_graft_retired`). A re-run without that repair fails on the
+    * coverage check by design: the engine cannot tell commit debris
+    * from a crashed out-of-band append whose rows a mutation would
+    * lose. */
+  private def commit(spark: org.apache.spark.sql.SparkSession, scope: Scope,
+                     verb: String, expectedGen: Option[Long],
+                     stages: Seq[Stage], removed: Seq[String],
+                     dv: Map[String, String] = Map.empty,
+                     repointed: Option[DataFrame] = None,
+                     replaceWith: Option[Seq[Seq[String]] => DataFrame] = None)
+      : Committed = {
+    import scala.jdk.CollectionConverters._
+    val (fs, dir) = (scope.fs, scope.dir)
+    val moved = stages.map(_ => scala.collection.mutable.ArrayBuffer.empty[Path])
+    var receipt: Option[RetireReceipt] = None
+    val committed = try {
+      stages.foreach(_.write())
+      requireExpectedGen(fs, dir, expectedGen, verb)
+      stages.zip(moved).foreach { case (st, m) =>
+        moveTreeInto(fs, st.tmp, st.into, verb, m) }
+      // the listing's spelling of each moved file — the one manifest
+      // rows carry — matched back by path
+      val listed =
+        if (moved.forall(_.isEmpty)) Nil
+        else liveFilesOf(spark, dir, Some(scope.schema))
+      val files = moved.map { m =>
+        val paths = m.map(p => fs.makeQualified(p).toUri.getPath).toSet
+        listed.filter(f => paths(new Path(new java.net.URI(f)).toUri.getPath))
+      }
+      if (files.forall(_.isEmpty) && removed.isEmpty && repointed.isEmpty &&
+          replaceWith.isEmpty)
+        return Committed(files, files.map(_ => 0L))
+      // basePath: stats of a partition-column key see the k=v path
+      // columns; bloom keys follow the stored format
+      val delta = Option.when(replaceWith.isEmpty && files.exists(_.nonEmpty)) {
+        val d = manifestOf(readFilesOf(spark, dir, files.flatten, scope.schema),
+          scope.keys, bloomKeysOf(scope.mSchema))
+        spark.createDataFrame(d.collect().toSeq.asJava, d.schema)
+      }
+      // a projection of driver rows: no job
+      val rowsOf = delta.toSeq.flatMap(_.select("file", "n_rows").collect())
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      receipt = retireOrDeleteAll(fs, dir, removed, verb)
+      val built = replaceWith.fold(
+        patchManifest(spark, scope, removed, delta, repointed))(_(files))
+      // pinned only when it reads files: the manifest it replaces, when
+      // the snapshot does not hold its rows on the driver
+      val updated =
+        if (built.inputFiles.isEmpty) built else built.localCheckpoint(true)
+      try replaceManifest(spark, dir, updated, verb, expectedGen)
+      finally Checkpoints.unpersist(updated)
+      Committed(files, files.map(_.map(rowsOf.getOrElse(_, 0L)).sum))
+    } catch {
+      case cme: java.util.ConcurrentModificationException =>
+        val retired = receipt.toSeq.flatMap(_.moved)
+        val stuck = retired.filterNot { case (src, dest) =>
           !fs.exists(dest) || fs.rename(dest, src) }
+        moved.flatten.foreach(fs.delete(_, false))
         if (stuck.nonEmpty) throw new IllegalStateException(
-          s"$operation at $dir lost an optimistic-concurrency race " +
-            s"AFTER retiring files, and ${stuck.length} of them could " +
-            s"not be moved back from _graft_retired/gen=${r.gen} " +
+          s"$verb at $dir lost an optimistic-concurrency race AFTER " +
+            s"retiring files, and ${stuck.length} of them could not be " +
+            s"moved back from _graft_retired/gen=${receipt.get.gen} " +
             s"(first: ${stuck.head._2}) — restore them manually before " +
             "reading through the live manifest", cme)
-        for (d <- delta; row <- d.select("file").collect()) {
-          val p = new org.apache.hadoop.fs.Path(
-            new java.net.URI(row.getString(0)))
-          fs.delete(p, false)
-        }
+        if (retired.isEmpty && moved.forall(_.isEmpty)) throw cme
         throw new java.util.ConcurrentModificationException(
-          s"$operation at $dir lost an optimistic-concurrency race at " +
-            "the commit point; its retired files were moved back and " +
-            "its rewritten files dropped — the layout is back at the " +
-            "winner's state, re-read and retry (withGenerationRetry " +
-            s"does this): ${cme.getMessage}")
+          s"$verb at $dir lost an optimistic-concurrency race; its " +
+            "retired files were moved back and its new files dropped — " +
+            "the layout is back at the winner's state, re-read and " +
+            s"retry (withGenerationRetry does this): ${cme.getMessage}")
+    } finally stages.foreach(st => fs.delete(st.tmp, true))
+    if (!generationsEnabled(fs, dir) && dv.nonEmpty)
+      reapUnreferencedDvStores(spark, fs, dir)
+    committed
+  }
+
+  /** The patched manifest [[commit]] writes: the live manifest minus
+    * the rows of `removed` and of the `repointed` files (file-count-
+    * sized broadcast anti-joins, never an IN-literal explosion),
+    * widened through the pre-nulls and DV format migrations, plus the
+    * `delta` and `repointed` rows. Every other file keeps its row
+    * verbatim, so its stats and blooms cannot drift. */
+  private def patchManifest(spark: org.apache.spark.sql.SparkSession,
+                            scope: Scope, removed: Seq[String],
+                            delta: Option[DataFrame],
+                            repointed: Option[DataFrame]): DataFrame = {
+    import spark.implicits._
+    val gone = Option.when(removed.nonEmpty)(removed.toDF("file")) ++
+      repointed.map(_.select("file"))
+    val kept = gone.foldLeft(scope.manifest) { (m, g) =>
+      m.join(broadcast(g), Seq("file"), "left_anti") }
+    (delta ++ repointed).foldLeft(widenWithNullCounts(kept, scope.keys)) {
+      (acc, d) =>
+        val (a, b) = alignDvCols(acc, d)
+        a.unionByName(b)
     }
-    Checkpoints.unpersist(updated)
-    delta.foreach(Checkpoints.unpersist)
   }
 
   private def historyDir(dir: String): org.apache.hadoop.fs.Path =
@@ -777,13 +897,12 @@ object Layout {
   /** Loud optimistic-concurrency precondition shared by the mutation
     * verbs: the caller read the layout at `expected` and asks the
     * commit to proceed only if no other writer has committed since.
-    * Checked at verb ENTRY (fail before the rewrite work), again
-    * immediately before the verb's FIRST DESTRUCTIVE step (a loss to
-    * a concurrent writer detected only after retirement would have
-    * filed the winner's live files under a superseded label), and a
-    * third time by [[replaceManifest]] before the archive rename
-    * (the commit point); the archive's own exists-check is the
-    * last-resort CAS for writers racing inside the final window. Throws
+    * Checked at verb ENTRY ([[scopeOf]] — fail before the rewrite
+    * work), again by [[commit]] before it moves anything in, and a
+    * third time by [[replaceManifest]] before the archive rename (the
+    * commit point; [[commit]] rolls a loss there back); the archive's
+    * own exists-check is the last-resort CAS for writers racing inside
+    * the final window. Throws
     * `ConcurrentModificationException` — retryable by re-reading the
     * live generation — unlike the contract violations that throw
     * IllegalArgumentException. */
@@ -893,26 +1012,24 @@ object Layout {
         s"last conflict: ${last.getMessage}")
   }
 
-  /** Retire (generation-tracked layout) or delete (plain layout) the
-    * superseded data files — THE tail every in-place mutation verb
-    * funnels through, so snapshot safety cannot fork per verb.
-    * Retired files land under `_graft_retired/gen=G/` labeled with
-    * the generation whose manifest still references them (the verbs
-    * call this BEFORE their manifest replace, so `currentGeneration`
-    * is exactly that G); [[vacuumGenerations]] uses the label to
-    * drop retirement dirs no retained snapshot can reach. Basenames
-    * are parquet part-UUIDs — globally unique — and a collision is
-    * refused loudly rather than resolved arbitrarily. */
   /** What [[retireOrDeleteAll]] actually moved: the retirement label
     * and each (live source → retired destination) rename — the
     * information an OCC loser needs to put the files BACK
-    * ([[patchManifest]]'s rollback path). None when the layout is
-    * untracked (files were deleted, nothing restorable — but an
-    * untracked layout has no OCC either). */
-  private final case class RetireReceipt(
-      gen: Long,
-      moved: Seq[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)])
+    * ([[commit]]'s rollback). None when the layout is untracked (files
+    * were deleted, nothing restorable — but an untracked layout has no
+    * OCC either). */
+  private final case class RetireReceipt(gen: Long, moved: Seq[(Path, Path)])
 
+  /** Retire (generation-tracked layout) or delete (plain layout) the
+    * superseded data files — [[commit]]'s step 5, so snapshot safety
+    * cannot fork per verb. Retired files land under
+    * `_graft_retired/gen=G/` labeled with the generation whose
+    * manifest still references them (this runs BEFORE the manifest
+    * replace, so `currentGeneration` is exactly that G);
+    * [[vacuumGenerations]] uses the label to drop retirement dirs no
+    * retained snapshot can reach. Basenames are parquet part-UUIDs —
+    * globally unique — and a collision is refused loudly rather than
+    * resolved arbitrarily. */
   private def retireOrDeleteAll(fs: org.apache.hadoop.fs.FileSystem,
                                 dir: String, files: Iterable[String],
                                 verb: String): Option[RetireReceipt] = {
@@ -1854,10 +1971,9 @@ object Layout {
     * any other mutation. Byte copies on the executors
     * ([[copyFilesDistributed]]): restore I/O ∝ the churn being
     * undone, never table size, and the driver only plans the
-    * file-count-sized pair list. Crash windows match the other
-    * verbs': copies land first (a crash leaves extra live files the
-    * coverage guard flags loudly), retirement second, manifest
-    * commit last.
+    * file-count-sized pair list. The copies stage under
+    * `_graft_restore_tmp` and the new manifest replaces the live one
+    * whole, through [[commit]] (its OCC rollback and crash windows).
     *
     * Restoring to a pre-ADD-COLUMN generation does NOT drop the
     * column: the schema sidecar stays, restored files simply read
@@ -1869,8 +1985,8 @@ object Layout {
                       expectedGen: Option[Long] = None): RestoreStats = {
     import spark.implicits._
     requireEncodingStablePath(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val scope = new Scope(spark, dir)
+    val fs = scope.fs
     require(generationsEnabled(fs, dir),
       s"$dir is not generation-tracked — nothing to restore")
     requireExpectedGen(fs, dir, expectedGen, "restore")
@@ -1903,7 +2019,6 @@ object Layout {
     val (copyBack, kept) = targetFiles.zip(resolved).partition {
       case (_, r) => r.contains("/_graft_retired/gen=")
     }
-    val rootQ = fs.makeQualified(new org.apache.hadoop.fs.Path(dir)).toString
     val withRel = copyBack.toSeq.map { case (orig, retired) =>
       val (_, rel) = anchorRelOf(fs, dir, retired)
       val slash = rel.lastIndexOf('/')
@@ -1914,49 +2029,47 @@ object Layout {
       // generation commits at most once), original partition leaf
       (orig, retired, s"${parent}restored-gen$cur-$base")
     }
-    copyFilesDistributed(spark,
-      withRel.map(m => (m._2, s"$rootQ/${m._3}")))
-    // the copies' manifest rows must carry Spark's OWN
-    // canonicalization of each new file ([[canonicalByRel]])
-    val newCanonical =
-      if (withRel.isEmpty) Seq.empty[String]
-      else liveFilesOf(spark, dir).filterNot(liveBefore)
-    val mapping = withRel.map(m => (m._1, canonicalByRel(newCanonical, m._3)))
+    val tmp = new Path(scope.hDir, "_graft_restore_tmp")
+    val tmpQ = fs.makeQualified(tmp).toString
     // retire what the restore supersedes — everything live that gen
-    // does not reference (the copies just written are not in
-    // liveBefore, so they can never retire themselves)
-    val keptSet = kept.map(_._1).toSet
-    // OCC re-check before the destructive tail — see deleteWhere
-    requireExpectedGen(fs, dir, expectedGen, "restore")
-    retireOrDeleteAll(fs, dir, (liveBefore -- keptSet).toSeq.sorted,
-      "restore")
-    val restored0 = remapManifestFiles(spark, target,
-      kept.toSeq.map(k => (k._1, k._1)) ++ mapping)
-    // copied-back files that carried a deletion vector at the target
-    // generation get their positions REWRITTEN onto the copies' new
-    // paths in one fresh store (content is byte-identical, so the
-    // positions stay valid); kept files' vector pointers ride the
-    // manifest verbatim — their stores still name them correctly
-    val dvCopyBack = mapping.collect {
-      case (orig, newFile) if targetDv.contains(orig) =>
-        (orig, targetDv(orig), newFile)
-    }
-    val restored = (if (dvCopyBack.isEmpty) restored0 else {
-      val newStore = rewriteDvStore(spark, fs, dvRoot(dir),
-        s"restore$cur", dvCopyBack)
-      val repoint = dvCopyBack
-        .map { case (_, _, nf) => (nf, newStore) }
-        .toDF("file", "__graft_new_dv_path")
-      widenWithDvCols(restored0)
-        .join(broadcast(repoint), Seq("file"), "left")
-        .withColumn("dv_path",
-          coalesce(col("__graft_new_dv_path"), col("dv_path")))
-        .drop("__graft_new_dv_path")
-    }).localCheckpoint(true)
-    replaceManifest(spark, dir, restored, "restore", expectedGen)
-    Checkpoints.unpersist(restored)
-    RestoreStats(committed = true, kept.length, copyBack.length,
-      (liveBefore -- keptSet).size)
+    // does not reference (the copies are not in liveBefore, so they
+    // can never retire themselves)
+    val retire = (liveBefore -- kept.map(_._1)).toSeq.sorted
+    commit(spark, scope, "restore", expectedGen,
+      Option.when(withRel.nonEmpty)(Stage(tmp, scope.hDir, () =>
+        copyFilesDistributed(spark,
+          withRel.map(m => (m._2, s"$tmpQ/${m._3}"))))).toSeq,
+      retire, replaceWith = Some { files =>
+        // the copies' manifest rows must carry Spark's OWN
+        // canonicalization of each new file ([[canonicalByRel]])
+        val mapping = withRel.map(m => (m._1, canonicalByRel(files.flatten, m._3)))
+        val restored = remapManifestFiles(spark, target,
+          kept.toSeq.map(k => (k._1, k._1)) ++ mapping)
+        // copied-back files that carried a deletion vector at the
+        // target generation get their positions REWRITTEN onto the
+        // copies' new paths in one fresh store (content is
+        // byte-identical, so the positions stay valid); kept files'
+        // vector pointers ride the manifest verbatim — their stores
+        // still name them correctly
+        val dvCopyBack = mapping.collect {
+          case (orig, newFile) if targetDv.contains(orig) =>
+            (orig, targetDv(orig), newFile)
+        }
+        if (dvCopyBack.isEmpty) restored
+        else {
+          val newStore = rewriteDvStore(spark, fs, dvRoot(dir),
+            s"restore$cur", dvCopyBack)
+          val repoint = dvCopyBack
+            .map { case (_, _, nf) => (nf, newStore) }
+            .toDF("file", "__graft_new_dv_path")
+          widenWithDvCols(restored)
+            .join(broadcast(repoint), Seq("file"), "left")
+            .withColumn("dv_path",
+              coalesce(col("__graft_new_dv_path"), col("dv_path")))
+            .drop("__graft_new_dv_path")
+        }
+      })
+    RestoreStats(committed = true, kept.length, copyBack.length, retire.size)
   }
 
   /** CLONE a snapshot into a standalone layout: generation `gen`'s
@@ -2876,8 +2989,9 @@ object Layout {
     * simply never qualify for skipping, which is the conservative,
     * correct direction; when the [[q_layout_depth clustering-depth]]
     * trigger fires, a [[write]] or [[optimize]] rewrite
-    * re-tightens the layout. The updated manifest is eagerly
-    * materialized before overwriting its own source directory.
+    * re-tightens the layout. The rows stage under `_graft_append_tmp`
+    * and commit through [[commit]] (its OCC rollback and crash
+    * windows).
     *
     * ALL validation happens BEFORE the append: a call that fails its
     * checks (non-integral key, keyCols not matching the stored
@@ -2912,17 +3026,13 @@ object Layout {
                          expectedGen: Option[Long] = None,
                          operationLabel: String = "append"): Unit = {
     val spark = df.sparkSession
-    requireEncodingStablePath(path)
     requireSupportedKeys(df.schema, keyCols)
-    requireExpectedGen(new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, expectedGen, "append")
+    val scope = scopeOf(spark, path, expectedGen, "append")
     // loading the manifest up front also fails fast when the dir was
     // never written with one. The key sets must match EXACTLY: a
     // strict subset would pass a one-sided check, append, and then
     // crash in unionByName — leaving files the manifest misses
-    val existing = loadManifest(spark, path)
-    val storedKeys = manifestKeysOf(existing.schema).toSet
+    val storedKeys = scope.keys.toSet
     require(storedKeys == keyCols.toSet,
       s"keyCols ${keyCols.toSet.mkString(", ")} must equal the stored " +
         s"manifest's keys ${storedKeys.mkString(", ")} at $path")
@@ -2933,25 +3043,19 @@ object Layout {
     // an inconsistency the manifest never detects because its stats
     // only cover keyCols. Exact name→type equality (nullability and
     // column order excluded: parquet resolves columns by name).
-    // ONE pre-append relation serves both the schema check and the
-    // before-files snapshot — at 100k-file scale each
-    // spark.read.parquet(path) is a full listing + footer resolution
-    val current = spark.read.schema(liveSchemaOf(spark, path)).parquet(path)
-    val before = current.inputFiles.toSet
+    val current = scope.dirFrame
     // partition-aware append: on a hive-partitioned layout the new
     // rows must route into their k=v subdirectories — a plain append
     // would land partition-column-bearing files at the ROOT, a mixed
     // layout partition discovery rejects on the next read
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val pfs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partCols = hivePartColsChecked(pfs, hPath, current.schema)
+    val partCols = scope.partCols
     val newCols = requireWriteCompatible(df.schema, current.schema,
       partCols, path, allowNewColumns = mergeSchema)
     // a DROPPED name can never come back while old files still carry
     // its values — the re-add would resurface them as data instead of
     // nulls; optimize/compact free the name by materializing the drop
     val readded = newCols.map(_.name).toSet
-      .intersect(droppedColsOf(pfs, path).toSet)
+      .intersect(droppedColsOf(scope.fs, path).toSet)
     require(readded.isEmpty,
       s"column(s) ${readded.mkString(", ")} were DROPPED from $path " +
         "and existing files still hold their old values — re-adding " +
@@ -2969,30 +3073,8 @@ object Layout {
     if (newCols.nonEmpty)
       writeStoredSchema(spark, path,
         org.apache.spark.sql.types.StructType(current.schema ++ newCols))
-    val w = df.write.mode("append")
-    if (partCols.isEmpty) w.parquet(path)
-    else w.partitionBy(partCols: _*).parquet(path)
-    val newFiles = liveFilesOf(spark, path, Some(current.schema))
-      .filterNot(before)
-    if (newFiles.isEmpty) return
-    // basePath: delta stats for a partition-column key must see the
-    // k=v path columns (a no-op on flat directories); bloom keys come
-    // from the STORED format so the union below cannot mismatch
-    val delta = manifestOf(
-      readFilesOf(spark, path, newFiles, current.schema), keyCols,
-      bloomKeysOf(existing.schema))
-    // pre-nulls-format migration ([[widenWithNullCounts]]) and the
-    // DV-format one ([[alignDvCols]] — appended files never carry a
-    // vector), then the temp-dir + rename replace
-    // ([[replaceManifest]]). Note the data append itself commits
-    // first, so running with verifyCoverage=false after a mid-append
-    // crash is the one combination that can drop rows (documented on
-    // scanPruned).
-    val (k2, d2) = alignDvCols(widenWithNullCounts(existing, keyCols), delta)
-    val updated = k2.unionByName(d2)
-      .localCheckpoint(true)
-    replaceManifest(spark, path, updated, operationLabel, expectedGen)
-    Checkpoints.unpersist(updated)
+    commit(spark, scope, operationLabel, expectedGen,
+      Seq(stageOf(scope, "_graft_append_tmp", partCols, df)), Nil)
   }
 
   // ───────── streaming ingest: exactly-once foreachBatch appends ─────────
@@ -3543,34 +3625,29 @@ object Layout {
         .where(residual)
   }
 
-  /** Mirror-move every non-aux leaf of a scratch `tmp` tree into the
-    * live directory, preserving partition-relative paths — the commit
-    * step shared by the in-place rewrite verbs ([[deleteWhere]],
-    * [[upsertByKey]]): new leaf files land next to the files they
-    * supersede (each partition dir already exists — the superseded
-    * files came from it — but mkdirs is cheap insurance against
-    * empty renames). `_`/`.`-prefixed names stay behind: they are
-    * writer metadata (`_SUCCESS`), invisible to data reads either
-    * way. */
+  /** Mirror-move every non-aux leaf of a staging `tmp` tree into
+    * `destRoot`, preserving partition-relative paths, and record each
+    * moved file in `moved` as it lands — [[commit]]'s step 3, whose
+    * rollback drops exactly those. `_`/`.`-prefixed names stay behind:
+    * they are writer metadata (`_SUCCESS`), invisible to data reads
+    * either way. */
   private def moveTreeInto(fs: org.apache.hadoop.fs.FileSystem,
-                           tmp: org.apache.hadoop.fs.Path,
-                           destRoot: org.apache.hadoop.fs.Path,
-                           verb: String): Unit = {
+                           tmp: Path, destRoot: Path, verb: String,
+                           moved: scala.collection.mutable.Buffer[Path]): Unit = {
     def isAux(n: String) = n.startsWith("_") || n.startsWith(".")
-    def walk(cur: org.apache.hadoop.fs.Path,
-             destDir: org.apache.hadoop.fs.Path): Unit =
+    def walk(cur: Path, destDir: Path): Unit =
       for (st <- fs.listStatus(cur)) {
         val n = st.getPath.getName
         if (st.isDirectory) {
-          if (!isAux(n))
-            walk(st.getPath, new org.apache.hadoop.fs.Path(destDir, n))
+          if (!isAux(n)) walk(st.getPath, new Path(destDir, n))
         } else if (!isAux(n)) {
           fs.mkdirs(destDir)
-          val dest = new org.apache.hadoop.fs.Path(destDir, n)
+          val dest = new Path(destDir, n)
           require(!fs.exists(dest),
             s"$verb: target $dest already exists")
           require(fs.rename(st.getPath, dest),
             s"$verb: failed to move $n into $destDir")
+          moved += dest
         }
       }
     walk(tmp, destRoot)
@@ -3781,6 +3858,50 @@ object Layout {
     destFs.makeQualified(store).toString
   }
 
+  /** One live manifest row's standing against a box conjunction —
+    * what every box-driven DML verb classifies by. `covered` PROVES
+    * every row matches, so the file can drop unopened: each box's range
+    * holds the file's `[min, max]` AND its `nulls_<k>` count is 0 (min
+    * and max ignore nulls, so without the count a range-covered file
+    * could still hold null-key rows a value predicate must not touch).
+    * Any null verdict — null stats, a manifest predating the null
+    * counts ([[nullsColOf]]) — is false, and a sparse or half-open box
+    * is never range-proved. `disjoint` is [[scanPruned]]'s skip
+    * predicate. The proofs stay valid on a vectorized file: all
+    * physical rows match, so the live subset does too. */
+  private final case class Verdict(file: String, rows: Long,
+                                   dvPath: Option[String], dvRows: Long,
+                                   covered: Boolean, disjoint: Boolean) {
+    /** Physical rows minus the deletion vector's. */
+    def liveRows: Long = rows - dvRows
+    /** Neither proof holds: the file may hold a match. */
+    def partial: Boolean = !covered && !disjoint
+  }
+
+  /** Every live manifest row's [[Verdict]] — one manifest-sized
+    * collect, the same bound as [[scanPruned]] planning. */
+  private def verdictsOf(scope: Scope, boxes: Seq[PruneBox]): Seq[Verdict] = {
+    val mSchema = scope.mSchema
+    val covered = boxes.map {
+      case _: KeySetBox | _: TypedKeySetBox | _: TypedBoundsBox | _: TsMicrosBox | _: TsMicrosSetBox =>
+        lit(false)
+      case b =>
+        val (lo, hi) = decodeBounds(mSchema, b)
+        col(s"min_${b.column}") >= lo && col(s"max_${b.column}") <= hi &&
+          nullsColOf(mSchema, b.column) === 0L
+    }.reduce(_ && _)
+    val disjoint = boxes.map(skipExprOf(mSchema, _)).reduce(_ || _)
+    scope.manifest.select(col("file"), col("n_rows"),
+        dvPathExprOf(mSchema), dvRowsExprOf(mSchema),
+        coalesce(covered, lit(false)), disjoint)
+      .collect().toSeq.map(r => Verdict(r.getString(0), r.getLong(1),
+        Option(r.getString(2)), r.getLong(3), r.getBoolean(4), r.getBoolean(5)))
+  }
+
+  /** file → deletion-vector store of the vectorized `verdicts`. */
+  private def dvOf(verdicts: Seq[Verdict]): Map[String, String] =
+    verdicts.flatMap(v => v.dvPath.map(v.file -> _)).toMap
+
   /** Per-file outcome counts of a [[deleteWhereDv]] call.
     * `rowsDeleted` counts live rows only (covered files' physical
     * rows minus their already-deleted positions, plus the new
@@ -3809,11 +3930,11 @@ object Layout {
     * away. Null-key rows survive (three-valued `DELETE WHERE`), and
     * re-running the same call is a no-op by construction.
     *
-    * Crash windows, loud not silent: the DV store commits BEFORE the
-    * covered files retire and the manifest is patched — an orphaned
-    * store (crash before the patch) is referenced by nothing,
-    * invisible to every read, and reaped by [[vacuumGenerations]];
-    * the retire/patch windows are [[deleteWhere]]'s. On an untracked
+    * Crash windows, loud not silent: the DV store is written BEFORE
+    * [[commit]] retires the covered files and patches the manifest —
+    * an orphaned store (a crash or a lost OCC race before the patch)
+    * is referenced by nothing, invisible to every read, and reaped by
+    * [[vacuumGenerations]]; the other windows are [[commit]]'s. On an untracked
     * layout the superseded stores (old vectors of re-deleted files)
     * are deleted once unreferenced; generation-tracked layouts keep
     * them for snapshot reads until vacuum proves them unreferenced. */
@@ -3822,45 +3943,18 @@ object Layout {
                     verifyCoverage: Boolean = true,
                     expectedGen: Option[Long] = None): DeleteDvStats = {
     require(boxes.nonEmpty, "deleteWhereDv needs at least one key box")
-    requireEncodingStablePath(dir)
-    val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireExpectedGen(fs, dir, expectedGen, "deleteWhereDv")
-    val manifest = loadManifest(spark, dir)
-    val mSchema = manifest.schema
-    val keyCols = manifestKeysOf(mSchema)
-    require(keyCols.nonEmpty, s"$dir carries no manifest keys")
-    // covered/disjoint proofs are deleteWhere's, off the same single
-    // sources ([[skipExprOf]] / bounds decoding) — the two delete
-    // flavors cannot drift on what "fully deletable" means. Covered
-    // stays correct on an already-vectorized file: all physical rows
-    // match, so dropping the file drops its live subset
-    val covered = boxes.map {
-      case _: KeySetBox | _: TypedKeySetBox | _: TypedBoundsBox | _: TsMicrosBox | _: TsMicrosSetBox =>
-        lit(false) // sparse/half-open forms are never range-proved
-      case b =>
-        val (lo, hi) = decodeBounds(mSchema, b)
-        col(s"min_${b.column}") >= lo && col(s"max_${b.column}") <= hi &&
-          nullsColOf(mSchema, b.column) === 0L
-    }.reduce(_ && _)
-    val disjoint = boxes.map(skipExprOf(mSchema, _)).reduce(_ || _)
-    val verdicts = manifest.select(col("file"), col("n_rows"),
-        dvPathExprOf(mSchema).as("dv_path"),
-        dvRowsExprOf(mSchema).as("dv_rows"),
-        coalesce(covered, lit(false)).as("covered"),
-        disjoint.as("disjoint"))
-      .collect()
-    val dropFiles = verdicts.filter(_.getBoolean(4))
-      .map(r => (r.getString(0), r.getLong(1) - r.getLong(3),
-        Option(r.getString(2))))
-    val candidates = verdicts
-      .filter(r => !r.getBoolean(4) && !r.getBoolean(5))
-      .map(r => (r.getString(0), Option(r.getString(2)), r.getLong(3)))
-    lazy val schema = liveSchemaOf(spark, dir)
+    val scope = scopeOf(spark, dir, expectedGen, "deleteWhereDv")
+    val (fs, manifest, mSchema) = (scope.fs, scope.manifest, scope.mSchema)
+    require(scope.keys.nonEmpty, s"$dir carries no manifest keys")
+    // the covered/disjoint proofs are deleteWhere's ([[verdictsOf]]).
+    // Covered stays correct on an already-vectorized file: all physical
+    // rows match, so dropping the file drops its live subset
+    val verdicts = verdictsOf(scope, boxes)
+    val dropFiles = verdicts.filter(_.covered)
+    val candidates = verdicts.filter(_.partial)
+    val schema = scope.schema
     if (verifyCoverage)
-      requireManifestCovers(spark,
-        spark.read.schema(schema).parquet(dir),
-        verdicts.map(_.getString(0)).toSet, dir,
+      scope.requireCovered(verdicts.map(_.file).toSet,
         "their matching rows would survive the delete")
     if (dropFiles.isEmpty && candidates.isEmpty)
       return DeleteDvStats(0, 0, 0L)
@@ -3872,10 +3966,9 @@ object Layout {
     var newPositions = 0L
     if (candidates.nonEmpty) {
       val pred = boxes.map(residualExprOf(mSchema, _)).reduce(_ && _)
-      val candFiles = candidates.map(_._1).toIndexedSeq
-      val candDv = candidates.collect { case (f, Some(p), _) => f -> p }
-        .toMap
-      val oldDvRows = candidates.map(c => metaFormOf(c._1) -> c._3).toMap
+      val candFiles = candidates.map(_.file).toIndexedSeq
+      val candDv = dvOf(candidates)
+      val oldDvRows = candidates.map(c => metaFormOf(c.file) -> c.dvRows).toMap
       val src = {
         val r = spark.read.option("basePath", dir)
         stampDvCols(r.schema(schema)
@@ -3888,7 +3981,7 @@ object Layout {
           // hint only when the manifest PROVED the existing vectors
           // small; else the stores' size stats + AQE decide
           val side =
-            if (candidates.map(_._3).sum <= DvBroadcastRows) broadcast(dv)
+            if (candidates.map(_.dvRows).sum <= DvBroadcastRows) broadcast(dv)
             else dv
           src.join(side,
             src(DvFileCol) === dv("file") && src(DvIdxCol) === dv("idx"),
@@ -3921,7 +4014,7 @@ object Layout {
           val merged = existingOfTouched.fold(newPos)(newPos.unionByName(_))
           val gen =
             if (generationsEnabled(fs, dir)) liveGenOf(fs, dir) else 0L
-          val store = new org.apache.hadoop.fs.Path(dvRoot(dir),
+          val store = new Path(dvRoot(dir),
             s"dv-$gen-${java.util.UUID.randomUUID().toString.take(8)}")
           merged.write.parquet(store.toString)
           // manifest rows for the touched files carry over VERBATIM
@@ -3933,29 +4026,22 @@ object Layout {
     }
     if (dropFiles.isEmpty && touched.isEmpty)
       return DeleteDvStats(0, 0, 0L)
-    val delta = newDvDir.map { storePath =>
-      import spark.implicits._
-      val touchedDf = touched.toSeq.toDF("file", "__graft_new_dv_rows")
+    // a filter and projection of the manifest: driver rows when the
+    // snapshot holds them
+    val repointed = newDvDir.map { storePath =>
       widenWithDvCols(manifest)
-        .join(broadcast(touchedDf), Seq("file"))
+        .filter(col("file").isin(touched.keys.toSeq: _*))
         .withColumn("dv_path", lit(storePath))
-        .withColumn("dv_rows", col("__graft_new_dv_rows"))
-        .drop("__graft_new_dv_rows")
-        .localCheckpoint(true)
+        .withColumn("dv_rows", element_at(typedLit(touched), col("file")))
     }
-    // OCC re-check before the destructive tail — see deleteWhere
-    requireExpectedGen(fs, dir, expectedGen, "deleteWhereDv")
-    val receipt = retireOrDeleteAll(fs, dir, dropFiles.map(_._1).toSeq,
-      "deleteWhereDv")
-    patchManifest(spark, dir, manifest, keyCols,
-      (dropFiles.map(_._1) ++ touched.keys).toSeq, delta,
-      "deleteWhereDv", expectedGen, receipt)
-    // untracked layouts reap superseded stores at once (nothing can
-    // reference them); tracked layouts leave them to vacuum — the
-    // archived manifests still do
-    if (!generationsEnabled(fs, dir)) reapUnreferencedDvStores(spark, fs, dir)
+    // the covered files retire; the touched files stay live, only
+    // their rows are replaced by the repointed ones
+    val dropped = dropFiles.map(_.file)
+    commit(spark, scope, "deleteWhereDv", expectedGen, Nil, dropped,
+      dvOf(dropFiles ++ candidates.filter(c => touched.contains(c.file))),
+      repointed = repointed)
     DeleteDvStats(dropFiles.length, touched.size,
-      dropFiles.map(_._2).sum + newPositions)
+      dropFiles.map(_.liveRows).sum + newPositions)
   }
 
   /** Delete every `_graft_dv` store no retained manifest references —
@@ -4034,31 +4120,11 @@ object Layout {
     * same bound as [[scanPruned]] planning) plus file-count-sized
     * listings. The rewrite is one job over ONLY the partial files.
     *
-    * In-place mutation discipline (new data commits before old data
-    * or metadata is destroyed, manifest replaced last via the
-    * temp-dir + rename path): survivors are written under an
-    * `_`-prefixed scratch dir (invisible to data reads), MOVED into
-    * the directory, and only then are the old partial + covered
-    * files deleted and the manifest patched (rows for removed files
-    * dropped, stats rows for the new files appended — computed from
-    * one delta pass over just the new files). Every crash window
-    * degrades loudly, never silently: before the moves the directory
-    * is unchanged; between move and old-file delete the default
-    * `verifyCoverage` on any later read flags the uncovered new
-    * files (duplicate rows are PRESENT but unreadable-by-default,
-    * not silently served); between old-file delete and manifest
-    * replace, a pruned read that selects a removed file fails on the
-    * missing path. Recovery is window-specific, never automatic: a
-    * crash BEFORE any move leaves the directory unchanged (re-run
-    * verbatim); after moves but before the old-file delete,
-    * [[quarantineUncovered]] moves the manifest-uncovered survivors
-    * aside (they are fully re-derivable from the still-present
-    * partials — discard the quarantine) and the re-run proceeds;
-    * after the old-file delete, rebuild the manifest over the
-    * surviving directory with [[buildFileManifest]]. A re-run
-    * without that repair fails loudly on the coverage check — by
-    * design, since the engine cannot distinguish delete debris from
-    * crashed out-of-band appends whose rows a deletion would lose.
+    * The survivors stage under `_graft_delete_tmp` and commit through
+    * [[commit]]: moved in, then the partial and covered files retired
+    * or deleted, then the manifest patched once (rows for removed
+    * files dropped, stats rows for the new files appended). Its OCC
+    * rollback and crash windows are this verb's.
     *
     * Hive-partitioned layouts work in place too — the GDPR shape is
     * a delete by a DATA column (user id) across a date-partitioned
@@ -4118,62 +4184,25 @@ object Layout {
       expectedGen: Option[Long], insert: Option[DataFrame],
       label: String): ReplaceStats = {
     require(boxes.nonEmpty, s"$label needs at least one key box")
-    requireEncodingStablePath(dir)
-    val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireExpectedGen(fs, dir, expectedGen, label)
-    val manifest = loadManifest(spark, dir)
-    val mSchema = manifest.schema
-    val keyCols = manifestKeysOf(mSchema)
-    // a file is DROPPABLE only when every box PROVES full coverage —
-    // range inside the box AND zero null keys; any null verdict
-    // (null stats, unknown null counts — [[nullsColOf]]) falls
-    // through to false, demoting the file to the rewrite path. A
-    // sparse SET box can never be range-proved, so it demotes too
-    val covered = boxes.map {
-      case _: KeySetBox | _: TypedKeySetBox | _: TypedBoundsBox | _: TsMicrosBox | _: TsMicrosSetBox =>
-        lit(false) // sparse/half-open forms are never range-proved
-      case b =>
-        val (lo, hi) = decodeBounds(mSchema, b)
-        col(s"min_${b.column}") >= lo && col(s"max_${b.column}") <= hi &&
-          nullsColOf(mSchema, b.column) === 0L
-    }.reduce(_ && _)
-    // DISJOINT is scanPruned's skip predicate, from the same source.
-    // Live rows (physical minus any deletion vector) drive the
-    // accounting; the covered-drop proof stays valid on a vectorized
-    // file (all physical rows match ⇒ the live subset does too)
-    val disjoint = boxes.map(skipExprOf(mSchema, _)).reduce(_ || _)
-    val verdicts = manifest.select(col("file"),
-        (col("n_rows") - dvRowsExprOf(mSchema)).as("live_rows"),
-        coalesce(covered, lit(false)).as("covered"), disjoint.as("disjoint"),
-        dvPathExprOf(mSchema).as("dv_path"))
-      .collect()
-    val dropFiles = verdicts.filter(_.getBoolean(2))
-      .map(r => r.getString(0) -> r.getLong(1))
-    val rewriteFiles = verdicts
-      .filter(r => !r.getBoolean(2) && !r.getBoolean(3))
-      .map(r => r.getString(0) -> r.getLong(1))
-    val rewriteDv = verdicts
-      .filter(r => !r.getBoolean(2) && !r.getBoolean(3) && !r.isNullAt(4))
-      .map(r => r.getString(0) -> r.getString(4)).toMap
-    lazy val schema = liveSchemaOf(spark, dir)
-    lazy val dirFrame = spark.read.schema(schema)
-      .parquet(dir)
+    val scope = scopeOf(spark, dir, expectedGen, label)
+    val mSchema = scope.mSchema
+    val verdicts = verdictsOf(scope, boxes)
+    val dropFiles = verdicts.filter(_.covered)
+    val rewriteFiles = verdicts.filter(_.partial)
     if (verifyCoverage)
       // same guard as scanPruned's, sharper consequence: a non-empty
       // file the manifest misses would KEEP its matching rows — a
       // silent delete violation, not just a dropped read
-      requireManifestCovers(spark, dirFrame,
-        verdicts.map(_.getString(0)).toSet, dir,
+      scope.requireCovered(verdicts.map(_.file).toSet,
         "their matching rows would survive the delete")
     // insert-side validation BEFORE anything lands (replaceWhere):
     // exact write-schema compatibility (a backfill never evolves),
     // STRICT box containment — every incoming row must satisfy the
     // conjunction it claims to replace — and CHECK constraints over
     // the batch, the appendWithManifest discipline
-    val insPartCols = insert.map { ins =>
-      val cols = hivePartColsChecked(fs, hDir, dirFrame.schema)
-      requireWriteCompatible(ins.schema, dirFrame.schema, cols, dir)
+    insert.foreach { ins =>
+      requireWriteCompatible(ins.schema, scope.dirFrame.schema,
+        scope.partCols, dir)
       val contain = boxes.map(residualExprOf(mSchema, _)).reduce(_ && _)
       val leaked = ins.where(!coalesce(contain, lit(false))).head(1)
       require(leaked.isEmpty,
@@ -4182,119 +4211,49 @@ object Layout {
           " — every inserted row must satisfy the WHERE boxes, or the " +
           "backfill silently leaks rows into regions it never named")
       requireBatchSatisfies(spark, dir, ins, label)
-      cols
     }
     if (dropFiles.isEmpty && rewriteFiles.isEmpty && insert.isEmpty)
       return ReplaceStats(0, 0, 0, 0L, 0L)
-    val before =
-      if (rewriteFiles.nonEmpty || insert.isDefined)
-        dirFrame.inputFiles.toSet
-      else Set.empty[String]
-    // rewrite FIRST: new data must be durable before anything old is
-    // destroyed. The keep predicate is the null-safe negation of the
-    // box conjunction; hashing on the source file name gives each
-    // partial file its own output partition (modulo benign hash
-    // collisions), so a clustered layout's surviving files keep
-    // their tight key ranges
-    var newFiles = Seq.empty[String]
-    var newRows = 0L
-    if (rewriteFiles.nonEmpty) {
+    // the partial files' survivors keep `NOT coalesce(pred, false)`;
+    // hashing on the source file name gives each partial file its own
+    // output partition (modulo benign hash collisions), so a clustered
+    // layout's surviving files keep their tight key ranges. The read
+    // applies deletion vectors (the outputs are vector-free) and, with
+    // basePath anchoring, materializes k=v path columns so a box on a
+    // partition column evaluates row-side; partitionBy routes the
+    // survivors back and strips them from file contents again
+    val rewrite = Option.when(rewriteFiles.nonEmpty) {
       val pred = boxes.map(residualExprOf(mSchema, _)).reduce(_ && _)
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/_graft_delete_tmp")
-      val srcFiles = rewriteFiles.map(_._1).toIndexedSeq
-      // basePath anchoring: on a hive-partitioned layout the k=v
-      // path columns materialize, so a box on a partition column
-      // evaluates row-side too (a no-op on flat dirs). Partition
-      // columns come from the path walk ([[hivePartColsOf]]); they
-      // route the survivors back into their partition directories
-      // via partitionBy (which strips them from file contents again,
-      // matching the original layout). The sidecar schema (when the
-      // layout has evolved) keeps added columns resolvable: a
-      // rewritten pre-evolution file materializes them as nulls —
-      // the values its rows denote
-      // vectorized partials read MINUS their deletion vectors — the
-      // rewrite materializes the vector away (its output files are
-      // DV-free and the old manifest rows, vector pointers included,
-      // are removed below)
-      val src = readFilesOf(spark, dir, srcFiles, schema, dv = rewriteDv,
-        srcCol = Some("__graft_src"))
-      // src reads with basePath, so Spark's partition discovery
-      // materializes the real k=v path columns in its schema — the
-      // cross-check's reference
-      val partCols = hivePartColsChecked(fs, hDir,
-        org.apache.spark.sql.types.StructType(
-          src.schema.filterNot(_.name == "__graft_src")))
-      val survivors = src
-        .where(!coalesce(pred, lit(false)))
-        .repartition(rewriteFiles.length, col("__graft_src"))
-        .drop("__graft_src")
-      val w = survivors.write.mode("overwrite")
+      val src = readFilesOf(spark, dir, rewriteFiles.map(_.file), scope.schema,
+        dv = dvOf(rewriteFiles), srcCol = Some("__graft_src"))
+      stageOf(scope, "_graft_delete_tmp", scope.partCols,
+        src.where(!coalesce(pred, lit(false)))
+          .repartition(rewriteFiles.length, col("__graft_src"))
+          .drop("__graft_src"))
+    }
+    // the INSERT half (replaceWhere), routed like the append path
+    val inserting = insert.map(stageOf(scope, "_graft_replace_tmp",
+      scope.partCols, _))
+    val removed = dropFiles ++ rewriteFiles
+    val done = commit(spark, scope, label, expectedGen,
+      rewrite.toSeq ++ inserting, removed.map(_.file), dvOf(removed))
+    val newRows = if (rewrite.isEmpty) 0L else done.rows.head
+    ReplaceStats(dropFiles.length, rewriteFiles.length,
+      if (inserting.isEmpty) 0 else done.files.last.length,
+      removed.map(_.liveRows).sum - newRows,
+      if (inserting.isEmpty) 0L else done.rows.last)
+  }
+
+  /** A [[Stage]] writing `rows` under `dir/tmpName`, routed into `k=v`
+    * subdirectories by `partCols`, to move into the layout root. */
+  private def stageOf(scope: Scope, tmpName: String, partCols: Seq[String],
+                      rows: DataFrame): Stage = {
+    val tmp = new Path(scope.hDir, tmpName)
+    Stage(tmp, scope.hDir, () => {
+      val w = rows.write.mode("overwrite")
       if (partCols.isEmpty) w.parquet(tmp.toString)
-      else w.partitionBy(partCols.toIndexedSeq: _*).parquet(tmp.toString)
-      moveTreeInto(fs, tmp, hDir, label)
-      fs.delete(tmp, true)
-      newFiles = liveFilesOf(spark, dir, Some(schema)).filterNot(before)
-    }
-    // the INSERT half (replaceWhere): durable under the same
-    // tmp-then-move discipline as the rewrite, BEFORE anything old
-    // is destroyed; partition-column routing mirrors the append path
-    var insFiles = Seq.empty[String]
-    var insRows = 0L
-    insert.foreach { ins =>
-      val cols = insPartCols.get
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/_graft_replace_tmp")
-      val w = ins.write.mode("overwrite")
-      if (cols.isEmpty) w.parquet(tmp.toString)
-      else w.partitionBy(cols.toIndexedSeq: _*).parquet(tmp.toString)
-      moveTreeInto(fs, tmp, hDir, label)
-      fs.delete(tmp, true)
-      val newSet = newFiles.toSet
-      insFiles = liveFilesOf(spark, dir, Some(schema))
-        .filterNot(before).filterNot(newSet)
-    }
-    // two deltas over DISJOINT file sets (no duplicated footer I/O),
-    // separately summed so the stats can tell deleted from inserted;
-    // basePath: delta stats for a partition-column key must see the
-    // k=v path columns (harmless on flat dirs); bloom keys follow
-    // the stored format
-    def deltaOf(files: Seq[String]): Option[DataFrame] =
-      if (files.isEmpty) None
-      else Some(manifestOf(readFilesOf(spark, dir, files, schema),
-          keyCols, bloomKeysOf(mSchema))
-        .localCheckpoint(true))
-    // coalesce: an all-empty rewrite leaves only zero-row part
-    // files, whose delta manifest is empty (sum → null)
-    def rowsOf(d: DataFrame): Long =
-      d.agg(coalesce(sum("n_rows"), lit(0L))).collect()(0).getLong(0)
-    val survDelta = deltaOf(newFiles)
-    survDelta.foreach(d => newRows = rowsOf(d))
-    val insDelta = deltaOf(insFiles)
-    insDelta.foreach(d => insRows = rowsOf(d))
-    val delta = (survDelta, insDelta) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
-    // destroy (or retire, on a generation-tracked layout) old data
-    // only now: covered files drop unopened (the whole point of the
-    // null-count stats), partial files are superseded by their
-    // just-committed survivors. OCC re-check FIRST: a writer that
-    // committed during the rewrite must be detected before anything
-    // moves — retirement under a superseded label would strand the
-    // winner's live files
-    requireExpectedGen(fs, dir, expectedGen, label)
-    val receipt = retireOrDeleteAll(fs, dir,
-      (dropFiles ++ rewriteFiles).map(_._1), label)
-    // manifest last ([[patchManifest]]'s temp-dir + rename replace)
-    patchManifest(spark, dir, manifest, keyCols,
-      (dropFiles ++ rewriteFiles).map(_._1).toSeq, delta,
-      label, expectedGen, receipt)
-    // rewriting/dropping vectorized files strands their stores on an
-    // untracked layout (no archived manifest can reference them)
-    if (!generationsEnabled(fs, dir) && hasDvCols(mSchema))
-      reapUnreferencedDvStores(spark, fs, dir)
-    ReplaceStats(dropFiles.length, rewriteFiles.length, insFiles.length,
-      dropFiles.map(_._2).sum + rewriteFiles.map(_._2).sum - newRows,
-      insRows)
+      else w.partitionBy(partCols: _*).parquet(tmp.toString)
+    })
   }
 
   /** Per-file outcome counts of an [[updateWhere]] call. */
@@ -4311,11 +4270,11 @@ object Layout {
     * [[scanPruned]]'s skip predicate, so at 100 TB the rewrite cost
     * is proportional to the files that might hold a match, never the
     * table — the same pay-for-the-touch contract as [[deleteWhere]],
-    * whose rewrite tail this mirrors exactly (hash-by-source-file
-    * output partitioning keeps surviving key ranges tight,
-    * partition-column routing via partitionBy, delta stats patch,
-    * OCC re-check before the destructive tail, retirement receipts
-    * for the undo path).
+    * whose rewrite this mirrors (hash-by-source-file output
+    * partitioning keeps surviving key ranges tight, partition-column
+    * routing via partitionBy); the rewrite stages under
+    * `_graft_update_tmp` and commits through [[commit]] (its OCC
+    * rollback and crash windows).
     *
     * Validation happens BEFORE anything lands: set columns must
     * exist, must NOT be partition columns (updating one moves rows
@@ -4342,37 +4301,22 @@ object Layout {
     require(set.nonEmpty, "updateWhere needs at least one SET column")
     require(set.map(_._1).distinct.length == set.length,
       s"duplicate SET column in ${set.map(_._1).mkString(", ")}")
-    requireEncodingStablePath(dir)
-    val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireExpectedGen(fs, dir, expectedGen, "updateWhere")
-    val manifest = loadManifest(spark, dir)
-    val mSchema = manifest.schema
-    val keyCols = manifestKeysOf(mSchema)
-    val disjoint = boxes.map(skipExprOf(mSchema, _)).reduce(_ || _)
-    val verdicts = manifest.select(col("file"), disjoint.as("disjoint"),
-        dvPathExprOf(mSchema).as("dv_path"))
-      .collect()
-    val touched = verdicts.filterNot(_.getBoolean(1)).map(_.getString(0))
-    val touchedDv = verdicts
-      .filter(r => !r.getBoolean(1) && !r.isNullAt(2))
-      .map(r => r.getString(0) -> r.getString(2)).toMap
-    lazy val schema = liveSchemaOf(spark, dir)
-    lazy val dirFrame = spark.read.schema(schema)
-      .parquet(dir)
+    val scope = scopeOf(spark, dir, expectedGen, "updateWhere")
+    val mSchema = scope.mSchema
+    val verdicts = verdictsOf(scope, boxes)
+    val touched = verdicts.filterNot(_.disjoint)
     if (verifyCoverage)
-      requireManifestCovers(spark, dirFrame,
-        verdicts.map(_.getString(0)).toSet, dir,
+      scope.requireCovered(verdicts.map(_.file).toSet,
         "their matching rows would dodge the update")
     if (touched.isEmpty)
       return UpdateStats(0, verdicts.length, 0L)
     val pred = boxes.map(residualExprOf(mSchema, _)).reduce(_ && _)
     val hit = coalesce(pred, lit(false))
-    val src = readFilesOf(spark, dir, touched.toIndexedSeq, schema,
-      dv = touchedDv, srcCol = Some("__graft_src"))
+    val src = readFilesOf(spark, dir, touched.map(_.file), scope.schema,
+      dv = dvOf(touched), srcCol = Some("__graft_src"))
     val dataSchema = org.apache.spark.sql.types.StructType(
       src.schema.filterNot(_.name == "__graft_src"))
-    val partCols = hivePartColsChecked(fs, hDir, dataSchema)
+    val partCols = scope.partCols
     for ((c, e) <- set) {
       require(dataSchema.fieldNames.contains(c),
         s"SET column $c is not a column of $dir " +
@@ -4424,27 +4368,11 @@ object Layout {
     requireBatchSatisfies(spark, dir,
       updated.where(col("__graft_hit"))
         .drop("__graft_src", "__graft_hit"), "updateWhere")
-    val before = dirFrame.inputFiles.toSet
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/_graft_update_tmp")
-    val rewritten = updated
-      .repartition(touched.length, col("__graft_src"))
-      .drop("__graft_src", "__graft_hit")
-    val w = rewritten.write.mode("overwrite")
-    if (partCols.isEmpty) w.parquet(tmp.toString)
-    else w.partitionBy(partCols.toIndexedSeq: _*).parquet(tmp.toString)
-    moveTreeInto(fs, tmp, hDir, "updateWhere")
-    fs.delete(tmp, true)
-    val newFiles = liveFilesOf(spark, dir, Some(schema)).filterNot(before)
-    val delta = manifestOf(readFilesOf(spark, dir, newFiles, schema),
-        keyCols, bloomKeysOf(mSchema))
-      .localCheckpoint(true)
-    // OCC re-check before the destructive tail — see deleteWhere
-    requireExpectedGen(fs, dir, expectedGen, "updateWhere")
-    val receipt = retireOrDeleteAll(fs, dir, touched.toSeq, "updateWhere")
-    patchManifest(spark, dir, manifest, keyCols, touched.toSeq,
-      Some(delta), "updateWhere", expectedGen, receipt)
-    if (!generationsEnabled(fs, dir) && touchedDv.nonEmpty)
-      reapUnreferencedDvStores(spark, fs, dir)
+    commit(spark, scope, "updateWhere", expectedGen,
+      Seq(stageOf(scope, "_graft_update_tmp", partCols, updated
+        .repartition(touched.length, col("__graft_src"))
+        .drop("__graft_src", "__graft_hit"))),
+      touched.map(_.file), dvOf(touched))
     UpdateStats(touched.length, verdicts.length - touched.length,
       rowsUpdated)
   }
@@ -4503,17 +4431,10 @@ object Layout {
     * delta, their wide stats simply never qualify for skipping until
     * the next recluster).
     *
-    * In-place mutation discipline (identical to [[deleteWhere]]'s,
-    * and the same crash windows): survivors commit under an
-    * `_`-prefixed scratch dir and MOVE in, the inserts append, and
-    * only then are the superseded files deleted and the manifest
-    * patched (temp-dir + rename). Every window degrades loudly —
-    * before the moves the directory is unchanged (re-run verbatim);
-    * between the moves/append and the old-file delete, coverage-
-    * guarded reads flag the uncovered new files
-    * ([[quarantineUncovered]] recovers — the quarantined survivors
-    * and inserts are re-derivable / re-appendable); after the
-    * old-file delete, rebuild with [[buildFileManifest]]. The
+    * The survivors stage under `_graft_upsert_tmp` and the inserts
+    * under `_graft_insert_tmp`; both move in through one [[commit]]
+    * (its OCC rollback and crash windows), which then retires or
+    * deletes the superseded files and patches the manifest. The
     * `updates` frame is pinned via one eager localCheckpoint before
     * first use, so a nondeterministic source cannot fork between the
     * contract probes, the anti-join, and the insert write.
@@ -4595,29 +4516,19 @@ object Layout {
                           expectedGen: Option[Long],
                           insertUpdates: Boolean): UpsertStats = {
     val verb = if (insertUpdates) "upsertByKeys" else "deleteMatching"
-    requireEncodingStablePath(dir)
     require(keys.nonEmpty, s"$verb needs at least one key column")
     require(keys.distinct == keys,
       s"duplicate merge key columns: ${keys.mkString(", ")}")
-    val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireExpectedGen(fs, dir, expectedGen, verb)
-    val manifest = loadManifest(spark, dir)
-    val mSchema = manifest.schema
-    val keyCols = manifestKeysOf(mSchema)
-    for (key <- keys) require(keyCols.contains(key),
+    val scope = scopeOf(spark, dir, expectedGen, verb)
+    val (manifest, mSchema) = (scope.manifest, scope.mSchema)
+    for (key <- keys) require(scope.keys.contains(key),
       s"$verb key $key is not a stored manifest key at $dir " +
-        s"(stored: ${keyCols.mkString(", ")})")
-    // ONE pre-upsert relation serves the schema check and the
-    // before-files snapshot (at 100k-file scale each read is a full
-    // listing + footer resolution); the sidecar schema (when the
-    // layout has evolved) is the authoritative column set the
-    // updates must carry in full — whole rows are inserted verbatim
-    val schema = liveSchemaOf(spark, dir)
-    val current = spark.read.schema(schema)
-      .parquet(dir)
-    val before = current.inputFiles.toSet
-    val partCols = hivePartColsChecked(fs, hDir, current.schema)
+        s"(stored: ${scope.keys.mkString(", ")})")
+    // the sidecar schema (when the layout has evolved) is the
+    // authoritative column set the updates must carry in full — whole
+    // rows are inserted verbatim
+    val current = scope.dirFrame
+    val partCols = scope.partCols
     if (insertUpdates)
       requireWriteCompatible(updates.schema, current.schema, partCols, dir)
     else for (k <- keys) {
@@ -4679,82 +4590,36 @@ object Layout {
       // Live rows (physical minus any deletion vector) drive the
       // replaced-rows accounting; touched vectorized files rewrite
       // MINUS their vectors (materializing them away)
-      val verdicts = manifest.select(col("file"),
-          (col("n_rows") - dvRowsExprOf(mSchema)).as("live_rows"),
-          boxes.map(skipExprOf(mSchema, _)).reduce(_ || _).as("skip"),
-          dvPathExprOf(mSchema).as("dv_path"))
-        .collect()
-      val touched = verdicts.filter(!_.getBoolean(2))
-        .map(r => r.getString(0) -> r.getLong(1))
-      val touchedDv = verdicts
-        .filter(r => !r.getBoolean(2) && !r.isNullAt(3))
-        .map(r => r.getString(0) -> r.getString(3)).toMap
+      val verdicts = verdictsOf(scope, boxes)
+      val touched = verdicts.filterNot(_.disjoint)
       if (verifyCoverage)
         // sharper consequence than the read side's: a file the
         // manifest misses would KEEP its matched rows, and the
         // inserted updates would duplicate them
-        requireManifestCovers(spark, current,
-          verdicts.map(_.getString(0)).toSet, dir,
+        scope.requireCovered(verdicts.map(_.file).toSet,
           "their matched rows would survive the upsert as duplicates")
-      // rewrite FIRST: survivors of the touched files (anti-join on
-      // the key — null-safe: a null base key never equals an update
-      // key) commit to scratch and move in before anything old is
-      // destroyed; hashing on the source file name keeps each
-      // rewritten file's key range as tight as its source's
-      if (touched.nonEmpty) {
-        val tmp = new org.apache.hadoop.fs.Path(s"$dir/_graft_upsert_tmp")
-        val srcFiles = touched.map(_._1).toIndexedSeq
-        val src = readFilesOf(spark, dir, srcFiles, schema,
-          dv = touchedDv, srcCol = Some("__graft_src"))
-        val survivors = src
+      // the survivors of the touched files (anti-join on the key —
+      // null-safe: a null base key never equals an update key), hashed
+      // on the source file name so each rewritten file's key range
+      // stays as tight as its source's; then the inserts — every
+      // update row, landing exactly once (the matched keys' old rows
+      // are absent from the survivors). The delete arm inserts nothing
+      val rewrite = Option.when(touched.nonEmpty) {
+        val src = readFilesOf(spark, dir, touched.map(_.file), scope.schema,
+          dv = dvOf(touched), srcCol = Some("__graft_src"))
+        stageOf(scope, "_graft_upsert_tmp", partCols, src
           .join(upd.select(keys.map(col): _*), keys, "left_anti")
           .repartition(touched.length, col("__graft_src"))
-          .drop("__graft_src")
-        val w = survivors.write.mode("overwrite")
-        if (partCols.isEmpty) w.parquet(tmp.toString)
-        else w.partitionBy(partCols.toIndexedSeq: _*).parquet(tmp.toString)
-        moveTreeInto(fs, tmp, hDir, verb)
-        fs.delete(tmp, true)
+          .drop("__graft_src"))
       }
-      // the inserts: every update row appends as new data (matched
-      // keys' old rows are already absent from the just-committed
-      // survivors, so this lands the NEW row exactly once). The
-      // delete arm appends nothing
-      if (insertUpdates) {
-        val wI = upd.write.mode("append")
-        if (partCols.isEmpty) wI.parquet(dir)
-        else wI.partitionBy(partCols.toIndexedSeq: _*).parquet(dir)
-      }
-      // delta stats over everything new (survivor rewrites + inserts)
-      // in one pass. A delete whose touched files were FULLY matched
-      // leaves no new file — a None delta (nothing survived the
-      // rewrite), never an unreadable empty scan
-      val newFiles = liveFilesOf(spark, dir, Some(schema))
-        .filterNot(before)
-      val delta =
-        if (newFiles.isEmpty) None
-        else Some(manifestOf(readFilesOf(spark, dir, newFiles, schema),
-            keyCols, bloomKeysOf(mSchema))
-          .localCheckpoint(true))
-      val newRows = delta.fold(0L)(_.agg(coalesce(sum("n_rows"), lit(0L)))
-        .collect()(0).getLong(0))
-      // destroy (or retire) old data only now: the touched files are
-      // fully superseded by their survivors + the inserted updates.
-      // OCC re-check first — see deleteWhere's destructive tail
-      requireExpectedGen(fs, dir, expectedGen, verb)
-      val receipt = retireOrDeleteAll(fs, dir, touched.map(_._1).toSeq,
-        verb)
-      // manifest last ([[patchManifest]]'s temp-dir + rename replace)
-      patchManifest(spark, dir, manifest, keyCols,
-        touched.map(_._1).toSeq, delta, verb, expectedGen,
-        receipt)
-      // rewriting vectorized files strands their stores on an
-      // untracked layout (no archived manifest can reference them)
-      if (!generationsEnabled(fs, dir) && touchedDv.nonEmpty)
-        reapUnreferencedDvStores(spark, fs, dir)
+      val inserting = Option.when(insertUpdates)(
+        stageOf(scope, "_graft_insert_tmp", partCols, upd))
+      val newRows = commit(spark, scope, verb, expectedGen,
+        rewrite.toSeq ++ inserting, touched.map(_.file), dvOf(touched))
+        .rows.sum
       // newRows = survivors (+ updCount when inserting), so
       // replaced = touched − survivors either way
-      val touchedRows = touched.map(_._2).sum
+      val touchedRows = touched.map(_.liveRows).sum
       val inserted = if (insertUpdates) updCount else 0L
       UpsertStats(touched.length, verdicts.length - touched.length,
         rowsReplaced = touchedRows + inserted - newRows,
@@ -4842,8 +4707,9 @@ object Layout {
   /** The SAFE recovery verb for a directory whose coverage check
     * fails: MOVE every non-empty data file the manifest does not
     * cover into `quarantineDir`, preserving partition-relative
-    * paths. Nothing is deleted — the engine cannot distinguish a
-    * crashed [[appendWithManifest]]'s real rows from a crashed
+    * paths — the recovery for [[commit]]'s move-in crash window.
+    * Nothing is deleted — the engine cannot distinguish a crashed
+    * [[appendWithManifest]]'s real rows from a crashed
     * [[deleteWhere]]'s duplicate survivors, so both land in
     * quarantine where an operator inspects and either re-appends
     * them (appendWithManifest re-derives their stats from the
@@ -5222,35 +5088,6 @@ object Layout {
                                  filesAfter: Int, worstDepthBefore: Long,
                                  filesKept: Int = 0)
 
-  /** What both OPTIMIZE verbs read before deciding anything: the live
-    * manifest and its stored keys, the in-file clustering keys (stored
-    * keys that are not path-encoded — a partition column is constant
-    * inside its leaf), the partition columns (empty on a flat layout),
-    * the live file listing, and the vectorized files' stores. */
-  private final case class OptimizeScope(
-      manifest: DataFrame, keys: Seq[String], fileKeys: Seq[String],
-      partCols: Seq[String], before: Set[String],
-      dvMap: Map[String, String])
-
-  private def optimizeScope(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, expectedGen: Option[Long],
-                            verb: String): OptimizeScope = {
-    requireEncodingStablePath(dir)
-    val hDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireExpectedGen(fs, dir, expectedGen, verb)
-    val manifest = loadManifest(spark, dir)
-    val keys = manifestKeysOf(manifest.schema)
-    val dirFrame = spark.read.schema(liveSchemaOf(spark, dir)).parquet(dir)
-    val partCols =
-      if (isHivePartitioned(spark, dir))
-        hivePartColsChecked(fs, hDir, dirFrame.schema)
-      else Nil
-    val before = dirFrame.inputFiles.toSet
-    OptimizeScope(manifest, keys, keys.filterNot(partCols.contains),
-      partCols, before, dvMapOf(manifest, before))
-  }
-
   /** The leaf directory of a manifest / listing file URI — the root
     * of a flat layout, the `k=v` leaf of a partitioned one. */
   private def leafOf(file: String): org.apache.hadoop.fs.Path =
@@ -5259,67 +5096,45 @@ object Layout {
   /** The per-leaf rewrite under [[rewriteSelected]] and [[compact]]:
     * `files` group by leaf directory — one group on a flat layout (the
     * root), one per touched leaf on a hive-partitioned tree — and each
-    * group
+    * group's [[Stage]], moving into its leaf,
     *   1. reads under `schema` with its deletion vectors applied
     *      ([[readFilesOf]]), so the output is vector-free — the rewrite
     *      IS the vector purge — and any columns an evolution added are
     *      materialized (null where a row predates them); partition
     *      columns drop, the leaf path re-derives them;
     *   2. [[clusteredRewriteTo]]s over the in-file keys into
-    *      `target(leaf)` with `outputsFor(its files)` outputs.
-    * Returns each leaf with its target. */
+    *      `target(leaf)` with `outputsFor(its files)` outputs. */
   private def rewriteLeaves(spark: org.apache.spark.sql.SparkSession,
                             dir: String, files: Seq[String],
                             schema: org.apache.spark.sql.types.StructType,
                             partCols: Seq[String], fileKeys: Seq[String],
                             dv: Map[String, String],
                             outputsFor: Seq[String] => Int,
-                            target: org.apache.hadoop.fs.Path =>
-                              org.apache.hadoop.fs.Path)
-      : Seq[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)] =
+                            target: Path => Path): Seq[Stage] =
     files.sorted.groupBy(leafOf).toSeq.sortBy(_._1.toString).map {
       case (leaf, group) =>
         val out = target(leaf)
-        clusteredRewriteTo(
+        Stage(out, leaf, () => clusteredRewriteTo(
           readFilesOf(spark, dir, group, schema, dv = dv).drop(partCols: _*),
-          fileKeys, out.toString, outputsFor(group))
-        leaf -> out
+          fileKeys, out.toString, outputsFor(group)))
     }
 
   /** The ONE rewrite core under both OPTIMIZE verbs: the verbs only
     * SELECT (`files`, empty = declined); every layout shape rewrites
-    * the same way:
-    *   1. [[rewriteLeaves]] into a `_`-prefixed scratch dir inside each
-    *      touched leaf;
-    *   2. after every leaf is written, re-check the OCC generation
-    *      (the move-in makes the rewrite visible — see deleteWhere),
-    *      move every leaf in, take ONE delta-stats pass over just the
-    *      new files (read with `basePath` so `k=v` stat keys keep real
-    *      values; bloom keys carry over), and only then retire (tracked)
-    *      or delete the old files;
-    *   3. PATCH the manifest once: unselected files keep their rows
-    *      verbatim (their stats and blooms cannot drift), the delta
-    *      rows append, and the retirement receipt lets an OCC loser
-    *      roll back ([[patchManifest]]).
-    * The manifest is never rebuilt from the data, so a layout carrying
-    * `_graft_dv` stores optimizes like any other.
-    *
-    * Crash windows: between the move-in and the old-file delete,
-    * coverage-guarded reads flag the (duplicate) new files loudly and
-    * [[quarantineUncovered]] recovers — quarantining the new copies
-    * loses nothing, the old files still hold every row; between the
-    * delete and the manifest replace, recovery is the post-delete one
-    * documented on [[deleteWhere]].
+    * the same way — [[rewriteLeaves]] stages each touched leaf under a
+    * `_graft_optimize_tmp` dir inside it, and [[commit]] moves them in
+    * and patches the manifest once: unselected files keep their rows
+    * verbatim (their stats and blooms cannot drift), the new files'
+    * delta rows append. The manifest is never rebuilt from the data,
+    * so a layout carrying `_graft_dv` stores optimizes like any other.
     *
     * The schema sidecar retires only when every live file was
     * rewritten (a kept file may predate an added column, and retiring
     * the sidecar would revert its reads to footer sampling) and the
     * layout is untracked: retained generations still reference
-    * RETIRED pre-evolution files that resolve under it. Deletion-vector
-    * stores are reaped on untracked layouts only, for the same
-    * reason. */
+    * RETIRED pre-evolution files that resolve under it. */
   private def rewriteSelected(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, scope: OptimizeScope,
+                              scope: Scope, dvMap: Map[String, String],
                               files: Seq[String],
                               outputsFor: Seq[String] => Int,
                               worst: Long, verifyCoverage: Boolean,
@@ -5329,10 +5144,6 @@ object Layout {
     if (files.isEmpty)
       return OptimizeStats(reclustered = false, before.size, before.size,
         worst, filesKept = before.size)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mSchema = scope.manifest.schema
-    lazy val schema = liveSchemaOf(spark, dir)
     if (verifyCoverage)
       // the rewrite re-writes the selected files' rows, so rows the
       // manifest never blessed (a crashed delete's duplicate
@@ -5340,32 +5151,19 @@ object Layout {
       // permanent in the new layout; checked over the whole dir so
       // debris in KEPT files fails loudly too instead of surfacing
       // only on the next mutation
-      requireManifestCovers(spark,
-        spark.read.schema(schema).parquet(dir),
+      scope.requireCovered(
         scope.manifest.select("file").collect().map(_.getString(0)).toSet,
-        dir, "the rewrite would silently legitimize their rows into " +
-          "the new layout")
-    val tmps = rewriteLeaves(spark, dir, files, schema, scope.partCols,
-      scope.fileKeys, scope.dvMap, outputsFor,
-      new org.apache.hadoop.fs.Path(_, "_graft_optimize_tmp"))
-    requireExpectedGen(fs, dir, expectedGen, verb)
-    for ((leaf, tmp) <- tmps) {
-      moveTreeInto(fs, tmp, leaf, verb)
-      fs.delete(tmp, true)
-    }
-    val newFiles = liveFilesOf(spark, dir, Some(schema)).filterNot(before)
-    val delta = manifestOf(readFilesOf(spark, dir, newFiles, schema),
-        scope.keys, bloomKeysOf(mSchema))
-      .localCheckpoint(true)
-    val receipt = retireOrDeleteAll(fs, dir, files, verb)
-    patchManifest(spark, dir, scope.manifest, scope.keys, files,
-      Some(delta), verb, expectedGen, receipt)
-    if (!generationsEnabled(fs, dir)) {
-      if (before.subsetOf(files.toSet)) retireSchemaSidecars(fs, dir)
-      if (scope.dvMap.nonEmpty) reapUnreferencedDvStores(spark, fs, dir)
-    }
+        "the rewrite would silently legitimize their rows into the new " +
+          "layout")
+    val selected = files.toSet
+    commit(spark, scope, verb, expectedGen,
+      rewriteLeaves(spark, scope.dir, files, scope.schema, scope.partCols,
+        scope.fileKeys, dvMap, outputsFor, new Path(_, "_graft_optimize_tmp")),
+      files, dvMap.filter(e => selected(e._1)))
+    if (!generationsEnabled(scope.fs, scope.dir) && before.subsetOf(selected))
+      retireSchemaSidecars(scope.fs, scope.dir)
     OptimizeStats(reclustered = true, before.size,
-      liveFilesOf(spark, dir, Some(schema)).length, worst,
+      liveFilesOf(spark, scope.dir, Some(scope.schema)).length, worst,
       filesKept = before.size - files.size)
   }
 
@@ -5410,7 +5208,8 @@ object Layout {
                verifyCoverage: Boolean = true,
                expectedGen: Option[Long] = None): OptimizeStats = {
     require(files >= 1, "optimize needs files >= 1")
-    val scope = optimizeScope(spark, dir, expectedGen, "optimize")
+    val scope = scopeOf(spark, dir, expectedGen, "optimize")
+    val dvMap = dvMapOf(scope.manifest, scope.before)
     val manifest = scope.manifest
     val depths = leafDepthsOf(manifest, scope.keys, fileLeaf)
     val worst = depths.map(_._3).foldLeft(0L)(math.max)
@@ -5421,7 +5220,7 @@ object Layout {
     def leafKey(uri: String) = leafOf(uri).toUri.getPath
     val fired =
       if (scope.partCols.isEmpty) {
-        if (force || worst >= maxDepth || scope.dvMap.nonEmpty)
+        if (force || worst >= maxDepth || dvMap.nonEmpty)
           scope.before.toSeq else Nil
       } else {
         val filesByLeaf = manifest.select("file").collect()
@@ -5431,10 +5230,10 @@ object Layout {
               pathOf(leaf)
           }.toSet ++
           filesByLeaf.filter(_._2 > files).keySet ++
-          scope.dvMap.keySet.map(leafKey)
+          dvMap.keySet.map(leafKey)
         scope.before.toSeq.filter(f => force || firedLeaves(leafKey(f)))
       }
-    rewriteSelected(spark, dir, scope, fired, _ => files, worst,
+    rewriteSelected(spark, scope, dvMap, fired, _ => files, worst,
       verifyCoverage, expectedGen, "optimize")
   }
 
@@ -5489,9 +5288,10 @@ object Layout {
                         expectedGen: Option[Long] = None,
                         minDvRatio: Double = 0.0): OptimizeStats = {
     require(targetRows >= 1, "optimizeSelective needs targetRows >= 1")
-    val scope = optimizeScope(spark, dir, expectedGen, "optimizeSelective")
+    val scope = scopeOf(spark, dir, expectedGen, "optimizeSelective")
+    val dvMap = dvMapOf(scope.manifest, scope.before)
     val manifest = scope.manifest
-    val heavyDv = heavyDvFiles(manifest, scope.dvMap, minDvRatio,
+    val heavyDv = heavyDvFiles(manifest, dvMap, minDvRatio,
       "optimizeSelective")
     val worst = leafDepthsOf(manifest, scope.fileKeys, fileLeaf)
       .map(_._3).foldLeft(0L)(math.max)
@@ -5520,7 +5320,7 @@ object Layout {
       val rows = files.map(rowsByFile).sum
       math.max(1L, (rows + targetRows - 1L) / targetRows).toInt
     }
-    rewriteSelected(spark, dir, scope, selected, outputsFor, worst,
+    rewriteSelected(spark, scope, dvMap, selected, outputsFor, worst,
       verifyCoverage, expectedGen, "optimizeSelective")
   }
 
@@ -5624,7 +5424,8 @@ object Layout {
           bytes(pathOf(new org.apache.hadoop.fs.Path(new java.net.URI(f))))).sum
         math.max(1, math.ceil(leafBytes.toDouble / targetBytes).toInt)
       },
-      leaf => new org.apache.hadoop.fs.Path(outPath + pathOf(leaf).stripPrefix(root)))
+      leaf => new Path(outPath + pathOf(leaf).stripPrefix(root)))
+      .foreach(_.write())
     // the output may live on a DIFFERENT filesystem than the input
     // (the disjointness guard deliberately allows cross-FS pairs) —
     // list it with its own

@@ -382,10 +382,7 @@ object GraftSqlCommands {
             "files_untouched" -> IntegerType, "rows_replaced" -> LongType,
             "rows_upserted" -> LongType),
           s => {
-            val st =
-              if (keyCols.lengthCompare(1) == 0)
-                Layout.upsertByKey(s, dir, df, keyCols.head)
-              else Layout.upsertByKeys(s, dir, df, keyCols)
+            val st = Layout.upsertByKeys(s, dir, df, keyCols)
             Seq(Row(st.filesRewritten, st.filesUntouched, st.rowsReplaced,
               st.rowsUpserted))
           }))

@@ -734,9 +734,31 @@ class DvSpec extends AnyFunSuite with SharedSpark {
       assert(append.size == 6, s"append jobs: $append")
       val optimize = jobsOf(assert(
         Layout.optimizeSelective(spark, dir, targetRows = 200L).reclustered))
-      assert(optimize.size == 19, s"optimizeSelective jobs: $optimize")
+      assert(optimize.size == 18, s"optimizeSelective jobs: $optimize")
       assert(got(Layout.readLayout(spark, dir)) ==
         (expect(1000, _ => true) ++ expect(1000, _ % 10 == 0)).sorted)
+    }
+  }
+
+  test("upsertByKeys, updateWhere and deleteWhere commit in pinned job counts") {
+    withTempDir("graft_dv_dml_jobs_") { dir =>
+      mkLayout(dir)
+      Layout.enableGenerations(spark, dir)
+      val upd = spark.range(100, 110).select(col("id").as("k"),
+        (col("id") % 7).as("g"), (col("id") * 2 + 1).as("v"))
+      // exact job counts of one commit each: a second stats pass, a
+      // separate row count or an inferring listing would each add jobs
+      val upsert = jobsOf(Layout.upsertByKeys(spark, dir, upd, Seq("k")))
+      val update = jobsOf(Layout.updateWhere(spark, dir,
+        Seq(Layout.KeyBox("k", 300L, 320L)), Seq("v" -> (col("v") + 1))))
+      val delete = jobsOf(Layout.deleteWhere(spark, dir,
+        Seq(Layout.KeyBox("k", 500L, 520L))))
+      assert((upsert.size, update.size, delete.size) == (18, 9, 7),
+        s"upsertByKeys jobs: $upsert; updateWhere jobs: $update; " +
+          s"deleteWhere jobs: $delete")
+      assert(got(Layout.readLayout(spark, dir)) == expect(1000, k => k < 500 || k > 520)
+        .map { case (k, g, v) =>
+          (k, g, if ((k >= 100 && k < 110) || (k >= 300 && k <= 320)) v + 1 else v) })
     }
   }
 }

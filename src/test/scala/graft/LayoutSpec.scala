@@ -2182,6 +2182,125 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  /** A tracked 100-row layout (`k` 0..99, `v` = 2k) in four range files. */
+  private def trackedLayout(d: String): Unit = {
+    (0L to 99L).map(k => (k, k * 2)).toDF("k", "v")
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k")
+      .write.parquet(d)
+    Layout.buildFileManifest(spark, d, Seq("k"))
+      .write.mode("overwrite").parquet(s"$d/_graft_manifest")
+    Layout.enableGenerations(spark, d)
+  }
+
+  /** Plays a rival writer inside `verb`'s commit: a watcher thread
+    * waits for `trigger` (the verb's staging dir, or the manifest's
+    * temp dir) to appear under `d`, then plants the archive of the live
+    * generation, so the verb's next OCC check loses. The loss must
+    * leave exactly the pre-verb live files and no `_graft_*_tmp` dir,
+    * and `withGenerationRetry` must then commit. */
+  private def occLossRollsBack[A](d: String, trigger: String)(verb: Long => A): A = {
+    val fsys = new org.apache.hadoop.fs.Path(d)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val g = Layout.currentGeneration(spark, d)
+    val filesBefore = spark.read.parquet(d).inputFiles.toSet
+    val watched = new org.apache.hadoop.fs.Path(s"$d/$trigger")
+    @volatile var planted = false
+    @volatile var stop = false
+    val watcher = new Thread(() => {
+      while (!planted && !stop) {
+        if (fsys.exists(watched)) {
+          fsys.mkdirs(new org.apache.hadoop.fs.Path(s"$d/_graft_history/gen=$g"))
+          planted = true
+        } else Thread.sleep(1)
+      }
+    })
+    watcher.setDaemon(true)
+    watcher.start()
+    try intercept[java.util.ConcurrentModificationException](verb(g))
+    finally { stop = true; watcher.join(10000) }
+    assert(planted, s"the watcher never saw $trigger")
+    assert(spark.read.parquet(d).inputFiles.toSet === filesBefore,
+      "the lost commit must leave exactly the winner's live files")
+    def stagingDirs(p: org.apache.hadoop.fs.Path): Seq[String] =
+      fsys.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
+        val n = st.getPath.getName
+        (if (n.startsWith("_graft_") && n.endsWith("_tmp")) Seq(n) else Nil) ++
+          stagingDirs(st.getPath)
+      }
+    assert(stagingDirs(new org.apache.hadoop.fs.Path(d)).isEmpty,
+      "the lost commit left a staging dir behind")
+    Layout.withGenerationRetry(spark, d)(verb)
+  }
+
+  test("an OCC loss mid-rewrite rolls deleteWhere back") {
+    withTempDir("graft_occ_del_") { dir =>
+      val d = s"$dir/t"
+      trackedLayout(d)
+      // a PARTIAL box: one file drops whole, one rewrites
+      val st = occLossRollsBack(d, "_graft_delete_tmp") { g =>
+        Layout.deleteWhere(spark, d, Seq(Layout.KeyBox("k", 0L, 30L)),
+          expectedGen = Some(g))
+      }
+      assert(st.rowsDeleted === 31L)
+      assert(spark.read.parquet(d).count() === 69L)
+    }
+  }
+
+  test("an OCC loss mid-rewrite rolls updateWhere back") {
+    withTempDir("graft_occ_upd_") { dir =>
+      val d = s"$dir/t"
+      trackedLayout(d)
+      occLossRollsBack(d, "_graft_update_tmp") { g =>
+        Layout.updateWhere(spark, d, Seq(Layout.KeyBox("k", 10L, 20L)),
+          Seq("v" -> lit(-1L)), expectedGen = Some(g))
+      }
+      assert(spark.read.parquet(d).filter(col("v") === -1L).count() === 11L)
+      assert(spark.read.parquet(d).count() === 100L)
+    }
+  }
+
+  test("an OCC loss mid-rewrite rolls upsertByKeys back, inserts included") {
+    withTempDir("graft_occ_ups_") { dir =>
+      val d = s"$dir/t"
+      trackedLayout(d)
+      val st = occLossRollsBack(d, "_graft_upsert_tmp") { g =>
+        Layout.upsertByKeys(spark, d, Seq((5L, -5L), (150L, 300L)).toDF("k", "v"),
+          Seq("k"), expectedGen = Some(g))
+      }
+      assert(st.rowsReplaced === 1L && st.rowsUpserted === 2L)
+      assert(spark.read.parquet(d).as[(Long, Long)].collect().sorted.toSeq ===
+        ((0L to 99L).map(k => (k, if (k == 5L) -5L else k * 2)) :+ (150L, 300L)))
+    }
+  }
+
+  test("an OCC loss at the commit point rolls appendWithManifest back") {
+    withTempDir("graft_occ_app_") { dir =>
+      val d = s"$dir/t"
+      trackedLayout(d)
+      occLossRollsBack(d, "_graft_manifest_tmp") { g =>
+        Layout.appendWithManifest((200L to 209L).map(k => (k, k * 2)).toDF("k", "v"),
+          d, Seq("k"), expectedGen = Some(g))
+      }
+      assert(spark.read.parquet(d).count() === 110L)
+      assert(Layout.scanPruned(spark, d, Seq(Layout.KeyBox("k", 200L, 300L)))
+        .count() === 10L)
+    }
+  }
+
+  test("an OCC loss at the commit point rolls restoreSnapshot back") {
+    withTempDir("graft_occ_res_") { dir =>
+      val d = s"$dir/t"
+      trackedLayout(d)
+      Layout.deleteWhere(spark, d, Seq(Layout.KeyBox("k", 0L, 30L)))
+      val st = occLossRollsBack(d, "_graft_manifest_tmp") { g =>
+        Layout.restoreSnapshot(spark, d, 0L, expectedGen = Some(g))
+      }
+      assert(st.committed)
+      assert(Layout.readLayout(spark, d).as[(Long, Long)].collect().sorted.toSeq ===
+        (0L to 99L).map(k => (k, k * 2)))
+    }
+  }
+
   test("restoreSnapshot and cloneSnapshot: undo-by-copy keeps every archived generation readable") {
     import spark.implicits._
     withTempDir("graft_restore_") { dir =>
