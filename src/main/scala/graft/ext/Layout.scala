@@ -601,8 +601,8 @@ object Layout {
     *      or what `replaceWith(each stage's new files)` builds instead
     *      (no stats pass then);
     *   7. on an untracked layout, when a manifest row the commit drops
-    *      or replaces carried a deletion vector (`dv`: file → store),
-    *      the stores nothing references any more are reaped — tracked
+    *      or replaces carried a deletion vector (`dropsVectors`), the
+    *      stores nothing references any more are reaped — tracked
     *      layouts keep them for snapshot reads until vacuum.
     * A commit that moves in no file and removes none commits nothing.
     *
@@ -630,7 +630,7 @@ object Layout {
   private def commit(spark: org.apache.spark.sql.SparkSession, scope: Scope,
                      verb: String, expectedGen: Option[Long],
                      stages: Seq[Stage], removed: Seq[String],
-                     dv: Map[String, String] = Map.empty,
+                     dropsVectors: Boolean = false,
                      repointed: Option[DataFrame] = None,
                      replaceWith: Option[Seq[Seq[String]] => DataFrame] = None)
       : Committed = {
@@ -694,7 +694,7 @@ object Layout {
             "the layout is back at the winner's state, re-read and " +
             s"retry (withGenerationRetry does this): ${cme.getMessage}")
     } finally stages.foreach(st => fs.delete(st.tmp, true))
-    if (!generationsEnabled(fs, dir) && dv.nonEmpty)
+    if (dropsVectors && !generationsEnabled(fs, dir))
       reapUnreferencedDvStores(spark, fs, dir)
     committed
   }
@@ -4038,7 +4038,8 @@ object Layout {
     // their rows are replaced by the repointed ones
     val dropped = dropFiles.map(_.file)
     commit(spark, scope, "deleteWhereDv", expectedGen, Nil, dropped,
-      dvOf(dropFiles ++ candidates.filter(c => touched.contains(c.file))),
+      (dropFiles ++ candidates.filter(c => touched.contains(c.file)))
+        .exists(_.dvPath.nonEmpty),
       repointed = repointed)
     DeleteDvStats(dropFiles.length, touched.size,
       dropFiles.map(_.liveRows).sum + newPositions)
@@ -4236,7 +4237,8 @@ object Layout {
       scope.partCols, _))
     val removed = dropFiles ++ rewriteFiles
     val done = commit(spark, scope, label, expectedGen,
-      rewrite.toSeq ++ inserting, removed.map(_.file), dvOf(removed))
+      rewrite.toSeq ++ inserting, removed.map(_.file),
+      removed.exists(_.dvPath.nonEmpty))
     val newRows = if (rewrite.isEmpty) 0L else done.rows.head
     ReplaceStats(dropFiles.length, rewriteFiles.length,
       if (inserting.isEmpty) 0 else done.files.last.length,
@@ -4372,7 +4374,7 @@ object Layout {
       Seq(stageOf(scope, "_graft_update_tmp", partCols, updated
         .repartition(touched.length, col("__graft_src"))
         .drop("__graft_src", "__graft_hit"))),
-      touched.map(_.file), dvOf(touched))
+      touched.map(_.file), touched.exists(_.dvPath.nonEmpty))
     UpdateStats(touched.length, verdicts.length - touched.length,
       rowsUpdated)
   }
@@ -4615,7 +4617,8 @@ object Layout {
       val inserting = Option.when(insertUpdates)(
         stageOf(scope, "_graft_insert_tmp", partCols, upd))
       val newRows = commit(spark, scope, verb, expectedGen,
-        rewrite.toSeq ++ inserting, touched.map(_.file), dvOf(touched))
+        rewrite.toSeq ++ inserting, touched.map(_.file),
+        touched.exists(_.dvPath.nonEmpty))
         .rows.sum
       // newRows = survivors (+ updCount when inserting), so
       // replaced = touched − survivors either way
@@ -5155,12 +5158,11 @@ object Layout {
         scope.manifest.select("file").collect().map(_.getString(0)).toSet,
         "the rewrite would silently legitimize their rows into the new " +
           "layout")
-    val selected = files.toSet
     commit(spark, scope, verb, expectedGen,
       rewriteLeaves(spark, scope.dir, files, scope.schema, scope.partCols,
         scope.fileKeys, dvMap, outputsFor, new Path(_, "_graft_optimize_tmp")),
-      files, dvMap.filter(e => selected(e._1)))
-    if (!generationsEnabled(scope.fs, scope.dir) && before.subsetOf(selected))
+      files, files.exists(dvMap.contains))
+    if (!generationsEnabled(scope.fs, scope.dir) && before.subsetOf(files.toSet))
       retireSchemaSidecars(scope.fs, scope.dir)
     OptimizeStats(reclustered = true, before.size,
       liveFilesOf(spark, scope.dir, Some(scope.schema)).length, worst,
