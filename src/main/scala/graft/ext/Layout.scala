@@ -485,8 +485,9 @@ object Layout {
     * degrade loudly: before the rename the old manifest survives
     * (stale, but the coverage guard flags uncovered files on the next
     * read); a crash inside the delete+rename pair leaves a missing
-    * manifest every scanPruned fails on. The `_`-prefixed temp dir is
-    * invisible to data reads if orphaned. */
+    * manifest every scanPruned fails on. The temp dir is a fresh
+    * [[stagingDir]], so concurrent commits never write into each
+    * other's, and it goes on every exit path. */
   private def replaceManifest(spark: org.apache.spark.sql.SparkSession,
                               path: String, updated: DataFrame,
                               operation: String,
@@ -494,46 +495,44 @@ object Layout {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mfPath = new org.apache.hadoop.fs.Path(s"$path/_graft_manifest")
-    val tmpPath = new org.apache.hadoop.fs.Path(s"$path/_graft_manifest_tmp")
-    updated.write.mode("overwrite").parquet(tmpPath.toString)
+    val tmpPath = stagingDir(new org.apache.hadoop.fs.Path(path),
+      "_graft_manifest_tmp")
     var committedGen: Option[Long] = None
-    if (generationsEnabled(fs, path) && fs.exists(mfPath)) {
-      // generation-tracked layout: the outgoing manifest ARCHIVES
-      // under its own number instead of dying — every manifest
-      // replace is a new generation, and [[readSnapshot]] serves the
-      // archived ones. A crash between the archive-move and the
-      // rename leaves NO live manifest (loud at loadManifest, like
-      // the delete+rename window below); recovery is renaming the
-      // newest archived generation back into place.
-      val g = currentGeneration(spark, path)
-      // optimistic-concurrency check at the COMMIT POINT — the verb
-      // already checked at entry; a writer that committed during this
-      // verb's rewrite work is caught here, before the archive; the
-      // archive's own exists-check below is the last-resort CAS for
-      // writers racing inside this final window
-      try requireExpectedGen(fs, path, expectedGen, operation)
-      catch {
-        case cme: java.util.ConcurrentModificationException =>
-          fs.delete(tmpPath, true)
-          throw cme
+    try {
+      updated.write.parquet(tmpPath.toString)
+      if (generationsEnabled(fs, path) && fs.exists(mfPath)) {
+        // generation-tracked layout: the outgoing manifest ARCHIVES
+        // under its own number instead of dying — every manifest
+        // replace is a new generation, and [[readSnapshot]] serves the
+        // archived ones. A crash between the archive-move and the
+        // rename leaves NO live manifest (loud at loadManifest, like
+        // the delete+rename window below); recovery is renaming the
+        // newest archived generation back into place.
+        val g = currentGeneration(spark, path)
+        // optimistic-concurrency check at the COMMIT POINT — the verb
+        // already checked at entry; a writer that committed during this
+        // verb's rewrite work is caught here, before the archive; the
+        // archive's own exists-check below is the last-resort CAS for
+        // writers racing inside this final window
+        requireExpectedGen(fs, path, expectedGen, operation)
+        val dest = new org.apache.hadoop.fs.Path(historyDir(path), s"gen=$g")
+        require(!fs.exists(dest),
+          s"generation archive $dest already exists — concurrent writers?")
+        require(fs.rename(mfPath, dest),
+          s"failed to archive the outgoing manifest to $dest")
+        committedGen = Some(g + 1L)
+      } else {
+        // a FAILED delete that merely returns false (object stores do)
+        // must not fall through: rename-onto-an-existing-dir has
+        // move-INSIDE semantics on HDFS-like filesystems, which would
+        // leave the STALE manifest in place (the nested _-prefixed tmp
+        // dir being invisible to reads) and serve it silently
+        require(fs.delete(mfPath, true) || !fs.exists(mfPath),
+          s"failed to remove the old manifest at $mfPath before replacing it")
       }
-      val dest = new org.apache.hadoop.fs.Path(historyDir(path), s"gen=$g")
-      require(!fs.exists(dest),
-        s"generation archive $dest already exists — concurrent writers?")
-      require(fs.rename(mfPath, dest),
-        s"failed to archive the outgoing manifest to $dest")
-      committedGen = Some(g + 1L)
-    } else {
-      // a FAILED delete that merely returns false (object stores do)
-      // must not fall through: rename-onto-an-existing-dir has
-      // move-INSIDE semantics on HDFS-like filesystems, which would
-      // leave the STALE manifest in place (the nested _-prefixed tmp
-      // dir being invisible to reads) and serve it silently
-      require(fs.delete(mfPath, true) || !fs.exists(mfPath),
-        s"failed to remove the old manifest at $mfPath before replacing it")
-    }
-    require(fs.rename(tmpPath, mfPath),
-      s"failed to move the updated manifest into place at $mfPath")
+      require(fs.rename(tmpPath, mfPath),
+        s"failed to move the updated manifest into place at $mfPath")
+    } finally fs.delete(tmpPath, true)
     // commit record for the NEW live generation — after the rename,
     // so a crashed commit never records a generation that does not
     // exist; the converse crash window (generation live, record
@@ -578,9 +577,16 @@ object Layout {
     scope
   }
 
-  /** One staged output of a mutation: `write` fills the `_graft_*_tmp`
-    * staging dir `tmp`, whose tree [[commit]] moves into `into`. */
+  /** One staged output of a mutation: `write` fills the staging dir
+    * `tmp` ([[stagingDir]]), whose tree [[commit]] moves into `into`. */
   private final case class Stage(tmp: Path, into: Path, write: () => Unit)
+
+  /** A fresh staging dir under `parent`: `name` (a `_graft_*_tmp`
+    * prefix, invisible to data reads) plus a random suffix, so a
+    * commit's overwrite and cleanup only ever touch its own files —
+    * concurrent writers to one layout never share a staging dir. */
+  private def stagingDir(parent: Path, name: String): Path =
+    new Path(parent, s"$name-${java.util.UUID.randomUUID}")
 
   /** Each stage's new files, in the listing's spelling, and their rows. */
   private final case class Committed(files: Seq[Seq[String]], rows: Seq[Long])
@@ -588,30 +594,34 @@ object Layout {
   /** THE commit step of every Layout mutation — append, restore, the
     * DML verbs and the OPTIMIZE rewrite. The verbs only select (what to
     * remove, what to write); every one commits in this order:
-    *   1. each stage writes under its `_`-prefixed staging dir,
-    *      invisible to data reads;
+    *   1. each stage writes under its own [[stagingDir]], invisible to
+    *      data reads;
     *   2. the OCC generation is re-checked ([[requireExpectedGen]]);
     *   3. the staged trees move into the live directory;
-    *   4. ONE delta-stats pass over the new files, collected to the
-    *      driver;
+    *   4. ONE delta-stats pass over the new files — unless the verb's
+    *      `replacing(each stage's new files)` rows stand for them —
+    *      held on the driver beside a held live manifest while it fits
+    *      the snapshot's per-version bound
+    *      ([[ManifestSnapshot.fitsHeld]]), else pinned on the executors
+    *      until the manifest is replaced;
     *   5. the `removed` files retire (tracked layouts) or are deleted;
-    *   6. the manifest is replaced once ([[replaceManifest]]): the live
-    *      manifest minus `removed` plus the delta rows, with the rows of
-    *      files kept live but `repointed` swapped in ([[patchManifest]]),
-    *      or what `replaceWith(each stage's new files)` builds instead
-    *      (no stats pass then);
+    *   6. the manifest is replaced once ([[replaceManifest]]) by
+    *      [[patchManifest]]: the live manifest minus `removed` and the
+    *      files the `replacing` rows name, plus those rows and the delta;
     *   7. on an untracked layout, when a manifest row the commit drops
-    *      or replaces carried a deletion vector (`dropsVectors`), the
-    *      stores nothing references any more are reaped — tracked
-    *      layouts keep them for snapshot reads until vacuum.
-    * A commit that moves in no file and removes none commits nothing.
+    *      or replaces carried a deletion vector, the stores nothing
+    *      references any more are reaped — tracked layouts keep them
+    *      for snapshot reads until vacuum.
+    * A commit that moves in no file, removes none and replaces no row
+    * commits nothing.
     *
     * A lost commit — a rival generation seen at step 2 or at the
     * commit point inside step 6 — rolls back: every retired file moves
     * back under its live name, every moved-in file is dropped, and a
     * retryable `ConcurrentModificationException` surfaces
-    * ([[withGenerationRetry]] re-reads and re-runs). The staging dirs
-    * go on every exit path.
+    * ([[withGenerationRetry]] re-reads and re-runs). A file that can
+    * be neither moved back nor dropped fails the rollback loudly
+    * instead, by name. The staging dirs go on every exit path.
     *
     * Crash windows (a process that dies mid-commit rolls nothing
     * back), each loud, never silent: before step 3 the layout is
@@ -630,14 +640,13 @@ object Layout {
   private def commit(spark: org.apache.spark.sql.SparkSession, scope: Scope,
                      verb: String, expectedGen: Option[Long],
                      stages: Seq[Stage], removed: Seq[String],
-                     dropsVectors: Boolean = false,
-                     repointed: Option[DataFrame] = None,
-                     replaceWith: Option[Seq[Seq[String]] => DataFrame] = None)
-      : Committed = {
+                     replacing: Seq[Seq[String]] => Option[DataFrame] =
+                       _ => None): Committed = {
     import scala.jdk.CollectionConverters._
     val (fs, dir) = (scope.fs, scope.dir)
     val moved = stages.map(_ => scala.collection.mutable.ArrayBuffer.empty[Path])
     var receipt: Option[RetireReceipt] = None
+    var delta: Option[DataFrame] = None
     val committed = try {
       stages.foreach(_.write())
       requireExpectedGen(fs, dir, expectedGen, verb)
@@ -652,71 +661,87 @@ object Layout {
         val paths = m.map(p => fs.makeQualified(p).toUri.getPath).toSet
         listed.filter(f => paths(new Path(new java.net.URI(f)).toUri.getPath))
       }
-      if (files.forall(_.isEmpty) && removed.isEmpty && repointed.isEmpty &&
-          replaceWith.isEmpty)
+      val replaced = replacing(files)
+      if (files.forall(_.isEmpty) && removed.isEmpty && replaced.isEmpty)
         return Committed(files, files.map(_ => 0L))
       // basePath: stats of a partition-column key see the k=v path
       // columns; bloom keys follow the stored format
-      val delta = Option.when(replaceWith.isEmpty && files.exists(_.nonEmpty)) {
+      delta = Option.when(replaced.isEmpty && files.exists(_.nonEmpty)) {
         val d = manifestOf(readFilesOf(spark, dir, files.flatten, scope.schema),
           scope.keys, bloomKeysOf(scope.mSchema))
-        spark.createDataFrame(d.collect().toSeq.asJava, d.schema)
+        if (scope.manifest.inputFiles.isEmpty &&
+            ManifestSnapshot.fitsHeld(files.map(_.size).sum, scope.mSchema))
+          spark.createDataFrame(d.collect().toSeq.asJava, d.schema)
+        else d.localCheckpoint(true)
       }
-      // a projection of driver rows: no job
       val rowsOf = delta.toSeq.flatMap(_.select("file", "n_rows").collect())
         .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // decided before the replace: an unheld live manifest's part
+      // files go with it
+      val reap = (removed.nonEmpty || replaced.nonEmpty) &&
+        hasDvCols(scope.mSchema) && !generationsEnabled(fs, dir) &&
+        dvMapOf(scope.manifest, removed ++ replaced.toSeq.flatMap(
+          _.select("file").collect().map(_.getString(0)))).nonEmpty
       receipt = retireOrDeleteAll(fs, dir, removed, verb)
-      val built = replaceWith.fold(
-        patchManifest(spark, scope, removed, delta, repointed))(_(files))
+      val built = patchManifest(spark, scope, removed, delta, replaced)
       // pinned only when it reads files: the manifest it replaces, when
       // the snapshot does not hold its rows on the driver
       val updated =
         if (built.inputFiles.isEmpty) built else built.localCheckpoint(true)
       try replaceManifest(spark, dir, updated, verb, expectedGen)
       finally Checkpoints.unpersist(updated)
+      if (reap) reapUnreferencedDvStores(spark, fs, dir)
       Committed(files, files.map(_.map(rowsOf.getOrElse(_, 0L)).sum))
     } catch {
       case cme: java.util.ConcurrentModificationException =>
         val retired = receipt.toSeq.flatMap(_.moved)
         val stuck = retired.filterNot { case (src, dest) =>
           !fs.exists(dest) || fs.rename(dest, src) }
-        moved.flatten.foreach(fs.delete(_, false))
-        if (stuck.nonEmpty) throw new IllegalStateException(
-          s"$verb at $dir lost an optimistic-concurrency race AFTER " +
-            s"retiring files, and ${stuck.length} of them could not be " +
-            s"moved back from _graft_retired/gen=${receipt.get.gen} " +
-            s"(first: ${stuck.head._2}) — restore them manually before " +
-            "reading through the live manifest", cme)
+        // object stores report a failed delete by returning false
+        val kept = moved.flatten.filterNot(p => fs.delete(p, false) || !fs.exists(p))
+        val failed = Option.when(stuck.nonEmpty)("AFTER retiring files, " +
+          s"and ${stuck.length} of them could not be moved back from " +
+          s"_graft_retired/gen=${receipt.get.gen} (first: " +
+          s"${stuck.head._2}) — restore them manually").toSeq ++
+          Option.when(kept.nonEmpty)(s"and ${kept.length} of its new " +
+            s"files could not be dropped (first: ${kept.head}) — delete " +
+            "them manually")
+        if (failed.nonEmpty) throw new IllegalStateException(
+          s"$verb at $dir lost an optimistic-concurrency race " +
+            failed.mkString("; ") + " before reading through the live " +
+            "manifest", cme)
         if (retired.isEmpty && moved.forall(_.isEmpty)) throw cme
         throw new java.util.ConcurrentModificationException(
           s"$verb at $dir lost an optimistic-concurrency race; its " +
             "retired files were moved back and its new files dropped — " +
             "the layout is back at the winner's state, re-read and " +
             s"retry (withGenerationRetry does this): ${cme.getMessage}")
-    } finally stages.foreach(st => fs.delete(st.tmp, true))
-    if (dropsVectors && !generationsEnabled(fs, dir))
-      reapUnreferencedDvStores(spark, fs, dir)
+    } finally {
+      stages.foreach(st => fs.delete(st.tmp, true))
+      delta.foreach(Checkpoints.unpersist)
+    }
     committed
   }
 
   /** The patched manifest [[commit]] writes: the live manifest minus
-    * the rows of `removed` and of the `repointed` files (file-count-
-    * sized broadcast anti-joins, never an IN-literal explosion),
-    * widened through the pre-nulls and DV format migrations, plus the
-    * `delta` and `repointed` rows. Every other file keeps its row
-    * verbatim, so its stats and blooms cannot drift. */
+    * the rows of `removed` and of the files the `replacing` rows name
+    * (file-count-sized broadcast anti-joins, never an IN-literal
+    * explosion), plus the `delta` and `replacing` rows, every side
+    * widened through the pre-nulls and DV format migrations. Every
+    * other file keeps its row verbatim, so its stats and blooms cannot
+    * drift. */
   private def patchManifest(spark: org.apache.spark.sql.SparkSession,
                             scope: Scope, removed: Seq[String],
                             delta: Option[DataFrame],
-                            repointed: Option[DataFrame]): DataFrame = {
+                            replacing: Option[DataFrame]): DataFrame = {
     import spark.implicits._
     val gone = Option.when(removed.nonEmpty)(removed.toDF("file")) ++
-      repointed.map(_.select("file"))
+      replacing.map(_.select("file"))
     val kept = gone.foldLeft(scope.manifest) { (m, g) =>
       m.join(broadcast(g), Seq("file"), "left_anti") }
-    (delta ++ repointed).foldLeft(widenWithNullCounts(kept, scope.keys)) {
+    (delta ++ replacing).foldLeft(widenWithNullCounts(kept, scope.keys)) {
       (acc, d) =>
-        val (a, b) = alignDvCols(acc, d)
+        val (a, b) = alignDvCols(acc, widenWithNullCounts(d, scope.keys))
         a.unionByName(b)
     }
   }
@@ -2029,7 +2054,7 @@ object Layout {
       // generation commits at most once), original partition leaf
       (orig, retired, s"${parent}restored-gen$cur-$base")
     }
-    val tmp = new Path(scope.hDir, "_graft_restore_tmp")
+    val tmp = stagingDir(scope.hDir, "_graft_restore_tmp")
     val tmpQ = fs.makeQualified(tmp).toString
     // retire what the restore supersedes — everything live that gen
     // does not reference (the copies are not in liveBefore, so they
@@ -2039,7 +2064,7 @@ object Layout {
       Option.when(withRel.nonEmpty)(Stage(tmp, scope.hDir, () =>
         copyFilesDistributed(spark,
           withRel.map(m => (m._2, s"$tmpQ/${m._3}"))))).toSeq,
-      retire, replaceWith = Some { files =>
+      retire, files => Some {
         // the copies' manifest rows must carry Spark's OWN
         // canonicalization of each new file ([[canonicalByRel]])
         val mapping = withRel.map(m => (m._1, canonicalByRel(files.flatten, m._3)))
@@ -4038,9 +4063,7 @@ object Layout {
     // their rows are replaced by the repointed ones
     val dropped = dropFiles.map(_.file)
     commit(spark, scope, "deleteWhereDv", expectedGen, Nil, dropped,
-      (dropFiles ++ candidates.filter(c => touched.contains(c.file)))
-        .exists(_.dvPath.nonEmpty),
-      repointed = repointed)
+      _ => repointed)
     DeleteDvStats(dropFiles.length, touched.size,
       dropFiles.map(_.liveRows).sum + newPositions)
   }
@@ -4237,8 +4260,7 @@ object Layout {
       scope.partCols, _))
     val removed = dropFiles ++ rewriteFiles
     val done = commit(spark, scope, label, expectedGen,
-      rewrite.toSeq ++ inserting, removed.map(_.file),
-      removed.exists(_.dvPath.nonEmpty))
+      rewrite.toSeq ++ inserting, removed.map(_.file))
     val newRows = if (rewrite.isEmpty) 0L else done.rows.head
     ReplaceStats(dropFiles.length, rewriteFiles.length,
       if (inserting.isEmpty) 0 else done.files.last.length,
@@ -4246,13 +4268,14 @@ object Layout {
       if (inserting.isEmpty) 0L else done.rows.last)
   }
 
-  /** A [[Stage]] writing `rows` under `dir/tmpName`, routed into `k=v`
-    * subdirectories by `partCols`, to move into the layout root. */
+  /** A [[Stage]] writing `rows` under a fresh [[stagingDir]] named
+    * `tmpName`, routed into `k=v` subdirectories by `partCols`, to move
+    * into the layout root. */
   private def stageOf(scope: Scope, tmpName: String, partCols: Seq[String],
                       rows: DataFrame): Stage = {
-    val tmp = new Path(scope.hDir, tmpName)
+    val tmp = stagingDir(scope.hDir, tmpName)
     Stage(tmp, scope.hDir, () => {
-      val w = rows.write.mode("overwrite")
+      val w = rows.write
       if (partCols.isEmpty) w.parquet(tmp.toString)
       else w.partitionBy(partCols: _*).parquet(tmp.toString)
     })
@@ -4374,7 +4397,7 @@ object Layout {
       Seq(stageOf(scope, "_graft_update_tmp", partCols, updated
         .repartition(touched.length, col("__graft_src"))
         .drop("__graft_src", "__graft_hit"))),
-      touched.map(_.file), touched.exists(_.dvPath.nonEmpty))
+      touched.map(_.file))
     UpdateStats(touched.length, verdicts.length - touched.length,
       rowsUpdated)
   }
@@ -4617,9 +4640,7 @@ object Layout {
       val inserting = Option.when(insertUpdates)(
         stageOf(scope, "_graft_insert_tmp", partCols, upd))
       val newRows = commit(spark, scope, verb, expectedGen,
-        rewrite.toSeq ++ inserting, touched.map(_.file),
-        touched.exists(_.dvPath.nonEmpty))
-        .rows.sum
+        rewrite.toSeq ++ inserting, touched.map(_.file)).rows.sum
       // newRows = survivors (+ updCount when inserting), so
       // replaced = touched − survivors either way
       val touchedRows = touched.map(_.liveRows).sum
@@ -5160,8 +5181,8 @@ object Layout {
           "layout")
     commit(spark, scope, verb, expectedGen,
       rewriteLeaves(spark, scope.dir, files, scope.schema, scope.partCols,
-        scope.fileKeys, dvMap, outputsFor, new Path(_, "_graft_optimize_tmp")),
-      files, files.exists(dvMap.contains))
+        scope.fileKeys, dvMap, outputsFor, stagingDir(_, "_graft_optimize_tmp")),
+      files)
     if (!generationsEnabled(scope.fs, scope.dir) && before.subsetOf(files.toSet))
       retireSchemaSidecars(scope.fs, scope.dir)
     OptimizeStats(reclustered = true, before.size,

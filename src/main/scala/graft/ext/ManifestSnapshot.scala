@@ -73,6 +73,13 @@ private[graft] object ManifestSnapshot {
 
   private val cache = new Cache(MaxCachedBytes)
 
+  /** Whether `rows` manifest rows of `schema` fit the bound one version
+    * may hold on the driver ([[Cache.maxHeldBytes]]), at the row sizes
+    * measured above: 300 bytes, plus 8.3 KB per bloom-indexed key. */
+  def fitsHeld(rows: Long, schema: StructType): Boolean =
+    rows * (300L + 8500L * schema.fieldNames.count(_.startsWith("bloom_"))) <=
+      cache.maxHeldBytes
+
   /** Heap bytes the snapshot cache pins now. */
   def cachedBytes: Long = cache.heldBytes
 

@@ -2192,23 +2192,33 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     Layout.enableGenerations(spark, d)
   }
 
+  /** The `_graft_*_tmp` staging dirs anywhere under `p`. */
+  private def stagingDirs(p: org.apache.hadoop.fs.Path): Seq[String] = {
+    val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fsys.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
+      val n = st.getPath.getName
+      (if (n.startsWith("_graft_") && n.contains("_tmp")) Seq(n) else Nil) ++
+        stagingDirs(st.getPath)
+    }
+  }
+
   /** Plays a rival writer inside `verb`'s commit: a watcher thread
-    * waits for `trigger` (the verb's staging dir, or the manifest's
-    * temp dir) to appear under `d`, then plants the archive of the live
-    * generation, so the verb's next OCC check loses. The loss must
-    * leave exactly the pre-verb live files and no `_graft_*_tmp` dir,
-    * and `withGenerationRetry` must then commit. */
+    * waits for a dir named `trigger`-something (the verb's staging dir,
+    * or the manifest's temp dir) to appear under `d`, then plants the
+    * archive of the live generation, so the verb's next OCC check
+    * loses. The loss must leave exactly the pre-verb live files and no
+    * `_graft_*_tmp` dir, and `withGenerationRetry` must then commit. */
   private def occLossRollsBack[A](d: String, trigger: String)(verb: Long => A): A = {
     val fsys = new org.apache.hadoop.fs.Path(d)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val g = Layout.currentGeneration(spark, d)
     val filesBefore = spark.read.parquet(d).inputFiles.toSet
-    val watched = new org.apache.hadoop.fs.Path(s"$d/$trigger")
+    val root = new org.apache.hadoop.fs.Path(d)
     @volatile var planted = false
     @volatile var stop = false
     val watcher = new Thread(() => {
       while (!planted && !stop) {
-        if (fsys.exists(watched)) {
+        if (fsys.listStatus(root).exists(_.getPath.getName.startsWith(trigger))) {
           fsys.mkdirs(new org.apache.hadoop.fs.Path(s"$d/_graft_history/gen=$g"))
           planted = true
         } else Thread.sleep(1)
@@ -2221,13 +2231,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     assert(planted, s"the watcher never saw $trigger")
     assert(spark.read.parquet(d).inputFiles.toSet === filesBefore,
       "the lost commit must leave exactly the winner's live files")
-    def stagingDirs(p: org.apache.hadoop.fs.Path): Seq[String] =
-      fsys.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
-        val n = st.getPath.getName
-        (if (n.startsWith("_graft_") && n.endsWith("_tmp")) Seq(n) else Nil) ++
-          stagingDirs(st.getPath)
-      }
-    assert(stagingDirs(new org.apache.hadoop.fs.Path(d)).isEmpty,
+    assert(stagingDirs(root).isEmpty,
       "the lost commit left a staging dir behind")
     Layout.withGenerationRetry(spark, d)(verb)
   }
@@ -2284,6 +2288,39 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       assert(spark.read.parquet(d).count() === 110L)
       assert(Layout.scanPruned(spark, d, Seq(Layout.KeyBox("k", 200L, 300L)))
         .count() === 10L)
+    }
+  }
+
+  test("two appends staging at once each land their rows exactly once") {
+    withTempDir("graft_two_appends_") { dir =>
+      val d = s"$dir/t"
+      trackedLayout(d)
+      val root = new org.apache.hadoop.fs.Path(d)
+      val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def staging = fsys.listStatus(root).toSeq.map(_.getPath.getName)
+        .filter(_.startsWith("_graft_append_tmp"))
+      // the first append's staging write blocks inside its task until
+      // the second append has staged and committed
+      LayoutSpec.gate = new java.util.concurrent.CountDownLatch(1)
+      val held = udf { (k: Long) =>
+        LayoutSpec.gate.await(60, java.util.concurrent.TimeUnit.SECONDS); k * 2 }
+      val first = (300L to 309L).toDF("k").coalesce(1)
+        .select(col("k"), held(col("k")).as("v"))
+      val done = scala.concurrent.Future(Layout.withGenerationRetry(spark, d) { g =>
+        Layout.appendWithManifest(first, d, Seq("k"), expectedGen = Some(g))
+      })(scala.concurrent.ExecutionContext.global)
+      try {
+        val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+        while (staging.isEmpty && System.nanoTime < deadline) Thread.sleep(5)
+        assert(staging.nonEmpty, "the first append never staged")
+        Layout.appendWithManifest((200L to 209L).map(k => (k, k * 2)).toDF("k", "v"),
+          d, Seq("k"))
+      } finally LayoutSpec.gate.countDown()
+      scala.concurrent.Await.result(done, scala.concurrent.duration.Duration(120, "s"))
+      assert(Layout.readLayout(spark, d).as[(Long, Long)].collect().sorted.toSeq ===
+        ((0L to 99L) ++ (200L to 209L) ++ (300L to 309L)).map(k => (k, k * 2)))
+      assert(spark.read.parquet(d).count() === 120L)
+      assert(stagingDirs(root).isEmpty)
     }
   }
 
@@ -3519,4 +3556,9 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       assert(ManifestSnapshot.cachedBytes <= ManifestSnapshot.MaxCachedBytes)
     }
   }
+}
+
+object LayoutSpec {
+  /** Holds a test's blocking UDF inside its task until released. */
+  @volatile var gate = new java.util.concurrent.CountDownLatch(0)
 }
