@@ -15,8 +15,10 @@ private[graft] object Checkpoints {
     * scheduler happily overlaps jobs inside one application; calling
     * them sequentially leaves the cluster idle through each job's
     * scheduling tail, which dominates state-sized work). `fa` runs on
-    * the calling thread — its thread-local job group/description
-    * behave exactly as in the sequential form — and a failure on
+    * the calling thread and `fb` on a pool thread under a copy of the
+    * caller's local properties ([[org.apache.spark.GraftRddBridge]]),
+    * so both sides' jobs carry the caller's job group, description and
+    * scheduler pool as in the sequential form; a failure on
     * either side propagates unchanged (Await rethrows the future's
     * exception). When `fa` fails, the call still waits for `fb` before
     * rethrowing, so no job of the pair outlives the call; `fb`'s own
@@ -28,7 +30,8 @@ private[graft] object Checkpoints {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fut = Future(fb)
+    val runB = org.apache.spark.GraftRddBridge.withCallerProperties(fb)
+    val fut = Future(runB())
     val a = try fa catch {
       case t: Throwable =>
         Await.ready(fut, Duration.Inf).value

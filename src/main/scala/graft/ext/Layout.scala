@@ -547,9 +547,15 @@ object Layout {
     * (empty on a flat layout). [[scopeOf]] checks the caller's OCC
     * generation at entry. */
   private final class Scope(spark: org.apache.spark.sql.SparkSession,
-                            val dir: String) {
+                            val dir: String, expectedGen: Option[Long]) {
     val hDir = new Path(dir)
     val fs = hDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    /** The generation [[commit]] must still find live: the caller's
+      * `expectedGen`, else on a tracked layout the live one at entry,
+      * read before the manifest — so a writer that commits in between
+      * is caught, never patched over. */
+    val gen: Option[Long] = expectedGen.orElse(
+      Option.when(generationsEnabled(fs, dir))(liveGenOf(fs, dir)))
     lazy val manifest: DataFrame = loadManifest(spark, dir)
     lazy val mSchema = manifest.schema
     lazy val keys: Seq[String] = manifestKeysOf(mSchema)
@@ -572,7 +578,7 @@ object Layout {
   private def scopeOf(spark: org.apache.spark.sql.SparkSession, dir: String,
                       expectedGen: Option[Long], verb: String): Scope = {
     requireEncodingStablePath(dir)
-    val scope = new Scope(spark, dir)
+    val scope = new Scope(spark, dir, expectedGen)
     requireExpectedGen(scope.fs, dir, expectedGen, verb)
     scope
   }
@@ -596,7 +602,8 @@ object Layout {
     * remove, what to write); every one commits in this order:
     *   1. each stage writes under its own [[stagingDir]], invisible to
     *      data reads;
-    *   2. the OCC generation is re-checked ([[requireExpectedGen]]);
+    *   2. the OCC generation ([[Scope.gen]]) is re-checked
+    *      ([[requireExpectedGen]]);
     *   3. the staged trees move into the live directory;
     *   4. ONE delta-stats pass over the new files — unless the verb's
     *      `replacing(each stage's new files)` rows stand for them —
@@ -638,8 +645,7 @@ object Layout {
     * from a crashed out-of-band append whose rows a mutation would
     * lose. */
   private def commit(spark: org.apache.spark.sql.SparkSession, scope: Scope,
-                     verb: String, expectedGen: Option[Long],
-                     stages: Seq[Stage], removed: Seq[String],
+                     verb: String, stages: Seq[Stage], removed: Seq[String],
                      replacing: Seq[Seq[String]] => Option[DataFrame] =
                        _ => None): Committed = {
     import scala.jdk.CollectionConverters._
@@ -649,7 +655,7 @@ object Layout {
     var delta: Option[DataFrame] = None
     val committed = try {
       stages.foreach(_.write())
-      requireExpectedGen(fs, dir, expectedGen, verb)
+      requireExpectedGen(fs, dir, scope.gen, verb)
       stages.zip(moved).foreach { case (st, m) =>
         moveTreeInto(fs, st.tmp, st.into, verb, m) }
       // the listing's spelling of each moved file — the one manifest
@@ -688,7 +694,7 @@ object Layout {
       // the snapshot does not hold its rows on the driver
       val updated =
         if (built.inputFiles.isEmpty) built else built.localCheckpoint(true)
-      try replaceManifest(spark, dir, updated, verb, expectedGen)
+      try replaceManifest(spark, dir, updated, verb, scope.gen)
       finally Checkpoints.unpersist(updated)
       if (reap) reapUnreferencedDvStores(spark, fs, dir)
       Committed(files, files.map(_.map(rowsOf.getOrElse(_, 0L)).sum))
@@ -2010,7 +2016,7 @@ object Layout {
                       expectedGen: Option[Long] = None): RestoreStats = {
     import spark.implicits._
     requireEncodingStablePath(dir)
-    val scope = new Scope(spark, dir)
+    val scope = new Scope(spark, dir, expectedGen)
     val fs = scope.fs
     require(generationsEnabled(fs, dir),
       s"$dir is not generation-tracked — nothing to restore")
@@ -2060,7 +2066,7 @@ object Layout {
     // does not reference (the copies are not in liveBefore, so they
     // can never retire themselves)
     val retire = (liveBefore -- kept.map(_._1)).toSeq.sorted
-    commit(spark, scope, "restore", expectedGen,
+    commit(spark, scope, "restore",
       Option.when(withRel.nonEmpty)(Stage(tmp, scope.hDir, () =>
         copyFilesDistributed(spark,
           withRel.map(m => (m._2, s"$tmpQ/${m._3}"))))).toSeq,
@@ -2207,14 +2213,12 @@ object Layout {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val manifest = loadManifest(spark, dir)
     val mSchema = manifest.schema
+    val keys = manifestKeysOf(mSchema)
+    val sweep = sweepOf(manifest, keys, lit(""))
     // n_rows reports LIVE rows (physical minus deletion vectors) —
     // identical on a vector-free layout
-    val counts = manifest
-      .agg(count(lit(1)),
-        coalesce(sum(col("n_rows") - dvRowsExprOf(mSchema)), lit(0L)))
-      .head()
-    val (nFiles, nRows) = (counts.getLong(0), counts.getLong(1))
-    val keys = manifestKeysOf(mSchema)
+    val (nFiles, nRows) =
+      (sweep.files.size.toLong, sweep.files.map(f => f.rows - f.dvRows).sum)
     val blooms = bloomKeysOf(mSchema)
     val partCols = hivePartColsOf(fs, new org.apache.hadoop.fs.Path(dir))
     val tracked = generationsEnabled(fs, dir)
@@ -2223,20 +2227,14 @@ object Layout {
       if (tracked) Some(archivedGens(fs, dir).minOption
         .getOrElse(gen.get))
       else None
-    val depth = worstDepthOf(manifest, keys)
+    val depth = sweep.worstOf(keys)
     // operational-health tail: outstanding deletion-vector tax,
     // registered constraints, stream ledgers, and vacuum pins — one
     // row answers "what is the operational state of this table"
     // without assembling four separate verb calls. All four are
     // sidecar/manifest-sized reads, zero data-file opens.
-    val (dvFiles, dvRows) =
-      if (!hasDvCols(mSchema)) (0L, 0L)
-      else {
-        val r = manifest.filter(col("dv_path").isNotNull)
-          .agg(count(lit(1)), coalesce(sum(col("dv_rows")), lit(0L)))
-          .head()
-        (r.getLong(0), r.getLong(1))
-      }
+    val vectorized = sweep.files.filter(_.dvPath.nonEmpty)
+    val (dvFiles, dvRows) = (vectorized.size.toLong, vectorized.map(_.dvRows).sum)
     val nConstraints = checkConstraintsOf(spark, dir).size
     val streams = streamLedgers(spark, dir).size
     val pins = if (tracked) snapshotPinsOf(fs, dir).size else 0
@@ -3098,7 +3096,7 @@ object Layout {
     if (newCols.nonEmpty)
       writeStoredSchema(spark, path,
         org.apache.spark.sql.types.StructType(current.schema ++ newCols))
-    commit(spark, scope, operationLabel, expectedGen,
+    commit(spark, scope, operationLabel,
       Seq(stageOf(scope, "_graft_append_tmp", partCols, df)), Nil)
   }
 
@@ -3258,7 +3256,8 @@ object Layout {
     * the ledger without committing a generation. Appends follow
     * [[appendWithManifest]]'s full discipline (stats delta, schema
     * compatibility, partition routing); concurrent DISTINCT streams
-    * interleave safely — their commits serialize on the archive CAS
+    * interleave safely — a batch that loses the commit race to another
+    * writer rolls back and re-appends under [[withGenerationRetry]],
     * and their tokens live in separate records and ledgers. */
   def streamAppend(dir: String, keys: Seq[String], queryId: String,
                    mergeSchema: Boolean = false)
@@ -3357,8 +3356,8 @@ object Layout {
     // writers commit between the crash and the replay
     writeStreamLedger(fs, dir, queryId, ledger.lastBatch.getOrElse(-1L),
       intent = Some((batchId, g)))
-    appendWithManifest(df, dir, keys, mergeSchema,
-      operationLabel = streamOpLabel(queryId, batchId))
+    withGenerationRetry(spark, dir)(gen => appendWithManifest(df, dir, keys,
+      mergeSchema, Some(gen), operationLabel = streamOpLabel(queryId, batchId)))
     writeStreamLedger(fs, dir, queryId, batchId)
   }
 
@@ -3838,24 +3837,6 @@ object Layout {
       .drop(DvFileCol, DvIdxCol)
   }
 
-  /** The vectorized files whose read tax crossed `minDvRatio`
-    * (`dv_rows / n_rows`) — the OPTIMIZE selection criterion that
-    * lets deletion-vector hotspots self-heal without a manual full
-    * rewrite: at ratio 0 (the default) every vectorized file selects
-    * (the conservative "optimize purges all vectors" contract);
-    * higher ratios rewrite only the files whose per-read anti-join
-    * has grown expensive and leave light vectors in place. */
-  private def heavyDvFiles(manifest: DataFrame, dvMap: Map[String, String],
-                           minDvRatio: Double, verb: String): Set[String] = {
-    require(minDvRatio >= 0.0 && minDvRatio <= 1.0,
-      s"$verb needs minDvRatio in [0, 1], got $minDvRatio")
-    if (dvMap.isEmpty || minDvRatio <= 0.0) dvMap.keySet
-    else manifest.filter(col("dv_path").isNotNull &&
-        coalesce(col("dv_rows"), lit(0L)) >=
-          col("n_rows") * lit(minDvRatio))
-      .select("file").collect().map(_.getString(0)).toSet
-  }
-
   /** Copy the deletion-vector positions of `triples` — (source file
     * URI, its DV store, destination file URI) — into ONE new store
     * under `destRoot`, remapping each recorded path onto its
@@ -4062,7 +4043,7 @@ object Layout {
     // the covered files retire; the touched files stay live, only
     // their rows are replaced by the repointed ones
     val dropped = dropFiles.map(_.file)
-    commit(spark, scope, "deleteWhereDv", expectedGen, Nil, dropped,
+    commit(spark, scope, "deleteWhereDv", Nil, dropped,
       _ => repointed)
     DeleteDvStats(dropFiles.length, touched.size,
       dropFiles.map(_.liveRows).sum + newPositions)
@@ -4259,7 +4240,7 @@ object Layout {
     val inserting = insert.map(stageOf(scope, "_graft_replace_tmp",
       scope.partCols, _))
     val removed = dropFiles ++ rewriteFiles
-    val done = commit(spark, scope, label, expectedGen,
+    val done = commit(spark, scope, label,
       rewrite.toSeq ++ inserting, removed.map(_.file))
     val newRows = if (rewrite.isEmpty) 0L else done.rows.head
     ReplaceStats(dropFiles.length, rewriteFiles.length,
@@ -4393,7 +4374,7 @@ object Layout {
     requireBatchSatisfies(spark, dir,
       updated.where(col("__graft_hit"))
         .drop("__graft_src", "__graft_hit"), "updateWhere")
-    commit(spark, scope, "updateWhere", expectedGen,
+    commit(spark, scope, "updateWhere",
       Seq(stageOf(scope, "_graft_update_tmp", partCols, updated
         .repartition(touched.length, col("__graft_src"))
         .drop("__graft_src", "__graft_hit"))),
@@ -4639,7 +4620,7 @@ object Layout {
       }
       val inserting = Option.when(insertUpdates)(
         stageOf(scope, "_graft_insert_tmp", partCols, upd))
-      val newRows = commit(spark, scope, verb, expectedGen,
+      val newRows = commit(spark, scope, verb,
         rewrite.toSeq ++ inserting, touched.map(_.file)).rows.sum
       // newRows = survivors (+ updCount when inserting), so
       // replaced = touched − survivors either way
@@ -4827,9 +4808,10 @@ object Layout {
     // deletion vector can never be stat-answered (its stats are
     // physical, the vectorized rows are not live) — it demotes to
     // the scan path, which applies the vector
+    val provable = rangeCovered && nullsKnown && nullBearing <= 1
     val metaRows = when(
-      coalesce(rangeCovered && nullsKnown && nullBearing <= 1 &&
-        dvRowsExprOf(mSchema) === 0L, lit(false)),
+      coalesce(if (hasDvCols(mSchema)) provable && dvRowsExprOf(mSchema) === 0L
+        else provable, lit(false)),
       col("n_rows") - keys.map(k => coalesce(nullsColOf(mSchema, k), lit(0L)))
         .reduce(greatest(_, _)))
     val disjoint = boxes.map(skipExprOf(mSchema, _)).reduce(_ || _)
@@ -4920,10 +4902,84 @@ object Layout {
     }
   }
 
-  /** The monotone stat→long mapping of [[depthSweep]]'s integer
-    * domain (epoch days / micros for date / timestamp stats), shared
-    * with its deep-file overlap test ([[deepFilesOf]]) so the two
-    * cannot disagree on what a profile `pos` means. */
+  /** One manifest row as [[DepthSweep]] reads it: per key its
+    * `[lo, hi]` stat interval as sweep positions (None where null). */
+  private[graft] final case class FileStats(leaf: String, file: String,
+      rows: Long, dvPath: Option[String], dvRows: Long,
+      lo: IndexedSeq[Option[Long]], hi: IndexedSeq[Option[Long]])
+
+  /** THE clustering-depth sweep under every profile, trigger and
+    * OPTIMIZE selection, on the driver over [[sweepOf]]'s one collect:
+    * at each boundary of the per-file key intervals, the running
+    * interval count = how many files a point lookup on that value must
+    * read. Intervals stack only within their `leaf` (a constant for a
+    * whole-manifest profile, the parent directory for OPTIMIZE: a
+    * partition-pruned lookup reads one leaf). Null stats carry no
+    * interval: a null key never serves a point lookup.
+    *   - Long / date / timestamp stats sweep their integer domain
+    *     ([[statToLongOf]]), each file covering `[min, max + 1)`.
+    *   - String stats have no successor, so they sweep the OBSERVED
+    *     domain: a position indexes `values(k)`, every distinct min/max
+    *     in Spark's string order ([[Utf8Order]]); a file covers
+    *     `[pos(min), pos(max) + 1)`, and a leaf's rows are exactly its
+    *     observed values. Their maximum IS the global one: a point
+    *     strictly between two adjacent boundaries is covered only by
+    *     files that also cover the boundary below it. */
+  private[graft] final class DepthSweep(keys: Seq[String],
+      val files: IndexedSeq[FileStats],
+      values: IndexedSeq[Option[IndexedSeq[String]]]) {
+    /** `(leaf, key index) → (pos, net, depth)` rows in position order,
+      * for every leaf where the key carries an interval. */
+    private lazy val sweeps: Seq[((String, Int), IndexedSeq[(Long, Long, Long)])] =
+      files.groupBy(_.leaf).toSeq.sortBy(_._1).flatMap { case (leaf, fs) =>
+        keys.indices.flatMap { k =>
+          val (los, his) = (fs.flatMap(_.lo(k)), fs.flatMap(_.hi(k)))
+          val seen = values(k).fold(Set.empty[Long])(_ => (los ++ his).toSet)
+          var depth = 0L
+          val rows = (los.map(_ -> 1L) ++ his.map(Math.addExact(_, 1L) -> -1L) ++
+              seen.map(_ -> 0L))
+            .groupMapReduce(_._1)(_._2)(_ + _).toIndexedSeq.sortBy(_._1)
+            .map { case (p, net) => depth += net; (p, net, depth) }
+            .filter(r => values(k).isEmpty || seen(r._1))
+          Option.when(rows.nonEmpty)((leaf, k) -> rows)
+        }
+      }
+
+    private def of(ks: Seq[String]) =
+      sweeps.filter(s => ks.contains(keys(s._1._2)))
+
+    /** `(at, net, depth)` of every boundary of `key` over all leaves,
+      * `at` the integer position or the boundary string itself. */
+    def profileOf(key: String): Seq[org.apache.spark.sql.Row] =
+      of(Seq(key)).flatMap { case ((_, k), rows) => rows.map { case (p, net, d) =>
+        org.apache.spark.sql.Row(values(k).fold[Any](p)(_(p.toInt)), net, d) } }
+
+    /** `(leaf, key, worst depth)` per leaf and key of `ks` with an interval. */
+    def leafDepthsOf(ks: Seq[String]): Seq[(String, String, Long)] =
+      of(ks).map { case ((leaf, k), rows) => (leaf, keys(k), rows.map(_._3).max) }
+
+    /** The worst depth over `ks` (0 when no file carries an interval). */
+    def worstOf(ks: Seq[String]): Long =
+      leafDepthsOf(ks).map(_._3).foldLeft(0L)(math.max)
+
+    /** The files whose `[min, max]` interval on some key of `ks` covers
+      * a boundary whose depth WITHIN ITS OWN LEAF reaches `maxDepth` —
+      * the offending subset [[optimizeSelective]] rewrites, found by a
+      * binary search per file and key. A null-stat file is never deep.
+      * Returns the manifest's own `file` spellings. */
+    def deepFilesOf(ks: Seq[String], maxDepth: Long): Set[String] =
+      of(ks).flatMap { case ((leaf, k), rows) =>
+        val deep = rows.collect { case (p, _, d) if d >= maxDepth => p }
+        files.filter(f => f.leaf == leaf && (f.lo(k) zip f.hi(k)).exists {
+          case (lo, hi) =>
+            val i = deep.search(lo).insertionPoint
+            i < deep.length && deep(i) <= hi
+        }).map(_.file)
+      }.toSet
+  }
+
+  /** The monotone stat→long mapping of the depth sweep's integer
+    * domain (epoch days / micros for date / timestamp stats). */
   private def statToLongOf(dt: org.apache.spark.sql.types.DataType,
                            key: String): Column => Column = {
     import org.apache.spark.sql.types._
@@ -4940,85 +4996,80 @@ object Layout {
     }
   }
 
-  /** The ONE clustering-depth sweep under every profile, trigger and
-    * deep-file selection: for each boundary of the per-file key
-    * intervals, the running interval count = how many files a point
-    * lookup on that key value must read. It runs on the stats frame
-    * (file-count-sized, never the data), with its windows partitioned
-    * by `leaf`: a constant for a whole-manifest profile, each file's
-    * parent directory for the OPTIMIZE verbs (a partition-pruned
-    * lookup reads one leaf, so files in other leaves never stack on
-    * it; a flat layout is one leaf). Files with null stats (all-null
-    * key) carry no interval: a null key never serves a point lookup.
-    *   - Long / date / timestamp stats sweep their integer domain
-    *     ([[statToLongOf]]), each file covering `[min, max + 1)`.
-    *   - String stats have no successor function, so they sweep the
-    *     OBSERVED boundary domain: every distinct min/max value gets a
-    *     dense rank within its leaf, and each file covers
-    *     `[rank(min), rank(max) + 1)`, where the `+1` always exists. A
-    *     zero-delta seed gives every observed value a row (a value
-    *     seen only as some file's max has no event of its own), and
-    *     the bookkeeping row past the greatest max is dropped. The
-    *     maximum over observed values IS the global maximum: a point
-    *     strictly between two adjacent boundaries is covered only by
-    *     files that also cover the boundary below it.
-    * Returns `(__leaf, at, net, depth)`, where `at` is the integer
-    * position or the boundary string itself. */
-  private def depthSweep(manifest: DataFrame, key: String,
-                         leaf: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = manifest.withColumn("__leaf", leaf)
-    def ends(stat: String): DataFrame =
-      m.filter(col(s"${stat}_$key").isNotNull)
-        .select(col("__leaf"), col(s"${stat}_$key").as("at"))
-    val inLeaf = Window.partitionBy("__leaf")
-    def sweep(events: DataFrame): DataFrame =
-      events.groupBy("__leaf", "pos").agg(sum("delta").as("net"))
-        .withColumn("depth", sum("net").over(
-          inLeaf.orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)))
-    m.schema(s"min_$key").dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        val ranked = ends("min").unionAll(ends("max")).distinct()
-          .withColumn("pos", dense_rank().over(inLeaf.orderBy("at")).cast("long"))
-        def edge(stat: String, shift: Long, delta: Long): DataFrame =
-          ends(stat).join(ranked, Seq("__leaf", "at")).select(col("__leaf"),
-            (col("pos") + shift).as("pos"), lit(delta).as("delta"))
-        sweep(edge("min", 0L, 1L).unionAll(edge("max", 1L, -1L))
-            .unionAll(ranked.select(col("__leaf"), col("pos"), lit(0L).as("delta"))))
-          .join(ranked, Seq("__leaf", "pos"))
-          .select(col("__leaf"), col("at"), col("net"), col("depth"))
-      case dt =>
-        val toLong = statToLongOf(dt, key)
-        sweep(ends("min").select(col("__leaf"), toLong(col("at")).as("pos"),
-            lit(1L).as("delta"))
-          .unionAll(ends("max").select(col("__leaf"),
-            (toLong(col("at")) + 1L).as("pos"), lit(-1L).as("delta"))))
-          .select(col("__leaf"), col("pos").as("at"), col("net"), col("depth"))
+  /** Spark's `StringType` order — unsigned UTF-8 bytes, as
+    * `UTF8String` compares — which differs from `String.compareTo`'s
+    * UTF-16 order above the BMP. */
+  private val Utf8Order: Ordering[String] = (a, b) =>
+    java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+
+  /** [[DepthSweep]] over `keys` of `manifest`, each file in its `leaf`:
+    * ONE collect of one projection (leaf, file, rows, deletion vector,
+    * each key's min and max — [[statToLongOf]], or raw strings). Over a
+    * held manifest ([[ManifestSnapshot]]) it folds into the
+    * `LocalRelation` and launches no job, else it is one job; the
+    * driver holds O(files × keys) values, the order of the live-file
+    * listing every verb holds. A stats frame without `file` / `n_rows`
+    * reads them as null / 0. */
+  private[graft] def sweepOf(manifest: DataFrame, keys: Seq[String],
+                             leaf: Column): DepthSweep = {
+    val mSchema = manifest.schema
+    val strings = keys.map(k => mSchema(s"min_$k").dataType ==
+      org.apache.spark.sql.types.StringType)
+    def orNull(c: String, dt: String) =
+      if (mSchema.fieldNames.contains(c)) col(c) else lit(null).cast(dt)
+    val bounds = keys.zip(strings).flatMap { case (k, s) =>
+      val at: Column => Column =
+        if (s) identity
+        else statToLongOf(mSchema(s"min_$k").dataType, k).andThen(_.cast("long"))
+      Seq(at(col(s"min_$k")), at(col(s"max_$k")))
     }
+    val rows = manifest.select(Seq(leaf, orNull("file", "string"),
+        coalesce(orNull("n_rows", "long"), lit(0L)), dvPathExprOf(mSchema),
+        dvRowsExprOf(mSchema)) ++ bounds: _*).collect().toIndexedSeq
+    def ends(r: org.apache.spark.sql.Row, k: Int) =
+      Seq(r.get(5 + 2 * k), r.get(6 + 2 * k)).flatMap(Option(_))
+    val values = keys.indices.map(k => Option.when(strings(k))(
+      rows.flatMap(ends(_, k)).map(_.toString).distinct.sorted(Utf8Order)))
+    val pos = values.map(_.map(_.zipWithIndex.map(e => e._1 -> e._2.toLong).toMap))
+    def at(r: org.apache.spark.sql.Row, i: Int, k: Int) = Option(r.get(i))
+      .map(v => pos(k).fold(v.asInstanceOf[Long])(_(v.toString)))
+    new DepthSweep(keys, rows.map(r => FileStats(r.getString(0), r.getString(1),
+      r.getLong(2), Option(r.getString(3)), r.getLong(4),
+      keys.indices.map(k => at(r, 5 + 2 * k, k)),
+      keys.indices.map(k => at(r, 6 + 2 * k, k)))), values)
+  }
+
+  /** The whole-manifest profile of `key` as a frame `(at, net, depth)`. */
+  private def profileFrameOf(manifest: DataFrame, key: String,
+                             at: String): DataFrame = {
+    val atType = if (manifest.schema(s"min_$key").dataType ==
+      org.apache.spark.sql.types.StringType) "STRING" else "BIGINT"
+    manifest.sparkSession.createDataFrame(
+      java.util.Arrays.asList(sweepOf(manifest, Seq(key), lit("")).profileOf(key): _*),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        s"$at $atType, net BIGINT, depth BIGINT"))
   }
 
   /** Clustering-depth profile over a skipping manifest — the
     * q_layout_depth metric computed from the REAL stored manifest:
-    * [[depthSweep]]'s integer-domain rows for the whole manifest. Date
-    * / timestamp `pos` is reported in its epoch-days / micros
-    * encoding; string stats have no successor function and are
-    * rejected loudly — use [[clusteringDepthBoundaries]]. Returns
-    * `(pos, net, depth)`. */
+    * [[DepthSweep]]'s integer-domain rows for the whole manifest, in
+    * position order. Date / timestamp `pos` is reported in its
+    * epoch-days / micros encoding; string stats have no successor
+    * function and are rejected loudly — use
+    * [[clusteringDepthBoundaries]]. Returns `(pos, net, depth)`. */
   def clusteringDepth(manifest: DataFrame, key: String): DataFrame = {
     statToLongOf(manifest.schema(s"min_$key").dataType, key)
-    depthSweep(manifest, key, lit(""))
-      .select(col("at").as("pos"), col("net"), col("depth"))
+    profileFrameOf(manifest, key, "pos")
   }
 
   /** [[clusteringDepth]] for string stats, where `max + 1` has no
-    * meaning: [[depthSweep]]'s observed-boundary rows for the whole
+    * meaning: [[DepthSweep]]'s observed-boundary rows for the whole
     * manifest, exact at every observed value. Returns `(value, net,
     * depth)` — `value` is the boundary string itself, so a reader can
     * name the hot key range directly. Other stat types return their
     * integer-domain rows. */
   def clusteringDepthBoundaries(manifest: DataFrame, key: String): DataFrame =
-    depthSweep(manifest, key, lit(""))
-      .select(col("at").as("value"), col("net"), col("depth"))
+    profileFrameOf(manifest, key, "value")
 
   /** The OPTIMIZE trigger: true when some key value's point-lookup
     * depth reaches `maxDepth` — Delta OPTIMIZE / Iceberg rewrite
@@ -5026,56 +5077,12 @@ object Layout {
     * unclustered file at a time ([[appendWithManifest]]); when the
     * trigger fires, rewrite with [[write]] or [[optimize]] to
     * re-tighten the layout (LayoutSpec drives that full lifecycle).
-    * One manifest-sized job, one scalar to the driver; string keys
-    * sweep their observed-boundary domain. */
+    * One collect of the manifest's stats ([[sweepOf]]: no job over a
+    * held manifest), swept on the driver; string keys sweep their
+    * observed-boundary domain. */
   def needsRecluster(manifest: DataFrame, key: String,
                      maxDepth: Long): Boolean =
-    worstDepthOf(manifest, Seq(key)) >= maxDepth
-
-  /** The worst point-lookup depth over `keys` of a whole manifest
-    * (0 when no file carries an interval). */
-  private def worstDepthOf(manifest: DataFrame, keys: Seq[String]): Long =
-    leafDepthsOf(manifest, keys, lit("")).map(_._3).foldLeft(0L)(math.max)
-
-  /** A manifest file's parent directory, the OPTIMIZE verbs' sweep
-    * leaf: the root of a flat layout, the `k=v` leaf of a partitioned
-    * one, in the manifest's own URI spelling. */
-  private def fileLeaf: Column = regexp_replace(col("file"), "/[^/]+$", "")
-
-  /** `(leaf, key, worst depth)` for every leaf and key: all keys'
-    * [[depthSweep]]s unioned into ONE job. */
-  private[graft] def leafDepthsOf(manifest: DataFrame, keys: Seq[String],
-                                  leaf: Column): Seq[(String, String, Long)] =
-    if (keys.isEmpty) Nil
-    else keys.map(k => depthSweep(manifest, k, leaf)
-        .groupBy("__leaf").agg(max("depth").as("worst"))
-        .select(col("__leaf"), lit(k), col("worst")))
-      .reduce(_.unionAll(_)).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-
-  /** The files whose `[min, max]` interval on some key covers a
-    * boundary whose depth WITHIN ITS OWN LEAF reaches `maxDepth` — the
-    * offending subset [[optimizeSelective]] rewrites. Overlap is tested
-    * in the sweep's domain (integer positions, or boundary strings) as
-    * one file-count × deep-boundary join on the stats frame, never the
-    * data, with all keys unioned into ONE job. Null-stat files are
-    * never deep. Returns the manifest's own `file` spellings. */
-  private[graft] def deepFilesOf(manifest: DataFrame, keys: Seq[String],
-                                 leaf: Column, maxDepth: Long): Seq[String] =
-    if (keys.isEmpty) Nil
-    else keys.map { k =>
-      val statT = manifest.schema(s"min_$k").dataType
-      val toAt: Column => Column =
-        if (statT == org.apache.spark.sql.types.StringType) identity
-        else statToLongOf(statT, k)
-      val deep = depthSweep(manifest, k, leaf).filter(col("depth") >= maxDepth)
-        .select(col("__leaf").as("__dleaf"), col("at").as("__dat"))
-      manifest.withColumn("__leaf", leaf)
-        .join(deep, col("__leaf") === col("__dleaf") &&
-          toAt(col(s"min_$k")) <= col("__dat") &&
-          col("__dat") <= toAt(col(s"max_$k")))
-        .select("file")
-    }.reduce(_.unionAll(_)).distinct().collect().map(_.getString(0)).toSeq
+    sweepOf(manifest, Seq(key), lit("")).worstOf(Seq(key)) >= maxDepth
 
   /** The shared clustered-rewrite tail of both OPTIMIZE verbs and
     * [[compact]], over [[write]]'s curve step ([[curveCodeOf]]): ONE
@@ -5159,10 +5166,9 @@ object Layout {
     * RETIRED pre-evolution files that resolve under it. */
   private def rewriteSelected(spark: org.apache.spark.sql.SparkSession,
                               scope: Scope, dvMap: Map[String, String],
-                              files: Seq[String],
+                              sweep: DepthSweep, files: Seq[String],
                               outputsFor: Seq[String] => Int,
                               worst: Long, verifyCoverage: Boolean,
-                              expectedGen: Option[Long],
                               verb: String): OptimizeStats = {
     val before = scope.before
     if (files.isEmpty)
@@ -5175,11 +5181,10 @@ object Layout {
       // permanent in the new layout; checked over the whole dir so
       // debris in KEPT files fails loudly too instead of surfacing
       // only on the next mutation
-      scope.requireCovered(
-        scope.manifest.select("file").collect().map(_.getString(0)).toSet,
+      scope.requireCovered(sweep.files.map(_.file).toSet,
         "the rewrite would silently legitimize their rows into the new " +
           "layout")
-    commit(spark, scope, verb, expectedGen,
+    commit(spark, scope, verb,
       rewriteLeaves(spark, scope.dir, files, scope.schema, scope.partCols,
         scope.fileKeys, dvMap, outputsFor, stagingDir(_, "_graft_optimize_tmp")),
       files)
@@ -5188,6 +5193,18 @@ object Layout {
     OptimizeStats(reclustered = true, before.size,
       liveFilesOf(spark, scope.dir, Some(scope.schema)).length, worst,
       filesKept = before.size - files.size)
+  }
+
+  /** Both OPTIMIZE verbs' planning input, off one collect: the
+    * [[DepthSweep]] of every stored key per leaf — each file's parent
+    * directory in the manifest's URI spelling — and file → vector store
+    * of the vectorized live files. */
+  private def planOf(scope: Scope): (DepthSweep, Map[String, String]) = {
+    val sweep = sweepOf(scope.manifest, scope.keys,
+      regexp_replace(col("file"), "/[^/]+$", ""))
+    (sweep, sweep.files.collect {
+      case f if f.dvPath.nonEmpty && scope.before(f.file) => f.file -> f.dvPath.get
+    }.toMap)
   }
 
   /** The in-place OPTIMIZE verb — [[needsRecluster]]'s trigger and
@@ -5203,10 +5220,13 @@ object Layout {
     * metadata-only no-op unless `force`d, and `force` rewrites every
     * file.
     *
-    * The depth signal is [[leafDepthsOf]]: every stored key's sweep
-    * per leaf directory, one job for all keys and leaves — the TRUE
-    * cost of a partition-pruned lookup, since files in other leaves
-    * never stack on it (a flat layout is one leaf).
+    * The depth signal is [[DepthSweep.leafDepthsOf]]: every stored
+    * key's sweep per leaf directory — the TRUE cost of a
+    * partition-pruned lookup, since files in other leaves never stack
+    * on it (a flat layout is one leaf). Every planning input (depths,
+    * per-leaf file counts, vectors, coverage) comes off ONE collect of
+    * the manifest ([[planOf]]): no job over a held manifest, one
+    * otherwise, O(files × keys) values on the driver.
     *
     * Flat layout: the worst depth across ALL stored keys reaching
     * `maxDepth`, or any deletion vector present, rewrites the whole
@@ -5232,10 +5252,9 @@ object Layout {
                expectedGen: Option[Long] = None): OptimizeStats = {
     require(files >= 1, "optimize needs files >= 1")
     val scope = scopeOf(spark, dir, expectedGen, "optimize")
-    val dvMap = dvMapOf(scope.manifest, scope.before)
-    val manifest = scope.manifest
-    val depths = leafDepthsOf(manifest, scope.keys, fileLeaf)
-    val worst = depths.map(_._3).foldLeft(0L)(math.max)
+    val (sweep, dvMap) = planOf(scope)
+    val depths = sweep.leafDepthsOf(scope.keys)
+    val worst = sweep.worstOf(scope.keys)
     // leaf identity is compared by fs path (the manifest's URI
     // spelling and the listing's can differ on authority form)
     def pathOf(uri: String) =
@@ -5246,8 +5265,7 @@ object Layout {
         if (force || worst >= maxDepth || dvMap.nonEmpty)
           scope.before.toSeq else Nil
       } else {
-        val filesByLeaf = manifest.select("file").collect()
-          .groupBy(r => leafKey(r.getString(0))).map(e => e._1 -> e._2.length)
+        val filesByLeaf = sweep.files.groupMapReduce(f => leafKey(f.file))(_ => 1)(_ + _)
         val firedLeaves = depths.collect {
             case (leaf, k, w) if w >= maxDepth && scope.fileKeys.contains(k) =>
               pathOf(leaf)
@@ -5256,8 +5274,8 @@ object Layout {
           dvMap.keySet.map(leafKey)
         scope.before.toSeq.filter(f => force || firedLeaves(leafKey(f)))
       }
-    rewriteSelected(spark, scope, dvMap, fired, _ => files, worst,
-      verifyCoverage, expectedGen, "optimize")
+    rewriteSelected(spark, scope, dvMap, sweep, fired, _ => files, worst,
+      verifyCoverage, "optimize")
   }
 
   /** SELECTIVE in-place OPTIMIZE — the Delta/Iceberg bin-packed
@@ -5266,7 +5284,7 @@ object Layout {
     * boundary at depth ≥ `maxDepth` on ANY in-file stored key — plus
     * the small-file tail (`n_rows < minFileRows`, opt-in) plus the
     * vectorized files whose read tax crossed `minDvRatio`
-    * ([[heavyDvFiles]]: at the default 0 every vectorized file, so
+    * (`dv_rows / n_rows`: at the default 0 every vectorized file, so
     * the rewrite — vector applied — is the purge; higher ratios let
     * hotspots self-heal without churning lightly-vectorized files).
     * Each leaf's selection bin-packs into
@@ -5286,9 +5304,12 @@ object Layout {
     * cannot deepen (their stats are unchanged). The rewrite,
     * manifest patch and crash windows are [[rewriteSelected]]'s.
     *
-    * The depth profile is [[deepFilesOf]] per leaf directory, one job
-    * for all in-file keys and leaves — a file is deep when it covers a
-    * boundary whose depth WITHIN ITS OWN LEAF reaches `maxDepth`.
+    * The depth profile is [[DepthSweep.deepFilesOf]] per leaf
+    * directory — a file is deep when it covers a boundary whose depth
+    * WITHIN ITS OWN LEAF reaches `maxDepth`. The selection (deep,
+    * small and heavy-vector files, each leaf's rows) comes off ONE
+    * collect of the manifest ([[planOf]]): no job over a held
+    * manifest, one otherwise, O(files × keys) values on the driver.
     *
     * Flat layout (one leaf): nothing is selected unless the worst depth reaches
     * `maxDepth` or a heavy vector exists; `force` skips that trigger,
@@ -5311,40 +5332,28 @@ object Layout {
                         expectedGen: Option[Long] = None,
                         minDvRatio: Double = 0.0): OptimizeStats = {
     require(targetRows >= 1, "optimizeSelective needs targetRows >= 1")
+    require(minDvRatio >= 0.0 && minDvRatio <= 1.0,
+      s"optimizeSelective needs minDvRatio in [0, 1], got $minDvRatio")
     val scope = scopeOf(spark, dir, expectedGen, "optimizeSelective")
-    val dvMap = dvMapOf(scope.manifest, scope.before)
-    val manifest = scope.manifest
-    val heavyDv = heavyDvFiles(manifest, dvMap, minDvRatio,
-      "optimizeSelective")
-    val worst = leafDepthsOf(manifest, scope.fileKeys, fileLeaf)
-      .map(_._3).foldLeft(0L)(math.max)
+    val (sweep, dvMap) = planOf(scope)
+    // the vectorized files whose read tax crossed minDvRatio: at 0
+    // every vectorized file, so the rewrite — vector applied — is the
+    // purge; higher ratios leave light vectors in place
+    val heavyDv = sweep.files.filter(f => dvMap.contains(f.file) &&
+      f.dvRows >= f.rows * minDvRatio).map(_.file)
+    val worst = sweep.worstOf(scope.fileKeys)
     val selected =
       if (scope.partCols.isEmpty && !force && worst < maxDepth &&
           heavyDv.isEmpty) Nil
-      else {
-        // the rewrite set: union of every key's deep-boundary files
-        // plus the small-file tail plus the heavy-vectorized tail —
-        // manifest-sized driver work, like every other verb's planning
-        val deep = deepFilesOf(manifest, scope.fileKeys, fileLeaf, maxDepth)
-        val small =
-          if (minFileRows <= 0L) Nil
-          else manifest.filter(col("n_rows") < minFileRows)
-            .select("file").collect().map(_.getString(0)).toSeq
-        (deep.toSet ++ small ++ heavyDv).toSeq
-      }
-    import spark.implicits._
-    val rowsByFile =
-      if (selected.isEmpty) Map.empty[String, Long]
-      else manifest
-        .join(broadcast(selected.toDF("file")), Seq("file"), "left_semi")
-        .select("file", "n_rows").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      else (sweep.deepFilesOf(scope.fileKeys, maxDepth) ++
+        sweep.files.filter(_.rows < minFileRows).map(_.file) ++ heavyDv).toSeq
+    val rowsByFile = sweep.files.map(f => f.file -> f.rows).toMap
     def outputsFor(files: Seq[String]): Int = {
       val rows = files.map(rowsByFile).sum
       math.max(1L, (rows + targetRows - 1L) / targetRows).toInt
     }
-    rewriteSelected(spark, scope, dvMap, selected, outputsFor, worst,
-      verifyCoverage, expectedGen, "optimizeSelective")
+    rewriteSelected(spark, scope, dvMap, sweep, selected, outputsFor, worst,
+      verifyCoverage, "optimizeSelective")
   }
 
   /** Write `df` as a managed parquet table hash-bucketed (and sorted

@@ -36,6 +36,42 @@ class CheckpointsSpec extends AnyFunSuite with SharedSpark {
     assert(both.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
   }
 
+  test("inParallel: both sides' jobs run under the caller's job group") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-inparallel", "both sides")
+      // the pool thread has run jobs before, under no group or another
+      Checkpoints.inParallel(sc.parallelize(1 to 4, 2).count(),
+        sc.parallelize(1 to 4, 2).count())
+    } finally {
+      sc.clearJobGroup()
+      org.apache.spark.TestListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(groups.toArray.toSeq == Seq("graft-inparallel", "graft-inparallel"),
+      s"job groups seen: ${groups.toArray.toSeq}")
+    // the pool thread's own properties came back: a later side runs
+    // under the caller's (now empty) group, not the stale one
+    groups.clear()
+    sc.addSparkListener(listener)
+    try Checkpoints.inParallel(sc.parallelize(1 to 4, 2).count(),
+      sc.parallelize(1 to 4, 2).count())
+    finally {
+      org.apache.spark.TestListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(groups.toArray.toSeq == Seq("null", "null"),
+      s"job groups seen after clearJobGroup: ${groups.toArray.toSeq}")
+  }
+
   test("a CC loop and a Layout write → scanPruned round trip log no checkpoint or hidden-path warning") {
     val (_, lines) = org.apache.spark.TestLogCapture.capture {
       // the capture sees what the loggers pass: prove it is attached

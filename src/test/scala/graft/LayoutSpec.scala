@@ -2291,7 +2291,12 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("two appends staging at once each land their rows exactly once") {
+  /** Races two appends on a tracked layout: `first` (handed the
+    * layout dir and its batch) blocks inside its staging write until
+    * `second` has staged and committed; both batches must then read
+    * back exactly once and no staging dir may be left. */
+  private def twoAppendsRace(first: (String, org.apache.spark.sql.DataFrame) => Unit,
+                             second: (String, org.apache.spark.sql.DataFrame) => Unit): Unit =
     withTempDir("graft_two_appends_") { dir =>
       val d = s"$dir/t"
       trackedLayout(d)
@@ -2299,22 +2304,18 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def staging = fsys.listStatus(root).toSeq.map(_.getPath.getName)
         .filter(_.startsWith("_graft_append_tmp"))
-      // the first append's staging write blocks inside its task until
-      // the second append has staged and committed
       LayoutSpec.gate = new java.util.concurrent.CountDownLatch(1)
       val held = udf { (k: Long) =>
         LayoutSpec.gate.await(60, java.util.concurrent.TimeUnit.SECONDS); k * 2 }
-      val first = (300L to 309L).toDF("k").coalesce(1)
+      val batch = (300L to 309L).toDF("k").coalesce(1)
         .select(col("k"), held(col("k")).as("v"))
-      val done = scala.concurrent.Future(Layout.withGenerationRetry(spark, d) { g =>
-        Layout.appendWithManifest(first, d, Seq("k"), expectedGen = Some(g))
-      })(scala.concurrent.ExecutionContext.global)
+      val done = scala.concurrent.Future(first(d, batch))(
+        scala.concurrent.ExecutionContext.global)
       try {
         val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
         while (staging.isEmpty && System.nanoTime < deadline) Thread.sleep(5)
         assert(staging.nonEmpty, "the first append never staged")
-        Layout.appendWithManifest((200L to 209L).map(k => (k, k * 2)).toDF("k", "v"),
-          d, Seq("k"))
+        second(d, (200L to 209L).map(k => (k, k * 2)).toDF("k", "v"))
       } finally LayoutSpec.gate.countDown()
       scala.concurrent.Await.result(done, scala.concurrent.duration.Duration(120, "s"))
       assert(Layout.readLayout(spark, d).as[(Long, Long)].collect().sorted.toSeq ===
@@ -2322,6 +2323,28 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       assert(spark.read.parquet(d).count() === 120L)
       assert(stagingDirs(root).isEmpty)
     }
+
+  test("two appends staging at once each land their rows exactly once") {
+    twoAppendsRace(
+      (d, df) => Layout.withGenerationRetry(spark, d) { g =>
+        Layout.appendWithManifest(df, d, Seq("k"), expectedGen = Some(g))
+      },
+      (d, df) => Layout.appendWithManifest(df, d, Seq("k")))
+  }
+
+  test("two appends without expectedGen each land their rows exactly once") {
+    // the blocked append checks the generation it saw at entry: it
+    // loses to the rival's commit and re-runs, instead of patching a
+    // manifest that lacks the rival's rows
+    twoAppendsRace(
+      (d, df) => Layout.withGenerationRetry(spark, d) { _ =>
+        Layout.appendWithManifest(df, d, Seq("k"))
+      },
+      (d, df) => Layout.appendWithManifest(df, d, Seq("k")))
+    // streamAppend retries on its own
+    twoAppendsRace(
+      (d, df) => Layout.streamAppend(d, Seq("k"), "q-race")(df, 0L),
+      (d, df) => Layout.appendWithManifest(df, d, Seq("k")))
   }
 
   test("an OCC loss at the commit point rolls restoreSnapshot back") {
